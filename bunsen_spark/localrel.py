@@ -52,7 +52,8 @@ def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A LocalRelation DataFrame for ``rows`` under a simple DDL schema
     (``"name type, name type"``; flat string/int/long/double/boolean
     columns only — exactly the driver-built lookup/result tables this
-    replaces). Falls back to ``createDataFrame`` for an empty ``rows``
+    replaces). A row whose length differs from the column count raises
+    ``ValueError``. Falls back to ``createDataFrame`` for an empty ``rows``
     (VALUES requires at least one tuple)."""
     cols = []
     for part in ddl.split(","):
@@ -64,6 +65,11 @@ def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     rows = list(rows)
     if not rows:
         return spark.createDataFrame([], ddl)
+    for i, row in enumerate(rows):
+        if len(row) != len(cols):
+            raise ValueError(
+                f"row {i} has {len(row)} values, expected {len(cols)} columns ({ddl})"
+            )
     body = ",".join(
         "(" + ",".join(_lit(v, t) for v, (_, t) in zip(row, cols)) + ")"
         for row in rows

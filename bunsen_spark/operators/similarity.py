@@ -59,25 +59,6 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
-    """Cosine similarity given precomputed norms.
-
-    PRECONDITION (ADVICE r13 #1): inputs must be non-zero vectors. A
-    zero-norm vector yields 0/0 = NaN, and NaN ordering DIFFERS between
-    the r13 map-only argmin rewrites (``array_min`` of the negated
-    struct never selects NaN) and the row_number windows they replaced
-    (``desc(csim)`` sorted NaN first) — so a zero vector would get a
-    different IVF cell / probe list than the window-ordered DuckDB
-    twins. The embedding fixtures contain no zero vectors (oracle
-    hash-matches pin this); production callers must drop or epsilon-pad
-    zero embeddings before the ANN family sees them. Guarding here
-    (nanvl/when) was deliberately NOT done: any imputed similarity
-    would silently differ from the unguarded DuckDB twin SQL on the
-    same degenerate input, trading a documented precondition for a
-    quiet cross-engine divergence."""
-    return _dot(va, vb) / (na * nb)
-
-
 #: (applicationId, plan semanticHash) -> scan partition count, so
 #: repeated _spread calls on the same logical plan (ivf_kmeans_topk
 #: builds its base four times) pay the df.rdd physical-planning probe
@@ -138,10 +119,30 @@ def brute_force_topk(
     sims are :func:`_cos_csim` (strict left-to-right dots, single IEEE
     norm-multiply/divide — the exact ``aggregate(zip_with)`` values),
     and the partial selection uses the same (sim DESC, id ASC) order
-    as the window it feeds."""
+    as the window it feeds. No query rows (e.g. ``num_queries=0``)
+    gives an empty frame, built on the driver.
+
+    PRECONDITION: inputs must be non-zero vectors. A zero-norm vector
+    yields 0/0 = NaN, and NaN ordering differs between the map-only
+    selections (``np.lexsort`` sorts NaN last, ``array_min`` never
+    selects it) and the row_number windows (``desc(sim)`` sorts NaN
+    first), so a zero vector's rank depends on partitioning and can
+    differ from the window-ordered DuckDB twins. The embedding fixtures
+    contain no zero vectors (oracle hash-matches pin this); callers
+    must drop or epsilon-pad zero embeddings before the ANN family sees
+    them. Guarding (nanvl/when) was deliberately NOT done: any imputed
+    similarity would silently differ from the unguarded DuckDB twin SQL
+    on the same degenerate input, trading a documented precondition for
+    a quiet cross-engine divergence."""
     import math
 
     qrows = _collect_queries(embeddings, num_queries)
+    if not qrows:
+        from ..localrel import values_df
+
+        return values_df(
+            embeddings.sparkSession, [], "query_id long, neighbor_id long, rank int"
+        )
     qids = [q for q, _ in qrows]
     qmat = [v for _, v in qrows]
     qnorms = [math.sqrt(_py_seq_dot(v, v)) for v in qmat]

@@ -52,11 +52,13 @@ def save_as_database(
     *resource_types: str,
     path: str | None = None,
     bucket_by_subject: bool = False,
-    num_buckets: int = 32,
+    num_buckets: int | None = None,
 ) -> None:
     """Extract + persist one table per R4 resource type
     (`r4/bundles.py:save_as_database`); table names drop the generation
-    prefix (``<database>.patient``)."""
+    prefix (``<database>.patient``). ``num_buckets=None`` sizes the
+    bucket count from ``bundles`` once for all tables, as in
+    :func:`bunsen_spark.sources.bundles.save_as_database`."""
     _bundles.save_as_database(
         spark,
         bundles,

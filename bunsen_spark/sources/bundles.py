@@ -131,7 +131,7 @@ def save_as_database(
     *resource_types: str,
     path: str | None = None,
     bucket_by_subject: bool = False,
-    num_buckets: int = 32,
+    num_buckets: int | None = None,
 ) -> None:
     """Extract each resource type and save as one table per type
     (`Bundles.saveAsDatabase`, Bundles.java:298-311).
@@ -144,8 +144,18 @@ def save_as_database(
     write time. At 100 TB this is the single biggest recurring-cost
     lever the warehouse layout controls (see :mod:`.warehouse`).
     Resources with no patient subject fall back to plain parquet.
+
+    ``num_buckets`` defaults to :func:`.warehouse.bucket_count_for` of
+    ``bundles`` (sized from its plan statistics, no job), computed once
+    per call so every table landed together shares one count. Tables
+    landed by separate calls co-bucket only when both calls pass the
+    same explicit ``num_buckets``.
     """
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
+    if bucket_by_subject and num_buckets is None:
+        from .warehouse import bucket_count_for
+
+        num_buckets = bucket_count_for(bundles)
     for rt in resource_types:
         df = extract_entry(spark, bundles, rt)
         # table names keep the addressed type/profile name but never a

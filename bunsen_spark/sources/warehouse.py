@@ -18,19 +18,58 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+#: bucket count when the input's plan carries no size estimate (an
+#: RDD-backed frame reports ``spark.sql.defaultSizeInBytes``)
+FALLBACK_BUCKETS = 32
+
+
+def bucket_count_for(df: DataFrame) -> int:
+    """Bucket count sized to ``df``: the smallest power of two whose
+    buckets each hold at most ``spark.sql.files.maxPartitionBytes`` of
+    the optimized plan's ``sizeInBytes``, clamped to
+    ``spark.sql.sources.bucketing.maxBuckets``. A plan with no real
+    estimate (``sizeInBytes >= spark.sql.defaultSizeInBytes``) gets
+    :data:`FALLBACK_BUCKETS`. Driver-only: reads plan statistics and
+    launches no job.
+
+    Each bucket is one file (see :func:`write_bucketed`) whose footer
+    holds the full schema; for the spec resource schemas that footer
+    outweighs a small bucket's rows, so over-bucketing a small table
+    makes every later scan mostly open and decode footers."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size >= conf.defaultSizeInBytes():
+        return FALLBACK_BUCKETS
+    per_bucket = max(1, conf.filesMaxPartitionBytes())
+    n = 1
+    while n * per_bucket < size:
+        n *= 2
+    return min(n, conf.bucketingMaxBuckets())
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_key: str | list[str],
-    num_buckets: int = 32,
+    num_buckets: int | None = None,
     sort: bool = True,
     path: str | None = None,
 ) -> None:
     """Write ``df`` as a parquet table bucketed (and by default sorted)
     by ``bucket_key`` — repeat for every co-joined table with the SAME
-    key and bucket count to get shuffle-free joins."""
+    key and bucket count to get shuffle-free joins. ``num_buckets``
+    defaults to :func:`bucket_count_for` of ``df``; pass it explicitly
+    when several tables must share one count.
+
+    The frame is hash-partitioned on the key into ``num_buckets``
+    partitions first. Spark's bucket id is the same
+    ``pmod(murmur3(key), n)`` as ``HashPartitioning``, so each bucket is
+    written by exactly one task: one file per non-empty bucket, instead
+    of one per (write task, bucket) pair."""
     keys = [bucket_key] if isinstance(bucket_key, str) else list(bucket_key)
-    writer = df.write.format("parquet").mode("overwrite")
+    if num_buckets is None:
+        num_buckets = bucket_count_for(df)
+    writer = df.repartition(num_buckets, *keys).write.format("parquet").mode("overwrite")
     if path:
         writer = writer.option("path", path)
     writer = writer.bucketBy(num_buckets, *keys)

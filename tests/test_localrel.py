@@ -44,3 +44,9 @@ def test_values_df_empty_rows(spark):
 def test_values_df_rejects_unknown_type(spark):
     with pytest.raises(ValueError):
         values_df(spark, [([1],)], "a array<long>")
+
+
+@pytest.mark.parametrize("bad", [(1,), (1, "x", 2.0)])
+def test_values_df_rejects_wrong_arity(spark, bad):
+    with pytest.raises(ValueError, match=r"row 1 has \d values, expected 2 columns"):
+        values_df(spark, [(0, "ok"), bad], "a long, b string")

@@ -213,3 +213,13 @@ def test_ivfpq_candidates_come_from_probed_cells(spark, sf_dir):
     }
     recall = len(exact & approx) / len(exact)
     assert recall > 0.05, recall  # chance is ~0.02 on random vectors
+
+
+def test_brute_force_topk_empty_query_set(spark, sf_dir):
+    """No query rows returns an empty (query_id, neighbor_id, rank)
+    frame from the driver instead of failing inside the scan."""
+    from bunsen_spark.operators.similarity import brute_force_topk
+
+    out = brute_force_topk(_emb(spark, sf_dir), k=5, num_queries=0)
+    assert out.columns == ["query_id", "neighbor_id", "rank"]
+    assert out.collect() == []
