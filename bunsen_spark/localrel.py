@@ -13,9 +13,9 @@ Literal fidelity: strings are backslash-escaped for the default parser
 mode; integers are exact; doubles are embedded as ``CAST('<repr>' AS
 DOUBLE)`` — ``repr`` is the shortest round-trip form and string→double
 casts are correctly rounded, so values are bit-identical to the
-``createDataFrame`` row they replace (same guarantee as
-``operators/similarity._local_codebook_df``, the first user of this
-pattern)."""
+``createDataFrame`` row they replace; an ``array<double>`` is an
+``array(...)`` of those literals (the trained k-means and PQ codebooks
+are built this way)."""
 
 from __future__ import annotations
 
@@ -30,6 +30,7 @@ _SQL_TYPES = {
     "integer": "INT",
     "double": "DOUBLE",
     "boolean": "BOOLEAN",
+    "array<double>": "ARRAY<DOUBLE>",
 }
 
 
@@ -45,15 +46,19 @@ def _lit(v, sql_type: str) -> str:
         return f"CAST('{float(v)!r}' AS DOUBLE)"
     if sql_type == "BOOLEAN":
         return "true" if bool(v) else "false"
+    if sql_type == "ARRAY<DOUBLE>":
+        if not len(v):
+            return "CAST(array() AS ARRAY<DOUBLE>)"
+        return "array(" + ",".join(_lit(x, "DOUBLE") for x in v) + ")"
     raise ValueError(f"unsupported VALUES type {sql_type!r}")
 
 
 def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A LocalRelation DataFrame for ``rows`` under a simple DDL schema
-    (``"name type, name type"``; flat string/int/long/double/boolean
-    columns only — exactly the driver-built lookup/result tables this
-    replaces). A row whose length differs from the column count raises
-    ``ValueError``. Falls back to ``createDataFrame`` for an empty ``rows``
+    (``"name type, name type"``; string/int/long/double/boolean and
+    array<double> columns only — exactly the driver-built
+    lookup/result tables and codebooks this replaces). A row whose
+    length differs from the column count raises ``ValueError``. Falls back to ``createDataFrame`` for an empty ``rows``
     (VALUES requires at least one tuple)."""
     cols = []
     for part in ddl.split(","):

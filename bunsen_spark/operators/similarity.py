@@ -27,10 +27,13 @@ float-summation differences.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text_analysis import md5int_sql
+from ..localrel import values_df
 from ..persist import materialize
 
 EMBED_DIM = 64
@@ -95,11 +98,19 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _with_norm(embeddings: DataFrame) -> DataFrame:
-    v = F.col("embedding").cast("array<double>")
+def _corpus(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, v array<double>): a scan's input at its natural
+    partitioning (numpy consumers need no :func:`_spread`)."""
     return embeddings.select(
-        "vec_id", v.alias("v")
-    ).withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+
+
+def _with_norm(embeddings: DataFrame) -> DataFrame:
+    return _corpus(embeddings).withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+
+
+_TOPK_DDL = "query_id long, neighbor_id long, rank int"
 
 
 def brute_force_topk(
@@ -110,56 +121,23 @@ def brute_force_topk(
     (query_id, neighbor_id, rank) — rank 1 = nearest, ties broken by
     neighbor_id.
 
-    One vectorized corpus pass (r14, guide §4.2 — same treatment as
-    the Lloyd family): the ≤num_queries queries ride in the task
-    closure; each partition emits its local top-k per query (any
-    global top-k row is in its partition's top-k), and the final
-    window ranks ≤ partitions × queries × k rows — the corpus is never
-    joined, shuffled, or scored through interpreted HOFs. Bit-parity:
-    sims are :func:`_cos_csim` (strict left-to-right dots, single IEEE
-    norm-multiply/divide — the exact ``aggregate(zip_with)`` values),
-    and the partial selection uses the same (sim DESC, id ASC) order
-    as the window it feeds. No query rows (e.g. ``num_queries=0``)
-    gives an empty frame, built on the driver.
+    One :func:`_topk_scan` corpus pass (r14, guide §4.2 — same
+    treatment as the Lloyd family) with the queries in the task
+    closure, then the tiny :func:`_rank_topk` window; the corpus is
+    never joined, shuffled, or scored through interpreted HOFs.
+    Bit-parity: sims are :func:`_cosine` (strict left-to-right dots,
+    single IEEE norm-multiply/divide — the exact ``aggregate(zip_with)``
+    values). No query rows (e.g. ``num_queries=0``) gives an empty
+    frame, built on the driver.
 
-    PRECONDITION: inputs must be non-zero vectors. A zero-norm vector
-    yields 0/0 = NaN, and NaN ordering differs between the map-only
-    selections (``np.lexsort`` sorts NaN last, ``array_min`` never
-    selects it) and the row_number windows (``desc(sim)`` sorts NaN
-    first), so a zero vector's rank depends on partitioning and can
-    differ from the window-ordered DuckDB twins. The embedding fixtures
-    contain no zero vectors (oracle hash-matches pin this); callers
-    must drop or epsilon-pad zero embeddings before the ANN family sees
-    them. Guarding (nanvl/when) was deliberately NOT done: any imputed
-    similarity would silently differ from the unguarded DuckDB twin SQL
-    on the same degenerate input, trading a documented precondition for
-    a quiet cross-engine divergence."""
-    import math
+    A zero-norm vector's cosine (0/0) ranks as -1.0, the DuckDB twin's
+    ``list_cosine_similarity`` value, in every member of the family."""
 
-    qrows = _collect_queries(embeddings, num_queries)
-    if not qrows:
-        from ..localrel import values_df
+    def build(q: _Queries) -> DataFrame:
+        partials = _topk_scan(_corpus(embeddings), q, k, _brute_scorer(q))
+        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
 
-        return values_df(
-            embeddings.sparkSession, [], "query_id long, neighbor_id long, rank int"
-        )
-    qids = [q for q, _ in qrows]
-    qmat = [v for _, v in qrows]
-    qnorms = [math.sqrt(_py_seq_dot(v, v)) for v in qmat]
-    # numpy consumer: natural partitioning, no _spread
-    corpus = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    partials = corpus.mapInArrow(
-        _brute_partials_fn(qids, qmat, qnorms, k),
-        "query_id long, neighbor_id long, sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
 def brute_force_topk_sql(
@@ -205,71 +183,39 @@ def ivf_topk(
     corpus — at 1000 executors the scan cost drops by
     n_centroids/n_probe versus brute force.
 
-    One vectorized corpus pass (r14, guide §4.2): the md5-seeded
-    centroids are collected (their Spark-computed cnorms verbatim, as
-    in :func:`_kmeans_assign`), the ≤num_queries query probe lists are
-    derived driver-side with the identical float arithmetic, and the
-    pass assigns cells + scores probed candidates in numpy, emitting
-    partition-local top-k partials for the final tiny window. The
-    argmax first-occurrence over cid-ascending centroid rows is
-    exactly the former ``array_min(struct(negsim, cid))``; candidate
-    sims are :func:`_cos_csim` / :func:`_seq_norms` order."""
-    cents, qs = _ivf_setup(embeddings, n_centroids, num_queries)
-    probe_lists = _ivf_probe_lists(cents, qs, n_probe)
-    corpus = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )  # numpy consumer: no _spread
-    partials = corpus.mapInArrow(
-        _ivf_partials_fn(cents, qs, probe_lists, (n_probe,), k),
-        "query_id long, neighbor_id long, sim double, probe_rn int",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    One :func:`_topk_scan` corpus pass (r14, guide §4.2, see
+    :func:`_ivf_scan`): the pass assigns cells and scores probed
+    candidates in numpy, emitting partition-local top-k partials for
+    the final tiny window; candidate sims are :func:`_cosine`."""
+
+    def build(q: _Queries) -> DataFrame:
+        partials = _ivf_scan(embeddings, q, k, n_centroids, (n_probe,))
+        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
-def _ivf_setup(
-    embeddings: DataFrame, n_centroids: int, num_queries: int
-) -> tuple[list, list]:
-    """Driver data for the seeded-IVF scans: ``cents`` =
-    [(cid, cv, cnorm)] ascending by cid (cnorm verbatim from the
-    Spark-computed column — the argmax tiebreak needs ascending rows),
-    ``qs`` = [(query_id, qv, qnorm)] ascending by id with the
-    driver-side strict-order norm."""
-    import math
-
-    from .text_analysis import md5int
-
-    base = _with_norm(embeddings)
-    cent_rows = (
-        base.withColumn("h", md5int(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(n_centroids)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("norm").alias("cnorm"))
-        .collect()
-    )
-    cents = sorted(
-        ((int(r.cid), [float(x) for x in r.cv], float(r.cnorm)) for r in cent_rows),
+def _codebook_rows(cents: DataFrame) -> list:
+    """A centroid frame's (cid, cv, cnorm) rows as driver data,
+    ascending by cid (so a numpy argmax's first occurrence is the cid
+    tiebreak), cnorm verbatim from its Spark-computed column."""
+    return sorted(
+        (
+            (int(r.cid), [float(x) for x in r.cv], float(r.cnorm))
+            for r in cents.select("cid", "cv", "cnorm").collect()
+        ),
         key=lambda t: t[0],
     )
-    qs = [
-        (qid, qv, math.sqrt(_py_seq_dot(qv, qv)))
-        for qid, qv in _collect_queries(embeddings, num_queries)
-    ]
-    return cents, qs
 
 
-def _ivf_probe_lists(cents: list, qs: list, max_p: int) -> list:
-    """Per query, the top-``max_p`` probed cells as a list of
+def _ivf_probe_lists(cents: list, vecs: list, norms: list, max_p: int) -> list:
+    """Per query vector, the top-``max_p`` probed cells as a list of
     (centroid INDEX into the cid-ascending ``cents``, probe_rn) — the
     former ``slice(array_sort(struct(negsim, cid)), 1, n_probe)``:
     csim DESC then cid ASC, ±0.0 comparing equal (Python float ==,
     matching Spark's normalized struct order)."""
     out = []
-    for _, qv, qnorm in qs:
+    for qv, qnorm in zip(vecs, norms):
         scored = sorted(
             (
                 (-(_py_seq_dot(qv, cv) / (qnorm * cnorm)), cid, idx)
@@ -280,67 +226,33 @@ def _ivf_probe_lists(cents: list, qs: list, max_p: int) -> list:
     return out
 
 
-def _ivf_partials_fn(cents: list, qs: list, probe_lists: list, levels, k: int):
-    """mapInArrow body: (vec_id, v) → per-partition top-k per (query,
-    probe level) over candidates in the query's probed cells, carrying
-    ``probe_rn`` so a multi-level sweep filters one partial table. A
-    vector lives in exactly one cell, so a (query, neighbor) pair is
-    emitted at most once per batch (levels dedup through the union
-    set)."""
+def _ivf_scan(
+    embeddings: DataFrame, q: _Queries, k: int, n_centroids: int, probes
+) -> DataFrame:
+    """:func:`_topk_scan` partials (query_id, neighbor_id, sim,
+    probe_rn) of the md5-seeded IVF at every probe level in
+    ``probes``. The ``n_centroids`` corpus vectors with the smallest
+    md5(vec_id) are collected with their Spark-computed cnorms; the
+    query probe lists are derived driver-side with the identical float
+    arithmetic."""
+    from .text_analysis import md5int
 
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        c_mat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
-        cnorms = [cn for _, _, cn in cents]
-        qi = [int(q) for q, _, _ in qs]
-        qm = np.asarray([qv for _, qv, _ in qs], dtype=np.float64)
-        qn = [qnorm for _, _, qnorm in qs]
-        max_p = max(levels)
-        # centroid-index → probe_rn LUT per query (0 = not probed)
-        rnmaps = np.zeros((len(qs), len(cents)), dtype=np.int64)
-        for j, plist in enumerate(probe_lists):
-            for idx, rn in plist:
-                rnmaps[j, idx] = rn
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = _batch_np(batch, "vec_id")
-            vecs = _batch_mat(batch, "v", c_mat.shape[1])
-            norms = _seq_norms(vecs)
-            amax = _cos_csim(vecs, norms, c_mat, cnorms).argmax(axis=1)
-            out = ([], [], [], [])
-            for j, qid in enumerate(qi):
-                prn = rnmaps[j][amax]
-                cand = (prn >= 1) & (prn <= max_p) & (ids != qid)
-                pos = np.nonzero(cand)[0]
-                if not len(pos):
-                    continue
-                sims = _seq_dot(vecs[pos], qm[j]) / (norms[pos] * qn[j])
-                cids_pos = ids[pos]
-                prn_pos = prn[pos]
-                chosen: set[int] = set()
-                for p in levels:
-                    lv = prn_pos <= p
-                    top = _topk_sel(cids_pos[lv], sims[lv], k, largest=True)
-                    chosen.update(np.nonzero(lv)[0][top])
-                for c in sorted(chosen):
-                    out[0].append(qid)
-                    out[1].append(int(cids_pos[c]))
-                    out[2].append(float(sims[c]))
-                    out[3].append(int(prn_pos[c]))
-            yield pa.record_batch(
-                [
-                    pa.array(out[0], pa.int64()),
-                    pa.array(out[1], pa.int64()),
-                    pa.array(out[2], pa.float64()),
-                    pa.array(out[3], pa.int32()),
-                ],
-                names=["query_id", "neighbor_id", "sim", "probe_rn"],
-            )
-
-    return fn
+    seeded = (
+        _with_norm(embeddings)
+        .withColumn("h", md5int(F.col("vec_id").cast("string")))
+        .orderBy("h", "vec_id")
+        .limit(n_centroids)
+        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("norm").alias("cnorm"))
+    )
+    cents = _codebook_rows(seeded)
+    probe_lists = _ivf_probe_lists(cents, q.vecs, q.norms, max(probes))
+    return _topk_scan(
+        _corpus(embeddings),
+        q,
+        k,
+        _ivf_scorer(cents, q, probe_lists, tuple(probes)),
+        "sim double, probe_rn int",
+    )
 
 
 def ivf_probe_sweep(
@@ -362,45 +274,26 @@ def ivf_probe_sweep(
     This is the recall-vs-scan-cost curve an index operator publishes;
     computing it naively re-scores the corpus once per level.
 
-    r14 (guide §4.2): the corpus-sized work — cell assignment AND
-    candidate scoring — is ONE vectorized numpy pass emitting
-    partition-local top-k partials per (query, level), each carrying
-    its probe_rn; every level's result is a filter + window over that
-    one partial table. The partials are EAGERLY pinned: the level
-    branches are planned as concurrent AQE query stages, and a lazy
-    checkpoint's map-only residue (the whole scoring pass) would race
-    and recompute per branch (persist.py residue rule)."""
-    from ..persist import materialize
+    The scan keeps each level's partition-local top-k (nested
+    candidate subsets, one per level). The partials are EAGERLY
+    pinned: the level branches are planned as concurrent AQE query
+    stages, and a lazy checkpoint's map-only residue (the whole scoring
+    pass) would race and recompute per branch (persist.py residue
+    rule)."""
 
-    max_p = max(probes)
-    cents, qs = _ivf_setup(embeddings, n_centroids, num_queries)
-    probe_lists = _ivf_probe_lists(cents, qs, max_p)
-    corpus = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )  # numpy consumer: no _spread
-    cand = materialize(
-        corpus.mapInArrow(
-            _ivf_partials_fn(cents, qs, probe_lists, tuple(probes), k),
-            "query_id long, neighbor_id long, sim double, probe_rn int",
-        ),
-        eager=True,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    out = None
-    for p in probes:
-        part = (
-            cand.where(F.col("probe_rn") <= p)
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                F.lit(p).cast("long").alias("n_probe"),
-                "query_id",
-                "neighbor_id",
-                "rank",
+    def build(q: _Queries) -> DataFrame:
+        cand = materialize(_ivf_scan(embeddings, q, k, n_centroids, probes), eager=True)
+        out = None
+        for p in probes:
+            part = _rank_topk(cand.where(F.col("probe_rn") <= p), k).select(
+                F.lit(p).cast("long").alias("n_probe"), "query_id", "neighbor_id", "rank"
             )
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+            out = part if out is None else out.unionByName(part)
+        return out
+
+    return _with_queries(
+        embeddings, num_queries, "n_probe long, query_id long, neighbor_id long, rank int", build
+    )
 
 
 def ivf_topk_sql(
@@ -533,8 +426,8 @@ def kmeans_codebook(
         )
         cids = [c for c, _ in pairs]
         c_mat = np.array([v for _, v in pairs], dtype=np.float64)
-    rows = [(None, int(c), [float(x) for x in c_mat[j]]) for j, c in enumerate(cids)]
-    cents = _local_codebook_df(base.sparkSession, rows, "")
+    rows = [(int(c), [float(x) for x in c_mat[j]]) for j, c in enumerate(cids)]
+    cents = values_df(base.sparkSession, rows, "cid long, cv array<double>")
     # Project over LocalRelation folds driver-side (ConvertToLocalRelation),
     # so the returned frame stays a LocalRelation including cnorm
     return cents.select(
@@ -542,26 +435,31 @@ def kmeans_codebook(
     )
 
 
-def _kmeans_assign(quant: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cid): max-cosine centroid per quantized vector — the
-    shared assignment step of :func:`semantic_dedup`,
-    :func:`cluster_label_purity` and :func:`ivf_kmeans_topk`. One
-    vectorized corpus pass (r14, guide §4.2): the k centroids (with
-    their Spark-computed cnorms, verbatim) ride in the task closure and
-    the argmax runs in numpy with the strict left-to-right cosine
-    accumulation (_seq_dot) — first occurrence over cid-ascending rows
-    is exactly the former ``array_max(struct(csim, -cid, cid))``
-    ordering. ``cents`` is a local relation when trained this session,
-    so the collect is driver-only."""
-    rows = sorted(
-        ((r.cid, list(r.cv), r.cnorm) for r in cents.select("cid", "cv", "cnorm").collect()),
-        key=lambda t: t[0],
-    )
-    cids = [c for c, _, _ in rows]
-    c_mat = [v for _, v, _ in rows]
-    cnorms = [n for _, _, n in rows]
-    return quant.select("vec_id", "q", "qnorm").mapInArrow(
-        _cos_assign_fn(cids, c_mat, cnorms), "vec_id long, cid long"
+def _with_lattice(df: DataFrame) -> DataFrame:
+    """``df`` plus the (q, qnorm) lattice columns of its ``v``: the same
+    Spark expressions :func:`_quantized` builds, so assignment inputs
+    are bit-identical to the codebook training's."""
+    return df.withColumn(
+        "q", F.transform(F.col("v"), lambda x: F.round(x * F.lit(KMEANS_QUANT), 0))
+    ).withColumn("qnorm", F.sqrt(_dot(F.col("q"), F.col("q"))))
+
+
+def _kmeans_assign(src: DataFrame, cents: DataFrame, payload: str) -> DataFrame:
+    """(vec_id, cid, *payload): each (vec_id, q, qnorm, *payload) row
+    of ``src`` assigned to its max-cosine centroid — the shared
+    assignment step of :func:`semantic_dedup` and
+    :func:`cluster_label_purity`; ``payload`` is the DDL of the columns
+    passed through. One vectorized corpus pass (r14, guide §4.2): the k
+    centroids (with their Spark-computed cnorms, verbatim) ride in the
+    task closure and the argmax runs in numpy with the strict
+    left-to-right cosine accumulation (_seq_dot) — first occurrence
+    over cid-ascending rows is exactly the former
+    ``array_max(struct(csim, -cid, cid))`` ordering. ``cents`` is a
+    local relation when trained this session, so the collect is
+    driver-only."""
+    return src.mapInArrow(
+        _cos_assign_payload_fn(_codebook_rows(cents), tuple(_ddl_names(payload))),
+        f"vec_id long, cid long, {payload}",
     )
 
 
@@ -579,56 +477,32 @@ def ivf_kmeans_topk(
     centroids on the quantized vectors; final ranking among candidates
     is exact cosine on the original vectors.
 
-    One vectorized corpus pass (r14, guide §4.2 — the seeded-IVF
-    treatment of :func:`ivf_topk` applied to the trained codebook):
-    the LocalRelation codebook collects driver-only, query probe lists
+    One :func:`_topk_scan` corpus pass (r14, guide §4.2 — the
+    seeded-IVF scan of :func:`ivf_topk` over the trained codebook): the
+    LocalRelation codebook collects driver-only, query probe lists
     derive driver-side with the identical quantized-cosine arithmetic
     (HALF_UP lattice, struct ordering via Python tuple compare), and
     the pass assigns cells on the quantized columns while scoring
     probed candidates on the raw vectors — partition-local top-k into
-    the final tiny window. The former shape joined the assignment
-    against broadcast probes, re-joined the corpus for raw vectors,
-    and evaluated every candidate cosine as an interpreted HOF."""
-    import math
+    the final tiny window."""
 
-    cents = kmeans_codebook(embeddings, n_centroids, n_iters)
-    cent_rows = sorted(
-        (
-            (int(r.cid), [float(x) for x in r.cv], float(r.cnorm))
-            for r in cents.select("cid", "cv", "cnorm").collect()
-        ),
-        key=lambda t: t[0],
-    )
-    qraw = _collect_queries(embeddings, num_queries)
-    # probe lists on the QUANTIZED lattice (the assignment geometry),
-    # exactly as the former slice(array_sort(struct(negsim, cid)))
-    qs_quant = []
-    for qid, v in qraw:
-        qq = [_round_half_up(x * KMEANS_QUANT) for x in v]
-        qs_quant.append((qid, qq, math.sqrt(_py_seq_dot(qq, qq))))
-    probe_lists = _ivf_probe_lists(cent_rows, qs_quant, n_probe)
-    # exact scoring on the RAW vectors (raw driver-side norms)
-    qs_raw = [
-        (qid, v, math.sqrt(_py_seq_dot(v, v))) for qid, v in qraw
-    ]
-    v = F.col("embedding").cast("array<double>")
-    src = (
-        embeddings.select("vec_id", v.alias("v"))
-        .withColumn(
-            "q", F.transform(F.col("v"), lambda x: F.round(x * F.lit(KMEANS_QUANT), 0))
+    def build(q: _Queries) -> DataFrame:
+        cents = _codebook_rows(kmeans_codebook(embeddings, n_centroids, n_iters))
+        # probe lists on the QUANTIZED lattice (the assignment geometry)
+        lattice = [[_round_half_up(x * KMEANS_QUANT) for x in v] for v in q.vecs]
+        probe_lists = _ivf_probe_lists(
+            cents, lattice, [_py_norm(v) for v in lattice], n_probe
         )
-        .withColumn("qnorm", F.sqrt(_dot(F.col("q"), F.col("q"))))
-    )  # numpy consumer: no _spread
-    partials = src.mapInArrow(
-        _ivf_kmeans_partials_fn(cent_rows, qs_raw, probe_lists, k),
-        "query_id long, neighbor_id long, sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+        partials = _topk_scan(
+            _with_lattice(_corpus(embeddings)),
+            q,
+            k,
+            _ivf_scorer(cents, q, probe_lists, (n_probe,), quantized=True),
+            "sim double, probe_rn int",
+        )
+        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
 def _kmeans_cte_parts(
@@ -707,29 +581,8 @@ def semantic_dedup(
     single cid is still one task)."""
     # the trained codebook is a local relation (r14) — no materialize
     cents = kmeans_codebook(embeddings, n_centroids, n_iters)
-    v = F.col("embedding").cast("array<double>")
-    src = (
-        embeddings.select("vec_id", v.alias("v"))
-        .withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
-        # the same quantized columns _quantized builds, kept as Spark
-        # expressions so assignment inputs are bit-identical to it
-        .withColumn(
-            "q", F.transform(F.col("v"), lambda x: F.round(x * F.lit(KMEANS_QUANT), 0))
-        )
-        .withColumn("qnorm", F.sqrt(_dot(F.col("q"), F.col("q"))))
-    )  # numpy consumer: no _spread
-    rows = sorted(
-        ((r.cid, list(r.cv), r.cnorm) for r in cents.select("cid", "cv", "cnorm").collect()),
-        key=lambda t: t[0],
-    )
-    assigned = src.mapInArrow(
-        _cos_assign_payload_fn(
-            [c for c, _, _ in rows],
-            [cv for _, cv, _ in rows],
-            [n for _, _, n in rows],
-        ),
-        "vec_id long, cid long, v array<double>, norm double",
-    )
+    src = _with_lattice(_with_norm(embeddings))  # numpy consumer: no _spread
+    assigned = _kmeans_assign(src, cents, "v array<double>, norm double")
     return assigned.groupBy("cid").applyInArrow(
         _dominance_fn(threshold), "vec_id long, keep_id long, n_dupes long"
     )
@@ -873,36 +726,20 @@ def lsh_topk(
     ``LSH_BANDS`` bucket bands with the query; exact cosine ranks the
     candidates. Output: (query_id, neighbor_id, rank).
 
-    One vectorized corpus pass (r14, guide §4.2): plane-sign buckets,
+    One :func:`_topk_scan` corpus pass (r14, guide §4.2): plane-sign buckets,
     band matching against the closure-carried query bands (an OR over
     bands — the same pair-dedup the former explode+join+dropDuplicates
     bought with an exchange), and exact cosine for the band-matched
     candidates only, emitted as partition-local top-k partials for the
     final tiny window. Bit-parity: plane dots accumulate left-to-right
     against the identical PLANES literals, the ``> 0`` sign predicate
-    is unchanged, and candidate sims are :func:`_cos_csim` /
-    :func:`_seq_norms` order."""
-    import math
+    is unchanged, and candidate sims are :func:`_cosine`."""
 
-    qrows = _collect_queries(embeddings, num_queries)
-    qids = [q for q, _ in qrows]
-    qmat = [v for _, v in qrows]
-    qnorms = [math.sqrt(_py_seq_dot(v, v)) for v in qmat]
-    qbands = [_py_bands(v) for v in qmat]
-    # numpy consumer: natural partitioning, no _spread
-    corpus = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    partials = corpus.mapInArrow(
-        _lsh_partials_fn(qids, qmat, qnorms, qbands, k),
-        "query_id long, neighbor_id long, sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    def build(q: _Queries) -> DataFrame:
+        partials = _topk_scan(_corpus(embeddings), q, k, _lsh_scorer(q))
+        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
 def lsh_topk_sql(table: str = "embeddings", k: int = 5, num_queries: int = 32) -> str:
@@ -1151,15 +988,15 @@ def _round_half_up(x: float) -> float:
     return float(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
 
 
-def _batch_mat(batch, name: str, dim: int):
-    """(n × dim) float64 matrix from a fixed-width list<double> column
-    of an Arrow record batch (offsets honored via flatten)."""
+def _batch_mat(batch, name: str, dim: int, dtype: str = "float64"):
+    """(n × dim) ``dtype`` matrix from a fixed-width list column of an
+    Arrow record batch (offsets honored via flatten)."""
     import numpy as np
 
     col = batch.column(batch.schema.get_field_index(name))
     n = len(col)
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    return np.asarray(flat, dtype=np.float64).reshape(n, dim)
+    return np.asarray(flat, dtype=dtype).reshape(n, dim)
 
 
 def _batch_np(batch, name: str):
@@ -1256,34 +1093,6 @@ def _elem_sums(subdim: int) -> Column:
     return F.expr(f"array({body})")
 
 
-def _local_codebook_df(spark, rows, first_col: str):
-    """A TRUE LocalRelation codebook frame from driver data.
-
-    ``spark.createDataFrame(list)`` is RDD-backed in PySpark (the rows
-    are parallelized into defaultParallelism pickled partitions), so
-    every downstream collect/scan of the "tiny" codebook spawned 32
-    Python tasks at ~0.3 s each (measured: the _collect_books collect
-    was a 9 task-SECOND stage for 128 rows). A SQL ``VALUES`` inline
-    table folds to a Catalyst LocalRelation instead: collects are
-    driver-only (no job), broadcasts build without touching the
-    cluster. Doubles are embedded as ``CAST('<repr>' AS DOUBLE)`` —
-    ``repr`` is the shortest round-trip form, and string→double casts
-    are correctly rounded, so the values are bit-identical."""
-
-    def d(x: float) -> str:
-        return f"CAST('{x!r}' AS DOUBLE)"
-
-    parts = []
-    for key, cid, cv in rows:
-        arr = ",".join(d(float(x)) for x in cv)
-        if first_col:
-            parts.append(f"({int(key)}, CAST({int(cid)} AS BIGINT), array({arr}))")
-        else:
-            parts.append(f"(CAST({int(cid)} AS BIGINT), array({arr}))")
-    cols = f"{first_col}, cid, cv" if first_col else "cid, cv"
-    return spark.sql(f"SELECT * FROM VALUES {','.join(parts)} AS t({cols})")
-
-
 def _seq_self_norms(c_mat):
     """Per-centroid ``sqrt(dot(cv, cv))`` with the strict left-to-right
     accumulation of ``sqrt(aggregate(zip_with(cv, cv, x*y), 0.0,
@@ -1335,17 +1144,40 @@ def _py_seq_dot(a, b) -> float:
     return acc
 
 
-def _collect_queries(embeddings: DataFrame, num_queries: int) -> list:
-    """The query rows (vec_id < num_queries) as driver data, vec_id
-    ascending: ``[(vec_id, [v...])]``. The ANN query set is ≤32 rows by
-    construction — collecting it replaces a broadcast-subplan build
-    (and its job) with one pushed-filter scan, and lets the scoring
-    pass carry the queries in its task closure like the Lloyd
-    centroids."""
-    rows = embeddings.where(F.col("vec_id") < num_queries).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).collect()
-    return sorted((int(r.vec_id), [float(x) for x in r.v]) for r in rows)
+def _py_norm(v) -> float:
+    """Driver-side :func:`_seq_norms` for one vector."""
+    import math
+
+    return math.sqrt(_py_seq_dot(v, v))
+
+
+class _Queries(NamedTuple):
+    """The ANN query rows as driver data, ascending by vec_id, each
+    with its :func:`_py_norm`."""
+
+    ids: list[int]
+    vecs: list[list[float]]
+    norms: list[float]
+
+
+def _with_queries(embeddings: DataFrame, num_queries: int, out_ddl: str, build):
+    """The ANN family's driver step: collect the query rows (vec_id <
+    ``num_queries``) and return ``build(q)`` for their :class:`_Queries`.
+    The query set is ≤32 rows by construction — collecting it replaces
+    a broadcast-subplan build (and its job) with one pushed-filter
+    scan, and lets the scan carry the queries in its task closure. No
+    query rows (e.g. ``num_queries=0``) gives an empty ``out_ddl``
+    frame, built on the driver without touching the corpus."""
+    rows = _corpus(embeddings).where(F.col("vec_id") < num_queries).collect()
+    if not rows:
+        return values_df(embeddings.sparkSession, [], out_ddl)
+    pairs = sorted((int(r.vec_id), [float(x) for x in r.v]) for r in rows)
+    vecs = [v for _, v in pairs]
+    return build(_Queries([i for i, _ in pairs], vecs, [_py_norm(v) for v in vecs]))
+
+
+def _ddl_names(ddl: str) -> list[str]:
+    return [part.split()[0] for part in ddl.split(",")]
 
 
 def _topk_sel(ids, sims, k: int, largest: bool):
@@ -1353,11 +1185,266 @@ def _topk_sel(ids, sims, k: int, largest: bool):
     ``largest`` picks sim DESC (the cosine/dot rankings), else ASC
     (distances). np.lexsort's last key is primary; equal sims
     (including ±0.0, which compare equal) fall to the id key — exactly
-    the row_number window ordering these partials feed."""
+    the :func:`_rank_topk` window ordering these partials feed."""
     import numpy as np
 
     key = -sims if largest else sims
     return np.lexsort((ids, key))[:k]
+
+
+def _nan_to_floor(a):
+    """``a`` with NaN — the 0/0 cosine of a zero-norm side — replaced by
+    -1.0, the value DuckDB's ``list_cosine_similarity`` gives it."""
+    import numpy as np
+
+    return np.where(np.isnan(a), -1.0, a) if a.dtype.kind == "f" else a
+
+
+#: A scorer's ``pos`` when every row of the batch is a candidate, and
+#: its ``levels`` when there is one subset: all the candidates.
+_EVERY_ROW = slice(None)
+_ONE_LEVEL = (True,)
+
+
+def _no_extra(sel) -> tuple:
+    return ()
+
+
+def _topk_scan(
+    corpus: DataFrame, q: _Queries, k: int, score, cols: str = "sim double", largest: bool = True
+) -> DataFrame:
+    """The ANN family's partition-local top-k scan: ONE vectorized
+    corpus pass (``mapInArrow``) emitting, per batch and query, the
+    top-``k`` rows (query_id, neighbor_id, *cols). Any global top-k row
+    is in its partition's top-k, so the final :func:`_rank_topk` window
+    ranks ≤ partitions × queries × k rows; the corpus is never joined
+    or shuffled (REPOSE's prune-locally-then-merge shape).
+
+    ``score(batch)`` is the operator's scorer. For each query, in
+    ``q.ids`` order, it yields ``(pos, scores, levels, extra)``:
+    ``pos``, the candidate rows of the batch (``_EVERY_ROW`` for all);
+    ``scores``, their values of the first of ``cols``; ``levels``,
+    nested candidate subsets as boolean masks over ``pos`` — the top-k
+    of each is kept and their union emitted (``_ONE_LEVEL`` is the
+    plain top-k); and ``extra(sel)``, the other ``cols`` for the
+    selected positions ``sel`` into ``pos``, computed for those only.
+
+    The kernel owns the rest: the vec_id decode, dropping the query's
+    own row, mapping NaN to -1.0 in every float column before selecting
+    and emitting (:func:`_nan_to_floor`, so a zero vector ranks as in
+    the DuckDB twins whatever the partitioning), the (score, id)
+    selection (:func:`_topk_sel`, score DESC when ``largest``) and the
+    record batch."""
+    qids = q.ids
+    names = ["query_id", "neighbor_id", *_ddl_names(cols)]
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            ids = _batch_np(batch, "vec_id")
+            out = []
+            for qid, (pos, scores, levels, extra) in zip(qids, score(batch)):
+                nbr = ids[pos]
+                scores = _nan_to_floor(scores)
+                own = nbr != qid
+                picked = []
+                for lv in levels:
+                    cand = np.nonzero(lv & own)[0]
+                    picked.append(cand[_topk_sel(nbr[cand], scores[cand], k, largest)])
+                sel = np.unique(np.concatenate(picked))
+                out.append(
+                    [np.full(len(sel), qid, dtype=np.int64), nbr[sel], scores[sel]]
+                    + [_nan_to_floor(x) for x in extra(sel)]
+                )
+            yield pa.record_batch(
+                [pa.array(np.concatenate(c)) for c in zip(*out)], names=names
+            )
+
+    return corpus.mapInArrow(fn, f"query_id long, neighbor_id long, {cols}")
+
+
+def _rank_topk(
+    partials: DataFrame, k: int, score: str = "sim", largest: bool = True, rank: str = "rank"
+) -> DataFrame:
+    """The top ``k`` rows per query_id by (``score`` DESC — ASC unless
+    ``largest`` — then neighbor_id ASC), numbered from 1 in ``rank``:
+    the final window over :func:`_topk_scan` partials, in the order its
+    selection used."""
+    order = F.desc(score) if largest else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return partials.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
+def _cosine(vecs, norms, qv, qnorm: float):
+    """Cosines of the rows ``vecs`` (norms ``norms``) to one query: the
+    strict left-to-right :func:`_seq_dot`, one IEEE norm multiply, one
+    IEEE divide — the ``aggregate(zip_with)`` value, and one column of
+    :func:`_cos_csim`."""
+    return _seq_dot(vecs, qv) / (norms * qnorm)
+
+
+def _popcount32(a):
+    """Set bits of each int64 in ``a`` (all in [0, 2^32)), by SWAR bit
+    counting — exact integer arithmetic."""
+    a = a - ((a >> 1) & 0x55555555)
+    a = (a & 0x33333333) + ((a >> 2) & 0x33333333)
+    a = (a + (a >> 4)) & 0x0F0F0F0F
+    return ((a * 0x01010101) & 0xFFFFFFFF) >> 24
+
+
+def _brute_scorer(q: _Queries):
+    """Every row, scored by exact cosine: one :func:`_seq_norms` per
+    batch (the bit-exact ``_with_norm`` order) and one :func:`_seq_dot`
+    per query."""
+    import numpy as np
+
+    qm = np.asarray(q.vecs, dtype=np.float64)
+    qn = q.norms
+
+    def score(batch):
+        vecs = _batch_mat(batch, "v", qm.shape[1])
+        norms = _seq_norms(vecs)
+        for qv, qnorm in zip(qm, qn):
+            yield _EVERY_ROW, _cosine(vecs, norms, qv, qnorm), _ONE_LEVEL, _no_extra
+
+    return score
+
+
+def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: bool = False):
+    """Rows whose cell is one of the query's probed cells at the
+    deepest of ``levels``, scored by exact cosine, with one subset per
+    level (probe_rn ≤ p) and the extra ``probe_rn`` column. A row's
+    cell is its max-cosine centroid of the cid-ascending ``cents``
+    (argmax first occurrence == the former ``array_min(struct(negsim,
+    cid))``), taken on the batch's (q, qnorm) lattice columns when
+    ``quantized`` — the trained codebook's geometry — else on v. A
+    vector lives in one cell, so a (query, neighbor) pair is emitted at
+    most once per batch."""
+    import numpy as np
+
+    c_mat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
+    cnorms = [cn for _, _, cn in cents]
+    qm = np.asarray(q.vecs, dtype=np.float64)
+    qn = q.norms
+    max_p = max(levels)
+    # centroid index → probe_rn per query (0 = not probed)
+    rnmaps = np.zeros((len(qm), len(cents)), dtype=np.int32)
+    for j, plist in enumerate(probe_lists):
+        for idx, rn in plist:
+            rnmaps[j, idx] = rn
+
+    def score(batch):
+        vecs = _batch_mat(batch, "v", qm.shape[1])
+        norms = _seq_norms(vecs)
+        if quantized:
+            cell_vecs = _batch_mat(batch, "q", qm.shape[1])
+            cells = _cos_csim(cell_vecs, _batch_np(batch, "qnorm"), c_mat, cnorms)
+        else:
+            cells = _cos_csim(vecs, norms, c_mat, cnorms)
+        amax = cells.argmax(axis=1)
+        for qv, qnorm, rnmap in zip(qm, qn, rnmaps):
+            prn = rnmap[amax]
+            pos = np.nonzero((prn >= 1) & (prn <= max_p))[0]
+            prn = prn[pos]
+            yield (
+                pos,
+                _cosine(vecs[pos], norms[pos], qv, qnorm),
+                [prn <= p for p in levels],
+                lambda sel, prn=prn: (prn[sel],),
+            )
+
+    return score
+
+
+def _jl_scorer(q: _Queries, out_dim: int):
+    """Every row, scored by its EXACT int64 dot product with the query
+    in the ``out_dim``-axis JL projection of the integral lattice (any
+    summation order is exact). The queries' projections use the
+    identical HALF_UP lattice rounding (:func:`_round_half_up`)."""
+    import numpy as np
+
+    signs = np.asarray(_jl_matrix(out_dim, EMBED_DIM), dtype=np.int64)
+    qq = np.asarray(
+        [[int(_round_half_up(x * KMEANS_QUANT)) for x in v] for v in q.vecs],
+        dtype=np.int64,
+    )
+    qproj = qq @ signs.T  # (num_queries × out_dim), exact int64
+
+    def score(batch):
+        lattice = _batch_mat(batch, "q", signs.shape[1], "int64")
+        sims = (lattice @ signs.T) @ qproj.T  # (n × num_queries), exact
+        for j in range(len(qproj)):
+            yield _EVERY_ROW, sims[:, j], _ONE_LEVEL, _no_extra
+
+    return score
+
+
+def _lsh_scorer(q: _Queries):
+    """Rows sharing ANY band value with the query — an OR over bands,
+    so a pair sharing both counts once — scored by exact cosine. Plane
+    dots accumulate left-to-right against the PLANES literals under
+    :func:`_bucket_col`'s ``> 0`` predicate."""
+    import numpy as np
+
+    qm = np.asarray(q.vecs, dtype=np.float64)
+    qn = q.norms
+    qb = np.asarray([_py_bands(v) for v in q.vecs], dtype=np.int64)
+    planes = np.asarray(PLANES, dtype=np.float64)
+    mask_bits = (1 << BAND_BITS) - 1
+
+    def score(batch):
+        vecs = _batch_mat(batch, "v", qm.shape[1])
+        bucket = np.zeros(len(vecs), dtype=np.int64)
+        for p in range(NUM_PLANES):
+            bucket |= (_seq_dot(vecs, planes[p]) > 0.0).astype(np.int64) << p
+        bands = np.stack(
+            [(bucket >> (i * BAND_BITS)) & mask_bits for i in range(LSH_BANDS)],
+            axis=1,
+        )  # (n × LSH_BANDS)
+        norms = _seq_norms(vecs)
+        for qv, qnorm, qband in zip(qm, qn, qb):
+            pos = np.nonzero((bands == qband).any(axis=1))[0]
+            yield pos, _cosine(vecs[pos], norms[pos], qv, qnorm), _ONE_LEVEL, _no_extra
+
+    return score
+
+
+def _hamming_scorer(q: _Queries):
+    """Every row, scored by the Hamming distance between its two
+    32-bit sign words and the query's (bit i of word w ⇔ v[w*32+i] > 0,
+    missing trailing dims read as 0, like :func:`_sign_words`); the
+    extra ``sim`` column is the exact cosine of the selected rows only,
+    for the rerank."""
+    import numpy as np
+
+    qm = np.asarray(q.vecs, dtype=np.float64)
+    qn = q.norms
+    qw = np.asarray([_py_sign_words(v) for v in q.vecs], dtype=np.int64)
+    pows = np.int64(1) << np.arange(32, dtype=np.int64)
+
+    def score(batch):
+        vecs = _batch_mat(batch, "v", qm.shape[1])
+        bits = vecs > 0.0
+        b0 = bits[:, :32]
+        b1 = bits[:, 32:64]
+        w0 = (b0 * pows[: b0.shape[1]]).sum(axis=1).astype(np.int64)
+        w1 = (b1 * pows[: b1.shape[1]]).sum(axis=1).astype(np.int64)
+        norms = _seq_norms(vecs)
+        for qv, qnorm, (q0, q1) in zip(qm, qn, qw):
+            yield (
+                _EVERY_ROW,
+                _popcount32(w0 ^ q0) + _popcount32(w1 ^ q1),
+                _ONE_LEVEL,
+                lambda sel, qv=qv, qnorm=qnorm: (
+                    _cosine(vecs[sel], norms[sel], qv, qnorm),
+                ),
+            )
+
+    return score
 
 
 def _cos_partials_fn(cids: list, c_mat):
@@ -1398,118 +1485,6 @@ def _cos_partials_fn(cids: list, c_mat):
     return fn
 
 
-def _cos_assign_fn(cids: list, c_mat, cnorms: list):
-    """mapInArrow body: (vec_id, q, qnorm) → (vec_id, cid) max-cosine
-    assignment against the captured centroids (cnorms taken verbatim
-    from the trained frame's Spark-computed column)."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cmat = np.asarray(c_mat, dtype=np.float64)
-        cid_arr = np.asarray(cids, dtype=np.int64)
-        for batch in batches:
-            ids = _batch_np(batch, "vec_id")
-            vecs = _batch_mat(batch, "q", cmat.shape[1])
-            qnorm = _batch_np(batch, "qnorm")
-            if not vecs.shape[0]:
-                continue
-            amax = _cos_csim(vecs, qnorm, cmat, cnorms).argmax(axis=1)
-            yield pa.record_batch(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(cid_arr[amax], pa.int64()),
-                ],
-                names=["vec_id", "cid"],
-            )
-
-    return fn
-
-
-def _brute_partials_fn(qids: list, q_mat, qnorms: list, k: int):
-    """mapInArrow body: (vec_id, v) → per-partition top-k (query_id,
-    neighbor_id, sim) per query. Norms are :func:`_seq_norms` (the
-    bit-exact ``_with_norm`` order); sims are :func:`_cos_csim`."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        qm = np.asarray(q_mat, dtype=np.float64)
-        qn = list(qnorms)
-        qi = [int(q) for q in qids]
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = _batch_np(batch, "vec_id")
-            vecs = _batch_mat(batch, "v", qm.shape[1])
-            norms = _seq_norms(vecs)
-            csim = _cos_csim(vecs, norms, qm, qn)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(qi):
-                excl = ids != qid
-                sel_ids = ids[excl]
-                sel = csim[excl, j]
-                top = _topk_sel(sel_ids, sel, k, largest=True)
-                out_q.extend([qid] * len(top))
-                out_n.extend(int(x) for x in sel_ids[top])
-                out_s.extend(float(x) for x in sel[top])
-            yield pa.record_batch(
-                [
-                    pa.array(out_q, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_s, pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "sim"],
-            )
-
-    return fn
-
-
-def _jl_partials_fn(qids: list, qproj, signs, k: int):
-    """mapInArrow body: (vec_id, q int64 lattice) → per-partition
-    top-k (query_id, neighbor_id, sim) per query, sims exact int64
-    projected dot products."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        qp = np.asarray(qproj, dtype=np.int64)
-        sg = np.asarray(signs, dtype=np.int64)
-        qi = [int(q) for q in qids]
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = _batch_np(batch, "vec_id")
-            col = batch.column(batch.schema.get_field_index("q"))
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            qmat = np.asarray(flat, dtype=np.int64).reshape(
-                len(ids), sg.shape[1]
-            )
-            sims = (qmat @ sg.T) @ qp.T  # (n × num_queries), exact
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(qi):
-                excl = ids != qid
-                sel_ids = ids[excl]
-                sel = sims[excl, j]
-                top = _topk_sel(sel_ids, sel, k, largest=True)
-                out_q.extend([qid] * len(top))
-                out_n.extend(int(x) for x in sel_ids[top])
-                out_s.extend(int(x) for x in sel[top])
-            yield pa.record_batch(
-                [
-                    pa.array(out_q, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_s, pa.int64()),
-                ],
-                names=["query_id", "neighbor_id", "sim"],
-            )
-
-    return fn
-
-
 def _py_bands(v) -> list[int]:
     """Driver-side LSH band values for one vector: the
     :func:`_bucket_col` plane-sign bucket (strict left-to-right dots
@@ -1523,115 +1498,6 @@ def _py_bands(v) -> list[int]:
         (bucket >> (i * BAND_BITS)) & ((1 << BAND_BITS) - 1)
         for i in range(LSH_BANDS)
     ]
-
-
-def _lsh_partials_fn(qids, q_mat, qnorms, qbands, k: int):
-    """mapInArrow body: (vec_id, v) → per-partition top-k per query
-    over band-matched candidates. A row is a candidate for query j iff
-    ANY band value matches — computed as an OR over bands, so a pair
-    sharing both bands is naturally counted once."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        qm = np.asarray(q_mat, dtype=np.float64)
-        qn = list(qnorms)
-        qi = [int(q) for q in qids]
-        qb = np.asarray(qbands, dtype=np.int64)  # (nq × LSH_BANDS)
-        planes = np.asarray(PLANES, dtype=np.float64)
-        mask_bits = (1 << BAND_BITS) - 1
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = _batch_np(batch, "vec_id")
-            vecs = _batch_mat(batch, "v", qm.shape[1])
-            bucket = np.zeros(len(ids), dtype=np.int64)
-            for p in range(NUM_PLANES):
-                bucket |= (_seq_dot(vecs, planes[p]) > 0.0).astype(
-                    np.int64
-                ) << p
-            bands = np.stack(
-                [
-                    (bucket >> (i * BAND_BITS)) & mask_bits
-                    for i in range(LSH_BANDS)
-                ],
-                axis=1,
-            )  # (n × LSH_BANDS)
-            norms = _seq_norms(vecs)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(qi):
-                cand = (bands == qb[j]).any(axis=1) & (ids != qid)
-                pos = np.nonzero(cand)[0]
-                if not len(pos):
-                    continue
-                sims = _seq_dot(vecs[pos], qm[j]) / (norms[pos] * qn[j])
-                top = _topk_sel(ids[pos], sims, k, largest=True)
-                out_q.extend([qid] * len(top))
-                out_n.extend(int(x) for x in ids[pos][top])
-                out_s.extend(float(x) for x in sims[top])
-            yield pa.record_batch(
-                [
-                    pa.array(out_q, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_s, pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "sim"],
-            )
-
-    return fn
-
-
-def _ivf_kmeans_partials_fn(cents: list, qs_raw: list, probe_lists: list, k: int):
-    """mapInArrow body for the trained-codebook IVF scan: (vec_id, v,
-    q, qnorm) rows — cell assignment on the quantized (q, qnorm)
-    columns against the trained centroids, exact-cosine scoring of
-    probed candidates on the raw v (norms via :func:`_seq_norms`, the
-    `_with_norm` order), partition-local top-k per query."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        c_mat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
-        cnorms = [cn for _, _, cn in cents]
-        qi = [int(q) for q, _, _ in qs_raw]
-        qm = np.asarray([qv for _, qv, _ in qs_raw], dtype=np.float64)
-        qn = [qnorm for _, _, qnorm in qs_raw]
-        rnmaps = np.zeros((len(qs_raw), len(cents)), dtype=np.int64)
-        for j, plist in enumerate(probe_lists):
-            for idx, rn in plist:
-                rnmaps[j, idx] = rn
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = _batch_np(batch, "vec_id")
-            vecs = _batch_mat(batch, "v", qm.shape[1])
-            qvecs = _batch_mat(batch, "q", qm.shape[1])
-            qnorm = _batch_np(batch, "qnorm")
-            amax = _cos_csim(qvecs, qnorm, c_mat, cnorms).argmax(axis=1)
-            norms = _seq_norms(vecs)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(qi):
-                cand = (rnmaps[j][amax] >= 1) & (ids != qid)
-                pos = np.nonzero(cand)[0]
-                if not len(pos):
-                    continue
-                sims = _seq_dot(vecs[pos], qm[j]) / (norms[pos] * qn[j])
-                top = _topk_sel(ids[pos], sims, k, largest=True)
-                out_q.extend([qid] * len(top))
-                out_n.extend(int(x) for x in ids[pos][top])
-                out_s.extend(float(x) for x in sims[top])
-            yield pa.record_batch(
-                [
-                    pa.array(out_q, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_s, pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "sim"],
-            )
-
-    return fn
 
 
 def _py_sign_words(v) -> tuple[int, int]:
@@ -1648,84 +1514,21 @@ def _py_sign_words(v) -> tuple[int, int]:
     return words[0], words[1]
 
 
-def _hamming_partials_fn(qids, q_mat, qnorms, qwords, n_candidates: int):
-    """mapInArrow body: (vec_id, v) → per-partition Hamming
-    top-n_candidates per query, each row carrying its exact cosine
-    (computed here, where the float vector is already in hand)."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        qm = np.asarray(q_mat, dtype=np.float64)
-        qn = list(qnorms)
-        qi = [int(q) for q in qids]
-        qw = np.asarray(qwords, dtype=np.int64)  # (nq × 2)
-        # 16-bit popcount table: bit_count is numpy≥2 only
-        pop16 = np.array(
-            [bin(x).count("1") for x in range(1 << 16)], dtype=np.int64
-        )
-
-        def popcount(a):
-            c = pop16[a & 0xFFFF]
-            c += pop16[(a >> 16) & 0xFFFF]
-            return c
-
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = _batch_np(batch, "vec_id")
-            vecs = _batch_mat(batch, "v", qm.shape[1])
-            # sign words, vectorized: bit i of word w ⇔ v[w*32+i] > 0
-            # (missing trailing dims read as sign 0, like _sign_words)
-            bits = vecs > 0.0
-            pows = np.int64(1) << np.arange(32, dtype=np.int64)
-            b0 = bits[:, :32]
-            b1 = bits[:, 32:64]
-            w0 = (b0 * pows[: b0.shape[1]]).sum(axis=1).astype(np.int64)
-            w1 = (b1 * pows[: b1.shape[1]]).sum(axis=1).astype(np.int64)
-            norms = _seq_norms(vecs)
-            out = ([], [], [], [])
-            for j, qid in enumerate(qi):
-                ham = popcount(w0 ^ qw[j, 0]) + popcount(w1 ^ qw[j, 1])
-                excl = ids != qid
-                sel_ids = ids[excl]
-                sel_ham = ham[excl]
-                top = _topk_sel(sel_ids, sel_ham, n_candidates, largest=False)
-                cand_pos = np.nonzero(excl)[0][top]
-                sims = _seq_dot(vecs[cand_pos], qm[j]) / (
-                    norms[cand_pos] * qn[j]
-                )
-                out[0].extend([qid] * len(top))
-                out[1].extend(int(x) for x in sel_ids[top])
-                out[2].extend(int(x) for x in sel_ham[top])
-                out[3].extend(float(x) for x in sims)
-            yield pa.record_batch(
-                [
-                    pa.array(out[0], pa.int64()),
-                    pa.array(out[1], pa.int64()),
-                    pa.array(out[2], pa.int64()),
-                    pa.array(out[3], pa.float64()),
-                ],
-                names=["query_id", "neighbor_id", "hamming", "sim"],
-            )
-
-    return fn
-
-
-def _cos_assign_payload_fn(cids: list, c_mat, cnorms: list, payload: tuple = ("v", "norm")):
+def _cos_assign_payload_fn(cents: list, payload: tuple):
     """mapInArrow body: (vec_id, q, qnorm, *payload) → (vec_id, cid,
-    *payload) — the :func:`_cos_assign_fn` max-cosine assignment with
-    the payload columns passed through untouched (zero-copy Arrow
-    columns), so one corpus pass feeds a downstream per-cluster
-    consumer without a join back to the embeddings."""
+    *payload) — max-cosine assignment to the cid-ascending ``cents``
+    [(cid, cv, cnorm)], with the payload columns passed through
+    untouched (zero-copy Arrow columns), so one corpus pass feeds a
+    downstream per-cluster consumer without a join back to the
+    embeddings."""
 
     def fn(batches):
         import numpy as np
         import pyarrow as pa
 
-        cmat = np.asarray(c_mat, dtype=np.float64)
-        cid_arr = np.asarray(cids, dtype=np.int64)
+        cmat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
+        cnorms = [cn for _, _, cn in cents]
+        cid_arr = np.asarray([c for c, _, _ in cents], dtype=np.int64)
         for batch in batches:
             if not batch.num_rows:
                 continue
@@ -1907,7 +1710,7 @@ def _pq_train(
         for s, (cids, c_mat) in sorted(cents.items())
         for j, cid in enumerate(cids)
     ]
-    return _local_codebook_df(spark, rows, "sub")
+    return values_df(spark, rows, "sub int, cid long, cv array<double>")
 
 
 def _collect_books(codebooks: DataFrame) -> dict:
@@ -3265,8 +3068,6 @@ def mmr_select(
         winners.append((rank, r.vec_id, r.score_num))
         sel_vecs.append([int(x) for x in r.q])
         cands = cands.where(F.col("vec_id") != r.vec_id)
-    from ..localrel import values_df
-
     # LocalRelation result frame (r14): driver-only collects
     return values_df(
         embeddings.sparkSession, winners, "sel_rank long, vec_id long, score_num long"
@@ -3460,41 +3261,22 @@ def jl_topk(
     exactness for free (int64 lattice: any summation order; numpy and
     Java longs share wrap-around semantics even hypothetically).
 
-    One vectorized corpus pass (r14, guide §4.2): quantization,
-    projection, and scoring run as int64 numpy matmuls inside
-    mapInArrow; the queries' projections are computed driver-side with
-    the identical HALF_UP lattice rounding (:func:`_round_half_up`);
-    the final window ranks partition-local top-k partials only."""
-    import numpy as np
-
-    signs = np.asarray(_jl_matrix(out_dim, EMBED_DIM), dtype=np.int64)
-    qrows = _collect_queries(embeddings, num_queries)
-    qids = [q for q, _ in qrows]
-    qq = np.asarray(
-        [[int(_round_half_up(x * KMEANS_QUANT)) for x in v] for _, v in qrows],
-        dtype=np.int64,
-    )
-    qproj = qq @ signs.T  # (num_queries × out_dim), exact int64
+    One :func:`_topk_scan` corpus pass (r14, guide §4.2): projection
+    and scoring run as int64 numpy matmuls (:func:`_jl_scorer`); the
+    final window ranks partition-local top-k partials only."""
     # the corpus quantization stays the Spark expression _quantized
     # uses (same HALF_UP round), so the lattice is pinned in one place
-    q = F.transform(
+    lattice = F.transform(
         F.col("embedding").cast("array<double>"),
         lambda x: F.round(x * F.lit(KMEANS_QUANT), 0).cast("long"),
     )
-    # numpy consumer: natural partitioning, no _spread
-    base = embeddings.select("vec_id", q.alias("q"))
-    partials = base.mapInArrow(
-        _jl_partials_fn(qids, qproj, signs, k),
-        "query_id long, neighbor_id long, sim long",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+
+    def build(q: _Queries) -> DataFrame:
+        corpus = embeddings.select("vec_id", lattice.alias("q"))
+        partials = _topk_scan(corpus, q, k, _jl_scorer(q, out_dim), "sim long")
+        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
 def jl_topk_sql(
@@ -3562,29 +3344,14 @@ def cluster_label_purity(
     # passthrough column (r14 session 2), deleting the join back to
     # the embeddings (two exchanges) — same fusion as semantic_dedup.
     cents = kmeans_codebook(embeddings, n_centroids, n_iters)
-    v = F.col("embedding").cast("array<double>")
-    src = (
+    src = _with_lattice(
         embeddings.select(
-            "vec_id", F.col("label").cast("long").alias("label"), v.alias("v")
+            "vec_id",
+            F.col("label").cast("long").alias("label"),
+            F.col("embedding").cast("array<double>").alias("v"),
         )
-        .withColumn(
-            "q", F.transform(F.col("v"), lambda x: F.round(x * F.lit(KMEANS_QUANT), 0))
-        )
-        .withColumn("qnorm", F.sqrt(_dot(F.col("q"), F.col("q"))))
     )  # numpy consumer: no _spread
-    rows = sorted(
-        ((r.cid, list(r.cv), r.cnorm) for r in cents.select("cid", "cv", "cnorm").collect()),
-        key=lambda t: t[0],
-    )
-    labeled = src.mapInArrow(
-        _cos_assign_payload_fn(
-            [c for c, _, _ in rows],
-            [cv for _, cv, _ in rows],
-            [n for _, _, n in rows],
-            payload=("label",),
-        ),
-        "vec_id long, cid long, label long",
-    )
+    labeled = _kmeans_assign(src, cents, "label long")
     votes = labeled.groupBy("cid", "label").agg(
         F.count(F.lit(1)).cast("long").alias("votes")
     )
@@ -3788,7 +3555,7 @@ def hamming_rerank_topk(
     ``n_candidates`` closest, then re-score ONLY those candidates with
     exact cosine and emit the top ``k``.
 
-    100 TB design (r14, guide §4.2): ONE vectorized corpus pass packs
+    100 TB design (r14, guide §4.2): ONE :func:`_topk_scan` pass packs
     the sign words, ranks each partition's Hamming top-n_candidates
     per query, and — since the float vectors are in hand — scores the
     exact cosine for those partial candidates in the same pass (the
@@ -3799,33 +3566,26 @@ def hamming_rerank_topk(
     window (sim DESC, id ASC) on the SAME partitioning emits the top
     k — both windows share one exchange. Bit-parity: packing is the
     identical ``x > 0`` bit predicate (ints exact), sims are
-    :func:`_cos_csim` / :func:`_seq_norms` order.
+    :func:`_cosine`.
     Output: (query_id, neighbor_id, hamming, rank) — integers plus a
     cosine-ordered rank, ties by neighbor_id."""
-    import math
 
-    qrows = _collect_queries(embeddings, num_queries)
-    qids = [q for q, _ in qrows]
-    qmat = [v for _, v in qrows]
-    qnorms = [math.sqrt(_py_seq_dot(v, v)) for v in qmat]
-    qwords = [_py_sign_words(v) for v in qmat]
-    # numpy consumer: natural partitioning, no _spread
-    corpus = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    partials = corpus.mapInArrow(
-        _hamming_partials_fn(qids, qmat, qnorms, qwords, n_candidates),
-        "query_id long, neighbor_id long, hamming long, sim double",
-    )
-    wnd = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    cand = partials.withColumn("crank", F.row_number().over(wnd)).where(
-        F.col("crank") <= n_candidates
-    )
-    rw = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(rw).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "hamming", "rank")
+    def build(q: _Queries) -> DataFrame:
+        partials = _topk_scan(
+            _corpus(embeddings),
+            q,
+            n_candidates,
+            _hamming_scorer(q),
+            "hamming long, sim double",
+            largest=False,
+        )
+        cand = _rank_topk(partials, n_candidates, "hamming", largest=False, rank="crank")
+        return _rank_topk(cand, k).select(
+            "query_id", "neighbor_id", "hamming", F.col("rank").cast("long").alias("rank")
+        )
+
+    return _with_queries(
+        embeddings, num_queries, "query_id long, neighbor_id long, hamming long, rank long", build
     )
 
 

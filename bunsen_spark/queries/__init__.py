@@ -382,45 +382,43 @@ def _reorder(out: dict) -> dict:
     return {n: out[n] for n in names}
 
 
-def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+#: The query modules, in registration order: a later module's entry
+#: overrides an earlier one's of the same name.
+_MODULES = (
+    "relational",
+    "tpch_extra",
+    "pipeline",
+    "pipeline_extra",
+    "pipeline_r5",
+    "pipeline_r5b",
+    "pipeline_r7",
+    "pipeline_r7b",
+    "pipeline_r8",
+    "pipeline_r9",
+    "pipeline_r10",
+    "pipeline_r11",
+    "domain",
+)
+
+
+def _registry(attr: str) -> dict:
+    """The ``attr`` dicts (``QUERIES`` or ``ORACLES``) of every module
+    in ``_MODULES``, merged in order and then ``_reorder``-ed."""
     # no ImportError swallowing: these modules depend only on pyspark +
     # stdlib, so a failure here is a bug that must surface, not a
     # missing optional dependency (silently dropping a module would
     # shrink the correctness gate by 20+ queries)
-    from . import domain, pipeline, pipeline_extra, pipeline_r5, pipeline_r5b, pipeline_r7, pipeline_r7b, pipeline_r8, pipeline_r9, pipeline_r10, pipeline_r11, relational, tpch_extra
+    from importlib import import_module
 
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(relational.QUERIES)
-    out.update(tpch_extra.QUERIES)
-    out.update(pipeline.QUERIES)
-    out.update(pipeline_extra.QUERIES)
-    out.update(pipeline_r5.QUERIES)
-    out.update(pipeline_r5b.QUERIES)
-    out.update(pipeline_r7.QUERIES)
-    out.update(pipeline_r7b.QUERIES)
-    out.update(pipeline_r8.QUERIES)
-    out.update(pipeline_r9.QUERIES)
-    out.update(pipeline_r10.QUERIES)
-    out.update(pipeline_r11.QUERIES)
-    out.update(domain.QUERIES)
+    out: dict = {}
+    for name in _MODULES:
+        out.update(getattr(import_module(f".{name}", __name__), attr))
     return _reorder(out)
+
+
+def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return _registry("QUERIES")
 
 
 def all_oracles() -> dict[str, str]:
-    from . import domain, pipeline, pipeline_extra, pipeline_r5, pipeline_r5b, pipeline_r7, pipeline_r7b, pipeline_r8, pipeline_r9, pipeline_r10, pipeline_r11, relational, tpch_extra
-
-    out: dict[str, str] = {}
-    out.update(relational.ORACLES)
-    out.update(tpch_extra.ORACLES)
-    out.update(pipeline.ORACLES)
-    out.update(pipeline_extra.ORACLES)
-    out.update(pipeline_r5.ORACLES)
-    out.update(pipeline_r5b.ORACLES)
-    out.update(pipeline_r7.ORACLES)
-    out.update(pipeline_r7b.ORACLES)
-    out.update(pipeline_r8.ORACLES)
-    out.update(pipeline_r9.ORACLES)
-    out.update(pipeline_r10.ORACLES)
-    out.update(pipeline_r11.ORACLES)
-    out.update(domain.ORACLES)
-    return _reorder(out)
+    return _registry("ORACLES")

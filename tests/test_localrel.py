@@ -28,6 +28,17 @@ def test_values_df_matches_createdataframe(spark):
     )
 
 
+def test_values_df_array_double(spark):
+    rows = [(1, [0.1, -0.0, 1e-300, float("inf")]), (2, []), (3, None)]
+    ddl = "a long, v array<double>"
+    got = values_df(spark, rows, ddl)
+    assert got.dtypes == [("a", "bigint"), ("v", "array<double>")]
+    assert "LocalRelation" in got._jdf.queryExecution().optimizedPlan().toString()
+    assert sorted(map(tuple, got.collect()), key=str) == sorted(
+        map(tuple, spark.createDataFrame(rows, ddl).collect()), key=str
+    )
+
+
 def test_values_df_is_local_relation(spark):
     df = values_df(spark, [(1, "x")], "a int, b string")
     # a LocalRelation collect launches no job: executedPlan has no scan

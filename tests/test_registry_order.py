@@ -16,6 +16,7 @@ def test_queries_and_oracles_align_exactly():
 
     q = e.queries()
     o = e.oracle_sql()
+    assert len(q) == 182
     assert list(q) == list(o), "registry order must match between dicts"
     assert set(q) == set(o)
 

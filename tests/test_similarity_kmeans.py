@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from bunsen_spark.operators import similarity as sim
 from bunsen_spark.operators.similarity import (
     ivf_kmeans_topk,
     ivf_topk,
@@ -215,11 +216,70 @@ def test_ivfpq_candidates_come_from_probed_cells(spark, sf_dir):
     assert recall > 0.05, recall  # chance is ~0.02 on random vectors
 
 
-def test_brute_force_topk_empty_query_set(spark, sf_dir):
-    """No query rows returns an empty (query_id, neighbor_id, rank)
-    frame from the driver instead of failing inside the scan."""
-    from bunsen_spark.operators.similarity import brute_force_topk
+#: The operators on the shared partition-local top-k scan.
+_SCAN_OPS = [
+    sim.brute_force_topk,
+    sim.ivf_topk,
+    sim.ivf_probe_sweep,
+    sim.ivf_kmeans_topk,
+    sim.lsh_topk,
+    sim.jl_topk,
+    sim.hamming_rerank_topk,
+]
 
-    out = brute_force_topk(_emb(spark, sf_dir), k=5, num_queries=0)
-    assert out.columns == ["query_id", "neighbor_id", "rank"]
+
+@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+def test_brute_force_topk_empty_query_set(spark, sf_dir, op):
+    """No query rows returns an empty frame with the operator's output
+    columns, from the driver, instead of failing inside the scan."""
+    cols = {
+        sim.ivf_probe_sweep: ["n_probe", "query_id", "neighbor_id", "rank"],
+        sim.hamming_rerank_topk: ["query_id", "neighbor_id", "hamming", "rank"],
+    }.get(op, ["query_id", "neighbor_id", "rank"])
+    out = op(_emb(spark, sf_dir), k=5, num_queries=0)
+    assert out.columns == cols
     assert out.collect() == []
+
+
+@pytest.fixture(scope="module")
+def zero_vector_corpus(tmp_path_factory):
+    """Parquet path of 200 random 64-d vectors, vector 150 all zeros."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(7)
+    vecs = [
+        [0.0] * 64 if i == 150 else [rng.uniform(-1, 1) for _ in range(64)]
+        for i in range(200)
+    ]
+    path = str(tmp_path_factory.mktemp("zero_vec") / "embeddings.parquet")
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(200), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        }
+    )
+    pq.write_table(table, path)
+    return path
+
+
+@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+def test_zero_norm_vector_independent_of_partitioning(spark, zero_vector_corpus, op):
+    """A zero-norm vector's cosine (0/0) ranks as -1.0, DuckDB's
+    ``list_cosine_similarity`` value, so the result does not depend on
+    how the corpus is partitioned, and matches the DuckDB twin."""
+    import duckdb
+
+    path = zero_vector_corpus
+    emb = spark.read.parquet(path)
+    one = sorted(map(tuple, op(emb.repartition(1), k=5, num_queries=8).collect()))
+    many = sorted(map(tuple, op(emb.repartition(64), k=5, num_queries=8).collect()))
+    assert one == many
+    twin = getattr(sim, f"{op.__name__}_sql", None)
+    if twin is not None:
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+        want = sorted(con.execute(twin(k=5, num_queries=8)).fetchall())
+        assert one == want
