@@ -1,23 +1,25 @@
 """Similarity search over an embedding column (``array<float>``):
-brute-force cosine top-k as the exact baseline, and a random-hyperplane
-LSH-bucketed variant as the approximate scale path.
+brute-force cosine top-k as the exact baseline, and approximate
+variants (IVF, LSH, JL projection, Hamming rerank, PQ) as the scale
+path.
 
-Beyond-reference scale extension (SURVEY §7 M7). Design for 100 TB:
+Beyond-reference scale extension (SURVEY §7 M7). The top-k searches
+are scatter-gather (REPOSE's prune-locally-then-merge shape):
 
-- **brute-force top-k**: the query set is broadcast (it is small by
-  construction), so scoring is a map-side broadcast nested loop over
-  the corpus — no shuffle of the corpus — followed by a top-k window
-  per query. Dot products run as Catalyst higher-order functions
-  (``zip_with`` + ``aggregate``) inside codegen; for very wide
-  vectors a pandas_udf with numpy matmul is the drop-in upgrade, but
-  at 64 dims the JVM expression wins (no Arrow transfer).
+- **scatter**: the query set is small by construction, so it is
+  collected once and carried in the task closure. Each corpus
+  partition is scored in ONE vectorized ``mapInArrow`` pass (numpy,
+  strict left-to-right dot products for bit-parity with the DuckDB
+  twins) and emits only its partition-local top-k per query.
+- **gather**: those ≤ partitions × queries × k partial rows are
+  collected to the driver and merged there with numpy; the result is
+  a LocalRelation. The corpus is never joined or shuffled: an exact
+  search runs two jobs (queries, scan) and no exchange.
 - **LSH top-k**: each vector gets a ``NUM_PLANES``-bit bucket from the
   signs of dot products with fixed pseudo-random hyperplanes; bucket
   bits are split into bands, candidates must share a band value with
   the query (multi-probe across bands), and only candidates are scored
-  exactly. Corpus-side work is one narrow map + a band-key equi-join —
-  the classic sub-quadratic ANN path. Recall is approximate;
-  ranking among candidates is exact.
+  exactly. Recall is approximate; ranking among candidates is exact.
 
 The hyperplane weights derive from the portable md5 integer hash, so a
 DuckDB oracle reproduces bucket assignments exactly; similarity values
@@ -121,21 +123,20 @@ def brute_force_topk(
     (query_id, neighbor_id, rank) — rank 1 = nearest, ties broken by
     neighbor_id.
 
-    One :func:`_topk_scan` corpus pass (r14, guide §4.2 — same
-    treatment as the Lloyd family) with the queries in the task
-    closure, then the tiny :func:`_rank_topk` window; the corpus is
-    never joined, shuffled, or scored through interpreted HOFs.
-    Bit-parity: sims are :func:`_cosine` (strict left-to-right dots,
-    single IEEE norm-multiply/divide — the exact ``aggregate(zip_with)``
-    values). No query rows (e.g. ``num_queries=0``) gives an empty
-    frame, built on the driver.
+    One :func:`_topk_scan` corpus pass with the queries in the task
+    closure, merged on the driver by :func:`_rank_topk` into a
+    LocalRelation: two jobs (queries, scan), no shuffle. Bit-parity:
+    sims are :func:`_cosine` values (strict left-to-right dots, single
+    IEEE norm-multiply/divide — the exact ``aggregate(zip_with)``
+    values), all queries scored in one matrix per batch. No query rows
+    (e.g. ``num_queries=0``) gives an empty frame, built on the
+    driver.
 
     A zero-norm vector's cosine (0/0) ranks as -1.0, the DuckDB twin's
     ``list_cosine_similarity`` value, in every member of the family."""
 
-    def build(q: _Queries) -> DataFrame:
-        partials = _topk_scan(_corpus(embeddings), q, k, _brute_scorer(q))
-        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+    def build(q: _Queries):
+        return _rank_topk(_topk_scan(_corpus(embeddings), q, k, _brute_scorer(q)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -177,20 +178,17 @@ def ivf_topk(
     the smallest md5(vec_id) — deterministic and engine-portable (the
     DuckDB oracle reproduces it), standing in for k-means seeding; a
     Lloyd-refined codebook is a drop-in replacement with the same
-    assignment/probe plan. Scale shape: centroids broadcast (tiny),
-    corpus assignment is one map + a 1-row-per-vector shuffle for the
-    argmax window; per-query work touches n_probe lists, not the
-    corpus — at 1000 executors the scan cost drops by
-    n_centroids/n_probe versus brute force.
+    assignment/probe plan.
 
-    One :func:`_topk_scan` corpus pass (r14, guide §4.2, see
-    :func:`_ivf_scan`): the pass assigns cells and scores probed
-    candidates in numpy, emitting partition-local top-k partials for
-    the final tiny window; candidate sims are :func:`_cosine`."""
+    One :func:`_topk_scan` corpus pass (see :func:`_ivf_scan`): the
+    centroids ride in the task closure, the pass assigns cells and
+    scores only the probed candidates in numpy (n_centroids/n_probe
+    fewer cosines than brute force), emitting partition-local top-k
+    partials that :func:`_rank_topk` merges on the driver; candidate
+    sims are :func:`_cosine`."""
 
-    def build(q: _Queries) -> DataFrame:
-        partials = _ivf_scan(embeddings, q, k, n_centroids, (n_probe,))
-        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+    def build(q: _Queries):
+        return _rank_topk(_ivf_scan(embeddings, q, k, n_centroids, (n_probe,)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -228,9 +226,9 @@ def _ivf_probe_lists(cents: list, vecs: list, norms: list, max_p: int) -> list:
 
 def _ivf_scan(
     embeddings: DataFrame, q: _Queries, k: int, n_centroids: int, probes
-) -> DataFrame:
-    """:func:`_topk_scan` partials (query_id, neighbor_id, sim,
-    probe_rn) of the md5-seeded IVF at every probe level in
+):
+    """The gathered :func:`_topk_scan` partials (query_id, neighbor_id,
+    sim, probe_rn) of the md5-seeded IVF at every probe level in
     ``probes``. The ``n_centroids`` corpus vectors with the smallest
     md5(vec_id) are collected with their Spark-computed cnorms; the
     query probe lists are derived driver-side with the identical float
@@ -267,29 +265,29 @@ def ivf_probe_sweep(
     corpus-sized work — run once; each candidate (query, neighbor)
     pair carries the probe rank of the one cell it is reachable
     through (a vector lives in exactly one cell), so every probe
-    level's result is a filter + per-query window over the same
-    materialized candidate table. Output: (n_probe, query_id,
+    level's result is a filter + :func:`_rank_topk` merge over the one
+    gathered candidate table, on the driver. Output: (n_probe, query_id,
     neighbor_id, rank), bit-identical per level to the standalone
     operator (the scorecard gate's DuckDB twin pins it per level).
     This is the recall-vs-scan-cost curve an index operator publishes;
     computing it naively re-scores the corpus once per level.
 
     The scan keeps each level's partition-local top-k (nested
-    candidate subsets, one per level). The partials are EAGERLY
-    pinned: the level branches are planned as concurrent AQE query
-    stages, and a lazy checkpoint's map-only residue (the whole scoring
-    pass) would race and recompute per branch (persist.py residue
-    rule)."""
+    candidate subsets, one per level), so there is one corpus scan
+    job whatever the number of levels."""
 
-    def build(q: _Queries) -> DataFrame:
-        cand = materialize(_ivf_scan(embeddings, q, k, n_centroids, probes), eager=True)
-        out = None
+    def build(q: _Queries):
+        import numpy as np
+        import pyarrow as pa
+
+        cand = _ivf_scan(embeddings, q, k, n_centroids, probes)
+        prn = cand["probe_rn"].to_numpy()
+        levels = []
         for p in probes:
-            part = _rank_topk(cand.where(F.col("probe_rn") <= p), k).select(
-                F.lit(p).cast("long").alias("n_probe"), "query_id", "neighbor_id", "rank"
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
+            top = _rank_topk(cand.filter(pa.array(prn <= p)), k)
+            n_probe = pa.array(np.full(top.num_rows, p, np.int64))
+            levels.append(top.append_column("n_probe", n_probe))
+        return pa.concat_tables(levels)
 
     return _with_queries(
         embeddings, num_queries, "n_probe long, query_id long, neighbor_id long, rank int", build
@@ -395,7 +393,7 @@ def kmeans_codebook(
     # Each refinement round is ONE vectorized corpus pass (r14, guide
     # §4.2 — the same MLlib-shaped rewrite as _pq_train; see the r13
     # HOF cost evidence there). Cosines are accumulated strictly
-    # left-to-right across dimensions (_seq_dot), the exact order of
+    # left-to-right across dimensions (_seq_dots), the exact order of
     # the aggregate(zip_with) form and the DuckDB kernel — required
     # because post-round-1 centroid means are NON-integral, where
     # blocked BLAS summation could differ in the last bit and flip a
@@ -452,7 +450,7 @@ def _kmeans_assign(src: DataFrame, cents: DataFrame, payload: str) -> DataFrame:
     passed through. One vectorized corpus pass (r14, guide §4.2): the k
     centroids (with their Spark-computed cnorms, verbatim) ride in the
     task closure and the argmax runs in numpy with the strict
-    left-to-right cosine accumulation (_seq_dot) — first occurrence
+    left-to-right cosine accumulation (_seq_dots) — first occurrence
     over cid-ascending rows is exactly the former
     ``array_max(struct(csim, -cid, cid))`` ordering. ``cents`` is a
     local relation when trained this session, so the collect is
@@ -477,16 +475,16 @@ def ivf_kmeans_topk(
     centroids on the quantized vectors; final ranking among candidates
     is exact cosine on the original vectors.
 
-    One :func:`_topk_scan` corpus pass (r14, guide §4.2 — the
-    seeded-IVF scan of :func:`ivf_topk` over the trained codebook): the
-    LocalRelation codebook collects driver-only, query probe lists
-    derive driver-side with the identical quantized-cosine arithmetic
-    (HALF_UP lattice, struct ordering via Python tuple compare), and
-    the pass assigns cells on the quantized columns while scoring
-    probed candidates on the raw vectors — partition-local top-k into
-    the final tiny window."""
+    One :func:`_topk_scan` corpus pass (the seeded-IVF scan of
+    :func:`ivf_topk` over the trained codebook): the LocalRelation
+    codebook collects driver-only, query probe lists derive
+    driver-side with the identical quantized-cosine arithmetic (HALF_UP
+    lattice, struct ordering via Python tuple compare), and the pass
+    assigns cells on the quantized columns while scoring probed
+    candidates on the raw vectors — partition-local top-k partials that
+    :func:`_rank_topk` merges on the driver."""
 
-    def build(q: _Queries) -> DataFrame:
+    def build(q: _Queries):
         cents = _codebook_rows(kmeans_codebook(embeddings, n_centroids, n_iters))
         # probe lists on the QUANTIZED lattice (the assignment geometry)
         lattice = [[_round_half_up(x * KMEANS_QUANT) for x in v] for v in q.vecs]
@@ -500,7 +498,7 @@ def ivf_kmeans_topk(
             _ivf_scorer(cents, q, probe_lists, (n_probe,), quantized=True),
             "sim double, probe_rn int",
         )
-        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+        return _rank_topk(partials, k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -573,7 +571,7 @@ def semantic_dedup(
     cosine self-join on it); ONE exchange groups each cluster, and a
     grouped Arrow pass computes the within-cluster dominance in
     vectorized numpy with the strict left-to-right accumulation
-    (:func:`_seq_dot` order — bit-identical to the
+    (:func:`_seq_dots` order — bit-identical to the
     ``aggregate(zip_with)`` cosine it replaces, see the parity block
     above :func:`_round_half_up`). A pathologically hot cluster is the
     operator's documented skew risk (raise n_centroids — the grouped
@@ -726,18 +724,18 @@ def lsh_topk(
     ``LSH_BANDS`` bucket bands with the query; exact cosine ranks the
     candidates. Output: (query_id, neighbor_id, rank).
 
-    One :func:`_topk_scan` corpus pass (r14, guide §4.2): plane-sign buckets,
-    band matching against the closure-carried query bands (an OR over
-    bands — the same pair-dedup the former explode+join+dropDuplicates
+    One :func:`_topk_scan` corpus pass: plane-sign buckets, band
+    matching against the closure-carried query bands (an OR over bands
+    — the same pair-dedup the former explode+join+dropDuplicates
     bought with an exchange), and exact cosine for the band-matched
-    candidates only, emitted as partition-local top-k partials for the
-    final tiny window. Bit-parity: plane dots accumulate left-to-right
-    against the identical PLANES literals, the ``> 0`` sign predicate
-    is unchanged, and candidate sims are :func:`_cosine`."""
+    candidates only, emitted as partition-local top-k partials that
+    :func:`_rank_topk` merges on the driver. Bit-parity: plane dots
+    accumulate left-to-right against the identical PLANES literals, the
+    ``> 0`` sign predicate is unchanged, and candidate sims are
+    :func:`_cosine`."""
 
-    def build(q: _Queries) -> DataFrame:
-        partials = _topk_scan(_corpus(embeddings), q, k, _lsh_scorer(q))
-        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+    def build(q: _Queries):
+        return _rank_topk(_topk_scan(_corpus(embeddings), q, k, _lsh_scorer(q)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -1006,17 +1004,17 @@ def _batch_np(batch, name: str):
     return np.asarray(col.to_numpy(zero_copy_only=False))
 
 
-def _seq_dot(mat, v):
-    """Row-wise dot(mat, v) accumulated STRICTLY left-to-right across
-    dimensions — bit-identical to ``aggregate(zip_with(a, b, x*y), 0.0,
-    acc+x)`` (and DuckDB's sequential list kernel) even when ``v`` is
-    non-integral, where blocked BLAS summation could differ in the last
-    bit and flip a rank."""
+def _seq_dots(a, b):
+    """(len(a) × len(b)) matrix of row dots ``a[i]·b[j]``, each
+    accumulated STRICTLY left-to-right across dimensions — bit-identical
+    to ``aggregate(zip_with(a, b, x*y), 0.0, acc+x)`` (and DuckDB's
+    sequential list kernel) even for non-integral values, where blocked
+    BLAS summation could differ in the last bit and flip a rank."""
     import numpy as np
 
-    acc = np.zeros(mat.shape[0], dtype=np.float64)
-    for i in range(mat.shape[1]):
-        acc = acc + mat[:, i] * v[i]
+    acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
+    for d in range(a.shape[1]):
+        acc += np.multiply.outer(a[:, d], b[:, d])
     return acc
 
 
@@ -1093,40 +1091,20 @@ def _elem_sums(subdim: int) -> Column:
     return F.expr(f"array({body})")
 
 
-def _seq_self_norms(c_mat):
-    """Per-centroid ``sqrt(dot(cv, cv))`` with the strict left-to-right
-    accumulation of ``sqrt(aggregate(zip_with(cv, cv, x*y), 0.0,
-    acc+x))`` — bit-identical to the Spark column the cosine paths
-    compare against."""
-    import math
-
-    out = []
-    for row in c_mat:
-        acc = 0.0
-        for x in row:
-            acc = acc + float(x) * float(x)
-        out.append(math.sqrt(acc))
-    return out
-
-
 def _cos_csim(vecs, qnorm, c_mat, cnorms):
     """(n × k) cosine matrix with exact Spark/DuckDB bit-parity:
-    sequential-across-dims dots (_seq_dot), one IEEE multiply for the
-    norm product, one IEEE divide."""
+    sequential-across-dims dots (:func:`_seq_dots`), one IEEE multiply
+    for the norm product, one IEEE divide."""
     import numpy as np
 
-    csim = np.empty((vecs.shape[0], c_mat.shape[0]), dtype=np.float64)
-    for j in range(c_mat.shape[0]):
-        csim[:, j] = _seq_dot(vecs, c_mat[j]) / (qnorm * cnorms[j])
-    return csim
+    return _seq_dots(vecs, c_mat) / np.multiply.outer(qnorm, cnorms)
 
 
 def _seq_norms(mat):
     """Per-row ``sqrt(dot(v, v))`` with the strict left-to-right
     accumulation of ``_with_norm``'s ``sqrt(aggregate(zip_with(v, v,
-    x*y), 0.0, acc+x))`` — the vectorized form of
-    :func:`_seq_self_norms` (np.sqrt is the same correctly-rounded
-    IEEE sqrt)."""
+    x*y), 0.0, acc+x))`` (np.sqrt is the correctly-rounded IEEE
+    sqrt)."""
     import numpy as np
 
     acc = np.zeros(mat.shape[0], dtype=np.float64)
@@ -1136,7 +1114,7 @@ def _seq_norms(mat):
 
 
 def _py_seq_dot(a, b) -> float:
-    """Driver-side scalar :func:`_seq_dot`: strict left-to-right
+    """Driver-side scalar :func:`_seq_dots`: strict left-to-right
     accumulation across dimensions."""
     acc = 0.0
     for x, y in zip(a, b):
@@ -1162,18 +1140,21 @@ class _Queries(NamedTuple):
 
 def _with_queries(embeddings: DataFrame, num_queries: int, out_ddl: str, build):
     """The ANN family's driver step: collect the query rows (vec_id <
-    ``num_queries``) and return ``build(q)`` for their :class:`_Queries`.
-    The query set is ≤32 rows by construction — collecting it replaces
-    a broadcast-subplan build (and its job) with one pushed-filter
-    scan, and lets the scan carry the queries in its task closure. No
-    query rows (e.g. ``num_queries=0``) gives an empty ``out_ddl``
-    frame, built on the driver without touching the corpus."""
+    ``num_queries``), call ``build(q)`` for their :class:`_Queries`, and
+    return its Arrow table's ``out_ddl`` columns as a LocalRelation
+    (collecting the result launches no job). The query set is ≤32 rows
+    by construction — collecting it lets the scan carry the queries in
+    its task closure. No query rows (e.g. ``num_queries=0``) gives an
+    empty ``out_ddl`` frame, built on the driver without touching the
+    corpus."""
+    spark = embeddings.sparkSession
     rows = _corpus(embeddings).where(F.col("vec_id") < num_queries).collect()
     if not rows:
-        return values_df(embeddings.sparkSession, [], out_ddl)
+        return values_df(spark, [], out_ddl)
     pairs = sorted((int(r.vec_id), [float(x) for x in r.v]) for r in rows)
     vecs = [v for _, v in pairs]
-    return build(_Queries([i for i, _ in pairs], vecs, [_py_norm(v) for v in vecs]))
+    top = build(_Queries([i for i, _ in pairs], vecs, [_py_norm(v) for v in vecs]))
+    return values_df(spark, top.select(_ddl_names(out_ddl)), out_ddl)
 
 
 def _ddl_names(ddl: str) -> list[str]:
@@ -1185,7 +1166,7 @@ def _topk_sel(ids, sims, k: int, largest: bool):
     ``largest`` picks sim DESC (the cosine/dot rankings), else ASC
     (distances). np.lexsort's last key is primary; equal sims
     (including ±0.0, which compare equal) fall to the id key — exactly
-    the :func:`_rank_topk` window ordering these partials feed."""
+    the :func:`_rank_topk` merge ordering these partials feed."""
     import numpy as np
 
     key = -sims if largest else sims
@@ -1212,13 +1193,15 @@ def _no_extra(sel) -> tuple:
 
 def _topk_scan(
     corpus: DataFrame, q: _Queries, k: int, score, cols: str = "sim double", largest: bool = True
-) -> DataFrame:
-    """The ANN family's partition-local top-k scan: ONE vectorized
-    corpus pass (``mapInArrow``) emitting, per batch and query, the
-    top-``k`` rows (query_id, neighbor_id, *cols). Any global top-k row
-    is in its partition's top-k, so the final :func:`_rank_topk` window
-    ranks ≤ partitions × queries × k rows; the corpus is never joined
-    or shuffled (REPOSE's prune-locally-then-merge shape).
+):
+    """The ANN family's scatter-gather scan: ONE vectorized corpus pass
+    (``mapInArrow``) emitting, per batch and query, the top-``k`` rows
+    (query_id, neighbor_id, *cols), collected to the driver as one
+    Arrow table (one job, no shuffle). Any global top-k row is in its
+    partition's top-k, so the driver-side :func:`_rank_topk` merge
+    ranks ≤ partitions × queries × k rows (``spark.driver.maxResultSize``
+    caps them); the corpus is never joined or shuffled (REPOSE's
+    prune-locally-then-merge shape).
 
     ``score(batch)`` is the operator's scorer. For each query, in
     ``q.ids`` order, it yields ``(pos, scores, levels, extra)``:
@@ -1264,27 +1247,35 @@ def _topk_scan(
                 [pa.array(np.concatenate(c)) for c in zip(*out)], names=names
             )
 
-    return corpus.mapInArrow(fn, f"query_id long, neighbor_id long, {cols}")
+    return corpus.mapInArrow(fn, f"query_id long, neighbor_id long, {cols}").toArrow()
 
 
-def _rank_topk(
-    partials: DataFrame, k: int, score: str = "sim", largest: bool = True, rank: str = "rank"
-) -> DataFrame:
-    """The top ``k`` rows per query_id by (``score`` DESC — ASC unless
-    ``largest`` — then neighbor_id ASC), numbered from 1 in ``rank``:
-    the final window over :func:`_topk_scan` partials, in the order its
-    selection used."""
-    order = F.desc(score) if largest else F.asc(score)
-    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
-    return partials.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+def _rank_topk(partials, k: int, score: str = "sim", largest: bool = True, rank: str = "rank"):
+    """The top ``k`` rows per query_id of the Arrow table ``partials``
+    by (``score`` DESC — ASC unless ``largest`` — then neighbor_id
+    ASC), numbered from 1 in a new int column ``rank``: the driver-side
+    merge of :func:`_topk_scan` partials, in the order of its selection
+    and of the DuckDB twins' ``row_number`` windows (±0.0 compare equal;
+    the scan already mapped NaN to -1.0). Rows come out by (query_id,
+    rank)."""
+    import numpy as np
+    import pyarrow as pa
+
+    qid = partials["query_id"].to_numpy()
+    key = partials[score].to_numpy()
+    order = np.lexsort((partials["neighbor_id"].to_numpy(), -key if largest else key, qid))
+    qid = qid[order]
+    rn = np.arange(1, len(qid) + 1) - np.searchsorted(qid, qid)
+    keep = rn <= k
+    return partials.take(order[keep]).append_column(rank, pa.array(rn[keep].astype(np.int32)))
 
 
 def _cosine(vecs, norms, qv, qnorm: float):
     """Cosines of the rows ``vecs`` (norms ``norms``) to one query: the
-    strict left-to-right :func:`_seq_dot`, one IEEE norm multiply, one
+    strict left-to-right :func:`_seq_dots`, one IEEE norm multiply, one
     IEEE divide — the ``aggregate(zip_with)`` value, and one column of
     :func:`_cos_csim`."""
-    return _seq_dot(vecs, qv) / (norms * qnorm)
+    return _seq_dots(vecs, qv[None, :])[:, 0] / (norms * qnorm)
 
 
 def _popcount32(a):
@@ -1298,18 +1289,19 @@ def _popcount32(a):
 
 def _brute_scorer(q: _Queries):
     """Every row, scored by exact cosine: one :func:`_seq_norms` per
-    batch (the bit-exact ``_with_norm`` order) and one :func:`_seq_dot`
-    per query."""
+    batch (the bit-exact ``_with_norm`` order) and one queries × rows
+    :func:`_seq_dots` matrix per batch — each row of it the
+    :func:`_cosine` values, bit for bit."""
     import numpy as np
 
     qm = np.asarray(q.vecs, dtype=np.float64)
-    qn = q.norms
+    qn = np.asarray(q.norms, dtype=np.float64)
 
     def score(batch):
         vecs = _batch_mat(batch, "v", qm.shape[1])
-        norms = _seq_norms(vecs)
-        for qv, qnorm in zip(qm, qn):
-            yield _EVERY_ROW, _cosine(vecs, norms, qv, qnorm), _ONE_LEVEL, _no_extra
+        sims = _seq_dots(qm, vecs) / np.multiply.outer(qn, _seq_norms(vecs))
+        for row in sims:
+            yield _EVERY_ROW, row, _ONE_LEVEL, _no_extra
 
     return score
 
@@ -1398,9 +1390,8 @@ def _lsh_scorer(q: _Queries):
 
     def score(batch):
         vecs = _batch_mat(batch, "v", qm.shape[1])
-        bucket = np.zeros(len(vecs), dtype=np.int64)
-        for p in range(NUM_PLANES):
-            bucket |= (_seq_dot(vecs, planes[p]) > 0.0).astype(np.int64) << p
+        signs = (_seq_dots(vecs, planes) > 0.0).astype(np.int64)
+        bucket = (signs << np.arange(NUM_PLANES, dtype=np.int64)).sum(axis=1)
         bands = np.stack(
             [(bucket >> (i * BAND_BITS)) & mask_bits for i in range(LSH_BANDS)],
             axis=1,
@@ -1458,7 +1449,7 @@ def _cos_partials_fn(cids: list, c_mat):
         import pyarrow as pa
 
         cmat = np.asarray(c_mat, dtype=np.float64)
-        cnorms = _seq_self_norms(cmat)
+        cnorms = _seq_norms(cmat)
         for batch in batches:
             vecs = _batch_mat(batch, "q", cmat.shape[1])
             qnorm = _batch_np(batch, "qnorm")
@@ -1558,7 +1549,7 @@ def _dominance_fn(threshold: float):
     Bit-parity with the JVM pair expression it replaces: the pairwise
     dot matrix is accumulated dimension-by-dimension (each element sees
     ``acc + a[d]*b[d]`` in ascending d — exactly the
-    ``aggregate(zip_with)`` / :func:`_seq_dot` order), the norm product
+    ``aggregate(zip_with)`` / :func:`_seq_dots` order), the norm product
     is the identical single IEEE multiply of the Spark-computed norm
     column values, and the divide is one IEEE op. Row-chunked so the
     similarity slab is bounded (~16M cells) however hot the cluster."""
@@ -3261,9 +3252,9 @@ def jl_topk(
     exactness for free (int64 lattice: any summation order; numpy and
     Java longs share wrap-around semantics even hypothetically).
 
-    One :func:`_topk_scan` corpus pass (r14, guide §4.2): projection
-    and scoring run as int64 numpy matmuls (:func:`_jl_scorer`); the
-    final window ranks partition-local top-k partials only."""
+    One :func:`_topk_scan` corpus pass: projection and scoring run as
+    int64 numpy matmuls (:func:`_jl_scorer`); :func:`_rank_topk` merges
+    the partition-local top-k partials on the driver."""
     # the corpus quantization stays the Spark expression _quantized
     # uses (same HALF_UP round), so the lattice is pinned in one place
     lattice = F.transform(
@@ -3271,10 +3262,9 @@ def jl_topk(
         lambda x: F.round(x * F.lit(KMEANS_QUANT), 0).cast("long"),
     )
 
-    def build(q: _Queries) -> DataFrame:
+    def build(q: _Queries):
         corpus = embeddings.select("vec_id", lattice.alias("q"))
-        partials = _topk_scan(corpus, q, k, _jl_scorer(q, out_dim), "sim long")
-        return _rank_topk(partials, k).select("query_id", "neighbor_id", "rank")
+        return _rank_topk(_topk_scan(corpus, q, k, _jl_scorer(q, out_dim), "sim long"), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -3555,22 +3545,21 @@ def hamming_rerank_topk(
     ``n_candidates`` closest, then re-score ONLY those candidates with
     exact cosine and emit the top ``k``.
 
-    100 TB design (r14, guide §4.2): ONE :func:`_topk_scan` pass packs
-    the sign words, ranks each partition's Hamming top-n_candidates
-    per query, and — since the float vectors are in hand — scores the
-    exact cosine for those partial candidates in the same pass (the
-    former shape re-touched the corpus through a broadcast join to
-    fetch vectors for the rerank). The global stage sees
-    ≤ partitions × queries × n_candidates rows: one crank window
-    (hamming ASC, id ASC) keeps the true candidate set, one rank
-    window (sim DESC, id ASC) on the SAME partitioning emits the top
-    k — both windows share one exchange. Bit-parity: packing is the
+    100 TB design: ONE :func:`_topk_scan` pass packs the sign words,
+    ranks each partition's Hamming top-n_candidates per query, and —
+    since the float vectors are in hand — scores the exact cosine for
+    those partial candidates in the same pass (the former shape
+    re-touched the corpus through a broadcast join to fetch vectors for
+    the rerank). The driver gathers ≤ partitions × queries ×
+    n_candidates rows and makes two :func:`_rank_topk` passes over
+    them: (hamming ASC, id ASC) keeps the true candidate set, then
+    (sim DESC, id ASC) emits the top k. Bit-parity: packing is the
     identical ``x > 0`` bit predicate (ints exact), sims are
     :func:`_cosine`.
     Output: (query_id, neighbor_id, hamming, rank) — integers plus a
     cosine-ordered rank, ties by neighbor_id."""
 
-    def build(q: _Queries) -> DataFrame:
+    def build(q: _Queries):
         partials = _topk_scan(
             _corpus(embeddings),
             q,
@@ -3580,9 +3569,7 @@ def hamming_rerank_topk(
             largest=False,
         )
         cand = _rank_topk(partials, n_candidates, "hamming", largest=False, rank="crank")
-        return _rank_topk(cand, k).select(
-            "query_id", "neighbor_id", "hamming", F.col("rank").cast("long").alias("rank")
-        )
+        return _rank_topk(cand, k)
 
     return _with_queries(
         embeddings, num_queries, "query_id long, neighbor_id long, hamming long, rank long", build

@@ -91,10 +91,8 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # (operators/similarity.py). Results proven identical against the
     # oracle at sf0.01 + sf0.001, but these gates run new plan/job
     # shapes and deserve fresh driver rows.
-    ("ann_eval_scorecard", 14),
     ("ann_pq_topk", 14),
     ("ann_ivfpq_topk", 14),
-    ("ann_ivf_kmeans_topk", 14),
     ("semantic_dedup_drops", 14),
     ("cluster_purity_embeddings", 14),
     # the index gates' build path shares the rewritten encode/train
@@ -109,11 +107,6 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # round 14 session 2: vectorized ANN query scans (numpy mapInArrow
     # partial top-k + tiny global window) and the LocalRelation sweep
     # of driver-built lookup/result tables (bunsen_spark/localrel.py)
-    ("ann_brute_topk", 14),
-    ("ann_jl_topk", 14),
-    ("ann_lsh_topk", 14),
-    ("ann_hamming_topk", 14),
-    ("ann_ivf_topk", 14),
     ("dedup_embedding", 14),
     ("coverage_select_docs", 14),
     ("interleave_mix_positions", 14),
@@ -124,6 +117,19 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("bm25_multiquery_topk", 14),
     ("valueset_membership_lineitem", 14),
     ("closure_part_hierarchy", 14),
+    # round 15: ANN top-k as scatter-gather — the scan's partial top-k
+    # rows are collected and merged on the driver, and the result is a
+    # LocalRelation (no window, no exchange); values_df builds through
+    # Arrow. The round-14 entries of these gates had expired and were
+    # pruned. rrf_fused_topk fuses the brute and JL results.
+    ("ann_brute_topk", 15),
+    ("ann_ivf_topk", 15),
+    ("ann_ivf_kmeans_topk", 15),
+    ("ann_lsh_topk", 15),
+    ("ann_jl_topk", 15),
+    ("ann_hamming_topk", 15),
+    ("ann_eval_scorecard", 15),
+    ("rrf_fused_topk", 15),
 ]
 
 

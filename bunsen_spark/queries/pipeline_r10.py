@@ -108,7 +108,7 @@ def _ivfpq_append_sql() -> str:
 # machinery — recall@5 vs the exact scan for {ivf, jl, lsh}, lcm-scaled
 # MRR for {exact, jl, hamming} — and between them ran the exact brute
 # scan and the JL run twice each. The union gate runs each distinct
-# variant once (brute and jl materialized, each feeding both metrics).
+# variant once (brute and jl are LocalRelations, each feeding both metrics).
 def ann_eval_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every closed-form ANN variant scored on BOTH retrieval-quality
     axes in one table (`operators/retrieval.py:topk_overlap` +
@@ -129,26 +129,20 @@ def ann_eval_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         jl_topk,
         lsh_topk,
     )
-    from ..persist import materialize
 
     k = 5
     emb = load(spark, sf_dir, "embeddings")
-    # lazy is correct here despite the two-consumer fan-out: both runs
-    # contain exchanges, so AQE materializes their stage jobs when the
-    # checkpoint RDD is created at build time — the concurrent
-    # first-touch recompute race (persist.py) only bites MAP-ONLY
-    # subplans, and an r13 3-way measurement (lazy 8.9 s median vs
-    # eager 10.2 vs gang 16.0) confirmed lazy is the fast shape
-    exact = materialize(brute_force_topk(emb, k, 32))
-    jl = materialize(jl_topk(emb, k, 32))
+    # both runs are computed here and returned as LocalRelations, so
+    # their two consumers each read the driver-side rows; no checkpoint
+    exact = brute_force_topk(emb, k, 32)
+    jl = jl_topk(emb, k, 32)
     # ivf/ivf_p1/ivf_p4 (round 11): the folded-in IVF probe curve —
     # 'ivf' is the default n_probe=2, so the three rows together are
     # the recall-vs-scan-cost schedule the standalone
     # ann_ivf_probe_curve gate used to pin. All three levels come from
     # ONE corpus scan (`similarity.py:ivf_probe_sweep` — shared
     # centroid scoring + cell assignment) and map to variant tags in
-    # the SAME pass (the level row-sets are disjoint), so the sweep is
-    # consumed exactly once and needs no checkpoint.
+    # the SAME pass (the level row-sets are disjoint).
     #
     # r13 restructure: the former shape built ELEVEN union branches,
     # each its own topk_overlap / mrr_by_query join pipeline (~27

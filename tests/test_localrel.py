@@ -61,3 +61,48 @@ def test_values_df_rejects_unknown_type(spark):
 def test_values_df_rejects_wrong_arity(spark, bad):
     with pytest.raises(ValueError, match=r"row 1 has \d values, expected 2 columns"):
         values_df(spark, [(0, "ok"), bad], "a long, b string")
+
+
+@pytest.mark.parametrize(
+    "ddl, bad",
+    [
+        ("a long", "1"),
+        ("a long", True),
+        ("a long", 1.5),
+        ("a long", 1 << 63),
+        ("a int", 1 << 31),
+        ("a string", 1),
+        ("a double", "1.0"),
+        ("a boolean", 1),
+        ("a array<double>", "12"),
+        ("a array<double>", [1.0, "x"]),
+    ],
+)
+def test_values_df_rejects_wrong_value_class(spark, ddl, bad):
+    """A value whose class does not fit its column fails on the driver
+    with a ValueError naming the row and the column, not in Arrow or the
+    JVM."""
+    with pytest.raises(ValueError, match=r"row 1 column 'a': .* is not a"):
+        values_df(spark, [(None,), (bad,)], ddl)
+
+
+def test_values_df_bit_identical_doubles(spark):
+    """Doubles reach the JVM as Arrow buffers: NaN, -0.0, inf and
+    subnormals come back with the same bits, in scalars and arrays,
+    from tuples and from a pyarrow Table alike."""
+    import math
+    import struct
+
+    import numpy as np
+    import pyarrow as pa
+
+    xs = [float("nan"), -0.0, 0.0, float("-inf"), 5e-324, 0.1, np.float64(1 / 3)]
+    ddl = "i long, x double, v array<double>"
+    bits = lambda x: struct.pack("<d", x)  # noqa: E731
+    rows = [(np.int64(i), x, [x, -x]) for i, x in enumerate(xs)]
+    table = pa.table({"i": range(len(xs)), "x": xs, "v": [[x, -x] for x in xs]})
+    for src in (rows, table):
+        got = sorted(values_df(spark, src, ddl).collect())
+        assert [bits(r.x) for r in got] == [bits(x) for x in xs]
+        assert [[bits(y) for y in r.v] for r in got] == [[bits(x), bits(-x)] for x in xs]
+    assert math.isnan(got[0].x)

@@ -6,6 +6,9 @@ this engine removes)."""
 
 from __future__ import annotations
 
+import itertools
+from typing import NamedTuple
+
 import pytest
 
 
@@ -88,17 +91,79 @@ def test_sql_string_in_valueset_is_native(spark):
         pop_valuesets(spark)
 
 
-def test_ivf_topk_scan_is_one_pass(spark, sf_dir):
-    """IVF (r14 vectorized scan): the corpus is consumed by ONE
-    mapInArrow partials pass — no join of any kind touches it (the
-    former shape broadcast the centroid array and probe lists), and
-    the final window ranks only the partition-local top-k partials."""
-    from bunsen_spark.queries.pipeline import ann_ivf_topk
+_GROUPS = itertools.count()
 
-    plan = _plan(ann_ivf_topk(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "Join" not in plan
-    assert plan.count("MapInArrow") == 1
+
+class _Executed(NamedTuple):
+    df: object  # the returned frame, collected once
+    jobs: list  # the job ids its build and collect ran
+    stages: list  # their stage attempts (Spark's StageData)
+    plans: list  # (physical plan tree, stage count) per SQL execution
+
+
+def _executed(spark, build) -> _Executed:
+    """Build and collect ``build()`` under a fresh job group and read
+    what ran from Spark's own status stores."""
+    sc = spark.sparkContext
+    group = f"test_plans/{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    stages = [
+        jsc.statusStore().lastStageAttempt(sid)
+        for j in jobs
+        for sid in tracker.getJobInfo(j).stageIds
+    ]
+    plans = []
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.description() == group:
+            plans.append((e.physicalPlanDescription().split("\n\n")[0], e.stages().size()))
+    return _Executed(df, jobs, stages, plans)
+
+
+@pytest.mark.parametrize("gate", ["ann_ivf_topk", "ann_brute_topk"])
+def test_ann_topk_scan_is_one_pass(spark, sf_dir, gate):
+    """The ANN search is scatter-gather: the corpus is consumed by ONE
+    stage — one mapInArrow partials pass, no join of any kind (the
+    former shape broadcast the centroid array and probe lists), no
+    exchange — whose partition-local top-k partials are merged on the
+    driver; no job shuffles a byte, and the returned frame is a
+    LocalRelation."""
+    from bunsen_spark.queries import pipeline
+
+    run = _executed(spark, lambda: getattr(pipeline, gate)(spark, sf_dir))
+    scans = [(tree, n) for tree, n in run.plans if "MapInArrow" in tree]
+    assert len(scans) == 1, run.plans
+    tree, n_stages = scans[0]
+    assert n_stages == 1
+    assert tree.count("MapInArrow") == 1
+    assert "Join" not in tree and "Exchange" not in tree
+    assert not any("CartesianProduct" in t or "Join" in t for t, _ in run.plans)
+    assert all(st.shuffleWriteBytes() == 0 for st in run.stages)
+    plan = run.df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+
+
+def test_brute_force_topk_two_jobs_no_shuffle(spark, sf_dir):
+    """One exact search runs exactly two jobs — the query collect and
+    the corpus scan — and shuffles nothing; collecting the result runs
+    none."""
+    from bunsen_spark.operators.similarity import brute_force_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    run = _executed(spark, lambda: brute_force_topk(emb, k=5, num_queries=8))
+    assert len(run.jobs) == 2, run.plans
+    assert sum(st.shuffleWriteBytes() for st in run.stages) == 0
 
 
 def test_contamination_broadcasts_probe(spark, sf_dir):

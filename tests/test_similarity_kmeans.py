@@ -241,23 +241,23 @@ def test_brute_force_topk_empty_query_set(spark, sf_dir, op):
     assert out.collect() == []
 
 
-@pytest.fixture(scope="module")
-def zero_vector_corpus(tmp_path_factory):
-    """Parquet path of 200 random 64-d vectors, vector 150 all zeros."""
-    import random
+def _twin(path, op, **kw):
+    import duckdb
 
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
+    return sorted(con.execute(getattr(sim, f"{op.__name__}_sql")(**kw)).fetchall())
+
+
+def _corpus_path(tmp_path_factory, name: str, vecs) -> str:
+    """Parquet path of ``vecs`` as (vec_id, embedding array<float>)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rng = random.Random(7)
-    vecs = [
-        [0.0] * 64 if i == 150 else [rng.uniform(-1, 1) for _ in range(64)]
-        for i in range(200)
-    ]
-    path = str(tmp_path_factory.mktemp("zero_vec") / "embeddings.parquet")
+    path = str(tmp_path_factory.mktemp(name) / "embeddings.parquet")
     table = pa.table(
         {
-            "vec_id": pa.array(range(200), pa.int64()),
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
             "embedding": pa.array(vecs, pa.list_(pa.float32())),
         }
     )
@@ -265,21 +265,94 @@ def zero_vector_corpus(tmp_path_factory):
     return path
 
 
+@pytest.fixture(scope="module")
+def zero_vector_corpus(tmp_path_factory):
+    """Parquet path of 200 random 64-d vectors, vector 150 all zeros."""
+    import random
+
+    rng = random.Random(7)
+    vecs = [
+        [0.0] * 64 if i == 150 else [rng.uniform(-1, 1) for _ in range(64)]
+        for i in range(200)
+    ]
+    return _corpus_path(tmp_path_factory, "zero_vec", vecs)
+
+
 @pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
 def test_zero_norm_vector_independent_of_partitioning(spark, zero_vector_corpus, op):
     """A zero-norm vector's cosine (0/0) ranks as -1.0, DuckDB's
     ``list_cosine_similarity`` value, so the result does not depend on
     how the corpus is partitioned, and matches the DuckDB twin."""
-    import duckdb
-
     path = zero_vector_corpus
     emb = spark.read.parquet(path)
     one = sorted(map(tuple, op(emb.repartition(1), k=5, num_queries=8).collect()))
     many = sorted(map(tuple, op(emb.repartition(64), k=5, num_queries=8).collect()))
     assert one == many
-    twin = getattr(sim, f"{op.__name__}_sql", None)
-    if twin is not None:
-        con = duckdb.connect()
-        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
-        want = sorted(con.execute(twin(k=5, num_queries=8)).fetchall())
-        assert one == want
+    if hasattr(sim, f"{op.__name__}_sql"):
+        assert one == _twin(path, op, k=5, num_queries=8)
+
+
+@pytest.fixture(scope="module")
+def tie_corpus(tmp_path_factory):
+    """Parquet path of 200 64-d vectors drawn from 40 distinct ones, so
+    most scores tie (each vector has 4 exact duplicates); vector 150
+    is all zeros."""
+    import random
+
+    rng = random.Random(11)
+    base = [[rng.choice((-1.0, -0.5, 0.0, 0.5, 1.0)) for _ in range(64)] for _ in range(40)]
+    vecs = [[0.0] * 64 if i == 150 else base[(i * 7) % 40] for i in range(200)]
+    return _corpus_path(tmp_path_factory, "tie_vec", vecs)
+
+
+@pytest.mark.parametrize("k", [3, 250], ids=["k3", "k_over_candidates"])
+@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+def test_driver_merge_parity_on_ties(spark, tie_corpus, op, k):
+    """The driver-side merge keeps the former window's order on a corpus
+    where most scores tie: ties break by neighbor_id, the zero vector
+    ranks at -1.0, and a ``k`` above the candidate count ranks every
+    candidate — the same rows from 1 and 64 input partitions, equal to
+    the DuckDB twin (each sweep level: to standalone ``ivf_topk``)."""
+    emb = spark.read.parquet(tie_corpus)
+    one = sorted(map(tuple, op(emb.repartition(1), k=k, num_queries=8).collect()))
+    many = sorted(map(tuple, op(emb.repartition(64), k=k, num_queries=8).collect()))
+    assert one == many
+    if op is sim.ivf_probe_sweep:
+        for p in (1, 2, 4):
+            level = sorted(r[1:] for r in one if r[0] == p)
+            assert level == sorted(map(tuple, ivf_topk(emb, k=k, num_queries=8, n_probe=p).collect()))
+            assert level == _twin(tie_corpus, ivf_topk, k=k, num_queries=8, n_probe=p)
+    else:
+        assert one == _twin(tie_corpus, op, k=k, num_queries=8)
+
+
+def test_rank_topk_matches_row_number_window(spark):
+    """``_rank_topk``'s numpy merge numbers rows exactly as the
+    ``row_number`` window it replaces — score DESC (ASC when not
+    ``largest``) then neighbor_id ASC, ±0.0 tying — including queries
+    with fewer than ``k`` rows."""
+    import random
+
+    import pyarrow as pa
+    from pyspark.sql import Window
+
+    rng = random.Random(5)
+    n = 400
+    t = pa.table(
+        {
+            "query_id": pa.array([rng.randrange(9) for _ in range(n)], pa.int64()),
+            "neighbor_id": pa.array(rng.sample(range(10_000), n), pa.int64()),
+            "sim": pa.array([rng.choice((0.0, -0.0, 0.25, -1.0, 0.5)) for _ in range(n)]),
+        }
+    )
+    df = spark.createDataFrame(t.to_pylist(), "query_id long, neighbor_id long, sim double")
+    for k, largest in ((3, True), (7, False), (500, True)):
+        got = sim._rank_topk(t, k, largest=largest).to_pylist()
+        order = F.desc("sim") if largest else F.asc("sim")
+        w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+        want = [
+            r.asDict()
+            for r in df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k).collect()
+        ]
+        key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
+        assert sorted(got, key=key) == sorted(want, key=key)
