@@ -49,6 +49,21 @@ _TYPES["integer"] = _TYPES["int"]
 _TYPES["varchar"] = _TYPES["string"]
 
 
+def _ddl_cols(ddl: str) -> list[tuple[str, str]]:
+    cols = []
+    for part in ddl.split(","):
+        name, typ = part.strip().split()
+        if typ.lower() not in _TYPES:
+            raise ValueError(f"unsupported values_df type {typ!r}")
+        cols.append((name, typ.lower()))
+    return cols
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a :func:`values_df` DDL string."""
+    return pa.schema([(name, _TYPES[typ][0]) for name, typ in _ddl_cols(ddl)])
+
+
 def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A LocalRelation DataFrame for ``rows`` under a simple DDL schema
     (``"name type, name type"``; string/int/long/double/boolean and
@@ -60,12 +75,7 @@ def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     its column (a string or a bool in a long column, an out-of-range
     long), raises ``ValueError`` naming the row and the column. Empty
     ``rows`` gives an empty LocalRelation."""
-    cols = []
-    for part in ddl.split(","):
-        name, typ = part.strip().split()
-        if typ.lower() not in _TYPES:
-            raise ValueError(f"unsupported values_df type {typ!r}")
-        cols.append((name, typ.lower()))
+    cols = _ddl_cols(ddl)
     if not isinstance(rows, pa.Table):
         rows = list(rows)
         for i, row in enumerate(rows):

@@ -4,17 +4,23 @@ variants (IVF, LSH, JL projection, Hamming rerank, PQ) as the scale
 path.
 
 Beyond-reference scale extension (SURVEY §7 M7). The top-k searches
-are scatter-gather (REPOSE's prune-locally-then-merge shape):
+run ONE partition-local top-k kernel (:func:`_topk_scan`; numpy,
+strict left-to-right dot products for bit-parity with the DuckDB
+twins) and merge its partials on the driver (REPOSE's
+prune-locally-then-merge shape); the result is a LocalRelation. Where
+the kernel runs is decided once per search (:func:`_gathers`):
 
-- **scatter**: the query set is small by construction, so it is
-  collected once and carried in the task closure. Each corpus
-  partition is scored in ONE vectorized ``mapInArrow`` pass (numpy,
-  strict left-to-right dot products for bit-parity with the DuckDB
-  twins) and emits only its partition-local top-k per query.
-- **gather**: those ≤ partitions × queries × k partial rows are
-  collected to the driver and merged there with numpy; the result is
-  a LocalRelation. The corpus is never joined or shuffled: an exact
-  search runs two jobs (queries, scan) and no exchange.
+- **gathered**: a corpus no larger than
+  ``spark.sql.autoBroadcastJoinThreshold`` — the size Spark would
+  broadcast — is collected with one ``toArrow()``; the queries are
+  filtered from that table and the kernel runs over its batches on the
+  driver. One job, no Python worker.
+- **scatter-gather**: otherwise the query set (small by construction)
+  is collected and carried in the task closure, each corpus partition
+  is scored in ONE ``mapInArrow`` pass emitting only its top-k per
+  query, and those ≤ partitions × queries × k partial rows are
+  collected. Two jobs (queries, scan); the corpus is never joined or
+  shuffled.
 - **LSH top-k**: each vector gets a ``NUM_PLANES``-bit bucket from the
   signs of dot products with fixed pseudo-random hyperplanes; bucket
   bits are split into bands, candidates must share a band value with
@@ -34,8 +40,9 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._bcast import _threshold_bytes
 from .text_analysis import md5int_sql
-from ..localrel import values_df
+from ..localrel import arrow_schema, values_df
 from ..persist import materialize
 
 EMBED_DIM = 64
@@ -123,9 +130,13 @@ def brute_force_topk(
     (query_id, neighbor_id, rank) — rank 1 = nearest, ties broken by
     neighbor_id.
 
-    One :func:`_topk_scan` corpus pass with the queries in the task
-    closure, merged on the driver by :func:`_rank_topk` into a
-    LocalRelation: two jobs (queries, scan), no shuffle. Bit-parity:
+    One :func:`_topk_scan` corpus pass, merged on the driver by
+    :func:`_rank_topk` into a LocalRelation. A corpus within
+    ``spark.sql.autoBroadcastJoinThreshold`` is gathered and scanned on
+    the driver (one job; ``spark.driver.maxResultSize`` still guards
+    the gather), a larger one is scanned by ``mapInArrow`` with the
+    queries in the task closure (two jobs); neither shuffles, and both
+    give the same rows (:func:`_with_queries`). Bit-parity:
     sims are :func:`_cosine` values (strict left-to-right dots, single
     IEEE norm-multiply/divide — the exact ``aggregate(zip_with)``
     values), all queries scored in one matrix per batch. No query rows
@@ -135,8 +146,8 @@ def brute_force_topk(
     A zero-norm vector's cosine (0/0) ranks as -1.0, the DuckDB twin's
     ``list_cosine_similarity`` value, in every member of the family."""
 
-    def build(q: _Queries):
-        return _rank_topk(_topk_scan(_corpus(embeddings), q, k, _brute_scorer(q)), k)
+    def build(q: _Queries, corpus):
+        return _rank_topk(_topk_scan(corpus, q, k, _brute_scorer(q)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -187,8 +198,8 @@ def ivf_topk(
     partials that :func:`_rank_topk` merges on the driver; candidate
     sims are :func:`_cosine`."""
 
-    def build(q: _Queries):
-        return _rank_topk(_ivf_scan(embeddings, q, k, n_centroids, (n_probe,)), k)
+    def build(q: _Queries, corpus):
+        return _rank_topk(_ivf_scan(embeddings, corpus, q, k, n_centroids, (n_probe,)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -225,14 +236,14 @@ def _ivf_probe_lists(cents: list, vecs: list, norms: list, max_p: int) -> list:
 
 
 def _ivf_scan(
-    embeddings: DataFrame, q: _Queries, k: int, n_centroids: int, probes
+    embeddings: DataFrame, corpus, q: _Queries, k: int, n_centroids: int, probes
 ):
-    """The gathered :func:`_topk_scan` partials (query_id, neighbor_id,
-    sim, probe_rn) of the md5-seeded IVF at every probe level in
-    ``probes``. The ``n_centroids`` corpus vectors with the smallest
-    md5(vec_id) are collected with their Spark-computed cnorms; the
-    query probe lists are derived driver-side with the identical float
-    arithmetic."""
+    """The :func:`_topk_scan` partials over ``corpus`` (query_id,
+    neighbor_id, sim, probe_rn) of the md5-seeded IVF at every probe
+    level in ``probes``. The ``n_centroids`` corpus vectors with the
+    smallest md5(vec_id) are collected with their Spark-computed
+    cnorms; the query probe lists are derived driver-side with the
+    identical float arithmetic."""
     from .text_analysis import md5int
 
     seeded = (
@@ -245,7 +256,7 @@ def _ivf_scan(
     cents = _codebook_rows(seeded)
     probe_lists = _ivf_probe_lists(cents, q.vecs, q.norms, max(probes))
     return _topk_scan(
-        _corpus(embeddings),
+        corpus,
         q,
         k,
         _ivf_scorer(cents, q, probe_lists, tuple(probes)),
@@ -276,11 +287,11 @@ def ivf_probe_sweep(
     candidate subsets, one per level), so there is one corpus scan
     job whatever the number of levels."""
 
-    def build(q: _Queries):
+    def build(q: _Queries, corpus):
         import numpy as np
         import pyarrow as pa
 
-        cand = _ivf_scan(embeddings, q, k, n_centroids, probes)
+        cand = _ivf_scan(embeddings, corpus, q, k, n_centroids, probes)
         prn = cand["probe_rn"].to_numpy()
         levels = []
         for p in probes:
@@ -484,7 +495,7 @@ def ivf_kmeans_topk(
     candidates on the raw vectors — partition-local top-k partials that
     :func:`_rank_topk` merges on the driver."""
 
-    def build(q: _Queries):
+    def build(q: _Queries, corpus):
         cents = _codebook_rows(kmeans_codebook(embeddings, n_centroids, n_iters))
         # probe lists on the QUANTIZED lattice (the assignment geometry)
         lattice = [[_round_half_up(x * KMEANS_QUANT) for x in v] for v in q.vecs]
@@ -492,7 +503,7 @@ def ivf_kmeans_topk(
             cents, lattice, [_py_norm(v) for v in lattice], n_probe
         )
         partials = _topk_scan(
-            _with_lattice(_corpus(embeddings)),
+            _placed(_with_lattice(_corpus(embeddings)), corpus),
             q,
             k,
             _ivf_scorer(cents, q, probe_lists, (n_probe,), quantized=True),
@@ -734,8 +745,8 @@ def lsh_topk(
     ``> 0`` sign predicate is unchanged, and candidate sims are
     :func:`_cosine`."""
 
-    def build(q: _Queries):
-        return _rank_topk(_topk_scan(_corpus(embeddings), q, k, _lsh_scorer(q)), k)
+    def build(q: _Queries, corpus):
+        return _rank_topk(_topk_scan(corpus, q, k, _lsh_scorer(q)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -1009,12 +1020,19 @@ def _seq_dots(a, b):
     accumulated STRICTLY left-to-right across dimensions — bit-identical
     to ``aggregate(zip_with(a, b, x*y), 0.0, acc+x)`` (and DuckDB's
     sequential list kernel) even for non-integral values, where blocked
-    BLAS summation could differ in the last bit and flip a rank."""
+    BLAS summation could differ in the last bit and flip a rank. Each
+    step reads one contiguous row of ``b``'s transpose and accumulates
+    into preallocated buffers: the same products, in the same order,
+    as ``acc += np.multiply.outer(a[:, d], b[:, d])``."""
     import numpy as np
 
+    at = np.ascontiguousarray(a.T)
+    bt = np.ascontiguousarray(b.T)
     acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
-    for d in range(a.shape[1]):
-        acc += np.multiply.outer(a[:, d], b[:, d])
+    prod = np.empty(acc.shape, dtype=np.result_type(a, b))
+    for d in range(at.shape[0]):
+        np.multiply(at[d][:, None], bt[d], out=prod)
+        np.add(acc, prod, out=acc)
     return acc
 
 
@@ -1138,22 +1156,61 @@ class _Queries(NamedTuple):
     norms: list[float]
 
 
+def _gathers(df: DataFrame) -> bool:
+    """The ANN placement rule: True when ``df``'s optimized-plan
+    ``sizeInBytes`` is at most ``spark.sql.autoBroadcastJoinThreshold``
+    — the size Spark itself would broadcast — so a search gathers it
+    with one ``toArrow()`` and runs its scan kernel on the driver. A
+    threshold ≤ 0 (broadcasts disabled), or a plan with no real
+    estimate (``sizeInBytes >= spark.sql.defaultSizeInBytes``), keeps
+    scatter-gather. Driver-only: reads plan statistics, runs no job."""
+    limit = _threshold_bytes(df.sparkSession)
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 < limit and size <= limit and size < conf.defaultSizeInBytes()
+
+
+def _placed(df: DataFrame, corpus):
+    """``df``, a scan input other than :func:`_corpus`, under the
+    placement :func:`_with_queries` chose for ``corpus``: gathered with
+    ``toArrow()`` when ``corpus`` was, else left to scatter-gather."""
+    return df if isinstance(corpus, DataFrame) else df.toArrow()
+
+
 def _with_queries(embeddings: DataFrame, num_queries: int, out_ddl: str, build):
-    """The ANN family's driver step: collect the query rows (vec_id <
-    ``num_queries``), call ``build(q)`` for their :class:`_Queries`, and
-    return its Arrow table's ``out_ddl`` columns as a LocalRelation
-    (collecting the result launches no job). The query set is ≤32 rows
-    by construction — collecting it lets the scan carry the queries in
-    its task closure. No query rows (e.g. ``num_queries=0``) gives an
-    empty ``out_ddl`` frame, built on the driver without touching the
-    corpus."""
+    """The ANN family's driver step, and its one placement decision
+    (:func:`_gathers` on :func:`_corpus`): call ``build(q, corpus)``
+    for the query rows' (vec_id < ``num_queries``) :class:`_Queries`
+    and the scan input ``corpus``, and return its Arrow table's
+    ``out_ddl`` columns as a LocalRelation (collecting the result
+    launches no job).
+
+    - A broadcast-sized corpus is gathered with one ``toArrow()``
+      (``spark.driver.maxResultSize`` still guards it) and ``corpus``
+      is that Arrow table: the queries are filtered from it, so the
+      search runs one job and :func:`_topk_scan` runs on the driver.
+    - Otherwise ``corpus`` is the :func:`_corpus` frame and the query
+      set — ≤32 rows by construction — is collected with ``toArrow()``
+      so the scan can carry it in its task closure: two jobs.
+
+    Both give the same rows. No query rows (e.g. ``num_queries=0``)
+    gives an empty ``out_ddl`` frame, built on the driver without
+    calling ``build``."""
+    import pyarrow.compute as pc
+
     spark = embeddings.sparkSession
-    rows = _corpus(embeddings).where(F.col("vec_id") < num_queries).collect()
-    if not rows:
+    corpus = _corpus(embeddings)
+    if _gathers(corpus):
+        corpus = corpus.toArrow()
+        rows = corpus.filter(pc.less(corpus["vec_id"], num_queries))
+    else:
+        rows = corpus.where(F.col("vec_id") < num_queries).toArrow()
+    if not rows.num_rows:
         return values_df(spark, [], out_ddl)
-    pairs = sorted((int(r.vec_id), [float(x) for x in r.v]) for r in rows)
+    pairs = sorted(zip(rows["vec_id"].to_pylist(), rows["v"].to_pylist()))
     vecs = [v for _, v in pairs]
-    top = build(_Queries([i for i, _ in pairs], vecs, [_py_norm(v) for v in vecs]))
+    q = _Queries([i for i, _ in pairs], vecs, [_py_norm(v) for v in vecs])
+    top = build(q, corpus)
     return values_df(spark, top.select(_ddl_names(out_ddl)), out_ddl)
 
 
@@ -1192,16 +1249,21 @@ def _no_extra(sel) -> tuple:
 
 
 def _topk_scan(
-    corpus: DataFrame, q: _Queries, k: int, score, cols: str = "sim double", largest: bool = True
+    corpus, q: _Queries, k: int, score, cols: str = "sim double", largest: bool = True
 ):
-    """The ANN family's scatter-gather scan: ONE vectorized corpus pass
-    (``mapInArrow``) emitting, per batch and query, the top-``k`` rows
-    (query_id, neighbor_id, *cols), collected to the driver as one
-    Arrow table (one job, no shuffle). Any global top-k row is in its
-    partition's top-k, so the driver-side :func:`_rank_topk` merge
-    ranks ≤ partitions × queries × k rows (``spark.driver.maxResultSize``
-    caps them); the corpus is never joined or shuffled (REPOSE's
-    prune-locally-then-merge shape).
+    """The ANN family's top-k scan kernel: ONE vectorized corpus pass
+    emitting, per batch and query, the top-``k`` rows (query_id,
+    neighbor_id, *cols), returned to the driver as one Arrow table.
+    Where it runs is the placement :func:`_with_queries` chose:
+    ``corpus`` is either an Arrow table already gathered to the driver
+    (a corpus within ``spark.sql.autoBroadcastJoinThreshold``; the
+    kernel runs over its batches here, no job) or a DataFrame scanned
+    by ``mapInArrow`` with the queries in the task closure (one job, no
+    shuffle). Any global top-k row is in its batch's top-k, so the
+    driver-side :func:`_rank_topk` merge gives the same rows either way
+    from ≤ batches × queries × k partials (``spark.driver.maxResultSize``
+    caps the scattered ones); the corpus is never joined or shuffled
+    (REPOSE's prune-locally-then-merge shape).
 
     ``score(batch)`` is the operator's scorer. For each query, in
     ``q.ids`` order, it yields ``(pos, scores, levels, extra)``:
@@ -1247,7 +1309,15 @@ def _topk_scan(
                 [pa.array(np.concatenate(c)) for c in zip(*out)], names=names
             )
 
-    return corpus.mapInArrow(fn, f"query_id long, neighbor_id long, {cols}").toArrow()
+    ddl = f"query_id long, neighbor_id long, {cols}"
+    if isinstance(corpus, DataFrame):
+        return corpus.mapInArrow(fn, ddl).toArrow()
+    import numpy as np
+    import pyarrow as pa
+
+    # a zero-norm row's 0/0 cosine is expected (mapped to -1.0 above)
+    with np.errstate(invalid="ignore"):
+        return pa.Table.from_batches(fn(corpus.to_batches()), arrow_schema(ddl))
 
 
 def _rank_topk(partials, k: int, score: str = "sim", largest: bool = True, rank: str = "rank"):
@@ -3262,9 +3332,9 @@ def jl_topk(
         lambda x: F.round(x * F.lit(KMEANS_QUANT), 0).cast("long"),
     )
 
-    def build(q: _Queries):
-        corpus = embeddings.select("vec_id", lattice.alias("q"))
-        return _rank_topk(_topk_scan(corpus, q, k, _jl_scorer(q, out_dim), "sim long"), k)
+    def build(q: _Queries, corpus):
+        scan = _placed(embeddings.select("vec_id", lattice.alias("q")), corpus)
+        return _rank_topk(_topk_scan(scan, q, k, _jl_scorer(q, out_dim), "sim long"), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -3559,9 +3629,9 @@ def hamming_rerank_topk(
     Output: (query_id, neighbor_id, hamming, rank) — integers plus a
     cosine-ordered rank, ties by neighbor_id."""
 
-    def build(q: _Queries):
+    def build(q: _Queries, corpus):
         partials = _topk_scan(
-            _corpus(embeddings),
+            corpus,
             q,
             n_candidates,
             _hamming_scorer(q),

@@ -117,19 +117,22 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("bm25_multiquery_topk", 14),
     ("valueset_membership_lineitem", 14),
     ("closure_part_hierarchy", 14),
-    # round 15: ANN top-k as scatter-gather — the scan's partial top-k
-    # rows are collected and merged on the driver, and the result is a
-    # LocalRelation (no window, no exchange); values_df builds through
-    # Arrow. The round-14 entries of these gates had expired and were
-    # pruned. rrf_fused_topk fuses the brute and JL results.
-    ("ann_brute_topk", 15),
-    ("ann_ivf_topk", 15),
-    ("ann_ivf_kmeans_topk", 15),
-    ("ann_lsh_topk", 15),
-    ("ann_jl_topk", 15),
-    ("ann_hamming_topk", 15),
-    ("ann_eval_scorecard", 15),
-    ("rrf_fused_topk", 15),
+    # round 16: a broadcast-sized ANN corpus is gathered with one
+    # toArrow() and the top-k scan kernel runs on the driver (one job,
+    # no mapInArrow); larger corpora keep round 15's scatter-gather.
+    # These rows supersede the round-15 entries of the same gates (ANN
+    # top-k as scatter-gather, driver-side merge, LocalRelation
+    # results), which are live whenever these are. rrf_fused_topk fuses
+    # the brute and JL results; ann_eval_scorecard carries the IVF
+    # probe sweep (the former ann_ivf_probe_curve gate).
+    ("ann_brute_topk", 16),
+    ("ann_ivf_topk", 16),
+    ("ann_ivf_kmeans_topk", 16),
+    ("ann_lsh_topk", 16),
+    ("ann_jl_topk", 16),
+    ("ann_hamming_topk", 16),
+    ("ann_eval_scorecard", 16),
+    ("rrf_fused_topk", 16),
 ]
 
 

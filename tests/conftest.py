@@ -37,6 +37,27 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def scatter_gather(spark):
+    """A context manager running the ANN searches inside it under
+    scatter-gather: the test corpora are broadcast-sized, so the
+    auto-broadcast threshold is -1 inside it, restored afterwards."""
+    from contextlib import contextmanager
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextmanager
+    def placement():
+        before = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, before)
+
+    return placement
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

@@ -132,7 +132,7 @@ def _executed(spark, build) -> _Executed:
 
 
 @pytest.mark.parametrize("gate", ["ann_ivf_topk", "ann_brute_topk"])
-def test_ann_topk_scan_is_one_pass(spark, sf_dir, gate):
+def test_ann_topk_scan_is_one_pass(spark, sf_dir, scatter_gather, gate):
     """The ANN search is scatter-gather: the corpus is consumed by ONE
     stage — one mapInArrow partials pass, no join of any kind (the
     former shape broadcast the centroid array and probe lists), no
@@ -141,7 +141,8 @@ def test_ann_topk_scan_is_one_pass(spark, sf_dir, gate):
     LocalRelation."""
     from bunsen_spark.queries import pipeline
 
-    run = _executed(spark, lambda: getattr(pipeline, gate)(spark, sf_dir))
+    with scatter_gather():
+        run = _executed(spark, lambda: getattr(pipeline, gate)(spark, sf_dir))
     scans = [(tree, n) for tree, n in run.plans if "MapInArrow" in tree]
     assert len(scans) == 1, run.plans
     tree, n_stages = scans[0]
@@ -154,16 +155,33 @@ def test_ann_topk_scan_is_one_pass(spark, sf_dir, gate):
     assert plan.startswith("LocalRelation"), plan
 
 
-def test_brute_force_topk_two_jobs_no_shuffle(spark, sf_dir):
-    """One exact search runs exactly two jobs — the query collect and
-    the corpus scan — and shuffles nothing; collecting the result runs
-    none."""
+def test_brute_force_topk_two_jobs_no_shuffle(spark, sf_dir, scatter_gather):
+    """Under scatter-gather, one exact search runs exactly two jobs —
+    the query collect and the corpus scan — and shuffles nothing;
+    collecting the result runs none."""
+    from bunsen_spark.operators.similarity import brute_force_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    with scatter_gather():
+        run = _executed(spark, lambda: brute_force_topk(emb, k=5, num_queries=8))
+    assert len(run.jobs) == 2, run.plans
+    assert sum(st.shuffleWriteBytes() for st in run.stages) == 0
+
+
+def test_brute_force_topk_gathered_one_job(spark, sf_dir):
+    """A broadcast-sized corpus is gathered with one ``toArrow()`` and
+    scanned on the driver: one job, no MapInArrow node (no Python
+    worker), no shuffle, and a LocalRelation result."""
     from bunsen_spark.operators.similarity import brute_force_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     run = _executed(spark, lambda: brute_force_topk(emb, k=5, num_queries=8))
-    assert len(run.jobs) == 2, run.plans
+    assert len(run.jobs) == 1, run.plans
+    assert not any("MapInArrow" in tree for tree, _ in run.plans), run.plans
+    assert not any("Exchange" in tree for tree, _ in run.plans), run.plans
     assert sum(st.shuffleWriteBytes() for st in run.stages) == 0
+    plan = run.df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
 
 
 def test_contamination_broadcasts_probe(spark, sf_dir):

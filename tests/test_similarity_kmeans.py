@@ -356,3 +356,91 @@ def test_rank_topk_matches_row_number_window(spark):
         ]
         key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
         assert sorted(got, key=key) == sorted(want, key=key)
+
+
+def test_seq_dots_bit_identical_to_outer_product_loop():
+    """The transposed, preallocated ``_seq_dots`` yields the former
+    ``acc += outer(a[:, d], b[:, d])`` loop bit for bit on non-integral
+    inputs (the same products, accumulated in the same order)."""
+    import numpy as np
+
+    def outer_loop(a, b):
+        acc = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
+        for d in range(a.shape[1]):
+            acc += np.multiply.outer(a[:, d], b[:, d])
+        return acc
+
+    rng = np.random.default_rng(3)
+    for (m, n, d) in ((32, 500, 64), (200, 16, 64), (7, 1, 64), (1, 9, 3), (0, 5, 4)):
+        a = rng.uniform(-1, 1, (m, d)) * rng.lognormal(size=(m, 1))
+        b = rng.uniform(-1, 1, (n, d)) / 3.0
+        got, want = sim._seq_dots(a, b), outer_loop(a, b)
+        assert got.shape == want.shape
+        assert np.array_equal(got.view(np.int64), want.view(np.int64))
+
+
+@pytest.fixture(scope="module")
+def tiny_corpora(tmp_path_factory):
+    """Parquet paths of a one-row and a two-row 64-d corpus."""
+    import random
+
+    rng = random.Random(13)
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(2)]
+    return {n: _corpus_path(tmp_path_factory, f"rows{n}", vecs[:n]) for n in (1, 2)}
+
+
+@pytest.mark.parametrize("corpus", ["tie", "zero_norm", "one_row", "two_rows"])
+@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+def test_placement_parity(spark, scatter_gather, tie_corpus, zero_vector_corpus, tiny_corpora, op, corpus):
+    """Every ``_topk_scan`` member returns identical rows whether the
+    corpus is gathered and scanned on the driver or scanned in
+    partitions and merged: on ties, a zero-norm vector, and corpora of
+    one row (the query is its only row) and two rows."""
+    path = {
+        "tie": tie_corpus,
+        "zero_norm": zero_vector_corpus,
+        "one_row": tiny_corpora[1],
+        "two_rows": tiny_corpora[2],
+    }[corpus]
+    emb = spark.read.parquet(path)
+    assert sim._gathers(sim._corpus(emb))
+    gathered = sorted(map(tuple, op(emb, k=5, num_queries=8).collect()))
+    with scatter_gather():
+        assert not sim._gathers(sim._corpus(emb))
+        scatter = sorted(map(tuple, op(emb.repartition(3), k=5, num_queries=8).collect()))
+    assert gathered == scatter
+    if corpus in ("tie", "zero_norm"):
+        assert gathered
+
+
+@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+def test_placement_parity_no_queries(spark, scatter_gather, sf_dir, op):
+    """``num_queries=0`` gives the same empty frame, with the same
+    columns, under both placements."""
+    emb = _emb(spark, sf_dir)
+    gathered = op(emb, k=5, num_queries=0)
+    with scatter_gather():
+        scatter = op(emb, k=5, num_queries=0)
+        assert scatter.collect() == []
+    assert gathered.columns == scatter.columns
+    assert gathered.collect() == []
+
+
+def test_gathers_rule(spark, sf_dir):
+    """A corpus is gathered only when its plan has a real size estimate
+    within the auto-broadcast threshold."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    corpus = sim._corpus(_emb(spark, sf_dir))
+    size = int(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    rdd_backed = spark.createDataFrame(
+        spark.sparkContext.parallelize([(0, [1.0])]), "vec_id long, embedding array<float>"
+    )
+    assert sim._gathers(corpus)
+    assert not sim._gathers(sim._corpus(rdd_backed))
+    before = spark.conf.get(key)
+    try:
+        for limit, want in ((size, True), (size - 1, False), (0, False)):
+            spark.conf.set(key, str(limit))
+            assert sim._gathers(corpus) is want
+    finally:
+        spark.conf.set(key, before)
