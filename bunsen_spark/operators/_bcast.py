@@ -27,7 +27,7 @@ Semantics of :func:`broadcast_row_cap`:
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: threshold the per-operator row defaults were sized against
 _REFERENCE_THRESHOLD = 64 * 1024 * 1024
@@ -51,6 +51,16 @@ def _threshold_bytes(spark: SparkSession) -> int:
         return int(float(thr) * mult)
     except ValueError:
         return 0
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """``df``'s optimized-plan ``sizeInBytes``, or None when the plan
+    has no real estimate (an RDD-backed frame reports
+    ``spark.sql.defaultSizeInBytes`` or more). Driver-only: reads plan
+    statistics and launches no job."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return None if size >= conf.defaultSizeInBytes() else size
 
 
 def broadcast_row_cap(

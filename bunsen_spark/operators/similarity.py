@@ -10,11 +10,13 @@ twins) and merge its partials on the driver (REPOSE's
 prune-locally-then-merge shape); the result is a LocalRelation. Where
 the kernel runs is decided once per search (:func:`_gathers`):
 
-- **gathered**: a corpus no larger than
-  ``spark.sql.autoBroadcastJoinThreshold`` — the size Spark would
-  broadcast — is collected with one ``toArrow()``; the queries are
-  filtered from that table and the kernel runs over its batches on the
-  driver. One job, no Python worker.
+- **gathered**: a scan input no larger than
+  ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark would
+  broadcast) and :data:`GATHER_MAX_BYTES` (the measured point where
+  the one-thread driver kernel stops beating parallel tasks) is
+  collected with one ``toArrow()``; the queries are filtered from that
+  table and the kernel runs over its batches on the driver. One job,
+  no Python worker.
 - **scatter-gather**: otherwise the query set (small by construction)
   is collected and carried in the task closure, each corpus partition
   is scored in ONE ``mapInArrow`` pass emitting only its top-k per
@@ -40,7 +42,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._bcast import _threshold_bytes
+from ._bcast import _threshold_bytes, plan_size_bytes
 from .text_analysis import md5int_sql
 from ..localrel import arrow_schema, values_df
 from ..persist import materialize
@@ -132,11 +134,12 @@ def brute_force_topk(
 
     One :func:`_topk_scan` corpus pass, merged on the driver by
     :func:`_rank_topk` into a LocalRelation. A corpus within
-    ``spark.sql.autoBroadcastJoinThreshold`` is gathered and scanned on
-    the driver (one job; ``spark.driver.maxResultSize`` still guards
-    the gather), a larger one is scanned by ``mapInArrow`` with the
-    queries in the task closure (two jobs); neither shuffles, and both
-    give the same rows (:func:`_with_queries`). Bit-parity:
+    ``spark.sql.autoBroadcastJoinThreshold`` and :data:`GATHER_MAX_BYTES`
+    is gathered and scanned on the driver (one job;
+    ``spark.driver.maxResultSize`` still guards the gather), a larger
+    one is scanned by ``mapInArrow`` with the queries in the task
+    closure (two jobs); neither shuffles, and both give the same rows
+    (:func:`_with_queries`). Bit-parity:
     sims are :func:`_cosine` values (strict left-to-right dots, single
     IEEE norm-multiply/divide — the exact ``aggregate(zip_with)``
     values), all queries scored in one matrix per batch. No query rows
@@ -495,7 +498,7 @@ def ivf_kmeans_topk(
     candidates on the raw vectors — partition-local top-k partials that
     :func:`_rank_topk` merges on the driver."""
 
-    def build(q: _Queries, corpus):
+    def build(q: _Queries, scan):
         cents = _codebook_rows(kmeans_codebook(embeddings, n_centroids, n_iters))
         # probe lists on the QUANTIZED lattice (the assignment geometry)
         lattice = [[_round_half_up(x * KMEANS_QUANT) for x in v] for v in q.vecs]
@@ -503,7 +506,7 @@ def ivf_kmeans_topk(
             cents, lattice, [_py_norm(v) for v in lattice], n_probe
         )
         partials = _topk_scan(
-            _placed(_with_lattice(_corpus(embeddings)), corpus),
+            scan,
             q,
             k,
             _ivf_scorer(cents, q, probe_lists, (n_probe,), quantized=True),
@@ -511,7 +514,9 @@ def ivf_kmeans_topk(
         )
         return _rank_topk(partials, k)
 
-    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
+    return _with_queries(
+        embeddings, num_queries, _TOPK_DDL, build, _with_lattice(_corpus(embeddings))
+    )
 
 
 def _kmeans_cte_parts(
@@ -1156,61 +1161,72 @@ class _Queries(NamedTuple):
     norms: list[float]
 
 
+#: The largest scan input (optimized-plan ``sizeInBytes``) an ANN search
+#: gathers to the driver, where its kernel runs on one thread. Measured
+#: on a 4-core VM (``local[4]``, 64-d corpora in 8 row groups, 32
+#: queries, k=10, median wall of 5): the driver path was faster than
+#: scatter-gather up to ~24 MB for brute force (0.84 vs 0.99 s at
+#: 23.7 MB; 1.22 vs 0.98 s at 29.7 MB), LSH and seeded IVF, ~30 MB for
+#: Hamming and ~16 MB for JL's lattice input (1.87 vs 2.22 s at
+#: 12.4 MB; 2.33 vs 2.08 s at 18.6 MB). Except JL above 18 MB, it used
+#: less process-tree CPU at every size to 66 MB. More cores only speed
+#: up the scatter side, so the cap sits at the lowest crossover.
+GATHER_MAX_BYTES = 16 * 1024 * 1024
+
+
 def _gathers(df: DataFrame) -> bool:
     """The ANN placement rule: True when ``df``'s optimized-plan
-    ``sizeInBytes`` is at most ``spark.sql.autoBroadcastJoinThreshold``
-    — the size Spark itself would broadcast — so a search gathers it
-    with one ``toArrow()`` and runs its scan kernel on the driver. A
-    threshold ≤ 0 (broadcasts disabled), or a plan with no real
-    estimate (``sizeInBytes >= spark.sql.defaultSizeInBytes``), keeps
+    ``sizeInBytes`` is at most both ``spark.sql.autoBroadcastJoinThreshold``
+    (the memory guard: what Spark itself would ship to one process)
+    and :data:`GATHER_MAX_BYTES` (the measured compute crossover), so a
+    search gathers it with one ``toArrow()`` and runs its scan kernel
+    on the driver. A threshold ≤ 0 (broadcasts disabled), or a plan
+    with no real estimate (:func:`_bcast.plan_size_bytes`), keeps
     scatter-gather. Driver-only: reads plan statistics, runs no job."""
+    size = plan_size_bytes(df)
     limit = _threshold_bytes(df.sparkSession)
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return 0 < limit and size <= limit and size < conf.defaultSizeInBytes()
+    return size is not None and 0 < limit and size <= min(limit, GATHER_MAX_BYTES)
 
 
-def _placed(df: DataFrame, corpus):
-    """``df``, a scan input other than :func:`_corpus`, under the
-    placement :func:`_with_queries` chose for ``corpus``: gathered with
-    ``toArrow()`` when ``corpus`` was, else left to scatter-gather."""
-    return df if isinstance(corpus, DataFrame) else df.toArrow()
-
-
-def _with_queries(embeddings: DataFrame, num_queries: int, out_ddl: str, build):
+def _with_queries(
+    embeddings: DataFrame, num_queries: int, out_ddl: str, build, scan: DataFrame | None = None
+):
     """The ANN family's driver step, and its one placement decision
-    (:func:`_gathers` on :func:`_corpus`): call ``build(q, corpus)``
-    for the query rows' (vec_id < ``num_queries``) :class:`_Queries`
-    and the scan input ``corpus``, and return its Arrow table's
+    (:func:`_gathers` on the member's scan input ``scan``, by default
+    :func:`_corpus`; it carries ``vec_id``, and ``v`` at least on the
+    query rows): call ``build(q, scan)`` for the query rows' (vec_id <
+    ``num_queries``) :class:`_Queries`, and return its Arrow table's
     ``out_ddl`` columns as a LocalRelation (collecting the result
     launches no job).
 
-    - A broadcast-sized corpus is gathered with one ``toArrow()``
-      (``spark.driver.maxResultSize`` still guards it) and ``corpus``
-      is that Arrow table: the queries are filtered from it, so the
-      search runs one job and :func:`_topk_scan` runs on the driver.
-    - Otherwise ``corpus`` is the :func:`_corpus` frame and the query
-      set — ≤32 rows by construction — is collected with ``toArrow()``
-      so the scan can carry it in its task closure: two jobs.
+    - A ``scan`` that :func:`_gathers` accepts is gathered with one ``toArrow()``
+      (``spark.driver.maxResultSize`` still guards it) and passed on as
+      that Arrow table: the queries are filtered from it, so the search
+      runs one job and :func:`_topk_scan` runs on the driver.
+    - Otherwise ``scan`` stays a frame and the query set — ≤32 rows by
+      construction — is collected with ``toArrow()`` so the scan can
+      carry it in its task closure: two jobs.
 
-    Both give the same rows. No query rows (e.g. ``num_queries=0``)
-    gives an empty ``out_ddl`` frame, built on the driver without
-    calling ``build``."""
+    Both give the same rows. No query rows gives an empty ``out_ddl``
+    frame, built on the driver without calling ``build``;
+    ``num_queries ≤ 0`` decides that before touching the corpus."""
     import pyarrow.compute as pc
 
     spark = embeddings.sparkSession
-    corpus = _corpus(embeddings)
-    if _gathers(corpus):
-        corpus = corpus.toArrow()
-        rows = corpus.filter(pc.less(corpus["vec_id"], num_queries))
+    if num_queries <= 0:
+        return values_df(spark, [], out_ddl)
+    scan = _corpus(embeddings) if scan is None else scan
+    if _gathers(scan):
+        scan = scan.toArrow()
+        rows = scan.filter(pc.less(scan["vec_id"], num_queries))
     else:
-        rows = corpus.where(F.col("vec_id") < num_queries).toArrow()
+        rows = scan.where(F.col("vec_id") < num_queries).select("vec_id", "v").toArrow()
     if not rows.num_rows:
         return values_df(spark, [], out_ddl)
     pairs = sorted(zip(rows["vec_id"].to_pylist(), rows["v"].to_pylist()))
     vecs = [v for _, v in pairs]
     q = _Queries([i for i, _ in pairs], vecs, [_py_norm(v) for v in vecs])
-    top = build(q, corpus)
+    top = build(q, scan)
     return values_df(spark, top.select(_ddl_names(out_ddl)), out_ddl)
 
 
@@ -1256,8 +1272,8 @@ def _topk_scan(
     neighbor_id, *cols), returned to the driver as one Arrow table.
     Where it runs is the placement :func:`_with_queries` chose:
     ``corpus`` is either an Arrow table already gathered to the driver
-    (a corpus within ``spark.sql.autoBroadcastJoinThreshold``; the
-    kernel runs over its batches here, no job) or a DataFrame scanned
+    (a scan input :func:`_gathers` accepts; the kernel runs over its
+    batches here, no job) or a DataFrame scanned
     by ``mapInArrow`` with the queries in the task closure (one job, no
     shuffle). Any global top-k row is in its batch's top-k, so the
     driver-side :func:`_rank_topk` merge gives the same rows either way
@@ -3328,15 +3344,21 @@ def jl_topk(
     # the corpus quantization stays the Spark expression _quantized
     # uses (same HALF_UP round), so the lattice is pinned in one place
     lattice = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.round(x * F.lit(KMEANS_QUANT), 0).cast("long"),
+        F.col("v"), lambda x: F.round(x * F.lit(KMEANS_QUANT), 0).cast("long")
     )
 
-    def build(q: _Queries, corpus):
-        scan = _placed(embeddings.select("vec_id", lattice.alias("q")), corpus)
+    def build(q: _Queries, scan):
+        # the kernel reads only the lattice (a frame or a gathered table)
+        scan = scan.select(["vec_id", "q"])
         return _rank_topk(_topk_scan(scan, q, k, _jl_scorer(q, out_dim), "sim long"), k)
 
-    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
+    # v is kept on the query rows only: a gathered scan ships the lattice
+    scan = _corpus(embeddings).select(
+        "vec_id",
+        F.when(F.col("vec_id") < num_queries, F.col("v")).alias("v"),
+        lattice.alias("q"),
+    )
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build, scan)
 
 
 def jl_topk_sql(

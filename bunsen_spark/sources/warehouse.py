@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._bcast import plan_size_bytes
+
 
 #: bucket count when the input's plan carries no size estimate (an
 #: RDD-backed frame reports ``spark.sql.defaultSizeInBytes``)
@@ -36,10 +38,10 @@ def bucket_count_for(df: DataFrame) -> int:
     holds the full schema; for the spec resource schemas that footer
     outweighs a small bucket's rows, so over-bucketing a small table
     makes every later scan mostly open and decode footers."""
-    conf = df.sparkSession._jsparkSession.sessionState().conf()
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if size >= conf.defaultSizeInBytes():
+    size = plan_size_bytes(df)
+    if size is None:
         return FALLBACK_BUCKETS
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
     per_bucket = max(1, conf.filesMaxPartitionBytes())
     n = 1
     while n * per_bucket < size:

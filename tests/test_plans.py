@@ -184,6 +184,35 @@ def test_brute_force_topk_gathered_one_job(spark, sf_dir):
     assert plan.startswith("LocalRelation"), plan
 
 
+def test_ann_members_gather_their_own_scan_input_once(spark, sf_dir):
+    """A member whose scan input is not the plain corpus gathers that
+    input, and only it: JL (the lattice) runs one job; trained IVF
+    (the lattice plus its norm) runs its codebook training's jobs plus
+    one, and no MapInArrow beyond the training's."""
+    from bunsen_spark.operators.similarity import ivf_kmeans_topk, jl_topk, kmeans_codebook
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    jl = _executed(spark, lambda: jl_topk(emb, k=5, num_queries=8))
+    assert len(jl.jobs) == 1, jl.plans
+    assert not any("MapInArrow" in tree for tree, _ in jl.plans), jl.plans
+    train = _executed(spark, lambda: kmeans_codebook(emb))
+    ivf = _executed(spark, lambda: ivf_kmeans_topk(emb, k=5, num_queries=8))
+    assert len(ivf.jobs) == len(train.jobs) + 1, ivf.plans
+    scans = lambda run: sum("MapInArrow" in tree for tree, _ in run.plans)  # noqa: E731
+    assert scans(ivf) == scans(train), ivf.plans
+
+
+def test_ann_no_queries_runs_no_job(spark, sf_dir, scatter_gather):
+    """``num_queries=0`` returns the empty frame before the placement
+    decision: no job under either placement."""
+    from bunsen_spark.operators.similarity import brute_force_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    assert _executed(spark, lambda: brute_force_topk(emb, num_queries=0)).jobs == []
+    with scatter_gather():
+        assert _executed(spark, lambda: brute_force_topk(emb, num_queries=0)).jobs == []
+
+
 def test_contamination_broadcasts_probe(spark, sf_dir):
     """Decontamination: the probe shingle set is the broadcast side;
     the corpus stream is map-only up to the final aggregation."""

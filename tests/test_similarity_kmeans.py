@@ -426,12 +426,14 @@ def test_placement_parity_no_queries(spark, scatter_gather, sf_dir, op):
     assert gathered.collect() == []
 
 
-def test_gathers_rule(spark, sf_dir):
+def test_gathers_rule(spark, sf_dir, monkeypatch):
     """A corpus is gathered only when its plan has a real size estimate
-    within the auto-broadcast threshold."""
+    within both the auto-broadcast threshold and the measured cap."""
+    from bunsen_spark.operators._bcast import plan_size_bytes
+
     key = "spark.sql.autoBroadcastJoinThreshold"
     corpus = sim._corpus(_emb(spark, sf_dir))
-    size = int(corpus._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    size = plan_size_bytes(corpus)
     rdd_backed = spark.createDataFrame(
         spark.sparkContext.parallelize([(0, [1.0])]), "vec_id long, embedding array<float>"
     )
@@ -441,6 +443,10 @@ def test_gathers_rule(spark, sf_dir):
     try:
         for limit, want in ((size, True), (size - 1, False), (0, False)):
             spark.conf.set(key, str(limit))
+            assert sim._gathers(corpus) is want
+        spark.conf.set(key, str(1 << 40))
+        for cap, want in ((size, True), (size - 1, False)):
+            monkeypatch.setattr(sim, "GATHER_MAX_BYTES", cap)
             assert sim._gathers(corpus) is want
     finally:
         spark.conf.set(key, before)
