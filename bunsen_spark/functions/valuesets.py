@@ -120,7 +120,7 @@ def _flat_members(systems: dict[str, set[str]]) -> list[str]:
 def _codeable_concept_matches(cc: Column, members: list[str]) -> Column:
     return F.exists(
         cc["coding"],
-        lambda c: F.concat_ws("|", c["system"], c["code"]).isin(members),
+        lambda c: F.concat(c["system"], F.lit("|"), c["code"]).isin(members),
     )
 
 
@@ -238,7 +238,7 @@ def rewrite_in_valueset_sql(query: str, valuesets: dict | None = None) -> str:
         lits = ", ".join("'" + mb.replace("'", "''") + "'" for mb in members)
         return (
             f"coalesce(exists({colexpr}.coding, "
-            f"c -> concat_ws('|', c.system, c.code) IN ({lits})), false)"
+            f"c -> concat(c.system, '|', c.code) IN ({lits})), false)"
         )
 
     return _sql_call_re().sub(repl, query)

@@ -222,21 +222,6 @@ def source_overlap_matrix(
     )
 
 
-def source_overlap_matrix_sql(
-    table: str = "documents", source_col: str = "source", text_col: str = "text"
-) -> str:
-    """DuckDB twin of :func:`source_overlap_matrix`."""
-    return f"""
-WITH d AS (
-  SELECT DISTINCT md5({text_col}) AS dg, {source_col} AS s FROM {table}
-)
-SELECT a.s AS source_a, b.s AS source_b,
-       CAST(count(*) AS BIGINT) AS n_shared
-FROM d a JOIN d b ON a.dg = b.dg AND a.s < b.s
-GROUP BY 1, 2
-"""
-
-
 def embedding_drift_by_label(
     embeddings: DataFrame, quant: int = 1000
 ) -> DataFrame:

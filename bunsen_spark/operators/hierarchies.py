@@ -83,7 +83,9 @@ def transitive_closure(edges: DataFrame, max_iterations: int = 40) -> DataFrame:
     checkpoint (one job per round, the same shape as the
     connected-components loop). Self-pairs (possible in cyclic inputs)
     are excluded from the result, matching the stored `ancestors`
-    table semantics (FIXTURES §4).
+    table semantics (FIXTURES §4). Raises ``RuntimeError`` if the
+    closure is still growing after ``max_iterations`` rounds, i.e. a
+    path is longer than ``2 ** max_iterations`` edges.
 
     Input columns: ancestorSystem, ancestorValue, descendantSystem,
     descendantValue (direct parent→child edges).
@@ -119,6 +121,10 @@ def transitive_closure(edges: DataFrame, max_iterations: int = 40) -> DataFrame:
             break
         release(closure)  # persist mode: CacheManager holds rounds strongly
         closure, n = new_closure, new_n
+    else:
+        raise RuntimeError(
+            f"transitive closure did not reach a fixpoint in {max_iterations} rounds"
+        )
     return closure.where(
         (F.col("descendantSystem") != F.col("ancestorSystem"))
         | (F.col("descendantValue") != F.col("ancestorValue"))

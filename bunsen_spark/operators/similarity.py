@@ -1881,9 +1881,21 @@ def pq_topk(
     # the trained codebook is a local relation (r14) — no materialize
     books = pq_codebooks(embeddings, n_subs, n_codewords, n_iters)
     codes = pq_encode(embeddings, books, n_subs)
-    qsubs = _sub_quantized(
-        embeddings.where(F.col("vec_id") < num_queries), n_subs
-    ).select(F.col("vec_id").alias("query_id"), "sub", F.col("sq").alias("qsq"))
+    queries = embeddings.where(F.col("vec_id") < num_queries)
+    return _pq_adc_topk(queries, books, codes, k, n_subs)
+
+
+def _pq_adc_topk(
+    queries: DataFrame, books: DataFrame, codes: DataFrame, k: int, n_subs: int
+) -> DataFrame:
+    """The ADC scorer of :func:`pq_topk` and :func:`pq_index_topk`: each
+    (vec_id, embedding) query's per-subspace lookup table against the
+    broadcast ``books`` is joined to the (vec_id, sub, code) ``codes``,
+    summed per candidate, and ranked by (adc, neighbor_id) with
+    self-matches excluded."""
+    qsubs = _sub_quantized(queries, n_subs).select(
+        F.col("vec_id").alias("query_id"), "sub", F.col("sq").alias("qsq")
+    )
     lut = qsubs.join(F.broadcast(books), "sub").select(
         "query_id",
         "sub",
@@ -2066,10 +2078,27 @@ def ivfpq_topk(
         EMBED_DIM // n_subs,
     )
     codes = _assign_residual_codes(rsubs, books)
-    # query side: probe lists + per-cell residual LUTs
     qfull = full.where(F.col("vec_id") < num_queries).select(
         F.col("vec_id").alias("query_id"), F.col("sq").alias("qsq")
     )
+    return _ivfpq_adc_topk(qfull, coarse, books, codes, k, n_probe, n_subs)
+
+
+def _ivfpq_adc_topk(
+    qfull: DataFrame,
+    coarse: DataFrame,
+    books: DataFrame,
+    codes: DataFrame,
+    k: int,
+    n_probe: int,
+    n_subs: int,
+) -> DataFrame:
+    """The IVFADC scorer of :func:`ivfpq_topk` and
+    :func:`ivfpq_index_topk`: each (query_id, qsq) query probes its
+    ``n_probe`` nearest ``coarse`` cells, its per-cell residual lookup
+    table against the broadcast ``books`` is joined to the (vec_id,
+    ccid, sub, code) ``codes`` of those cells, summed per candidate, and
+    ranked by (adc, neighbor_id) with self-matches excluded."""
     qscored = qfull.join(F.broadcast(coarse)).select(
         "query_id",
         "ccid",
@@ -2391,27 +2420,7 @@ def pq_index_topk(
     (query_id, neighbor_id, rank); self-matches (same vec_id) are
     excluded so querying corpus members behaves like :func:`pq_topk`."""
     books, codes = read_pq_index(spark, path)
-    qsubs = _sub_quantized(queries, n_subs).select(
-        F.col("vec_id").alias("query_id"), "sub", F.col("sq").alias("qsq")
-    )
-    lut = qsubs.join(F.broadcast(books), "sub").select(
-        "query_id",
-        "sub",
-        F.col("cid").alias("code"),
-        _d2(F.col("qsq"), F.col("cv")).alias("d2"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _pq_adc_topk(queries, books, codes, k, n_subs)
 
 
 def _collect_coarse(coarse: DataFrame) -> tuple:
@@ -3030,40 +3039,7 @@ def ivfpq_index_topk(
     qfull = _sub_quantized(queries, 1).select(
         F.col("vec_id").alias("query_id"), F.col("sq").alias("qsq")
     )
-    qscored = qfull.join(F.broadcast(coarse)).select(
-        "query_id",
-        "ccid",
-        _d2(F.col("qsq"), F.col("ccv")).alias("cd2"),
-        F.zip_with("qsq", "ccv", lambda x, y: x - y).alias("qr"),
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("ccid"))
-    probes = (
-        qscored.withColumn("rn", F.row_number().over(pw))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "ccid", "qr")
-    )
-    qrsubs = probes.select("query_id", "ccid", _slices("qr", n_subs)).select(
-        "query_id", "ccid", F.col("p.sub").alias("sub"), F.col("p.sq").alias("qsq")
-    )
-    lut = qrsubs.join(F.broadcast(books), "sub").select(
-        "query_id",
-        "ccid",
-        "sub",
-        F.col("cid").alias("code"),
-        _d2(F.col("qsq"), F.col("cv")).alias("d2"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["ccid", "sub", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _ivfpq_adc_topk(qfull, coarse, books, codes, k, n_probe, n_subs)
 
 
 def mmr_select(

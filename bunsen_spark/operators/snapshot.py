@@ -56,28 +56,6 @@ def snapshot_diff(
     )
 
 
-def snapshot_diff_sql(
-    old_sql: str, new_sql: str, key: str, compare_cols: list[str]
-) -> str:
-    """DuckDB twin of :func:`snapshot_diff` over two SELECT bodies."""
-    same = " AND ".join(
-        f"(o.{c} IS NOT DISTINCT FROM n.{c})" for c in compare_cols
-    )
-    return f"""
-WITH o AS ({old_sql}), n AS ({new_sql})
-SELECT COALESCE(o.{key}, n.{key}) AS {key},
-       CASE WHEN o.{key} IS NULL THEN 'added'
-            WHEN n.{key} IS NULL THEN 'removed'
-            WHEN NOT ({same}) THEN 'changed'
-       END AS status
-FROM o FULL OUTER JOIN n ON o.{key} = n.{key}
-WHERE (CASE WHEN o.{key} IS NULL THEN 'added'
-            WHEN n.{key} IS NULL THEN 'removed'
-            WHEN NOT ({same}) THEN 'changed'
-       END) IS NOT NULL
-"""
-
-
 def scd2_apply(
     dim: DataFrame,
     snapshot: DataFrame,

@@ -502,7 +502,7 @@ def surprisal_score(docs: DataFrame) -> DataFrame:
     sum of its tokens' bit-surprisals (with multiplicity): template/
     boilerplate docs full of stop-tokens score near 0 bits/token;
     rare-vocabulary docs score high; the downstream quantile filter
-    (`queries/pipeline_r5.py:quality_quantile_filter` pattern) picks
+    (`queries/curation.py:quality_quantile_filter` pattern) picks
     the band to keep.
 
     Plan shape: one token explode feeding (a) the corpus vocab

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -29,6 +29,13 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # not — every events-based gate query would hash-mismatch.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _dsum(col: Column) -> Column:
+    """Exact sum of a double expression: sum in decimal, emit double."""
+    from pyspark.sql import functions as F
+
+    return F.sum(col.cast("decimal(20,6)")).cast("double")
 
 
 def ts_us(df: DataFrame, col: str = "ts"):
@@ -66,9 +73,8 @@ def ts_us(df: DataFrame, col: str = "ts"):
 #      -recurring failure mode (VERDICT r9 #1, r10 #1): a hand
 #      -regenerated ``_DRIVER_ORDER`` list was forgotten after the
 #      driver consumed its prefix, wasting a full round of staleness
-#      budget. ``_DRIVER_ORDER_FALLBACK`` (regenerable with
-#      ``python tools/gen_driver_order.py --write``) is used only when
-#      no CORRECTNESS artifact is readable (fresh clone).
+#      budget. With no readable CORRECTNESS artifact (fresh clone)
+#      this group is empty and the order is alphabetical.
 
 # Gates whose operator code changed, tagged ``(name, round_changed)``.
 # Appended as operator modules are touched so the gates jump the queue
@@ -140,7 +146,7 @@ def _last_checked_rounds() -> dict[str, int]:
     """name -> last round with a driver CORRECTNESS row, read from the
     committed ``CORRECTNESS_r*.json`` files at the repo root. Pure
     bookkeeping (no Spark); unreadable files are skipped, and an empty
-    result signals the caller to fall back to the static list."""
+    result leaves the caller with alphabetical order."""
     import json
     import re
     from pathlib import Path
@@ -163,196 +169,6 @@ def _last_checked_rounds() -> dict[str, int]:
     return seen
 
 
-_DRIVER_ORDER_FALLBACK = [
-    # last driver row: round 7
-    "bpe_subword_top",
-    "bpe_top_pairs",
-    "cluster_purity_embeddings",
-    "cluster_safe_split_counts",
-    "coverage_select_docs",
-    "cusum_event_alerts",
-    "dedup_jaccard",
-    "dsir_importance_scores",
-    "embedding_drift_labels",
-    "embedding_gram_matrix",
-    "embedding_quantize_stats",
-    "epoch_shuffle_positions",
-    "equi_depth_prices",
-    "global_rank_orders",
-    "hard_negatives_topk",
-    "histogram_drift_chars",
-    "knn_label_accuracy",
-    "mad_outlier_orders",
-    "mmr_diverse_topk",
-    "ngram_novelty_scores",
-    "novelty_incremental",
-    "padding_waste_buckets",
-    "pareto_docs",
-    "pmi_collocations",
-    "quality_dup_decile_counts",
-    "rrf_fused_topk",
-    "semantic_dedup_drops",
-    "text_fingerprint",
-    "text_surprisal_score",
-    "vocab_encode_checksums",
-    "vocab_shift_even_odd",
-    "waterfill_lang_budget",
-    "winsorized_price_stats",
-    # last driver row: round 8
-    "ann_brute_topk",
-    "ann_hamming_topk",
-    "ann_ivf_kmeans_topk",
-    "ann_ivf_probe_curve",
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_jl_topk",
-    "ann_lsh_topk",
-    "ann_pq_topk",
-    "bursty_event_types",
-    "centroid_label_topk",
-    "cube_revenue",
-    "cumulative_distinct_users",
-    "customers_without_orders",
-    "dedup_containment",
-    "dedup_embedding",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_keep_best",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "events_daily_active_users",
-    "funnel_within_hour",
-    "gini_source_concentration",
-    "grouping_sets_revenue",
-    "hopping_window_counts",
-    "interleave_mix_positions",
-    "peak_concurrency_daily",
-    "pivot_shipmode_year",
-    "pivot_user_events",
-    "purchase_session_overlaps",
-    "q11_important_parts",
-    "q12_priority_shipping",
-    "q13_customer_distribution",
-    "q20_significant_suppliers",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q9_product_profit",
-    "rfm_user_segments",
-    "rolling_7d_value_extrema",
-    "rollup_returns",
-    "segment_dedup_texts",
-    "sessionize_events_bucketed",
-    "shard_snake_mass",
-    "skew_salted_order_totals",
-    "user_activity_islands",
-    "valueset_membership_lineitem",
-    "weighted_median_prices",
-    "zipf_stats_by_source",
-    # last driver row: round 9
-    "asof_bucketed_purchase_last_view",
-    "bloom_prefilter_supplier_volume",
-    "bm25_multiquery_topk",
-    "bm25_search_topk",
-    "budget_select_per_lang",
-    "chunk_positive_pairs",
-    "cohort_retention_counts",
-    "compaction_plan_bins",
-    "corpus_mix_counts",
-    "corpus_report_by_source",
-    "countmin_user_frequencies",
-    "curation_pipeline_counts",
-    "daily_top_event_types",
-    "decayed_user_engagement",
-    "dedup_cluster_keep_best",
-    "dedup_incremental_near",
-    "dedup_substring_spans",
-    "doc_chunk_windows",
-    "engagement_pipeline_users",
-    "event_funnel_counts",
-    "event_transition_counts",
-    "fuzzy_join_even_odd",
-    "heavy_hitter_users",
-    "linkage_candidates_customers",
-    "median_quantity_by_flag",
-    "minmax_order_prices",
-    "multimodal_audio_features",
-    "multimodal_frame_stats",
-    "multimodal_resize_means",
-    "negative_pairs_sample",
-    "outlier_event_values",
-    "pagerank_trade_network",
-    "part_basket_triangles",
-    "quality_quantile_filter",
-    "resample_user_days",
-    "scd2_documents",
-    "session_path_top",
-    "sessionize_events_hotkey",
-    "snapshot_diff_documents",
-    "source_cap_kept",
-    "source_overlap_mirror",
-    "split_leakage_pairs",
-    "suppliers_with_large_shipments",
-    "temperature_mix_counts",
-    "text_language_id",
-    "text_quality",
-    "text_repetition",
-    "text_scrub_counts",
-    "text_token_stats",
-    "tumbling_window_counts",
-    # last driver row: round 10
-    "ann_eval_scorecard",
-    "ann_ivfpq_index_append_topk",
-    "ann_ivfpq_index_topk",
-    "asof_forward_next_view",
-    "asof_purchase_last_view",
-    "bot_cadence_users",
-    "bpe_fertility_by_lang",
-    "bpe_learned_merges",
-    "closure_part_hierarchy",
-    "corpus_length_quantiles",
-    "corpus_top_ngrams",
-    "dataset_split_counts",
-    "decontaminate_overlap",
-    "dedup_clusters",
-    "dedup_prefix_jaccard",
-    "doc_top_terms",
-    "events_props_extract",
-    "multimodal_image_features",
-    "nations_with_customers_and_suppliers",
-    "orders_above_customer_avg",
-    "pack_chunks",
-    "parts_never_ordered",
-    "q10_returned_revenue",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_parts_supplier_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_orders",
-    "q19_disjunctive_revenue",
-    "q1_pricing_summary",
-    "q21_sole_late_shipper",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_priority_late_ship",
-    "q5_region_volume",
-    "q7_nation_volume",
-    "quality_filter_funnel",
-    "range_join_purchase_views",
-    "sample_per_lang",
-    "sessionize_events",
-    "stratified_sample_counts",
-    "text_bigram_surprisal",
-    "topk_brands_by_revenue",
-    "translate_order_priority",
-    "weighted_sample_counts",
-    "window_order_rank",
-    "window_running_value",
-    "window_running_value_bucketed",
-    "window_running_value_hotkey",
-]
-
-
 def _live_changed(seen: dict[str, int]) -> list[str]:
     """The not-yet-expired slice of ``_CHANGED_GATES``: entries whose
     gate has no CORRECTNESS row at or after the round the change was
@@ -366,23 +182,19 @@ def _live_changed(seen: dict[str, int]) -> list[str]:
 
 def _reorder(out: dict) -> dict:
     seen = _last_checked_rounds()
-    if seen:
-        # derived stalest-first: rank = (last-checked round, name)
-        rank = {n: (seen[n], n) for n in seen}
-    else:
-        # fresh clone with no CORRECTNESS artifacts: static fallback
-        rank = {n: (i, n) for i, n in enumerate(_DRIVER_ORDER_FALLBACK)}
     changed = {n: i for i, n in enumerate(_live_changed(seen))}
 
     # Priority groups for the driver's prefix-sampled gate — see the
     # comment above _CHANGED_GATES. Group 1 sorts alphabetically
     # because the QUERIES and ORACLES dicts may register new entries in
-    # different module order, and the two registries must align.
+    # different module order, and the two registries must align. With
+    # no CORRECTNESS artifacts (fresh clone) group 2 is empty, so the
+    # order is alphabetical after the live changed gates.
     def key(n: str):
         c = changed.get(n)
         if c is not None:
             return (0, c, n)
-        r = rank.get(n)
+        r = seen.get(n)
         if r is None:
             return (1, 0, n)
         return (2, r, n)
@@ -391,23 +203,9 @@ def _reorder(out: dict) -> dict:
     return {n: out[n] for n in names}
 
 
-#: The query modules, in registration order: a later module's entry
-#: overrides an earlier one's of the same name.
-_MODULES = (
-    "relational",
-    "tpch_extra",
-    "pipeline",
-    "pipeline_extra",
-    "pipeline_r5",
-    "pipeline_r5b",
-    "pipeline_r7",
-    "pipeline_r7b",
-    "pipeline_r8",
-    "pipeline_r9",
-    "pipeline_r10",
-    "pipeline_r11",
-    "domain",
-)
+#: The query modules, one per domain. Each registers disjoint names;
+#: the registry order comes from ``_reorder``, not from this tuple.
+_MODULES = ("terminology", "relational", "streaming", "curation", "ann")
 
 
 def _registry(attr: str) -> dict:

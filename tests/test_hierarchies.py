@@ -80,17 +80,34 @@ def test_cycle_safe_closure(snomed):
     assert d == {"900100", "900200", "900300"}
 
 
-def test_deep_chain_closure(spark):
-    """Iterative doubling must close a deep chain in O(log d) rounds."""
-    n = 64
-    edges = spark.createDataFrame(
+def _chain(spark, n):
+    return spark.createDataFrame(
         [("s", str(i), "s", str(i + 1)) for i in range(n)],
         "ancestorSystem string, ancestorValue string, descendantSystem string, descendantValue string",
     )
-    closed = transitive_closure(edges)
+
+
+def test_deep_chain_closure(spark):
+    """Iterative doubling must close a deep chain in O(log d) rounds."""
+    n = 64
+    closed = transitive_closure(_chain(spark, n))
     # node n descends from every node above it
     top = closed.where(F.col("descendantValue") == str(n)).count()
     assert top == n
+
+
+def test_closure_without_fixpoint_raises(spark):
+    """A chain deeper than ``2 ** max_iterations`` cannot close in time:
+    fail loudly instead of returning a partial closure."""
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        transitive_closure(_chain(spark, 5), max_iterations=2)
+
+
+def test_convergent_closure_within_the_bound(spark):
+    """Three edges close in two doubling rounds plus the fixpoint check."""
+    closed = transitive_closure(_chain(spark, 3), max_iterations=3)
+    pairs = {(r["descendantValue"], r["ancestorValue"]) for r in closed.collect()}
+    assert pairs == {(str(d), str(a)) for a in range(4) for d in range(a + 1, 4)}
 
 
 def test_union_and_latest_versions(spark, loinc, snomed):

@@ -1,7 +1,7 @@
 """The build-once index cache must invalidate whenever ANY module that
 defines part of the build changes — the operator module, the shared
 gate module, or the module the build closure itself lives in (ADVICE
-r11: pipeline_r11's DELETE_PRED lived outside the key, so editing the
+r11: the delete gate's DELETE_PRED lived outside the key, so editing the
 delete predicate silently served a stale index with old tombstones
 while the DuckDB oracle used the new predicate)."""
 
@@ -26,7 +26,7 @@ def _fake_src(tmp_path):
 
 
 def test_key_covers_the_build_closures_module(tmp_path):
-    from bunsen_spark.queries.pipeline_r10 import _index_cache_path
+    from bunsen_spark.queries.ann import _index_cache_path
 
     m1 = tmp_path / "gate_a.py"
     m2 = tmp_path / "gate_b.py"
@@ -43,7 +43,7 @@ def test_key_covers_the_build_closures_module(tmp_path):
 
 
 def test_editing_the_build_module_invalidates(tmp_path):
-    from bunsen_spark.queries.pipeline_r10 import _index_cache_path
+    from bunsen_spark.queries.ann import _index_cache_path
 
     m = tmp_path / "gate_c.py"
     m.write_text("PRED = 'vec_id % 7 = 3'\ndef build(emb, path):\n    pass\n")
@@ -58,7 +58,7 @@ def test_editing_the_build_module_invalidates(tmp_path):
 
 
 def test_key_is_stable_for_identical_inputs(tmp_path):
-    from bunsen_spark.queries.pipeline_r10 import _index_cache_path
+    from bunsen_spark.queries.ann import _index_cache_path
 
     m = tmp_path / "gate_d.py"
     m.write_text("def build(emb, path):\n    pass\n")

@@ -35,7 +35,7 @@ def test_q5_broadcasts_dimensions(spark, sf_dir):
 
 
 def test_membership_join_is_not_python(spark, sf_dir):
-    from bunsen_spark.queries.domain import valueset_membership_lineitem
+    from bunsen_spark.queries.terminology import valueset_membership_lineitem
 
     plan = _plan(valueset_membership_lineitem(spark, sf_dir))
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
@@ -60,7 +60,7 @@ def test_in_valueset_expression_is_native(spark):
 
 
 def test_range_join_is_hash_not_nested_loop(spark, sf_dir):
-    from bunsen_spark.queries.domain import range_join_purchase_views
+    from bunsen_spark.queries.streaming import range_join_purchase_views
 
     plan = _plan(range_join_purchase_views(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
@@ -117,10 +117,14 @@ def _executed(spark, build) -> _Executed:
     jsc.listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = list(tracker.getJobIdsForGroup(group))
+    # A skipped stage (its shuffle output reused) ran no task, and once
+    # the status store holds more than spark.ui.retainedStages it evicts
+    # skipped stages first, so read only the stages it still holds.
     stages = [
         jsc.statusStore().lastStageAttempt(sid)
         for j in jobs
         for sid in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(sid) is not None
     ]
     plans = []
     it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
@@ -139,10 +143,10 @@ def test_ann_topk_scan_is_one_pass(spark, sf_dir, scatter_gather, gate):
     exchange — whose partition-local top-k partials are merged on the
     driver; no job shuffles a byte, and the returned frame is a
     LocalRelation."""
-    from bunsen_spark.queries import pipeline
+    from bunsen_spark.queries import ann
 
     with scatter_gather():
-        run = _executed(spark, lambda: getattr(pipeline, gate)(spark, sf_dir))
+        run = _executed(spark, lambda: getattr(ann, gate)(spark, sf_dir))
     scans = [(tree, n) for tree, n in run.plans if "MapInArrow" in tree]
     assert len(scans) == 1, run.plans
     tree, n_stages = scans[0]
@@ -216,7 +220,7 @@ def test_ann_no_queries_runs_no_job(spark, sf_dir, scatter_gather):
 def test_contamination_broadcasts_probe(spark, sf_dir):
     """Decontamination: the probe shingle set is the broadcast side;
     the corpus stream is map-only up to the final aggregation."""
-    from bunsen_spark.queries.pipeline import decontaminate_overlap
+    from bunsen_spark.queries.curation import decontaminate_overlap
 
     plan = _plan(decontaminate_overlap(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
@@ -226,7 +230,7 @@ def test_contamination_broadcasts_probe(spark, sf_dir):
 def test_pack_chunks_single_exchange(spark, sf_dir):
     """Sequence packing: one shuffle (the per-shard window sort), no
     join anywhere."""
-    from bunsen_spark.queries.pipeline import pack_chunks
+    from bunsen_spark.queries.curation import pack_chunks
 
     plan = _plan(pack_chunks(spark, sf_dir))
     assert plan.count("Exchange") <= 2  # shard hash partitioning (+AQE read)
@@ -240,7 +244,7 @@ def test_multimodal_single_decode_pass(spark, sf_dir):
     image_features now carries width/height through, so the executed
     plan has exactly two MapInPandas nodes (decode, feats) and no
     join."""
-    from bunsen_spark.queries.pipeline import multimodal_image_features
+    from bunsen_spark.queries.curation import multimodal_image_features
 
     plan = _plan(multimodal_image_features(spark, sf_dir))
     assert plan.count("MapInPandas") == 2, plan
@@ -251,7 +255,7 @@ def test_multimodal_single_decode_pass(spark, sf_dir):
 def test_multimodal_audio_single_decode_pass(spark, sf_dir):
     """Audio gate query: exactly one decode mapInPandas (audio_features
     carries n_samples through — no join back to the decoded frame)."""
-    from bunsen_spark.queries.pipeline import multimodal_audio_features
+    from bunsen_spark.queries.curation import multimodal_audio_features
 
     plan = _plan(multimodal_audio_features(spark, sf_dir))
     assert plan.count("MapInPandas") == 2, plan
@@ -427,7 +431,7 @@ def test_global_window_gates_are_whitelisted(spark, sf_dir):
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     from plan_audit import GLOBAL_WINDOW_WHITELIST, _unpartitioned_windows
 
-    from bunsen_spark.queries.pipeline_r8 import (
+    from bunsen_spark.queries.streaming import (
         cumulative_distinct_users,
         user_activity_islands,
     )

@@ -220,7 +220,7 @@ def test_fano_dispersion_poisson_boundary(spark):
 def test_funnel_within_hour_window_semantics(spark):
     """The deadline semantics: an early view expires; a later view can
     rescue the click (greedy earliest-view logic would miss it)."""
-    from bunsen_spark.queries.pipeline_r8 import funnel_within_hour
+    from bunsen_spark.queries.streaming import funnel_within_hour
     import pyspark.sql.functions as F
 
     H = 3_600_000_000

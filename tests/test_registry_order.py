@@ -122,17 +122,15 @@ def test_derived_order_covers_live_registry():
 
 
 def test_fallback_used_when_no_artifacts(monkeypatch):
-    """A fresh clone without CORRECTNESS artifacts falls back to the
-    committed static list instead of degenerating to alphabetical."""
+    """A fresh clone without CORRECTNESS artifacts orders the registry
+    alphabetically after the live changed gates."""
     import bunsen_spark.queries as qmod
 
     monkeypatch.setattr(qmod, "_last_checked_rounds", dict)
-    changed_names = {n for n, _ in qmod._CHANGED_GATES}
-    picks = [
-        n for n in qmod._DRIVER_ORDER_FALLBACK if n not in changed_names
-    ][:5]
-    out = qmod._reorder({n: None for n in picks[::-1]})
-    assert list(out) == picks
+    changed = [n for n, _ in qmod._CHANGED_GATES]
+    names = ["zeta_gate", "alpha_gate", changed[1], "mid_gate", changed[0]]
+    out = qmod._reorder({n: None for n in names})
+    assert list(out) == changed[:2] + ["alpha_gate", "mid_gate", "zeta_gate"]
 
 
 def test_every_query_has_an_oracle():

@@ -80,6 +80,45 @@ def test_null_input_is_false(spark, pushed):
     assert out[0]["m"] is False
 
 
+SCT = "http://snomed.info/sct"
+
+
+@pytest.mark.parametrize(
+    "system, code, expected",
+    [
+        (SCT, "100004", True),
+        (None, f"{SCT}|100004", False),
+        (f"{SCT}|100004", None, False),
+        (SCT, None, False),
+    ],
+)
+def test_null_coding_parts_never_match(spark, system, code, expected):
+    """A coding with a NULL system or code matches nothing, even when the
+    other part spells a whole ``system|code`` member key: the SQL
+    rewrite, the Column API (single and array) and the UDF agree."""
+    from bunsen_spark.functions.valuesets import sql as native_sql
+
+    push_valuesets(spark, {"sct": [(SCT, "100004")]})
+    try:
+        df = spark.createDataFrame(
+            [(([(system, code)],),)],
+            "code struct<coding: array<struct<system:string, code:string>>>",
+        ).withColumn("codes", F.array("code"))
+        df.createOrReplaceTempView("codings")
+        query = "SELECT in_valueset(code, 'sct') AS m FROM codings"
+        got = {
+            "udf": spark.sql(query).first()["m"],
+            "rewrite": native_sql(spark, query).first()["m"],
+            "column": df.select(in_valueset(F.col("code"), "sct")).first()[0],
+            "array": df.select(
+                in_valueset(F.col("codes"), "sct", is_array=True)
+            ).first()[0],
+        }
+    finally:
+        pop_valuesets(spark)
+    assert got == dict.fromkeys(got, expected)
+
+
 def test_unknown_reference_raises(pushed):
     with pytest.raises(ValueError, match="unknown valueset reference"):
         in_valueset(F.col("code"), "nope")
