@@ -13,8 +13,6 @@ Semantics of :func:`broadcast_row_cap`:
 
 - auto-broadcast disabled (threshold ``-1``/``0``) → cap 0: "never
   broadcast" stays one switch.
-- the operator's own conf key set explicitly → honored verbatim (the
-  per-cluster override outranks any derivation).
 - otherwise → the operator's default row cap scaled by
   ``threshold / 64 MB`` — 64 MB being the reference threshold the row
   defaults were sized against (session.py). A cluster at the stock
@@ -63,13 +61,8 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return None if size >= conf.defaultSizeInBytes() else size
 
 
-def broadcast_row_cap(
-    spark: SparkSession, conf_key: str, default_rows: int
-) -> int:
+def broadcast_row_cap(spark: SparkSession, default_rows: int) -> int:
     thr = _threshold_bytes(spark)
     if thr <= 0:
         return 0
-    explicit = spark.conf.get(conf_key, None)
-    if explicit is not None:
-        return int(explicit)
     return max(1, int(default_rows * thr / _REFERENCE_THRESHOLD))

@@ -137,103 +137,6 @@ def _with_shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
 
 # -- exact set-Jaccard via inverted index ------------------------------------
 
-#: Decision log of the saturation guard, one dict per probed width:
-#: ``{"width", "volume", "cap", "admitted", "asymmetric"}``. Appended by
-#: every :func:`_guarded_prefix_inputs` call; harnesses (tools/
-#: soak_scale.py) drain it to pin the probe's bound and the auto-width
-#: choice per scale in a committed artifact, so a regression in either
-#: (e.g. after a tokenizer change silently shrinks the token space) is
-#: caught mechanically rather than by a wall-clock blowup. Bounded
-#: deque (maxlen 64 ≫ the ≤4 widths any single call probes): long-lived
-#: sessions running the dedup gates repeatedly must not accumulate
-#: entries without end (ADVICE r10). CONSUMER CONTRACT: clear()
-#: immediately before the call whose decisions you want to pin (as
-#: tools/soak_scale.py and tools/soak_setjoin_auto.py do) — the tail
-#: may otherwise contain entries from unrelated earlier calls.
-from collections import deque as _deque
-
-GUARD_TRACE: "_deque[dict]" = _deque(maxlen=64)
-
-
-def _guarded_prefix_inputs(
-    docs: DataFrame,
-    n,
-    max_df: int,
-    portable: bool,
-    num: int,
-    den: int,
-    asymmetric: bool,
-    candidate_budget: int | None,
-):
-    """Shared regime guard of the exact set-overlap operators: build
-    the df-pruned postings + prefix ranking for shingle width ``n``,
-    then PROBE the prefix join's candidate volume from token histograms
-    (:func:`setjoin.prefix_candidate_volume`) BEFORE running it.
-
-    Prefix filtering is subquadratic only while rarest-prefix document
-    frequencies stay small; a saturated token space (tiny vocabulary at
-    short n — boilerplate mills, templated corpora) silently degrades
-    to the Σ df² ~ n² regime (PERF.md round-8: n=3 on the 61-word sf10
-    fixture ≈ 1e9 candidates, >1500 s). The guard costs two
-    vocabulary-sized aggregate jobs per tried width — constant work —
-    and either proves the join safe or refuses to run it.
-
-    ``n`` may be an int (probe once; raise if over budget) or ``"auto"``
-    (escalate 3→5→7→9 and use the first width whose probed volume fits
-    — wider shingles shrink df geometrically on saturated vocab).
-    ``candidate_budget`` defaults to ``max(2_000_000, 500 · n_docs)``:
-    generous linear headroom, but categorically below quadratic.
-    Returns ``(width, posts, ranked, sizes, prefix, vol)`` — ``prefix``
-    is the MATERIALIZED prefix relation the probe already computed (the
-    caller passes it to its candidate generator so the per-doc ranking
-    window executes exactly once) and ``vol`` the probed candidate
-    bound, which the verification stage reuses as its broadcast
-    gate."""
-    from ..persist import release
-    from .setjoin import _prefix_rows, prefix_candidate_volume, ranked_tokens
-
-    widths = (n,) if isinstance(n, int) else (SHINGLE_N, 5, 7, 9)
-    if not isinstance(n, int) and n != "auto":
-        raise ValueError(f"n must be an int or 'auto', got {n!r}")
-    tried: list[tuple[int, int, int]] = []
-    for w in widths:
-        posts = materialize(_pruned_postings(docs, w, max_df, portable))
-        ranked, sizes = ranked_tokens(posts, has_df=True)
-        prefix = materialize(_prefix_rows(ranked, num, den))
-        vol = prefix_candidate_volume(
-            ranked, num, den, asymmetric=asymmetric, prefix=prefix
-        )
-        # the n_docs count job only runs when the absolute floor alone
-        # can't already admit the join — the common (healthy-corpus)
-        # case pays exactly one probe aggregate
-        if candidate_budget is not None:
-            cap = candidate_budget
-        elif vol <= 2_000_000:
-            cap = 2_000_000
-        else:
-            cap = max(2_000_000, 500 * sizes.count())
-        GUARD_TRACE.append(
-            {
-                "width": w,
-                "volume": vol,
-                "cap": cap,
-                "admitted": vol <= cap,
-                "asymmetric": asymmetric,
-            }
-        )
-        if vol <= cap:
-            return w, posts, ranked, sizes, prefix, vol
-        release(prefix)
-        release(posts)
-        tried.append((w, vol, cap))
-    trail = "; ".join(f"n={w}: ~{v:,} candidates (budget {c:,})" for w, v, c in tried)
-    raise ValueError(
-        "shingle token space is saturated: the rarest-prefix candidate "
-        f"join would go quadratic ({trail}). Pass a larger shingle "
-        "width (n='auto' escalates 3→5→7→9 automatically), or raise "
-        "candidate_budget to force the join anyway."
-    )
-
 
 def jaccard_pairs(
     docs: DataFrame,
@@ -266,36 +169,26 @@ def jaccard_pairs(
     the IEEE double ``inter/union >= threshold`` the oracle pins.
 
     ``n='auto'`` (or any int width) runs through the saturation guard
-    (:func:`_guarded_prefix_inputs`): a histogram probe refuses — or,
-    for auto, escalates past — token spaces where the prefix join
+    (:func:`setjoin._guarded_prefix_inputs`): a histogram probe refuses
+    — or, for auto, escalates past — token spaces where the prefix join
     would go quadratic."""
     from .setjoin import (
+        _guarded_prefix_inputs,
         _lossless_fraction,
-        exact_intersections,
         jaccard_prefix_candidates,
     )
 
     frac = _lossless_fraction(threshold)
-    _, posts, ranked, sizes, prefix, vol = _guarded_prefix_inputs(
-        docs, n, max_df, portable,
-        frac.numerator, frac.denominator,
+    num, den = frac.numerator, frac.denominator
+    ranked, prefix, sets = _guarded_prefix_inputs(
+        lambda w: _pruned_postings(docs, w, max_df, portable), n, num, den,
         asymmetric=False, candidate_budget=candidate_budget,
     )
-    cands = jaccard_prefix_candidates(
-        ranked, frac.numerator, frac.denominator, prefix=prefix
+    cands = jaccard_prefix_candidates(ranked, num, den, prefix=prefix)
+    return _verify_jaccard_pairs(
+        cands.withColumnsRenamed({"doc_a": "a_id", "doc_b": "b_id"}),
+        sets, sets, "a_id", "b_id", threshold,
     )
-    j = (
-        exact_intersections(
-            posts.select("doc_id", "tok"), cands, sizes, candidate_volume=vol
-        )
-        .select(
-            F.col("doc_a").alias("a_id"),
-            F.col("doc_b").alias("b_id"),
-            (F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))).alias("j"),
-        )
-        .where(F.col("j") >= threshold)
-    )
-    return j.select("a_id", "b_id", F.round("j", 6).alias("jaccard"))
 
 
 def _pruned_postings(
@@ -350,27 +243,27 @@ def containment_pairs(
     so the DuckDB oracle reproduces it bit-for-bit.
 
     ``n='auto'`` (or any int width) runs through the saturation guard
-    (:func:`_guarded_prefix_inputs`): a histogram probe refuses — or,
-    for auto, escalates past — the saturated-vocabulary regime where
-    even the prefix×full join degrades to Σ df² (PERF.md round-8)."""
+    (:func:`setjoin._guarded_prefix_inputs`): a histogram probe refuses
+    — or, for auto, escalates past — the saturated-vocabulary regime
+    where even the prefix×full join degrades to Σ df² (PERF.md
+    round-8)."""
     from .setjoin import (
+        _guarded_prefix_inputs,
         _lossless_fraction,
         containment_prefix_candidates,
         exact_intersections,
     )
 
     frac = _lossless_fraction(threshold)
-    _, posts, ranked, sizes, prefix, vol = _guarded_prefix_inputs(
-        docs, n, max_df, portable,
-        frac.numerator, frac.denominator,
+    num, den = frac.numerator, frac.denominator
+    ranked, prefix, sets = _guarded_prefix_inputs(
+        lambda w: _pruned_postings(docs, w, max_df, portable), n, num, den,
         asymmetric=True, candidate_budget=candidate_budget,
     )
-    cands = containment_prefix_candidates(
-        ranked, frac.numerator, frac.denominator, prefix=prefix
+    cands = containment_prefix_candidates(ranked, num, den, prefix=prefix)
+    both = exact_intersections(cands, sets, sets).withColumnsRenamed(
+        {"doc_a": "a_id", "doc_b": "b_id"}
     )
-    both = exact_intersections(
-        posts.select("doc_id", "tok"), cands, sizes, candidate_volume=vol
-    ).withColumnsRenamed({"doc_a": "a_id", "doc_b": "b_id"})
     directed = both.select(
         F.explode(
             F.array(
@@ -526,41 +419,56 @@ def _band_keys() -> Column:
     )
 
 
+def _band_candidates(
+    a_sigs: DataFrame,
+    b_sigs: DataFrame,
+    a: str,
+    b: str,
+    keep: Column | None = None,
+) -> DataFrame:
+    """LSH candidate pairs ``(a, b)``: the docs of two MinHash signature
+    frames (:func:`minhash_signature` rows) that agree on all
+    ``ROWS_PER_BAND`` slots of some band. One band-key explode per
+    side, one join on the key, one distinct — |docs| × bands rows, so
+    the pair join only sees band collisions, never |a| × |b|.
+    ``keep`` filters the joined rows before the distinct; it may use
+    ``a``, ``b`` and the two set sizes ``sza`` / ``szb``."""
+    x = a_sigs.select(
+        F.col("doc_id").alias(a), F.size("hs").alias("sza"),
+        F.explode(_band_keys()).alias("bk"),
+    )
+    y = b_sigs.select(
+        F.col("doc_id").alias(b), F.size("hs").alias("szb"),
+        F.explode(_band_keys()).alias("bk"),
+    )
+    pairs = x.join(y, "bk")
+    if keep is not None:
+        pairs = pairs.where(keep)
+    return pairs.select(a, b).distinct()
+
 
 def _verify_jaccard_pairs(
     cand: DataFrame,
-    ha_src: DataFrame,
-    hb_src: DataFrame,
-    a_col: str,
-    b_col: str,
+    a_sets: DataFrame,
+    b_sets: DataFrame,
+    a: str,
+    b: str,
     threshold: float,
 ) -> DataFrame:
-    """Exact-Jaccard verification shared by every LSH-candidate
-    operator: join the candidates' hashed shingle sets, keep pairs with
-    Jaccard ≥ threshold, emit (a_col, b_col, jaccard rounded 6). One
+    """Exact-Jaccard verification shared by the Jaccard operators:
+    intersect the candidates' token sets (``(doc_id, hs)`` rows, through
+    :func:`setjoin.exact_intersections`), keep pairs with the IEEE
+    double Jaccard ≥ threshold, emit (a, b, jaccard rounded 6). One
     place owns the threshold/rounding semantics the DuckDB twins
-    mirror.
+    mirror."""
+    from .setjoin import exact_intersections
 
-    Join strategy is left to AQE: the candidate list's actual size is
-    only known at runtime (post-exchange), and AQE converts these
-    sort-merge joins to broadcast joins with a local shuffle read when
-    the candidate side turns out small — measured cheaper here than an
-    explicit materialize+count+hint, whose extra barrier jobs cost
-    more than the avoided map-side shuffle writes (guide §1.1's
-    "ideal plan gotcha": adjudicated by the r13 alternating A/B)."""
-    ha = ha_src.select(F.col("doc_id").alias(a_col), F.col("hs").alias("ha"))
-    hb = hb_src.select(F.col("doc_id").alias(b_col), F.col("hs").alias("hb"))
+    j = F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
     return (
-        cand.join(ha, a_col)
-        .join(hb, b_col)
-        .withColumn("i", F.size(F.array_intersect("ha", "hb")))
-        .select(
-            a_col,
-            b_col,
-            (F.col("i") / (F.size("ha") + F.size("hb") - F.col("i"))).alias("j"),
-        )
+        exact_intersections(cand, a_sets, b_sets, a, b)
+        .select(a, b, j.alias("j"))
         .where(F.col("j") >= threshold)
-        .select(a_col, b_col, F.round("j", 6).alias("jaccard"))
+        .select(a, b, F.round("j", 6).alias("jaccard"))
     )
 
 
@@ -574,36 +482,23 @@ def minhash_lsh_pairs(
     Output: (a_id, b_id, jaccard ≥ threshold, rounded 6)."""
     # the signature stage (full-text regex shingling + NUM_HASHES
     # permutation mins) feeds three consumers (buckets, both verify
-    # sides); a lazy checkpoint materializes it once instead of three
+    # sides); an eager checkpoint materializes it once instead of three
     # times — state is (doc_id, hs, sig), far smaller than the text
     from .setjoin import _lossless_fraction
 
     sigs = minhash_signature(docs, portable).transform(materialize_eager)
-    buckets = sigs.select(
-        "doc_id", F.size("hs").alias("sz"), F.explode(_band_keys()).alias("bk")
-    )
     # size prefilter inside the band join: J >= t forces
     # min(|A|,|B|) >= t*max(|A|,|B|) (intersection <= min, union >= max),
     # so chance band collisions between very differently-sized sets are
-    # dropped on two longs before the distinct and the hs-array verify.
+    # dropped on two ints before the distinct and the hs-array verify.
     # Lossless for the output (the dropped pairs cannot pass verify);
     # num/den <= t keeps the integer cross-multiplication a relaxation.
     frac = _lossless_fraction(threshold)
     num, den = frac.numerator, frac.denominator
-    cand = (
-        buckets.alias("x")
-        .join(buckets.alias("y"), "bk")
-        .where(
-            (F.col("x.doc_id") < F.col("y.doc_id"))
-            & (
-                F.least("x.sz", "y.sz") * den
-                >= F.greatest("x.sz", "y.sz") * num
-            )
-        )
-        .select(
-            F.col("x.doc_id").alias("a_id"), F.col("y.doc_id").alias("b_id")
-        )
-        .distinct()
+    cand = _band_candidates(
+        sigs, sigs, "a_id", "b_id",
+        (F.col("a_id") < F.col("b_id"))
+        & (F.least("sza", "szb") * den >= F.greatest("sza", "szb") * num),
     )
     return _verify_jaccard_pairs(cand, sigs, sigs, "a_id", "b_id", threshold)
 
@@ -699,19 +594,16 @@ GROUP BY doc_id
 #: default is a few hundred MB built — well under broadcast caps).
 #: A session that disables auto-broadcast (threshold -1/0) disables
 #: these explicit hints too, so "never broadcast" stays one switch.
-BROADCAST_LABELS_CONF = "spark.bunsen.dedup.broadcastLabels"
 BROADCAST_LABELS_DEFAULT = 10_000_000
 
 
 def _label_broadcast_cap(df: DataFrame) -> int:
     # row cap scales with the cluster's configured auto-broadcast
-    # threshold (explicit conf wins; disabled threshold disables the
-    # hint too) — see operators/_bcast.py
+    # threshold (disabled threshold disables the hint too) — see
+    # operators/_bcast.py
     from ._bcast import broadcast_row_cap
 
-    return broadcast_row_cap(
-        df.sparkSession, BROADCAST_LABELS_CONF, BROADCAST_LABELS_DEFAULT
-    )
+    return broadcast_row_cap(df.sparkSession, BROADCAST_LABELS_DEFAULT)
 
 
 def near_dup_clusters(
@@ -794,7 +686,7 @@ def _label_propagation(edges: DataFrame, max_rounds: int) -> DataFrame | None:
     so the neighborhood minimum is just ``min(v) per u``). Rounds ≥ 2
     broadcast the node-sized label and min frames into their joins when
     the node count — counted for free inside round 1's convergence
-    aggregate — is under :data:`BROADCAST_LABELS_CONF`, so the edge
+    aggregate — is under :func:`_label_broadcast_cap`, so the edge
     table is never shuffled after its one materialization (guide
     §2.4/§3.1); above the cap the joins stay shuffle joins."""
     labels = edges.select("u").distinct().withColumn("label", F.col("u"))
@@ -1060,12 +952,6 @@ SELECT a_id, b_id, hamming FROM (
 
 
 # -- embedding cosine near-dup ----------------------------------------------
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 def embedding_near_dup_pairs(
@@ -1438,18 +1324,9 @@ def incremental_near_dup(
     hash families never collide, so a mismatch silently keeps
     everything."""
     batch = minhash_signature(new_docs, portable).transform(materialize_eager)
-    bb = batch.select(F.col("doc_id").alias("b_id"), F.explode(_band_keys()).alias("bk"))
-    sb = state.select(F.col("doc_id").alias("s_id"), F.explode(_band_keys()).alias("bk"))
-    cand = bb.join(sb, "bk").select("b_id", "s_id").distinct()
-    ha = batch.select(F.col("doc_id").alias("b_id"), F.col("hs").alias("ha"))
-    hb = state.select(F.col("doc_id").alias("s_id"), F.col("hs").alias("hb"))
+    cand = _band_candidates(batch, state, "b_id", "s_id")
     dropped = (
-        cand.join(ha, "b_id")
-        .join(hb, "s_id")
-        .withColumn("i", F.size(F.array_intersect("ha", "hb")))
-        .where(
-            F.col("i") / (F.size("ha") + F.size("hb") - F.col("i")) >= threshold
-        )
+        _verify_jaccard_pairs(cand, batch, state, "b_id", "s_id", threshold)
         .select("b_id")
         .distinct()
     )
@@ -1534,9 +1411,7 @@ def fuzzy_text_join(
     ls, rs = materialize_all(
         minhash_signature(left, portable), minhash_signature(right, portable)
     )
-    lb = ls.select(F.col("doc_id").alias("l_id"), F.explode(_band_keys()).alias("bk"))
-    rb = rs.select(F.col("doc_id").alias("r_id"), F.explode(_band_keys()).alias("bk"))
-    cand = lb.join(rb, "bk").select("l_id", "r_id").distinct()
+    cand = _band_candidates(ls, rs, "l_id", "r_id")
     return _verify_jaccard_pairs(cand, ls, rs, "l_id", "r_id", threshold)
 
 
@@ -1604,13 +1479,9 @@ def fuzzy_text_join_split(
         .join(flags, "doc_id")
         .transform(materialize_eager)
     )
-    lb = sigs.where("__left").select(
-        F.col("doc_id").alias("l_id"), F.explode(_band_keys()).alias("bk")
+    cand = _band_candidates(
+        sigs.where("__left"), sigs.where(~F.col("__left")), "l_id", "r_id"
     )
-    rb = sigs.where(~F.col("__left")).select(
-        F.col("doc_id").alias("r_id"), F.explode(_band_keys()).alias("bk")
-    )
-    cand = lb.join(rb, "bk").select("l_id", "r_id").distinct()
     return _verify_jaccard_pairs(cand, sigs, sigs, "l_id", "r_id", threshold)
 
 

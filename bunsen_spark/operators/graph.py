@@ -28,11 +28,11 @@ DAMPING_PCT = 85
 
 
 #: node-table rows below which the rank/contribution tables are
-#: broadcast each iteration instead of shuffle-joined. (node, rank_q)
-#: is 16 bytes/row, so the default 10M rows is a ~300 MB built hash
-#: relation — comfortably under the 8 GB / 512M-row broadcast caps on
-#: production executors; raise/lower via conf per cluster memory.
-BROADCAST_NODES_CONF = "spark.bunsen.graph.broadcastNodes"
+#: broadcast each iteration instead of shuffle-joined, at the 64 MB
+#: reference broadcast threshold (operators/_bcast.py scales it with the
+#: session's threshold). (node, rank_q) is 16 bytes/row, so 10M rows is
+#: a ~300 MB built hash relation — comfortably under the 8 GB /
+#: 512M-row broadcast caps on production executors.
 BROADCAST_NODES_DEFAULT = 10_000_000
 
 
@@ -47,11 +47,12 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     node table — the checkpointed blocks are scanned, not the raw
     edges) and folded into the arithmetic as a literal, so the unrolled
     plan no longer recomputes the count aggregate + cross-join per
-    iteration. When ``n`` is under ``spark.bunsen.graph.broadcastNodes``
-    (default 10M — rank tables are 16 bytes/row), every per-iteration
-    join broadcasts the node-sized side (ranks into the edge join,
-    contributions into the rank update), leaving exactly ONE exchange
-    per iteration: the map-side-combined contribution aggregation.
+    iteration. When ``n`` is under the broadcast row cap
+    (:data:`BROADCAST_NODES_DEFAULT` — rank tables are 16 bytes/row),
+    every per-iteration join broadcasts the node-sized side (ranks into
+    the edge join, contributions into the rank update), leaving exactly
+    ONE exchange per iteration: the map-side-combined contribution
+    aggregation.
     The corpus-sized edge table is never shuffled after setup. Above
     the threshold the joins fall back to shuffle joins on node keys —
     the same declarative plan as before, minus the count subtrees.
@@ -86,13 +87,11 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
         )
     spark = edges.sparkSession
     # row cap scales with the cluster's configured auto-broadcast
-    # threshold (explicit conf wins; disabled threshold disables the
-    # hint too) — see operators/_bcast.py
+    # threshold (disabled threshold disables the hint too) — see
+    # operators/_bcast.py
     from ._bcast import broadcast_row_cap
 
-    bcast_cap = broadcast_row_cap(
-        spark, BROADCAST_NODES_CONF, BROADCAST_NODES_DEFAULT
-    )
+    bcast_cap = broadcast_row_cap(spark, BROADCAST_NODES_DEFAULT)
     small = n <= bcast_cap
 
     def node_sized(df: DataFrame) -> DataFrame:

@@ -1,18 +1,19 @@
-"""Prefix-filtered EXACT Jaccard set-similarity self-join — the
-lossless counterpart of the LSH/banding family in `operators/dedup.py`.
+"""Exact set-overlap joins — the lossless counterpart of the LSH/banding
+family in `operators/dedup.py`, and the single home of the steps the
+whole exact set-overlap family shares.
 
 Beyond-reference scale extension (SURVEY §7 M7 family). MinHash-LSH
 (`dedup.py:minhash_lsh_pairs`) is probabilistic: pairs can be missed.
 When the pipeline needs EVERY pair above a Jaccard threshold (legal
 dedup audits, recall measurement for the LSH path), the classic
-scalable exact algorithm is prefix filtering (PPJoin's core): order
-each record's token set by ascending global token frequency and index
-only its first ``|s| - ceil(t*|s|) + 1`` tokens. Two sets with Jaccard
-``>= t`` MUST share at least one prefix token (pigeonhole on the
-required overlap), so joining on prefix tokens alone is lossless —
-and prefixes are built from the RAREST tokens, so the candidate join
-avoids the stop-token blowup that forces the inverted-index path
-(`dedup.py:jaccard_pairs`) to prune frequent shingles lossily.
+scalable exact algorithm is prefix filtering (PPJoin's core, Xiao et
+al., WWW 2008): order each record's token set by ascending global
+token frequency and index only its first ``|s| - ceil(t*|s|) + 1``
+tokens. Two sets with Jaccard ``>= t`` MUST share at least one prefix
+token (pigeonhole on the required overlap), so joining on prefix
+tokens alone is lossless — and prefixes are built from the RAREST
+tokens, so the candidate join avoids the stop-token blowup of a
+posting-list pair expansion.
 
 Plan shape (pure Catalyst):
 
@@ -29,42 +30,47 @@ Plan shape (pure Catalyst):
    magnitude before verification (see inline proof sketch). Join key
    frequency is bounded by construction — a token this common would
    not be in prefixes — so no salting is needed.
-4. exact verification: join candidates back to the full token sets and
-   count the intersection; keep pairs with ``den*inter >= num*union``
-   where ``t = num/den`` exactly (integer cross-multiplication — no
-   float threshold anywhere, so the DuckDB brute-force twin matches
-   bit-for-bit).
+4. exact verification (:func:`exact_intersections`, also the verify of
+   the MinHash-LSH operators): one native array-intersection size per
+   candidate pair over per-doc distinct token arrays.
 
 At 100 TB: step 1 is the only corpus-wide aggregate; steps 3-4 shuffle
 token/candidate rows whose volume prefix filtering keeps near-linear
-in the matching pairs. Tokens are joined as strings (short words), not
-hashes: a hash collision would merge two tokens and silently change
-EXACT results, which this operator exists to guarantee.
+in the matching pairs. Before step 3 runs, the saturation guard
+(:func:`_guarded_prefix_inputs`) bounds its volume from token
+histograms and refuses token spaces where it would go quadratic.
+
+Tokens: :func:`prefix_jaccard_pairs` keys its string tokens by
+``xxhash64`` when the vocabulary proves the hash injective
+(``count(distinct tok) = count(distinct hash)``, checked by one
+vocabulary-sized aggregate) and by the string itself otherwise. Either
+key is exact, and any ``(df, key)`` order is total, so both filters
+stay lossless and the rows do not depend on the key. The hash keys
+keep the verify's arrays on longs: over ~17-char shingle strings the
+array intersection measured 11.2 → 12.9 s of task time on
+``dedup_prefix_jaccard`` at sf0.1. The dedup operators' tokens are
+already shingle hashes (the oracle hashes identically), so they are
+used as they are.
 """
 
 from __future__ import annotations
 
+from collections import deque
 from fractions import Fraction
+from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..persist import materialize
+from ..persist import materialize, release
 from .text_analysis import WORDS_SQL, words_col
-
-
-def _threshold_fraction(threshold: float) -> Fraction:
-    frac = Fraction(threshold).limit_denominator(1000)
-    if not 0 < frac <= 1:
-        raise ValueError("threshold must be in (0, 1]")
-    return frac
 
 
 def _lossless_fraction(threshold: float) -> Fraction:
     """A rational ``num/den <= threshold`` with a small denominator —
     used when the prefix/size filters must be LOSSLESS upper bounds for
     a final float-threshold comparison that happens elsewhere (the
-    dedup-family operators pin their oracle parity on the exact IEEE
+    family's operators pin their oracle parity on the exact IEEE
     ``inter/union >= threshold`` double test, so every pre-filter here
     may only relax, never tighten). Small ``den`` keeps the integer
     cross-multiplications (``den * sz``) far from long overflow even at
@@ -77,23 +83,27 @@ def _lossless_fraction(threshold: float) -> Fraction:
     return frac
 
 
+def _with_df(toks: DataFrame) -> DataFrame:
+    """``(doc_id, tok)`` postings plus each token's document frequency
+    ``df`` — one map-side-combinable aggregate joined back."""
+    return toks.join(toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df")), "tok")
+
+
 def ranked_tokens(toks: DataFrame, has_df: bool = False) -> tuple[DataFrame, DataFrame]:
     """Shared prefix-filter substrate: rank each document's (distinct)
     tokens under the global ``(df ASC, tok ASC)`` total order — rarest
     first — so prefixes are built from the least-frequent tokens.
     ``toks`` is ``(doc_id, tok)`` with per-doc distinct tokens (any
-    orderable token type: strings or shingle hashes); pass
-    ``has_df=True`` when it already carries a ``df`` document-frequency
-    column (the dedup family's stop-token prune computes it anyway) to
-    skip the corpus-wide df aggregate+join here. Returns ``(ranked,
-    sizes)`` where ranked is ``(tok, doc_id, rnk, sz)`` and sizes is
+    orderable token type: strings or hashes); pass ``has_df=True`` when
+    it already carries a ``df`` document-frequency column to skip the
+    corpus-wide df aggregate+join here. Returns ``(ranked, sizes)``
+    where ranked is ``(tok, doc_id, rnk, sz)`` and sizes is
     ``(doc_id, sz)``. The ranking window partitions by ``doc_id``
     (unique key, no skew); the df aggregate is the only corpus-wide
     shuffle and is map-side combinable."""
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     if not has_df:
-        df = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        toks = toks.join(df, "tok")
+        toks = _with_df(toks)
     ranked = (
         toks.withColumn(
             "rnk",
@@ -114,10 +124,7 @@ def _prefix_rows(ranked: DataFrame, num: int, den: int) -> DataFrame:
     num/den``). Shared by both candidate generators and the
     saturation probe so the three always agree on what "prefix"
     means. Carries ``df`` so the asymmetric probe can bound the
-    prefix×full join without touching the full relation. Callers that
-    consume the prefix twice (probe + candidates) should
-    ``materialize`` it once and pass it through the ``prefix=``
-    parameters — the ranking window then runs a single time."""
+    prefix×full join without touching the full relation."""
     prefix_len = (
         F.col("sz") - ((F.col("sz") * num + (den - 1)) / den).cast("long") + 1
     )
@@ -126,7 +133,7 @@ def _prefix_rows(ranked: DataFrame, num: int, den: int) -> DataFrame:
     )
 
 
-def prefix_candidate_volume(
+def prefix_join_volume(
     ranked: DataFrame,
     num: int,
     den: int,
@@ -179,6 +186,101 @@ def prefix_candidate_volume(
     return int(row) if row is not None else 0
 
 
+#: Decision log of the saturation guard, one dict per probed width:
+#: ``{"width", "volume", "cap", "admitted", "asymmetric"}``. Appended by
+#: every :func:`_guarded_prefix_inputs` call; harnesses (tools/
+#: soak_scale.py) drain it to pin the probe's bound and the auto-width
+#: choice per scale in a committed artifact, so a regression in either
+#: (e.g. after a tokenizer change silently shrinks the token space) is
+#: caught mechanically rather than by a wall-clock blowup. Bounded
+#: deque (maxlen 64 ≫ the ≤4 widths any single call probes): long-lived
+#: sessions running the set-join gates repeatedly must not accumulate
+#: entries without end. CONSUMER CONTRACT: clear() immediately before
+#: the call whose decisions you want to pin (as tools/soak_scale.py and
+#: tools/soak_setjoin_auto.py do) — the tail may otherwise contain
+#: entries from unrelated earlier calls.
+GUARD_TRACE: "deque[dict]" = deque(maxlen=64)
+
+#: shingle widths ``n="auto"`` tries, narrowest first
+AUTO_WIDTHS = (3, 5, 7, 9)
+
+
+def _guarded_prefix_inputs(
+    postings: Callable[[int], DataFrame],
+    n: int | str,
+    num: int,
+    den: int,
+    asymmetric: bool,
+    candidate_budget: int | None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The saturation guard of every prefix-filtered operator: build
+    the postings of width ``n`` with ``postings(n)`` — ``(doc_id, tok,
+    df)`` rows, distinct per doc — rank them, then PROBE the prefix
+    join's candidate volume from token histograms
+    (:func:`prefix_join_volume`) BEFORE running it.
+
+    Prefix filtering is subquadratic only while rarest-prefix document
+    frequencies stay small; a saturated token space (tiny vocabulary at
+    short n — boilerplate mills, templated corpora) silently degrades
+    to the Σ df² ~ n² regime (PERF.md round-8: n=3 on the 61-word sf10
+    fixture ≈ 1e9 candidates, >1500 s). The guard costs two
+    vocabulary-sized aggregate jobs per tried width — constant work —
+    and either proves the join safe or refuses to run it.
+
+    ``n`` may be an int (probe once; raise if over budget) or ``"auto"``
+    (escalate through :data:`AUTO_WIDTHS` and use the first width whose
+    probed volume fits — wider shingles shrink df geometrically on
+    saturated vocab). ``candidate_budget`` defaults to ``max(2_000_000,
+    500 · n_docs)``: generous linear headroom, but categorically below
+    quadratic. Returns ``(ranked, prefix, sets)``: the ranked postings,
+    the MATERIALIZED prefix relation the probe already computed (pass
+    it to the candidate generator so the per-doc ranking window
+    executes exactly once), and the per-doc token arrays ``(doc_id,
+    hs)`` that :func:`exact_intersections` verifies against."""
+    if not isinstance(n, int) and n != "auto":
+        raise ValueError(f"n must be an int or 'auto', got {n!r}")
+    widths = (n,) if isinstance(n, int) else AUTO_WIDTHS
+    tried: list[tuple[int, int, int]] = []
+    for w in widths:
+        posts = materialize(postings(w))
+        ranked, sizes = ranked_tokens(posts, has_df=True)
+        prefix = materialize(_prefix_rows(ranked, num, den))
+        vol = prefix_join_volume(
+            ranked, num, den, asymmetric=asymmetric, prefix=prefix
+        )
+        # the n_docs count job only runs when the absolute floor alone
+        # can't already admit the join — the common (healthy-corpus)
+        # case pays exactly one probe aggregate
+        if candidate_budget is not None:
+            cap = candidate_budget
+        elif vol <= 2_000_000:
+            cap = 2_000_000
+        else:
+            cap = max(2_000_000, 500 * sizes.count())
+        GUARD_TRACE.append(
+            {
+                "width": w,
+                "volume": vol,
+                "cap": cap,
+                "admitted": vol <= cap,
+                "asymmetric": asymmetric,
+            }
+        )
+        if vol <= cap:
+            sets = posts.groupBy("doc_id").agg(F.collect_list("tok").alias("hs"))
+            return ranked, prefix, sets
+        release(prefix)
+        release(posts)
+        tried.append((w, vol, cap))
+    trail = "; ".join(f"n={w}: ~{v:,} candidates (budget {c:,})" for w, v, c in tried)
+    raise ValueError(
+        "token space is saturated: the rarest-prefix candidate join "
+        f"would go quadratic ({trail}). Pass a wider shingle width "
+        "(the dedup operators' n='auto' escalates 3→5→7→9), or raise "
+        "candidate_budget to force the join anyway."
+    )
+
+
 def jaccard_prefix_candidates(
     ranked: DataFrame, num: int, den: int, prefix: DataFrame | None = None
 ) -> DataFrame:
@@ -215,8 +317,9 @@ def jaccard_prefix_candidates(
     # whose bound cannot reach the threshold never enter verification
     # — measured 309,803 -> ~thousands of candidates at sf0.1. The
     # anchor argument needs REAL token equality in the operator's
-    # token space: strings for the lossless word join, shingle hashes
-    # for the hash-defined dedup family (there the hash IS the token).
+    # token space, which every key here has: strings, hash keys proven
+    # injective on the vocabulary, or shingle hashes for the
+    # hash-defined dedup family (there the hash IS the token).
     bound = F.col("cnt") + F.least(
         F.col("sza") - F.col("pa"), F.col("szb") - F.col("pb")
     )
@@ -230,9 +333,7 @@ def jaccard_prefix_candidates(
             F.min("szb").alias("szb"),
         )
         .where(bound * (den + num) >= num * (F.col("sza") + F.col("szb")))
-        # the set sizes ride along so verification never has to join
-        # them back from the corpus-wide sizes relation
-        .select("doc_a", "doc_b", "sza", "szb")
+        .select("doc_a", "doc_b")
     )
 
 
@@ -246,11 +347,12 @@ def containment_prefix_candidates(
     against the FULL token lists (the container side has no set-local
     overlap bound: a tiny doc can be contained in any superset). Every
     qualifying directed pair must share a token between prefix(A) and
-    full(B); emitting the unordered pair and verifying BOTH directions
-    afterwards keeps the filter lossless. Candidate volume per token is
-    prefix_df × df — rare-token-biased — instead of the df² of a full
-    posting self-join. Size filter inside the join: containment needs
-    inter <= min(|A|,|B|) >= t·|A|, i.e. |B|·den >= |A|·num."""
+    full(B); emitting the unordered pair ``(doc_a, doc_b)`` and
+    verifying BOTH directions afterwards keeps the filter lossless.
+    Candidate volume per token is prefix_df × df — rare-token-biased —
+    instead of the df² of a full posting self-join. Size filter inside
+    the join: containment needs inter <= min(|A|,|B|) >= t·|A|, i.e.
+    |B|·den >= |A|·num."""
     if prefix is None:
         prefix = _prefix_rows(ranked, num, den)
     full = ranked.select("doc_id", "tok", "sz", "rnk")
@@ -274,13 +376,13 @@ def containment_prefix_candidates(
     # beyond this pair's last matched positions sorts after them and
     # inter <= cnt + min(sza - max_pa, szb - max_pb). A directed pair
     # with C(A→B) >= num/den needs inter >= ceil(num·sza/den); rows
-    # whose bound cannot reach it are dropped BEFORE the exact-
-    # intersection explode. Lossless per direction: each direction's
-    # hypothesis is generated from its own contained-side prefix, and
-    # the bound only ever over-estimates inter. On the saturated-vocab
-    # soak fixture this is the difference between the verify stage
-    # seeing every pair that shares one common token and seeing only
-    # early-prefix agreements (PERF.md round-8).
+    # whose bound cannot reach it are dropped BEFORE verification.
+    # Lossless per direction: each direction's hypothesis is generated
+    # from its own contained-side prefix, and the bound only ever
+    # over-estimates inter. On the saturated-vocab soak fixture this is
+    # the difference between the verify stage seeing every pair that
+    # shares one common token and seeing only early-prefix agreements
+    # (PERF.md round-8).
     bound = F.col("cnt") + F.least(
         F.col("sza") - F.col("pa"), F.col("szb") - F.col("pb")
     )
@@ -294,98 +396,73 @@ def containment_prefix_candidates(
             F.min("szb").alias("szb"),
         )
         .where(bound * den >= F.col("sza") * num)
-        # canonicalize the unordered pair and keep the sizes aligned to
-        # (doc_a, doc_b); sizes are functionally determined by the ids,
-        # so the wider distinct dedups exactly the same pairs
         .select(
             F.least("da", "db").alias("doc_a"),
             F.greatest("da", "db").alias("doc_b"),
-            F.when(F.col("da") < F.col("db"), F.col("sza"))
-            .otherwise(F.col("szb"))
-            .alias("sza"),
-            F.when(F.col("da") < F.col("db"), F.col("szb"))
-            .otherwise(F.col("sza"))
-            .alias("szb"),
         )
         .distinct()
     )
 
 
 def exact_intersections(
-    toks: DataFrame,
     cands: DataFrame,
-    sizes: DataFrame | None = None,
-    candidate_volume: int | None = None,
+    a_sets: DataFrame,
+    b_sets: DataFrame,
+    a: str = "doc_a",
+    b: str = "doc_b",
 ) -> DataFrame:
-    """Verification stage shared by the prefix-filtered operators:
-    exact intersection counts for the candidate pairs. Returns
-    ``(doc_a, doc_b, inter, sza, szb)``.
+    """The exact set-overlap family's one verify step: the exact
+    intersection size of every candidate pair. ``cands`` holds the
+    ``(a, b)`` doc-id pairs; ``a_sets`` and ``b_sets`` hold each side's
+    per-doc DISTINCT token arrays ``(doc_id, hs)`` — any token type.
+    Returns ``(a, b, inter, sza, szb)``, one row per candidate pair
+    (``inter`` may be 0; callers threshold it).
 
-    ``cands`` carries ``sza``/``szb`` (both generators emit them), so
-    the two sizes joins of the old shape are gone; ``sizes`` is only
-    consulted for legacy candidate frames without size columns.
-
-    ``candidate_volume`` is accepted for call-site compatibility but no
-    longer forces a broadcast: the r13 probe-gated candidate-broadcast
-    hint measured SLOWER or flat in every clean alternating A/B
-    (r13 close containment 5.97→7.29; r14 `plans/r14/ab_setjoin_r14.json`
-    — the no-broadcast tree beats the hinted tree on dedup_jaccard and
-    dedup_containment in BOTH passes). Join strategy is left to AQE,
-    which broadcast-converts a small candidate side from its REAL
-    runtime size instead of a pre-join row-bound estimate — the same
-    conclusion the r13 A/B reached for the LSH verify joins.
-
-    r14 session 2 (guide §2.3/§2.4), NUMERIC tokens only: intersections
-    are computed with ONE native ``size(array_intersect(...))`` per
-    candidate pair over per-doc token ARRAYS (rebuilt from the same —
-    possibly df-pruned — ``toks`` relation, so the pruned-measure
-    semantics are untouched). The former shape exploded every candidate
-    against doc_a's full token list and shuffled |pairs| × |set| skinny
-    rows through an equi-join + groupBy; the array form attaches two
-    array payloads by doc-id joins (AQE broadcast-converts the
-    doc-count-sized array table when it fits; the two sides reuse one
-    exchange) and deletes the per-pair aggregation exchange outright.
-    ``array_intersect`` over distinct-element arrays returns exactly
-    |A∩B| — the same count(*) the equi-join produced. Measured
-    (profile_gate sf0.1 task time): int64-hash tokens 7.6→4.0 s
-    (jaccard) / 4.8→3.3 s (containment); STRING tokens got SLOWER
-    (prefix_jaccard 11.2→12.9 s — array_intersect's per-pair hash-set
-    over ~17-char shingle strings costs more than the skinny
-    equi-join), so string-token callers keep the explode form."""
-    from pyspark.sql.types import NumericType
-
-    if isinstance(toks.schema["tok"].dataType, NumericType):
-        arrs = toks.groupBy("doc_id").agg(F.collect_list("tok").alias("__arr"))
-        sa = arrs.select(F.col("doc_id").alias("doc_a"), F.col("__arr").alias("__sa"))
-        sb = arrs.select(F.col("doc_id").alias("doc_b"), F.col("__arr").alias("__sb"))
-        inter_col = F.size(F.array_intersect("__sa", "__sb")).cast("long").alias("inter")
-        joined = cands.join(sa, "doc_a").join(sb, "doc_b")
-        if "sza" in cands.columns:
-            return joined.select("doc_a", "doc_b", inter_col, "sza", "szb")
-        szs_a = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza")
-        szs_b = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb")
-        return (
-            joined.select("doc_a", "doc_b", inter_col)
-            .join(szs_a, "doc_a")
-            .join(szs_b, "doc_b")
+    Two doc-id joins attach the arrays (AQE broadcast-converts the
+    doc-count-sized array side from its runtime size when it fits), and
+    one native array-intersection size per pair counts the overlap:
+    over distinct-element arrays it is exactly |A∩B|. No shuffle carries
+    |pairs| × |set| token rows, and no per-pair aggregate runs."""
+    ha = a_sets.select(F.col("doc_id").alias(a), F.col("hs").alias("__ha"))
+    hb = b_sets.select(F.col("doc_id").alias(b), F.col("hs").alias("__hb"))
+    return (
+        cands.select(a, b)
+        .join(ha, a)
+        .join(hb, b)
+        .select(
+            a,
+            b,
+            F.size(F.array_intersect("__ha", "__hb")).alias("inter"),
+            F.size("__ha").alias("sza"),
+            F.size("__hb").alias("szb"),
         )
-    ta = toks.withColumnRenamed("doc_id", "doc_a")
-    tb = toks.withColumnRenamed("doc_id", "doc_b")
-    carries = "sza" in cands.columns
-    first = cands.join(ta, "doc_a")
-    agg = [F.count(F.lit(1)).alias("inter")]
-    if carries:
-        agg += [F.min("sza").alias("sza"), F.min("szb").alias("szb")]
-    inter = (
-        first.join(tb, ["doc_b", "tok"])  # equi-join: only shared tokens survive
-        .groupBy("doc_a", "doc_b")
-        .agg(*agg)
     )
-    if carries:
-        return inter.select("doc_a", "doc_b", "inter", "sza", "szb")
-    sa = sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "sza")
-    sb = sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "szb")
-    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def _token_hash(tok: Column) -> Column:
+    return F.xxhash64(tok)
+
+
+def _keyed_postings(sets: DataFrame) -> DataFrame:
+    """``(doc_id, tok, df)`` postings of the per-doc distinct string
+    token arrays ``sets`` = ``(doc_id, __s)``, keyed by
+    :func:`_token_hash` when the vocabulary proves it injective and by
+    the string itself otherwise (module docstring). The proof is one
+    vocabulary-sized aggregate: no hash value may hold two distinct
+    tokens (``min(tok) != max(tok)`` per hash), which is
+    ``count(distinct tok) = count(distinct hash)`` with one shuffle
+    instead of two. It collects one row per colliding hash — none for
+    a 64-bit hash short of ~2^32 distinct tokens."""
+    toks = materialize(sets.select("doc_id", F.explode("__s").alias("tok")))
+    collided = (
+        toks.groupBy(_token_hash(F.col("tok")).alias("key"))
+        .agg(F.min("tok").alias("lo"), F.max("tok").alias("hi"))
+        .where(F.col("lo") != F.col("hi"))
+        .select("key")
+        .collect()
+    )
+    key = F.col("tok") if collided else _token_hash(F.col("tok"))
+    return _with_df(toks.select("doc_id", key.alias("tok")))
 
 
 def prefix_jaccard_pairs(
@@ -401,14 +478,20 @@ def prefix_jaccard_pairs(
     banding approximates). Returns ``(doc_a, doc_b, inter, uni)``
     with ``doc_a < doc_b`` and exact intersection / union sizes.
 
-    Guarded against the saturated-token regime: before the candidate
-    join runs, a histogram probe (:func:`prefix_candidate_volume`)
-    bounds its row count and raises if it exceeds
+    The pre-filters use a rational lower bound of ``threshold``
+    (lossless — they may only relax), and the final test is the IEEE
+    double ``inter/uni >= threshold`` the DuckDB twin evaluates too.
+
+    Guarded against the saturated-token regime
+    (:func:`_guarded_prefix_inputs`): before the candidate join runs,
+    a histogram probe bounds its row count and raises if it exceeds
     ``candidate_budget`` (default ``max(2_000_000, 500 · n_docs)``)
     — prefix filtering is only subquadratic while rarest-prefix dfs
     stay O(1), and this operator's token space is caller-chosen.
     """
-    frac = _threshold_fraction(threshold)
+    if not 0 < threshold <= 1:
+        raise ValueError("threshold must be in (0, 1]")
+    frac = _lossless_fraction(threshold)
     num, den = frac.numerator, frac.denominator
     if shingle_n >= 2:
         from .dedup import _with_shingles
@@ -420,50 +503,15 @@ def prefix_jaccard_pairs(
         sets = docs.select(
             "doc_id", F.array_distinct(words_col(F.col("text"))).alias("__s")
         )
-    # the token stream feeds FOUR consumers (global df aggregate, the
-    # per-doc ranking, and both sides of the intersection count);
-    # materialize it once — recomputing the tokenize+shingle explode
-    # four times dominated the runtime (15.8 s -> see PERF.md)
-    toks = materialize(sets.select("doc_id", F.explode("__s").alias("tok")))
-    ranked, sizes = ranked_tokens(toks)
-    # one materialized prefix feeds both the probe and the candidate
-    # join — the per-doc ranking window executes exactly once
-    prefix = materialize(_prefix_rows(ranked, num, den))
-    vol = prefix_candidate_volume(ranked, num, den, prefix=prefix)
-    if candidate_budget is not None:
-        cap = candidate_budget
-    elif vol <= 2_000_000:
-        # absolute floor admits the join without the n_docs count job
-        cap = 2_000_000
-    else:
-        cap = max(2_000_000, 500 * sizes.count())
-    # decision log shared with the dedup-side guard so soak harnesses
-    # pin (probe volume, width, verdict) for THIS operator too — it
-    # probes itself rather than going through _guarded_prefix_inputs
-    from .dedup import GUARD_TRACE
-
-    GUARD_TRACE.append(
-        {
-            "width": shingle_n,
-            "volume": vol,
-            "cap": cap,
-            "admitted": vol <= cap,
-            "asymmetric": False,
-        }
+    ranked, prefix, hs = _guarded_prefix_inputs(
+        lambda _: _keyed_postings(sets), shingle_n, num, den,
+        asymmetric=False, candidate_budget=candidate_budget,
     )
-    if vol > cap:
-        raise ValueError(
-            "token space is saturated for prefix filtering: the "
-            f"candidate join would produce ~{vol:,} match rows "
-            f"(budget {cap:,}). Use a larger shingle_n (wider shingles "
-            "shrink document frequencies geometrically) or raise "
-            "candidate_budget to force the join anyway."
-        )
     cands = jaccard_prefix_candidates(ranked, num, den, prefix=prefix)
     return (
-        exact_intersections(toks, cands, sizes, candidate_volume=vol)
+        exact_intersections(cands, hs, hs)
         .withColumn("uni", F.col("sza") + F.col("szb") - F.col("inter"))
-        .where(F.col("inter") * den >= F.col("uni") * num)
+        .where(F.col("inter") / F.col("uni") >= threshold)
         .select(
             "doc_a",
             "doc_b",
@@ -479,8 +527,6 @@ def prefix_jaccard_pairs_sql(
     """DuckDB twin: BRUTE-FORCE all-pairs exact Jaccard — deliberately
     a different algorithm, so the gate also proves the prefix filter
     loses no pair."""
-    frac = _threshold_fraction(threshold)
-    num, den = frac.numerator, frac.denominator
     if shingle_n >= 2:
         from .dedup import shingles_sql
 
@@ -503,7 +549,7 @@ SELECT doc_a, doc_b,
 FROM inter
 JOIN sz sa ON sa.doc_id = doc_a
 JOIN sz sb ON sb.doc_id = doc_b
-WHERE inter * {den} >= (sa.sz + sb.sz - inter) * {num}
+WHERE inter / (sa.sz + sb.sz - inter) >= {threshold}
 """
 
 

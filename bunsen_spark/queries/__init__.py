@@ -105,11 +105,6 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("ann_ivfpq_index_topk", 14),
     ("ann_ivfpq_index_append_topk", 14),
     ("ann_ivfpq_index_delete_topk", 14),
-    # round 14: set-join verification — candidate-broadcast hint
-    # removed (AQE decides), sizes-carrying kept; new join shapes
-    ("dedup_jaccard", 14),
-    ("dedup_containment", 14),
-    ("dedup_prefix_jaccard", 14),
     # round 14 session 2: vectorized ANN query scans (numpy mapInArrow
     # partial top-k + tiny global window) and the LocalRelation sweep
     # of driver-built lookup/result tables (bunsen_spark/localrel.py)
@@ -139,6 +134,22 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("ann_hamming_topk", 16),
     ("ann_eval_scorecard", 16),
     ("rrf_fused_topk", 16),
+    # round 17: one exact set-overlap path — one saturation guard, one
+    # array-intersection verify and one MinHash band-candidate join for
+    # the dedup/set-join operators; prefix_jaccard_pairs keys its tokens
+    # by a vocabulary-proven injective xxhash64. These rows supersede
+    # the round-14 set-join verification entries of the same gates.
+    ("dedup_jaccard", 17),
+    ("dedup_containment", 17),
+    ("dedup_prefix_jaccard", 17),
+    ("dedup_minhash_lsh", 17),
+    ("dedup_clusters", 17),
+    ("dedup_cluster_keep_best", 17),
+    ("curation_pipeline_counts", 17),
+    ("cluster_safe_split_counts", 17),
+    ("dedup_incremental_near", 17),
+    ("fuzzy_join_even_odd", 17),
+    ("split_leakage_pairs", 17),
 ]
 
 

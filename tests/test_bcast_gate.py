@@ -47,27 +47,17 @@ def test_threshold_parsing_units():
 def test_disabled_threshold_disables_hints():
     for raw in ("-1", "0", "-1b"):
         s = _FakeSpark({"spark.sql.autoBroadcastJoinThreshold": raw})
-        assert broadcast_row_cap(s, "x.cap", 4_000_000) == 0
-
-
-def test_explicit_conf_wins_verbatim():
-    s = _FakeSpark(
-        {
-            "spark.sql.autoBroadcastJoinThreshold": "10m",
-            "x.cap": "123456",
-        }
-    )
-    assert broadcast_row_cap(s, "x.cap", 4_000_000) == 123456
+        assert broadcast_row_cap(s, 4_000_000) == 0
 
 
 def test_default_scales_with_threshold():
     # at the 64 MB reference threshold the documented default is intact
     s = _FakeSpark({"spark.sql.autoBroadcastJoinThreshold": str(_REFERENCE_THRESHOLD)})
-    assert broadcast_row_cap(s, "x.cap", 4_000_000) == 4_000_000
+    assert broadcast_row_cap(s, 4_000_000) == 4_000_000
     # a memory-tight cluster at the stock 10 MB threshold gets ~16%
     s = _FakeSpark({"spark.sql.autoBroadcastJoinThreshold": "10485760"})
-    cap = broadcast_row_cap(s, "x.cap", 4_000_000)
+    cap = broadcast_row_cap(s, 4_000_000)
     assert cap == int(4_000_000 * (10 * 1024 * 1024) / _REFERENCE_THRESHOLD)
     # raising the threshold raises the budget proportionally
     s = _FakeSpark({"spark.sql.autoBroadcastJoinThreshold": "128mb"})
-    assert broadcast_row_cap(s, "x.cap", 4_000_000) == 8_000_000
+    assert broadcast_row_cap(s, 4_000_000) == 8_000_000

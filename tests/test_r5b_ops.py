@@ -1,5 +1,6 @@
 """Unit tests for the second round-5 operator batch: substring-dup
-spans, prefix-filtered exact Jaccard, surprisal scoring, SCD2 merge,
+spans, prefix-filtered exact Jaccard (with the partitioning invariance
+of the whole exact set-overlap family), surprisal scoring, SCD2 merge,
 and the Gram matrix."""
 
 from __future__ import annotations
@@ -103,7 +104,9 @@ def _brute_jaccard(rows, threshold):
     return out
 
 
-@pytest.mark.parametrize("threshold", [0.3, 0.5, 0.8])
+# J(1, 2) = 4/6 sits between 0.6666 and 0.6667: a threshold rounded to
+# a small fraction (0.6667 -> 2/3) would wrongly admit that pair
+@pytest.mark.parametrize("threshold", [0.3, 0.5, 0.6666, 0.6667, 0.8])
 def test_prefix_jaccard_matches_brute_force(spark, threshold):
     from bunsen_spark.operators.setjoin import prefix_jaccard_pairs
 
@@ -162,6 +165,107 @@ def test_prefix_jaccard_rejects_bad_threshold(spark):
         prefix_jaccard_pairs(df, threshold=0.0)
     with pytest.raises(ValueError):
         prefix_jaccard_pairs(df, threshold=1.5)
+
+
+@pytest.mark.parametrize("collide", ["constant", "length"])
+def test_prefix_jaccard_colliding_token_hash_keeps_rows(
+    spark, sf_dir, monkeypatch, collide
+):
+    """A token hash that is not injective on the vocabulary must send
+    the tokens through as strings, with the same rows as the hashed
+    path."""
+    from bunsen_spark.operators import setjoin
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    words = docs.select(
+        "doc_id",
+        F.array_distinct(setjoin.words_col(F.col("text"))).alias("__s"),
+    )
+
+    def rows():
+        return {
+            n: sorted(
+                setjoin.prefix_jaccard_pairs(docs, 0.5, shingle_n=n).collect()
+            )
+            for n in (0, 3)
+        }
+
+    want = rows()
+    assert want[0] and want[3]
+    assert setjoin._keyed_postings(words).schema["tok"].dataType.typeName() == "long"
+    colliding = {
+        "constant": lambda tok: F.lit(7).cast("long"),
+        "length": lambda tok: F.length(tok).cast("long"),
+    }[collide]
+    monkeypatch.setattr(setjoin, "_token_hash", colliding)
+    assert setjoin._keyed_postings(words).schema["tok"].dataType.typeName() == "string"
+    assert rows() == want
+
+
+def _overlap_corpus():
+    # six 12-word base documents over a 40-word vocabulary; every doc is
+    # a one-word mutation of its base, every fourth one cut to its first
+    # half, so Jaccard, containment and LSH pairs all occur
+    import random
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(40)]
+    base = [[rng.choice(vocab) for _ in range(12)] for _ in range(6)]
+    rows = []
+    for i in range(36):
+        words = list(base[i % 6])
+        words[rng.randrange(12)] = rng.choice(vocab)
+        rows.append((i, " ".join(words[:6] if i % 4 == 0 else words)))
+    return rows
+
+
+def _set_overlap_ops():
+    from bunsen_spark.operators import dedup, setjoin
+
+    left = "doc_id % 4 < 2"
+    return {
+        "jaccard_pairs": lambda d: dedup.jaccard_pairs(d, threshold=0.5),
+        "containment_pairs": lambda d: dedup.containment_pairs(d, threshold=0.8),
+        "prefix_jaccard_pairs": lambda d: setjoin.prefix_jaccard_pairs(
+            d, threshold=0.5, shingle_n=3
+        ),
+        "minhash_lsh_pairs": lambda d: dedup.minhash_lsh_pairs(d, 0.5),
+        "incremental_near_dup": lambda d: dedup.incremental_near_dup(
+            d.where("doc_id >= 18"), dedup.minhash_state(d.where("doc_id < 18")), 0.5
+        ).select("doc_id", F.size("hs").alias("n")),
+        "fuzzy_text_join": lambda d: dedup.fuzzy_text_join(
+            d.where(left), d.where(f"NOT ({left})"), 0.5
+        ),
+        "fuzzy_text_join_split": lambda d: dedup.fuzzy_text_join_split(
+            d, F.expr(left), 0.5
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", list(_set_overlap_ops()))
+def test_set_overlap_rows_ignore_partitioning(spark, op):
+    """Each exact set-overlap operator returns the same rows for 1 vs 8
+    input partitions and for 1 vs 16 shuffle partitions."""
+    run = _set_overlap_ops()[op]
+    rows = _overlap_corpus()
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def result(inputs, shuffles):
+        spark.conf.set(key, str(shuffles))
+        try:
+            df = spark.createDataFrame(rows, "doc_id long, text string")
+            return sorted(run(df.repartition(inputs)).collect())
+        finally:
+            spark.conf.set(key, before)
+
+    one_input = result(1, 16)
+    assert one_input
+    eight_inputs = result(8, 16)
+    assert eight_inputs == one_input
+    assert result(8, 1) == eight_inputs
 
 
 # -- surprisal_score ----------------------------------------------------------

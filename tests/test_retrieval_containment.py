@@ -214,7 +214,8 @@ def test_saturation_guard_trace_records_decisions(spark):
     instead of a wall-clock blowup (VERDICT r9 #5)."""
     import itertools
 
-    from bunsen_spark.operators.dedup import GUARD_TRACE, jaccard_pairs
+    from bunsen_spark.operators.dedup import jaccard_pairs
+    from bunsen_spark.operators.setjoin import GUARD_TRACE
 
     vocab = ["ada", "bob", "cat", "dog", "eel", "fox"]
     rows = [

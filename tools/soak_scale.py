@@ -123,7 +123,7 @@ def main() -> None:
     # per set-join gate per scale so a probe-bound regression (e.g. a
     # tokenizer change shrinking the token space) trips THIS artifact,
     # not a wall-clock blowup (VERDICT r9 #5)
-    from bunsen_spark.operators.dedup import GUARD_TRACE
+    from bunsen_spark.operators.setjoin import GUARD_TRACE
 
     def drain_guard(name: str, sf: str) -> None:
         for d in GUARD_TRACE:

@@ -26,11 +26,8 @@ sys.path.insert(0, str(REPO))
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "sf10"
-    from bunsen_spark.operators.dedup import (
-        GUARD_TRACE,
-        containment_pairs,
-        jaccard_pairs,
-    )
+    from bunsen_spark.operators.dedup import containment_pairs, jaccard_pairs
+    from bunsen_spark.operators.setjoin import GUARD_TRACE
     from bunsen_spark.session import get_spark
 
     spark = get_spark("soak_setjoin_auto")
