@@ -4,9 +4,14 @@ Mirrors the reference's API surface (`python/bunsen/stu3/valuesets.py`,
 `ValueSetUdfs.java:26-210`) with one architectural upgrade: the primary
 membership predicate is a **native Catalyst expression**
 (``exists(code.coding, c -> (system|code) IN <literal set>)``), not an
-opaque UDF — so predicate pushdown, null reasoning, and whole-stage
-codegen all still apply (SURVEY §4: "the single biggest optimizer win").
-Spark compiles the IN-list to an O(1) hash InSet above 10 items.
+opaque UDF — so the optimizer's predicate pushdown and null reasoning
+apply and no Python worker runs (SURVEY §4: "the single biggest
+optimizer win"). Spark compiles the IN-list to an O(1) hash InSet above
+10 items. The predicate is interpreted, not code-generated: on Spark
+4.1.2 ``ArrayExists`` is ``CodegenFallback``, so the operator holding it
+leaves whole-stage codegen (an ``in_valueset`` count's
+``HashAggregate``s carry no ``*(n)`` marker, while
+``sum(size(code.coding))`` over the same table gets ``*(1)``/``*(2)``).
 
 A row-at-a-time Python UDF with identical semantics is still registered
 as SQL ``in_valueset(code, 'ref')`` for drop-in parity with reference
@@ -249,8 +254,9 @@ def sql(spark: SparkSession, query: str, valuesets: dict | None = None) -> DataF
 
     Drop-in for ``spark.sql`` on queries using the reference's SQL
     membership idiom: the predicate is rewritten into a JVM-side
-    exists/IN-set expression (whole-stage codegen, pushdown-friendly)
-    instead of hitting the registered Python UDF."""
+    exists/IN-set expression (interpreted — ``ArrayExists`` is
+    ``CodegenFallback`` — but visible to the optimizer and free of
+    Python workers) instead of hitting the registered Python UDF."""
     return spark.sql(rewrite_in_valueset_sql(query, valuesets))
 
 

@@ -7,7 +7,11 @@ scan of a "tiny" driver-built table — a broadcast-join build, a
 ~0.3 s of worker round-trips each (measured in the r14 Lloyd work: a
 9 task-second stage for 128 rows). ``createDataFrame`` of a
 ``pyarrow.Table`` is a LocalRelation instead: collects are driver-only
-(zero jobs) and broadcasts build without touching the cluster.
+(zero jobs) and broadcasts build without touching the cluster. This
+module is the package's one LocalRelation builder: :func:`values_df`
+for driver rows, :func:`empty_df` for an empty frame under a nested
+spec schema (``tests/test_localrel.py`` fails on a ``createDataFrame``
+call elsewhere).
 
 Value fidelity: the table goes to the JVM as Arrow buffers, so longs,
 doubles (NaN, -0.0, inf included) and ``array<double>`` elements
@@ -21,6 +25,7 @@ from numbers import Integral, Real
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _integral(bits: int):
@@ -91,3 +96,11 @@ def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
             names=[n for n, _ in cols],
         )
     return spark.createDataFrame(rows, ddl)
+
+
+def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty LocalRelation under any ``schema``, nested spec schemas
+    included (the empty terminology collections)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)

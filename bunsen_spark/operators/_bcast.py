@@ -1,4 +1,12 @@
-"""Shared row-cap gate for HINT-FORCED broadcasts (ADVICE r14 close-out).
+"""The library's broadcast decisions: the one gather-or-scatter rule
+(:func:`gathers`) and the row-cap gate for HINT-FORCED broadcasts.
+
+:func:`gathers` decides, from plan statistics alone, whether an input
+is small enough to bring into one process: the driver gathers it with
+one ``toArrow()`` and then either computes on it there (the ANN
+searches) or broadcasts it (exact embedding dedup). Each caller passes
+its own measured compute cap; the auto-broadcast threshold is the
+shared memory guard.
 
 The fixpoint/verify operators broadcast node-sized relations (labels,
 ranks, candidate pairs) whose built size deliberately exceeds the
@@ -59,6 +67,21 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     conf = df.sparkSession._jsparkSession.sessionState().conf()
     size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     return None if size >= conf.defaultSizeInBytes() else size
+
+
+def gathers(df: DataFrame, cap: int | None = None) -> bool:
+    """The gather-or-scatter rule: True when ``df``'s optimized-plan
+    ``sizeInBytes`` is known (:func:`plan_size_bytes`) and at most both
+    ``spark.sql.autoBroadcastJoinThreshold`` (the memory guard: what
+    Spark itself would ship to one process) and ``cap`` (the caller's
+    measured compute crossover; None for none). A threshold ≤ 0
+    (broadcasts disabled), or a plan with no real estimate, scatters.
+    Driver-only: reads plan statistics, runs no job."""
+    size = plan_size_bytes(df)
+    limit = _threshold_bytes(df.sparkSession)
+    if cap is not None:
+        limit = min(limit, cap)
+    return size is not None and 0 < limit and size <= limit
 
 
 def broadcast_row_cap(spark: SparkSession, default_rows: int) -> int:

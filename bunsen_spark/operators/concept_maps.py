@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localrel import empty_df, values_df
+
 MAPPINGS_COLUMNS = [
     "sourcevalueset",
     "targetvalueset",
@@ -40,6 +42,7 @@ MAPPINGS_COLUMNS = [
     "conceptmapuri",
     "conceptmapversion",
 ]
+_MAPPINGS_DDL = ", ".join(f"{c} string" for c in MAPPINGS_COLUMNS)
 
 #: equivalences that count as a usable source→target mapping
 #: (`stu3/codes/ConceptMaps.java:348-353`)
@@ -141,8 +144,8 @@ class ConceptMaps:
     def empty(cls, spark: SparkSession, resource_type: str = "ConceptMap") -> "ConceptMaps":
         from ..schema import spark_schema_for
 
-        cm = spark.createDataFrame([], spark_schema_for(resource_type))
-        mp = spark.createDataFrame([], ", ".join(f"{c} string" for c in MAPPINGS_COLUMNS))
+        cm = empty_df(spark, spark_schema_for(resource_type))
+        mp = values_df(spark, [], _MAPPINGS_DDL)
         return cls(spark, cm, mp, resource_type)
 
     def with_concept_maps(self, df: DataFrame) -> "ConceptMaps":
@@ -210,7 +213,7 @@ class ConceptMaps:
         }
         from ..sources.resources import resources_from_json_strings
 
-        raw = self.spark.createDataFrame([(_json.dumps(doc),)], "resource_json string")
+        raw = values_df(self.spark, [(_json.dumps(doc),)], "resource_json string")
         return self.with_concept_maps(
             resources_from_json_strings(raw, "resource_json", self.resource_type)
         )
@@ -231,12 +234,13 @@ class ConceptMaps:
             "conceptmapversion", F.lit(new_version)
         )
         row = meta.select(F.col("source.uri"), F.col("target.uri")).collect()[0]
-        fresh = self.spark.createDataFrame(
+        fresh = values_df(
+            self.spark,
             [
                 (row[0], row[1], ss, sv, ts, tv, eq, url, new_version)
                 for ss, sv, ts, tv, eq in mappings
             ],
-            ", ".join(f"{c} string" for c in MAPPINGS_COLUMNS),
+            _MAPPINGS_DDL,
         )
         return ConceptMaps(
             self.spark,
@@ -397,7 +401,7 @@ class ConceptMaps:
                 raise ValueError(f"unknown concept map: {u}")
             key = f"{u}|{v}"
             if key in visited:  # cycle guard — reference topo-sorts instead
-                return self.spark.createDataFrame([], ", ".join(f"{c} string" for c in out_cols))
+                return values_df(self.spark, [], ", ".join(f"{c} string" for c in out_cols))
             visited.add(key)
             own = (
                 self.get_mappings(u, v)

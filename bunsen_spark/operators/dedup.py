@@ -21,8 +21,10 @@ Beyond-reference scale extension (SURVEY §7 M7). Design for 100 TB:
 - **simhash_pairs**: 32-bit signature, 4 × 8-bit bands; candidate
   pairs share a band byte, verified by Hamming distance.
 - **embedding_near_dup_pairs**: exact all-pairs cosine threshold, as a
-  broadcast-matrix numpy matmul in ``mapInPandas`` (the LSH-bucketed
-  scale path lives in :mod:`bunsen_spark.operators.similarity`).
+  numpy matmul against a broadcast corpus matrix when the one
+  gather-or-scatter rule accepts the corpus, else block pair by block
+  pair after a shuffle (the LSH-bucketed scale path lives in
+  :mod:`bunsen_spark.operators.similarity`).
 
 The text-side operators are integer / fixed-order arithmetic over a
 portable md5 hash (see :mod:`text_analysis`) in pure Catalyst
@@ -503,7 +505,14 @@ def minhash_lsh_pairs(
     return _verify_jaccard_pairs(cand, sigs, sigs, "a_id", "b_id", threshold)
 
 
-def minhash_lsh_pairs_sql(table: str = "documents", threshold: float = 0.5) -> str:
+def _minhash_ctes_sql(table: str, flag: tuple[str, str] | None = None) -> str:
+    """The DuckDB twins' MinHash CTEs over ``table``: ``base`` (doc_id,
+    distinct md5 shingle hashes ``hs``), ``sigs`` (+ the ``NUM_HASHES``
+    signature ``sig``) and ``buckets`` (one row per band key ``bk``) —
+    the SQL text of :func:`minhash_signature` and :func:`_band_keys`
+    with ``portable=True``. ``flag = (expr, name)`` adds the boolean
+    column ``name`` to all three (which side of a split a doc is on).
+    Ends after ``buckets``, so callers continue with ``, cand AS (``."""
     shingle_hash = f"{md5int_sql('s')} % {MERSENNE31}"
     mins = ", ".join(
         f"list_min(list_transform(hs, h -> ({MINHASH_A[k]} * h + {MINHASH_B[k]}) % {MERSENNE31}))"
@@ -516,16 +525,21 @@ def minhash_lsh_pairs_sql(table: str = "documents", threshold: float = 0.5) -> s
         + ")"
         for i in range(BANDS)
     )
+    extra, carry = (f",\n         ({flag[0]}) AS {flag[1]}", f"{flag[1]}, ") if flag else ("", "")
     return f"""
 WITH base AS (
   SELECT doc_id,
-         list_distinct(list_transform({shingles_sql(SHINGLE_N)}, s -> {shingle_hash})) AS hs
+         list_distinct(list_transform({shingles_sql(SHINGLE_N)}, s -> {shingle_hash})) AS hs{extra}
   FROM {table}
 ), sigs AS (
-  SELECT doc_id, hs, [{mins}] AS sig FROM base
+  SELECT doc_id, hs, {carry}[{mins}] AS sig FROM base
 ), buckets AS (
-  SELECT doc_id, unnest([{band_keys}]) AS bk FROM sigs
-), cand AS (
+  SELECT doc_id, {carry}unnest([{band_keys}]) AS bk FROM sigs
+)"""
+
+
+def minhash_lsh_pairs_sql(table: str = "documents", threshold: float = 0.5) -> str:
+    return _minhash_ctes_sql(table) + f""", cand AS (
   SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id
   FROM buckets x JOIN buckets y USING (bk)
   WHERE x.doc_id < y.doc_id
@@ -954,94 +968,105 @@ SELECT a_id, b_id, hamming FROM (
 # -- embedding cosine near-dup ----------------------------------------------
 
 
+def _unit_rows(m):
+    """``m``'s rows divided by their L2 norms (a zero row becomes NaN)."""
+    import numpy as np
+
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
+def _cosine_pairs(aid, a, bid, b_unit, threshold: float, one_set: bool):
+    """The one pair-scoring step of :func:`embedding_near_dup_pairs`:
+    normalize the rows of ``a`` (:func:`_unit_rows`), score them against
+    the already normalized rows of ``b_unit`` by matmul, and return the
+    hits (cosine ≥ ``threshold``) as canonical ``(lo, hi)`` id arrays
+    with lo < hi. With ``one_set`` both sides are drawn from one set
+    (the broadcast corpus, a diagonal block pair), so each pair is found
+    from both of its rows and only the ``aid < bid`` hit is kept;
+    otherwise the sides are disjoint and every hit is one pair. A
+    zero-norm row scores NaN, which counts as -1.0, the value DuckDB's
+    ``list_cosine_similarity`` gives it (only a threshold ≤ -1 keeps it).
+
+    ROW-CHUNKED matmul: a full |a|x|b| float64 sim matrix is (n/B)^2
+    cells — 5 GB per task at 200k vectors / 8 blocks, which OOM-killed
+    the Python workers in the sf10 soak. The slab is capped at ~16M
+    cells (~128 MB) instead; per-cell dot products are unchanged."""
+    import numpy as np
+
+    a = _unit_rows(a)
+    chunk = max(1, 16_000_000 // max(1, len(b_unit)))
+    los, his = [], []
+    for s in range(0, len(a), chunk):
+        sims = a[s : s + chunk] @ b_unit.T
+        if threshold <= -1.0:
+            sims[np.isnan(sims)] = -1.0
+        ii, jj = np.nonzero(sims >= threshold)
+        x, y = aid[s + ii], bid[jj]
+        keep = x < y if one_set else x != y
+        los.append(np.minimum(x, y)[keep])
+        his.append(np.maximum(x, y)[keep])
+    return np.concatenate(los), np.concatenate(his)
+
+
 def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.45,
-    strategy: str = "auto",
-    num_blocks: int = 8,
-    max_broadcast_rows: int = 500_000,
+    embeddings: DataFrame, threshold: float = 0.45, num_blocks: int = 8
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold over the embedding column (exact;
     see :mod:`similarity` for the approximate LSH top-k path).
-    Output: (a_id, b_id) — the similarity value itself is excluded so
-    the check is robust to last-ulp float summation differences.
+    Output: (a_id, b_id), a_id < b_id — the similarity value itself is
+    excluded so the check is robust to last-ulp float summation
+    differences.
 
-    Strategies (both exact, bit-identical output):
+    The placement is the library's one gather-or-scatter rule
+    (:func:`_bcast.gathers`, plan statistics only, no job); both
+    placements score with :func:`_cosine_pairs` and give the same rows.
 
-    - ``broadcast``: corpus matrix gathered once and broadcast
-      (n × dim doubles — ~0.5 GB per million 64-dim vectors), each
-      partition matmuls its rows against it. Fastest while the matrix
-      fits; REFUSED above ``max_broadcast_rows`` (driver protection).
-    - ``blocked``: the 100 TB path — no driver collect anywhere.
+    - **broadcast**: a corpus the rule accepts is gathered once with
+      ``toArrow()`` and its normalized matrix broadcast; each partition
+      scores its rows against it in ``mapInArrow``. The output is never
+      collected: an all-duplicate corpus makes it quadratic.
+    - **blocked**: the 100 TB path — no driver collect anywhere.
       Vectors are hashed into ``num_blocks`` blocks; each of the
       B(B+1)/2 unordered block pairs is a shuffle group whose two
-      blocks are cross-scored with one numpy matmul inside
-      ``applyInPandas``. Every vector is shuffled exactly B times
-      (its block pairs with every block), so total shuffle volume is
-      n·B rows — linear in n with a √-replication factor, never an
-      n² expansion. Size ``num_blocks`` so two blocks of
-      n/num_blocks × dim doubles fit an executor (e.g. 1 M × 768-d
-      ≈ 6 GB/block at B=32 → ~12 GB per task).
-    - ``auto``: broadcast when Catalyst's PLAN-LEVEL statistics
-      (catalog row counts, or file sizes with a conservative
-      bytes-per-row floor) prove the corpus fits; ``blocked``
-      otherwise. No Spark job runs to decide — at 100 TB a count of
-      the embeddings table is not free (plan-asserted job-free in
-      ``tests/test_dedup.py``). The floor deliberately over-estimates
-      rows, so uncertainty falls to ``blocked``, the safe path.
+      blocks are cross-scored inside ``applyInPandas``. Every vector is
+      shuffled exactly B times (its block pairs with every block), so
+      total shuffle volume is n·B rows — linear in n with a
+      √-replication factor, never an n² expansion. Size ``num_blocks``
+      so two blocks of n/num_blocks × dim doubles fit an executor (e.g.
+      1 M × 768-d ≈ 6 GB/block at B=32 → ~12 GB per task).
     """
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
+
+    from ._bcast import gathers
+    from ..localrel import values_df
 
     spark = embeddings.sparkSession
     src = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    out_ddl = "a_id long, b_id long"
 
-    if strategy == "auto":
-        stats = src._jdf.queryExecution().optimizedPlan().stats()
-        rc = stats.rowCount()
-        if rc.isDefined():
-            got = rc.get()
-            est_rows = int(got if isinstance(got, int) else got.longValue())
-        else:
-            size = stats.sizeInBytes()
-            # 64 B/row floor: far below any real (id + embedding) row,
-            # so est_rows is an over-count and the choice leans blocked
-            est_rows = int(size if isinstance(size, int) else size.longValue()) // 64
-        strategy = "broadcast" if est_rows <= max_broadcast_rows else "blocked"
+    def matrix(v) -> np.ndarray:
+        return np.array(v.to_pylist(), dtype=np.float64)
 
-    if strategy == "broadcast":
-        gathered = src.collect()
-        if len(gathered) > max_broadcast_rows:
-            raise ValueError(
-                f"{len(gathered)} vectors exceed max_broadcast_rows="
-                f"{max_broadcast_rows}; use strategy='blocked'"
-            )
-        ids = np.array([r["vec_id"] for r in gathered], dtype=np.int64)
-        mat = np.array([r["v"] for r in gathered], dtype=np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        b_ids = spark.sparkContext.broadcast(ids)
-        b_mat = spark.sparkContext.broadcast(mat)
+    if gathers(src):
+        corpus = src.toArrow()
+        if not corpus.num_rows:
+            return values_df(spark, [], out_ddl)
+        b_ids = spark.sparkContext.broadcast(corpus["vec_id"].to_numpy())
+        b_mat = spark.sparkContext.broadcast(_unit_rows(matrix(corpus["v"])))
 
         def score(batches):
-            all_ids, all_mat = b_ids.value, b_mat.value
-            for pdf in batches:
-                rows = np.array(pdf["v"].tolist(), dtype=np.float64)
-                rows /= np.linalg.norm(rows, axis=1, keepdims=True)
-                row_ids = pdf["vec_id"].to_numpy()
-                sims = rows @ all_mat.T
-                out_a, out_b = [], []
-                for i, rid in enumerate(row_ids):
-                    hits = all_ids[(sims[i] >= threshold) & (all_ids > rid)]
-                    out_a.extend([rid] * len(hits))
-                    out_b.extend(hits.tolist())
-                yield pd.DataFrame({"a_id": out_a, "b_id": out_b})
+            for batch in batches:
+                if batch.num_rows:
+                    lo, hi = _cosine_pairs(
+                        batch["vec_id"].to_numpy(), matrix(batch["v"]),
+                        b_ids.value, b_mat.value, threshold, one_set=True,
+                    )
+                    yield pa.RecordBatch.from_arrays([lo, hi], ["a_id", "b_id"])
 
-        return src.mapInPandas(score, "a_id long, b_id long")
-
-    if strategy != "blocked":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    from ..localrel import values_df
+        return src.mapInArrow(score, out_ddl)
 
     B = num_blocks
     # LocalRelation (r14): the RDD-backed form cost one 32-Python-task
@@ -1065,37 +1090,16 @@ def embedding_near_dup_pairs(
         b = pdf[pdf["side"] == "b"]
         if a.empty or b.empty:
             return pd.DataFrame({"a_id": [], "b_id": []}).astype("int64")
-        am = np.array(a["v"].tolist(), dtype=np.float64)
-        bm = np.array(b["v"].tolist(), dtype=np.float64)
-        am /= np.linalg.norm(am, axis=1, keepdims=True)
-        bm /= np.linalg.norm(bm, axis=1, keepdims=True)
-        aid = a["vec_id"].to_numpy()
-        bid = b["vec_id"].to_numpy()
-        # ROW-CHUNKED matmul: a full |a|x|b| float64 sim matrix is
-        # (n/B)^2 cells — 5 GB per task at 200k vectors / 8 blocks,
-        # which OOM-killed the Python workers in the sf10 soak. Cap the
-        # slab at ~16M cells (~128 MB) instead; per-cell dot products
-        # are unchanged, only the materialized slab shrinks.
-        chunk = max(1, 16_000_000 // max(1, len(bm)))
-        outs = []
-        for s in range(0, len(am), chunk):
-            sims = am[s : s + chunk] @ bm.T
-            ii, jj = np.nonzero(sims >= threshold)
-            # canonical (min, max) emission; the diagonal block sees
-            # every pair twice (both sides hold the block) — `<` keeps
-            # one copy
-            lo = np.minimum(aid[s + ii], bid[jj])
-            hi = np.maximum(aid[s + ii], bid[jj])
-            keep = lo < hi
-            outs.append(pd.DataFrame({"a_id": lo[keep], "b_id": hi[keep]}))
-        out = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-            {"a_id": [], "b_id": []}
-        ).astype("int64")
-        return out.drop_duplicates()
+        lo, hi = _cosine_pairs(
+            a["vec_id"].to_numpy(), np.array(a["v"].tolist(), dtype=np.float64),
+            b["vec_id"].to_numpy(), _unit_rows(np.array(b["v"].tolist(), dtype=np.float64)),
+            threshold, one_set=pdf["bi"].iat[0] == pdf["bj"].iat[0],
+        )
+        return pd.DataFrame({"a_id": lo, "b_id": hi})
 
-    # no distinct needed: each unordered pair meets in exactly one group
-    # (diagonal-group double emission is deduped inside the group)
-    return both.groupBy("bi", "bj").applyInPandas(cross_score, "a_id long, b_id long")
+    # each unordered pair meets in exactly one group, and is emitted
+    # once there (_cosine_pairs' one_set rule on the diagonal groups)
+    return both.groupBy("bi", "bj").applyInPandas(cross_score, out_ddl)
 
 
 def embedding_near_dup_pairs_sql(
@@ -1342,29 +1346,7 @@ def incremental_near_dup_sql(
     state was built from ``table`` rows matching ``state_filter`` and
     the batch is the rest. Emits kept batch docs as
     (doc_id, n_shingles)."""
-    shingle_hash = f"{md5int_sql('s')} % {MERSENNE31}"
-    mins = ", ".join(
-        f"list_min(list_transform(hs, h -> ({MINHASH_A[k]} * h + {MINHASH_B[k]}) % {MERSENNE31}))"
-        for k in range(NUM_HASHES)
-    )
-    band_keys = ", ".join(
-        "concat_ws('-', "
-        + f"{i}, "
-        + ", ".join(f"sig[{i * ROWS_PER_BAND + r + 1}]" for r in range(ROWS_PER_BAND))
-        + ")"
-        for i in range(BANDS)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         list_distinct(list_transform({shingles_sql(SHINGLE_N)}, s -> {shingle_hash})) AS hs,
-         ({state_filter}) AS in_state
-  FROM {table}
-), sigs AS (
-  SELECT doc_id, hs, in_state, [{mins}] AS sig FROM base
-), buckets AS (
-  SELECT doc_id, in_state, unnest([{band_keys}]) AS bk FROM sigs
-), cand AS (
+    return _minhash_ctes_sql(table, (state_filter, "in_state")) + f""", cand AS (
   SELECT DISTINCT b.doc_id AS b_id, s.doc_id AS s_id
   FROM buckets b JOIN buckets s USING (bk)
   WHERE NOT b.in_state AND s.in_state
@@ -1422,29 +1404,7 @@ def fuzzy_text_join_sql(
 ) -> str:
     """DuckDB twin of one :func:`fuzzy_text_join` over ``table`` split
     by ``left_filter`` (left side) vs its complement (right side)."""
-    shingle_hash = f"{md5int_sql('s')} % {MERSENNE31}"
-    mins = ", ".join(
-        f"list_min(list_transform(hs, h -> ({MINHASH_A[k]} * h + {MINHASH_B[k]}) % {MERSENNE31}))"
-        for k in range(NUM_HASHES)
-    )
-    band_keys = ", ".join(
-        "concat_ws('-', "
-        + f"{i}, "
-        + ", ".join(f"sig[{i * ROWS_PER_BAND + r + 1}]" for r in range(ROWS_PER_BAND))
-        + ")"
-        for i in range(BANDS)
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id,
-         list_distinct(list_transform({shingles_sql(SHINGLE_N)}, s -> {shingle_hash})) AS hs,
-         ({left_filter}) AS is_left
-  FROM {table}
-), sigs AS (
-  SELECT doc_id, hs, is_left, [{mins}] AS sig FROM base
-), buckets AS (
-  SELECT doc_id, is_left, unnest([{band_keys}]) AS bk FROM sigs
-), cand AS (
+    return _minhash_ctes_sql(table, (left_filter, "is_left")) + f""", cand AS (
   SELECT DISTINCT l.doc_id AS l_id, r.doc_id AS r_id
   FROM buckets l JOIN buckets r USING (bk)
   WHERE l.is_left AND NOT r.is_left

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from ..localrel import values_df
 from ..persist import materialize, release
 
 LOINC_CODE_SYSTEM = "http://loinc.org"
@@ -142,7 +143,7 @@ class Hierarchies:
     @classmethod
     def empty(cls, spark: SparkSession) -> "Hierarchies":
         schema = ", ".join(f"{c} string" for c in ANCESTOR_COLUMNS)
-        return cls(spark, spark.createDataFrame([], schema))
+        return cls(spark, values_df(spark, [], schema))
 
     @classmethod
     def from_edges(
@@ -214,8 +215,6 @@ class Hierarchies:
             )
             .distinct()
         )
-        from ..localrel import values_df
-
         self_row = values_df(self.spark, [(system, value)], "system string, value string")
         return hits.unionByName(self_row).distinct()
 

@@ -8,7 +8,7 @@ run ONE partition-local top-k kernel (:func:`_topk_scan`; numpy,
 strict left-to-right dot products for bit-parity with the DuckDB
 twins) and merge its partials on the driver (REPOSE's
 prune-locally-then-merge shape); the result is a LocalRelation. Where
-the kernel runs is decided once per search (:func:`_gathers`):
+the kernel runs is decided once per search (:func:`_bcast.gathers`):
 
 - **gathered**: a scan input no larger than
   ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark would
@@ -42,10 +42,10 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._bcast import _threshold_bytes, plan_size_bytes
+from ._bcast import gathers
 from .text_analysis import md5int_sql
 from ..localrel import arrow_schema, values_df
-from ..persist import materialize
+from ..persist import has_committed_batches, materialize
 
 EMBED_DIM = 64
 NUM_PLANES = 16
@@ -1174,32 +1174,19 @@ class _Queries(NamedTuple):
 GATHER_MAX_BYTES = 16 * 1024 * 1024
 
 
-def _gathers(df: DataFrame) -> bool:
-    """The ANN placement rule: True when ``df``'s optimized-plan
-    ``sizeInBytes`` is at most both ``spark.sql.autoBroadcastJoinThreshold``
-    (the memory guard: what Spark itself would ship to one process)
-    and :data:`GATHER_MAX_BYTES` (the measured compute crossover), so a
-    search gathers it with one ``toArrow()`` and runs its scan kernel
-    on the driver. A threshold ≤ 0 (broadcasts disabled), or a plan
-    with no real estimate (:func:`_bcast.plan_size_bytes`), keeps
-    scatter-gather. Driver-only: reads plan statistics, runs no job."""
-    size = plan_size_bytes(df)
-    limit = _threshold_bytes(df.sparkSession)
-    return size is not None and 0 < limit and size <= min(limit, GATHER_MAX_BYTES)
-
-
 def _with_queries(
     embeddings: DataFrame, num_queries: int, out_ddl: str, build, scan: DataFrame | None = None
 ):
     """The ANN family's driver step, and its one placement decision
-    (:func:`_gathers` on the member's scan input ``scan``, by default
-    :func:`_corpus`; it carries ``vec_id``, and ``v`` at least on the
-    query rows): call ``build(q, scan)`` for the query rows' (vec_id <
-    ``num_queries``) :class:`_Queries`, and return its Arrow table's
+    (:func:`_bcast.gathers` with :data:`GATHER_MAX_BYTES` on the
+    member's scan input ``scan``, by default :func:`_corpus`; it
+    carries ``vec_id``, and ``v`` at least on the query rows): call
+    ``build(q, scan)`` for the query rows' (vec_id < ``num_queries``)
+    :class:`_Queries`, and return its Arrow table's
     ``out_ddl`` columns as a LocalRelation (collecting the result
     launches no job).
 
-    - A ``scan`` that :func:`_gathers` accepts is gathered with one ``toArrow()``
+    - A ``scan`` that the rule accepts is gathered with one ``toArrow()``
       (``spark.driver.maxResultSize`` still guards it) and passed on as
       that Arrow table: the queries are filtered from it, so the search
       runs one job and :func:`_topk_scan` runs on the driver.
@@ -1216,7 +1203,7 @@ def _with_queries(
     if num_queries <= 0:
         return values_df(spark, [], out_ddl)
     scan = _corpus(embeddings) if scan is None else scan
-    if _gathers(scan):
+    if gathers(scan, GATHER_MAX_BYTES):
         scan = scan.toArrow()
         rows = scan.filter(pc.less(scan["vec_id"], num_queries))
     else:
@@ -1272,7 +1259,7 @@ def _topk_scan(
     neighbor_id, *cols), returned to the driver as one Arrow table.
     Where it runs is the placement :func:`_with_queries` chose:
     ``corpus`` is either an Arrow table already gathered to the driver
-    (a scan input :func:`_gathers` accepts; the kernel runs over its
+    (a scan input the placement rule accepts; the kernel runs over its
     batches here, no job) or a DataFrame scanned
     by ``mapInArrow`` with the queries in the task closure (one job, no
     shuffle). Any global top-k row is in its batch's top-k, so the
@@ -2774,16 +2761,13 @@ def _read_tombstones(spark, path: str, manifest: dict | None = None) -> DataFram
     partition except those :func:`compact_ivfpq_index` already folded
     into the codes — or None when no delete was ever issued (missing
     directory is the common case and must stay free). Storage-agnostic:
-    probed via the reader, not the local filesystem."""
-    from pyspark.errors import AnalysisException
-
+    probed by :func:`persist.has_committed_batches`, a Hadoop-FS check."""
     m = manifest if manifest is not None else _index_manifest(path)
-    try:
-        t = spark.read.parquet(f"{path}/tombstones")
-    except AnalysisException:
+    if not has_committed_batches(spark, f"{path}/tombstones"):
         return None
+    t = spark.read.parquet(f"{path}/tombstones")
     folded = m["folded_tombstone_batches"]
-    if folded and "batch_id" in t.columns:
+    if folded:
         # partition-column filter: folded partitions are pruned at
         # planning time, never scanned
         t = t.where(~F.col("batch_id").isin(folded))
@@ -2799,14 +2783,11 @@ def _merged_index_codes(
     folded by compaction (batch appends and streaming arrivals share
     the partition scheme). Tombstones are NOT applied here — that is
     the ``read_*_index`` readers' job."""
-    from pyspark.errors import AnalysisException
-
     m = manifest if manifest is not None else _index_manifest(path)
     base = spark.read.parquet(f"{path}/{m['codes']}").select(*cols)
-    try:
-        extra = spark.read.parquet(f"{path}/codes_stream")
-    except AnalysisException:
+    if not has_committed_batches(spark, f"{path}/codes_stream"):
         return base
+    extra = spark.read.parquet(f"{path}/codes_stream")
     folded = m["folded_stream_batches"]
     if folded:
         extra = extra.where(~F.col("batch_id").isin(folded))
@@ -2842,15 +2823,10 @@ def read_ivfpq_index(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]
 
 def _pending_batch_ids(spark, directory: str, folded: list[int]) -> list[int]:
     """Distinct batch ids present under ``directory`` that the manifest
-    has not folded yet; [] when the directory does not exist."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = (
-            spark.read.parquet(directory).select("batch_id").distinct().collect()
-        )
-    except AnalysisException:
+    has not folded yet; [] when it holds no committed batch."""
+    if not has_committed_batches(spark, directory):
         return []
+    rows = spark.read.parquet(directory).select("batch_id").distinct().collect()
     return sorted({r["batch_id"] for r in rows} - set(folded))
 
 

@@ -18,7 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localrel import empty_df, values_df
+
 VALUES_COLUMNS = ["system", "version", "value", "valueseturi", "valuesetversion"]
+_VALUES_DDL = ", ".join(f"{c} string" for c in VALUES_COLUMNS)
 
 
 def expand_values(value_sets: DataFrame) -> DataFrame:
@@ -82,8 +85,8 @@ class ValueSets:
     def empty(cls, spark: SparkSession, resource_type: str = "ValueSet") -> "ValueSets":
         from ..schema import spark_schema_for
 
-        vs = spark.createDataFrame([], spark_schema_for(resource_type))
-        vals = spark.createDataFrame([], ", ".join(f"{c} string" for c in VALUES_COLUMNS))
+        vs = empty_df(spark, spark_schema_for(resource_type))
+        vals = values_df(spark, [], _VALUES_DDL)
         return cls(spark, vs, vals, resource_type)
 
     def with_value_sets(self, df: DataFrame) -> "ValueSets":
@@ -152,7 +155,7 @@ class ValueSets:
         }
         from ..sources.resources import resources_from_json_strings
 
-        raw = self.spark.createDataFrame([(_json.dumps(doc),)], "resource_json string")
+        raw = values_df(self.spark, [(_json.dumps(doc),)], "resource_json string")
         return self.with_value_sets(
             resources_from_json_strings(raw, "resource_json", self.resource_type)
         )
@@ -174,9 +177,7 @@ class ValueSets:
         for t in values:
             system, sys_version, code = t if len(t) == 3 else (t[0], None, t[1])
             rows.append((system, sys_version, code, url, new_version))
-        fresh = self.spark.createDataFrame(
-            rows, ", ".join(f"{c} string" for c in VALUES_COLUMNS)
-        )
+        fresh = values_df(self.spark, rows, _VALUES_DDL)
         return ValueSets(
             self.spark,
             self.value_sets.unionByName(meta),

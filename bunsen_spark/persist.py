@@ -24,6 +24,9 @@ otherwise. Set the conf explicitly to override either way — e.g.
 ``persist`` on local[*] to exercise cluster behavior in tests, or
 ``checkpoint`` on a cluster whose executors are stable and whose
 fixpoint rounds are deep enough for lineage growth to hurt.
+
+:func:`has_committed_batches` is the matching probe on the storage
+side: whether a ``batch_id``-partitioned parquet table exists yet.
 """
 
 from __future__ import annotations
@@ -143,3 +146,23 @@ def release(df: DataFrame) -> None:
         df.unpersist()
     except Exception:  # pragma: no cover — session already stopped
         pass
+
+
+def has_committed_batches(spark, path: str) -> bool:
+    """True when ``path``, a parquet table partitioned by ``batch_id``,
+    holds at least one COMMITTED partition file. The one probe for
+    directories that may not exist yet (streaming state, an index's
+    ``codes_stream`` and ``tombstones``): a Hadoop-FS check, so a
+    missing directory costs no failed read, and any other read failure
+    (permissions, a corrupt footer) surfaces at the read that follows.
+    A crash mid-write of the first batch leaves only ``_temporary`` /
+    ``_SUCCESS`` debris, which reads as absent: task commit is what
+    moves files out of ``_temporary``, so glob-visible parquet is
+    committed data."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return False
+    committed = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path + "/batch_id=*/*.parquet"))
+    return committed is not None and len(committed) > 0

@@ -108,7 +108,6 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # round 14 session 2: vectorized ANN query scans (numpy mapInArrow
     # partial top-k + tiny global window) and the LocalRelation sweep
     # of driver-built lookup/result tables (bunsen_spark/localrel.py)
-    ("dedup_embedding", 14),
     ("coverage_select_docs", 14),
     ("interleave_mix_positions", 14),
     ("weighted_median_prices", 14),
@@ -150,6 +149,11 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("dedup_incremental_near", 17),
     ("fuzzy_join_even_odd", 17),
     ("split_leakage_pairs", 17),
+    # round 18: exact embedding dedup takes its placement from the one
+    # gather-or-scatter rule (_bcast.gathers): a broadcast-sized corpus
+    # is gathered once and scored against its broadcast matrix, no
+    # longer pinned to the blocked shuffle. Supersedes the round-14 row.
+    ("dedup_embedding", 18),
 ]
 
 

@@ -33,9 +33,7 @@ from ..operators.similarity import (
 def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import embedding_near_dup_pairs
 
-    # exercise the blocked (no-driver-collect) strategy — the 100 TB
-    # path — so the oracle verifies its exactness, not just broadcast's
-    return embedding_near_dup_pairs(load(spark, sf_dir, "embeddings"), strategy="blocked")
+    return embedding_near_dup_pairs(load(spark, sf_dir, "embeddings"))
 
 
 def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,12 +27,14 @@ from ..schema import converter_for, json_schema_for, spark_schema_for
 _BUNDLE_ENVELOPE = "struct<entry: array<struct<resource: string>>>"
 
 
-def load_from_directory(spark: SparkSession, path: str, min_partitions: int = 1) -> DataFrame:
+def load_from_directory(spark: SparkSession, path: str) -> DataFrame:
     """Directory of bundle files → DataFrame(bundle_file, resource_json,
     resource_type): one row per resource entry.
 
     Mirrors `Bundles.loadFromDirectory` (Bundles.java:117-125) but keeps
     bundles as plain columns instead of a custom RDD container type.
+    Each file is read whole (``wholetext``), so the scan's splits follow
+    ``spark.sql.files.*`` (``maxPartitionBytes``, ``openCostInBytes``).
     JSON only for now (reference also reads XML — S3 gap, tracked).
     """
     raw = spark.read.text(path, wholetext=True).select(

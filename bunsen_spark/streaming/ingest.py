@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..localrel import values_df
+from ..persist import has_committed_batches, materialize, release
 from ..sources.bundles import _explode_bundles, extract_entry
 
 
@@ -103,6 +105,18 @@ def write_resource_stream(
     return writer.start()
 
 
+def _overwrite_batch_partition(df: DataFrame, path: str) -> None:
+    """Dynamic-partition overwrite of ``df``'s own ``batch_id``
+    partitions of the parquet table at ``path`` (a replayed micro-batch
+    rewrites only itself)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
 def stream_near_dup_filter(
     docs_stream: DataFrame,
     state_path: str,
@@ -141,46 +155,15 @@ def stream_near_dup_filter(
     different families never match."""
     from ..operators.dedup import incremental_near_dup, minhash_state
 
-    def _state_exists(spark: SparkSession) -> bool:
-        # explicit FS check — a transient read failure (permissions, fs
-        # hiccup, corrupt footer) must surface, not be mistaken for
-        # "first batch" and silently bypass dedup. The check requires a
-        # COMMITTED partition file, not just the directory: a crash
-        # mid-write of batch 0 leaves state_path holding only
-        # _temporary/_SUCCESS debris, and a bare exists() would wedge
-        # every replay on "Unable to infer schema" from the empty read.
-        # Task commit is what moves files out of _temporary, so
-        # glob-visible parquet == committed data.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return False
-        glob = jvm.org.apache.hadoop.fs.Path(
-            state_path + "/batch_id=*/*.parquet"
-        )
-        committed = fs.globStatus(glob)
-        return committed is not None and len(committed) > 0
-
-    def _overwrite_batch_partition(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _state_exists(spark):
+        if has_committed_batches(spark, state_path):
             state = spark.read.parquet(state_path).where(
                 F.col("batch_id") < F.lit(batch_id)
             )
             kept = incremental_near_dup(batch_df, state, threshold, portable)
         else:
             kept = minhash_state(batch_df, portable)
-        from ..persist import materialize, release
-
         kept = kept.withColumn("batch_id", F.lit(batch_id))
         kept = materialize(kept, eager=True)  # finish reading state first
         try:
@@ -236,34 +219,14 @@ def stream_novelty_scores(
     read and write never overlap."""
     from ..operators.text_analysis import gram_state, novelty_against_state
 
-    def _state_exists(spark: SparkSession) -> bool:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return False
-        glob = jvm.org.apache.hadoop.fs.Path(
-            state_path + "/batch_id=*/*.parquet"
-        )
-        committed = fs.globStatus(glob)
-        return committed is not None and len(committed) > 0
-
-    def _overwrite_batch_partition(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _state_exists(spark):
+        if has_committed_batches(spark, state_path):
             state = spark.read.parquet(state_path).where(
                 F.col("batch_id") < F.lit(batch_id)
             )
         else:
-            state = spark.createDataFrame([], "gram string")
+            state = values_df(spark, [], "gram string")
         scores = novelty_against_state(batch_df, state, n).withColumn(
             "batch_id", F.lit(batch_id)
         )
@@ -272,8 +235,6 @@ def stream_novelty_scores(
             .join(state.select("gram"), "gram", "left_anti")
             .withColumn("batch_id", F.lit(batch_id))
         )
-        from ..persist import materialize, release
-
         # both read the state; close those reads before overwriting it
         scores = materialize(scores, eager=True)
         new_grams = materialize(new_grams, eager=True)
@@ -316,34 +277,14 @@ def stream_segment_dedup(
     the pre-batch state and rewrite only themselves."""
     from ..operators.dedup import segment_dedup_against_state, segment_state
 
-    def _state_exists(spark: SparkSession) -> bool:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return False
-        glob = jvm.org.apache.hadoop.fs.Path(
-            state_path + "/batch_id=*/*.parquet"
-        )
-        committed = fs.globStatus(glob)
-        return committed is not None and len(committed) > 0
-
-    def _overwrite_batch_partition(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _state_exists(spark):
+        if has_committed_batches(spark, state_path):
             state = spark.read.parquet(state_path).where(
                 F.col("batch_id") < F.lit(batch_id)
             )
         else:
-            state = spark.createDataFrame([], "seg string")
+            state = values_df(spark, [], "seg string")
         cleaned = segment_dedup_against_state(
             batch_df, state, seg_words=seg_words
         ).withColumn("batch_id", F.lit(batch_id))
@@ -352,8 +293,6 @@ def stream_segment_dedup(
             .join(state.select("seg"), "seg", "left_anti")
             .withColumn("batch_id", F.lit(batch_id))
         )
-        from ..persist import materialize, release
-
         # both read the state; close those reads before overwriting it
         cleaned = materialize(cleaned, eager=True)
         new_segs = materialize(new_segs, eager=True)

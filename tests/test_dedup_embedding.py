@@ -1,88 +1,163 @@
-"""Embedding near-dup strategies (VERDICT r1 item 5): the blocked
-(no-driver-collect) path must be exact — bit-identical pairs to the
-broadcast baseline — and the broadcast path must refuse corpora past
-its driver-memory guard."""
+"""Exact embedding near-dup pairs under both placements of the one
+gather-or-scatter rule (``_bcast.gathers``): the broadcast path (corpus
+gathered once, its matrix broadcast) and the blocked path (no driver
+collect) give the same pairs, the DuckDB twin's, and choosing between
+them runs no Spark job."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
+
+from bunsen_spark.operators._bcast import gathers
+from bunsen_spark.operators.dedup import embedding_near_dup_pairs, embedding_near_dup_pairs_sql
 
 
 def _pairs(df):
     return sorted((r["a_id"], r["b_id"]) for r in df.collect())
 
 
-def test_blocked_equals_broadcast(spark, sf_dir):
-    from bunsen_spark.operators.dedup import embedding_near_dup_pairs
+def _src(emb):
+    """The frame the operator hands to the placement rule."""
+    return emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
 
+
+def _jobs(spark, build):
+    """(``build()``, the number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dedup_embedding_probe_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "placement jobs")
+    try:
+        out = build()
+        return out, len(list(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setJobGroup("tests", "")
+
+
+def _duckdb_pairs(path: str, threshold: float = 0.45):
+    import duckdb
+
+    sql = embedding_near_dup_pairs_sql(f"read_parquet('{path}')", threshold)
+    return sorted(duckdb.sql(sql).fetchall())
+
+
+@pytest.fixture(scope="module")
+def corpora(tmp_path_factory):
+    """Parquet paths of degenerate 8-d corpora: empty, one row, one
+    zero-norm vector among random ones, and all-identical vectors."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = random.Random(5)
+    rand = [[rng.uniform(-1, 1) for _ in range(8)] for _ in range(40)]
+    vecs = {
+        "empty": [],
+        "one_row": rand[:1],
+        "zero_norm": [[0.0] * 8 if i == 7 else v for i, v in enumerate(rand)],
+        "all_identical": [rand[0]] * 12,
+    }
+    paths = {}
+    for name, vs in vecs.items():
+        path = str(tmp_path_factory.mktemp(name) / "embeddings.parquet")
+        table = pa.table(
+            {
+                "vec_id": pa.array(range(len(vs)), pa.int64()),
+                "embedding": pa.array(vs, pa.list_(pa.float32())),
+            }
+        )
+        pq.write_table(table, path)
+        paths[name] = path
+    return paths
+
+
+def test_blocked_equals_broadcast(spark, sf_dir, scatter_gather):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    broadcast = _pairs(embedding_near_dup_pairs(emb, strategy="broadcast"))
-    blocked = _pairs(embedding_near_dup_pairs(emb, strategy="blocked", num_blocks=4))
+    assert gathers(_src(emb))
+    broadcast = _pairs(embedding_near_dup_pairs(emb))
+    with scatter_gather():
+        assert not gathers(_src(emb))
+        blocked = _pairs(embedding_near_dup_pairs(emb.repartition(3), num_blocks=4))
     assert broadcast == blocked
     assert len(blocked) > 0  # fixture has near-dup planted pairs
     # canonical orientation, no self-pairs
     assert all(a < b for a, b in blocked)
 
 
-def test_blocked_single_block_degenerate(spark, sf_dir):
-    """B=1 → one diagonal group: in-group dedup must keep one copy."""
-    from bunsen_spark.operators.dedup import embedding_near_dup_pairs
-
+def test_blocked_single_block_degenerate(spark, sf_dir, scatter_gather):
+    """B=1 → one diagonal group: each pair must be emitted once."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    one = _pairs(embedding_near_dup_pairs(emb, strategy="blocked", num_blocks=1))
-    four = _pairs(embedding_near_dup_pairs(emb, strategy="blocked", num_blocks=4))
-    assert one == four
+    with scatter_gather():
+        one = embedding_near_dup_pairs(emb, num_blocks=1).collect()
+        four = _pairs(embedding_near_dup_pairs(emb, num_blocks=4))
+    assert sorted((r["a_id"], r["b_id"]) for r in one) == four
+    assert len(one) == len(set(one))
 
 
-def test_broadcast_guard_refuses_large_corpus(spark, sf_dir):
-    from bunsen_spark.operators.dedup import embedding_near_dup_pairs
-
+def test_placement_decision_runs_no_spark_job(spark, sf_dir, scatter_gather):
+    """The decision reads plan statistics only: zero jobs to decide, zero
+    to build the blocked plan, and exactly the one gather job to build
+    the broadcast plan."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    with pytest.raises(ValueError, match="max_broadcast_rows"):
-        embedding_near_dup_pairs(
-            emb, strategy="broadcast", max_broadcast_rows=10
-        ).count()
-    # auto falls back to blocked instead of refusing
-    auto = embedding_near_dup_pairs(emb, strategy="auto", max_broadcast_rows=10)
-    assert len(_pairs(auto)) > 0
+    assert _jobs(spark, lambda: gathers(_src(emb))) == (True, 0)
+    _, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    assert n == 1
+    with scatter_gather():
+        _, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    assert n == 0
 
 
-def test_auto_strategy_runs_no_spark_job(spark, sf_dir):
-    """VERDICT r3 item 6: picking the auto strategy must not spend a
-    Spark job (the old count()) — the decision reads Catalyst plan
-    statistics only. Assert via job-group tracking: auto→blocked
-    builds with ZERO jobs; auto→broadcast spends exactly the one
-    inherent gather job, not gather+count."""
-    from bunsen_spark.operators.dedup import embedding_near_dup_pairs
-
+def test_no_size_estimate_runs_blocked(spark, sf_dir):
+    """A corpus whose plan has no size estimate (RDD-backed) cannot be
+    proven to fit, so it takes the no-driver-collect blocked path:
+    building the frame runs no job."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    sc = spark.sparkContext
-    sc.setJobGroup("auto_blocked_probe", "decision must be job-free")
+    rdd_backed = spark.createDataFrame(emb.rdd, emb.schema)
+    assert not gathers(_src(rdd_backed))
+    df, n = _jobs(spark, lambda: embedding_near_dup_pairs(rdd_backed))
+    assert n == 0
+    assert _pairs(df) == _pairs(embedding_near_dup_pairs(emb))
+
+
+def test_corpus_over_threshold_runs_blocked(spark, sf_dir):
+    """A corpus larger than ``spark.sql.autoBroadcastJoinThreshold`` is
+    never gathered to the driver: it runs blocked, with the same pairs."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    want = _pairs(embedding_near_dup_pairs(emb))
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1024")
     try:
-        df = embedding_near_dup_pairs(emb, strategy="auto", max_broadcast_rows=1)
-        assert list(sc.statusTracker().getJobIdsForGroup("auto_blocked_probe")) == []
+        assert not gathers(_src(emb))
+        df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+        assert n == 0
+        assert _pairs(df) == want
     finally:
-        sc.setJobGroup("tests", "")
-    assert len(_pairs(df)) > 0
-
-    sc.setJobGroup("auto_bcast_probe", "only the gather job allowed")
-    try:
-        df2 = embedding_near_dup_pairs(emb, strategy="auto")
-        n_jobs = len(list(sc.statusTracker().getJobIdsForGroup("auto_bcast_probe")))
-        assert n_jobs <= 1, f"auto decision spent {n_jobs - 1} extra job(s)"
-    finally:
-        sc.setJobGroup("tests", "")
-    assert len(_pairs(df2)) > 0
+        spark.conf.set(key, before)
 
 
-def test_auto_prefers_blocked_under_uncertainty(spark, sf_dir):
-    """With a tiny max_broadcast_rows the size estimate cannot prove
-    the corpus fits — auto must land on the no-driver-collect blocked
-    path (collect would raise the guard, so surviving .collect() here
-    proves blocked was chosen)."""
-    from bunsen_spark.operators.dedup import embedding_near_dup_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = _pairs(embedding_near_dup_pairs(emb, strategy="auto", max_broadcast_rows=1))
-    blocked = _pairs(embedding_near_dup_pairs(emb, strategy="blocked"))
-    assert pairs == blocked
+@pytest.mark.parametrize(
+    "corpus,threshold",
+    [
+        ("empty", 0.45),
+        ("one_row", 0.45),
+        ("zero_norm", 0.45),
+        ("zero_norm", -1.0),
+        ("all_identical", 0.45),
+    ],
+)
+def test_placement_parity_degenerate(spark, scatter_gather, corpora, corpus, threshold):
+    """Both placements give the DuckDB twin's pairs on degenerate
+    corpora; a zero-norm vector scores -1.0 as in DuckDB, and an
+    all-identical corpus gives every pair once."""
+    emb = spark.read.parquet(corpora[corpus])
+    assert gathers(_src(emb))
+    broadcast = _pairs(embedding_near_dup_pairs(emb, threshold))
+    with scatter_gather():
+        blocked = _pairs(embedding_near_dup_pairs(emb.repartition(3), threshold, num_blocks=3))
+    assert broadcast == blocked == _duckdb_pairs(corpora[corpus], threshold)
+    if corpus == "all_identical":
+        assert len(blocked) == 12 * 11 // 2

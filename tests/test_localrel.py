@@ -106,3 +106,74 @@ def test_values_df_bit_identical_doubles(spark):
         assert [bits(r.x) for r in got] == [bits(x) for x in xs]
         assert [[bits(y) for y in r.v] for r in got] == [[bits(x), bits(-x)] for x in xs]
     assert math.isnan(got[0].x)
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_empty_collections_are_local_relations(spark):
+    """The empty terminology collections are LocalRelations: no
+    RDD-backed partitions for later unions over them to scan."""
+    from bunsen_spark.localrel import empty_df
+    from bunsen_spark.operators.concept_maps import ConceptMaps
+    from bunsen_spark.operators.hierarchies import Hierarchies
+    from bunsen_spark.operators.value_sets import ValueSets
+    from bunsen_spark.schema import spark_schema_for
+
+    vs, cm = ValueSets.empty(spark), ConceptMaps.empty(spark)
+    frames = [vs.value_sets, vs.values, cm.concept_maps, cm.mappings, Hierarchies.empty(spark).ancestors]
+    for df in frames:
+        assert "LogicalRDD" not in _plan(df)
+        assert "LocalRelation" in _plan(df)
+        assert df.collect() == []
+    assert vs.value_sets.schema == spark_schema_for("ValueSet")
+    assert cm.concept_maps.schema == spark_schema_for("ConceptMap")
+    assert empty_df(spark, spark_schema_for("ValueSet")).schema == spark_schema_for("ValueSet")
+
+
+#: The modules under bunsen_spark/ allowed to call ``createDataFrame``:
+#: the LocalRelation builders themselves, and the one-slice media
+#: synthesizer (its comment gives the reason), by enclosing function.
+_CREATE_DATAFRAME_ALLOWED = {
+    "localrel.py": {"values_df", "empty_df"},
+    "operators/multimodal.py": {"synthesize_media"},
+}
+
+
+def _create_dataframe_calls(node, func="<module>"):
+    """(line, enclosing function name) of each ``.createDataFrame(...)``
+    call under ``node``."""
+    import ast
+
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _create_dataframe_calls(child, child.name)
+            continue
+        if (
+            isinstance(child, ast.Call)
+            and isinstance(child.func, ast.Attribute)
+            and child.func.attr == "createDataFrame"
+        ):
+            yield child.lineno, func
+        yield from _create_dataframe_calls(child, func)
+
+
+def test_driver_frames_go_through_localrel():
+    """``spark.createDataFrame(<python list>)`` is RDD-backed: its rows
+    become ``defaultParallelism`` pickled partitions that every later
+    scan pays for. Driver-built frames go through ``localrel`` instead."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent / "bunsen_spark"
+    found = [
+        f"{path.relative_to(root).as_posix()}:{line} in {func}"
+        for path in sorted(root.rglob("*.py"))
+        for line, func in _create_dataframe_calls(ast.parse(path.read_text()))
+        if func not in _CREATE_DATAFRAME_ALLOWED.get(path.relative_to(root).as_posix(), ())
+    ]
+    assert not found, (
+        "createDataFrame outside bunsen_spark/localrel.py; build driver frames with "
+        f"localrel.values_df (or localrel.empty_df for an empty spec schema): {found}"
+    )

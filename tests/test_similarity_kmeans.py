@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bunsen_spark.operators import similarity as sim
+from bunsen_spark.operators._bcast import gathers
 from bunsen_spark.operators.similarity import (
     ivf_kmeans_topk,
     ivf_topk,
@@ -403,10 +404,10 @@ def test_placement_parity(spark, scatter_gather, tie_corpus, zero_vector_corpus,
         "two_rows": tiny_corpora[2],
     }[corpus]
     emb = spark.read.parquet(path)
-    assert sim._gathers(sim._corpus(emb))
+    assert gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
     gathered = sorted(map(tuple, op(emb, k=5, num_queries=8).collect()))
     with scatter_gather():
-        assert not sim._gathers(sim._corpus(emb))
+        assert not gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
         scatter = sorted(map(tuple, op(emb.repartition(3), k=5, num_queries=8).collect()))
     assert gathered == scatter
     if corpus in ("tie", "zero_norm"):
@@ -426,9 +427,9 @@ def test_placement_parity_no_queries(spark, scatter_gather, sf_dir, op):
     assert gathered.collect() == []
 
 
-def test_gathers_rule(spark, sf_dir, monkeypatch):
+def test_gathers_rule(spark, sf_dir):
     """A corpus is gathered only when its plan has a real size estimate
-    within both the auto-broadcast threshold and the measured cap."""
+    within both the auto-broadcast threshold and the caller's cap."""
     from bunsen_spark.operators._bcast import plan_size_bytes
 
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -437,16 +438,16 @@ def test_gathers_rule(spark, sf_dir, monkeypatch):
     rdd_backed = spark.createDataFrame(
         spark.sparkContext.parallelize([(0, [1.0])]), "vec_id long, embedding array<float>"
     )
-    assert sim._gathers(corpus)
-    assert not sim._gathers(sim._corpus(rdd_backed))
+    assert gathers(corpus, sim.GATHER_MAX_BYTES)
+    assert not gathers(sim._corpus(rdd_backed))
     before = spark.conf.get(key)
     try:
         for limit, want in ((size, True), (size - 1, False), (0, False)):
             spark.conf.set(key, str(limit))
-            assert sim._gathers(corpus) is want
+            assert gathers(corpus) is want
+            assert gathers(corpus, 1 << 40) is want
         spark.conf.set(key, str(1 << 40))
-        for cap, want in ((size, True), (size - 1, False)):
-            monkeypatch.setattr(sim, "GATHER_MAX_BYTES", cap)
-            assert sim._gathers(corpus) is want
+        for cap, want in ((size, True), (size - 1, False), (0, False), (None, True)):
+            assert gathers(corpus, cap) is want
     finally:
         spark.conf.set(key, before)

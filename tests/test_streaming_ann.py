@@ -827,3 +827,40 @@ def test_batch_id_edge_cases(spark, sf_dir, tmp_path):
         sim.compact_ivfpq_index(spark, "s3://bucket/prefix/index")
     with pytest.raises(FileNotFoundError, match="no persisted index"):
         sim.compact_pq_index(spark, str(tmp_path / "never_built"))
+
+
+def test_index_probes_without_a_failed_read(spark, sf_dir, tmp_path):
+    """The optional index directories are probed by a file-system check
+    for committed batch files (``persist.has_committed_batches``), not
+    by a read that fails: a never-deleted index has no tombstones, a
+    directory holding only ``_temporary`` debris of a crashed first
+    write reads as absent, and a committed but unreadable file is an
+    error, not an empty set."""
+    from bunsen_spark.operators.similarity import (
+        _merged_index_codes,
+        _pending_batch_ids,
+        _read_tombstones,
+        write_pq_index,
+    )
+    from bunsen_spark.persist import has_committed_batches
+
+    path = tmp_path / "pq"
+    write_pq_index(_emb(spark, sf_dir), str(path))
+    assert _read_tombstones(spark, str(path)) is None
+    n_codes = spark.read.parquet(str(path / "codes")).count()
+    for sub in ("tombstones", "codes_stream"):
+        debris = path / sub / "_temporary" / "0" / "task_0" / "batch_id=1"
+        debris.mkdir(parents=True)
+        (debris / "part-00000.parquet").write_bytes(b"not parquet")
+        (path / sub / "_SUCCESS").write_bytes(b"")
+        assert not has_committed_batches(spark, str(path / sub))
+        assert _pending_batch_ids(spark, str(path / sub), []) == []
+    assert _read_tombstones(spark, str(path)) is None
+    assert _merged_index_codes(spark, str(path), ["vec_id", "sub", "code"]).count() == n_codes
+
+    bad = path / "tombstones" / "batch_id=1"
+    bad.mkdir()
+    (bad / "part-00000.parquet").write_bytes(b"not parquet")
+    assert has_committed_batches(spark, str(path / "tombstones"))
+    with pytest.raises(Exception):
+        _read_tombstones(spark, str(path)).collect()
