@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bunsen_spark.operators._bcast import gathers
+from bunsen_spark.operators import dedup
 from bunsen_spark.operators.dedup import embedding_near_dup_pairs, embedding_near_dup_pairs_sql
 
 
@@ -20,6 +21,11 @@ def _pairs(df):
 def _src(emb):
     """The frame the operator hands to the placement rule."""
     return emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+
+
+def _gathers(emb):
+    """The operator's placement decision for ``emb``."""
+    return gathers(_src(emb), dedup.EMBEDDING_GATHER_MAX_BYTES)
 
 
 def _jobs(spark, build):
@@ -76,10 +82,10 @@ def corpora(tmp_path_factory):
 
 def test_blocked_equals_broadcast(spark, sf_dir, scatter_gather):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert gathers(_src(emb))
+    assert _gathers(emb)
     broadcast = _pairs(embedding_near_dup_pairs(emb))
     with scatter_gather():
-        assert not gathers(_src(emb))
+        assert not _gathers(emb)
         blocked = _pairs(embedding_near_dup_pairs(emb.repartition(3), num_blocks=4))
     assert broadcast == blocked
     assert len(blocked) > 0  # fixture has near-dup planted pairs
@@ -102,7 +108,7 @@ def test_placement_decision_runs_no_spark_job(spark, sf_dir, scatter_gather):
     to build the blocked plan, and exactly the one gather job to build
     the broadcast plan."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert _jobs(spark, lambda: gathers(_src(emb))) == (True, 0)
+    assert _jobs(spark, lambda: _gathers(emb)) == (True, 0)
     _, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
     assert n == 1
     with scatter_gather():
@@ -116,10 +122,27 @@ def test_no_size_estimate_runs_blocked(spark, sf_dir):
     building the frame runs no job."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     rdd_backed = spark.createDataFrame(emb.rdd, emb.schema)
-    assert not gathers(_src(rdd_backed))
+    assert not _gathers(rdd_backed)
     df, n = _jobs(spark, lambda: embedding_near_dup_pairs(rdd_backed))
     assert n == 0
     assert _pairs(df) == _pairs(embedding_near_dup_pairs(emb))
+
+
+def test_corpus_over_gather_cap_runs_blocked(spark, sf_dir, monkeypatch):
+    """The operator places its corpus by ``EMBEDDING_GATHER_MAX_BYTES``:
+    one byte below the corpus's plan size it runs blocked (no job to
+    build), with the same pairs as the gathered run (one job)."""
+    from bunsen_spark.operators._bcast import plan_size_bytes
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    size = plan_size_bytes(_src(emb))
+    monkeypatch.setattr(dedup, "EMBEDDING_GATHER_MAX_BYTES", size)
+    broadcast, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    assert n == 1
+    monkeypatch.setattr(dedup, "EMBEDDING_GATHER_MAX_BYTES", size - 1)
+    blocked, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    assert n == 0
+    assert _pairs(blocked) == _pairs(broadcast)
 
 
 def test_corpus_over_threshold_runs_blocked(spark, sf_dir):
@@ -131,7 +154,7 @@ def test_corpus_over_threshold_runs_blocked(spark, sf_dir):
     before = spark.conf.get(key)
     spark.conf.set(key, "1024")
     try:
-        assert not gathers(_src(emb))
+        assert not _gathers(emb)
         df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
         assert n == 0
         assert _pairs(df) == want
@@ -139,25 +162,16 @@ def test_corpus_over_threshold_runs_blocked(spark, sf_dir):
         spark.conf.set(key, before)
 
 
-@pytest.mark.parametrize(
-    "corpus,threshold",
-    [
-        ("empty", 0.45),
-        ("one_row", 0.45),
-        ("zero_norm", 0.45),
-        ("zero_norm", -1.0),
-        ("all_identical", 0.45),
-    ],
-)
-def test_placement_parity_degenerate(spark, scatter_gather, corpora, corpus, threshold):
+@pytest.mark.parametrize("corpus", ["empty", "one_row", "zero_norm", "all_identical"])
+def test_placement_parity_degenerate(spark, scatter_gather, corpora, corpus):
     """Both placements give the DuckDB twin's pairs on degenerate
-    corpora; a zero-norm vector scores -1.0 as in DuckDB, and an
-    all-identical corpus gives every pair once."""
+    corpora; a zero-norm vector matches nothing, and an all-identical
+    corpus gives every pair once."""
     emb = spark.read.parquet(corpora[corpus])
-    assert gathers(_src(emb))
-    broadcast = _pairs(embedding_near_dup_pairs(emb, threshold))
+    assert _gathers(emb)
+    broadcast = _pairs(embedding_near_dup_pairs(emb))
     with scatter_gather():
-        blocked = _pairs(embedding_near_dup_pairs(emb.repartition(3), threshold, num_blocks=3))
-    assert broadcast == blocked == _duckdb_pairs(corpora[corpus], threshold)
+        blocked = _pairs(embedding_near_dup_pairs(emb.repartition(3), num_blocks=3))
+    assert broadcast == blocked == _duckdb_pairs(corpora[corpus])
     if corpus == "all_identical":
         assert len(blocked) == 12 * 11 // 2

@@ -451,3 +451,25 @@ def test_gathers_rule(spark, sf_dir):
             assert gathers(corpus, cap) is want
     finally:
         spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("cap_offset,jobs", [(0, 1), (-1, 2)])
+def test_search_obeys_gather_max_bytes(spark, sf_dir, monkeypatch, cap_offset, jobs):
+    """The searches place their scan by ``sim.GATHER_MAX_BYTES``: with
+    the cap at the corpus's plan size it is gathered (one job), one byte
+    below it the search scatters (the query collect, then the scan)."""
+    import uuid
+
+    from bunsen_spark.operators._bcast import plan_size_bytes
+
+    emb = _emb(spark, sf_dir)
+    monkeypatch.setattr(sim, "GATHER_MAX_BYTES", plan_size_bytes(sim._corpus(emb)) + cap_offset)
+    sc = spark.sparkContext
+    group = f"gather_cap_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sim.brute_force_topk(emb, k=5, num_queries=8)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
