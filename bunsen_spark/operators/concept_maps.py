@@ -1,18 +1,12 @@
-"""ConceptMaps collection: immutable accumulator of ConceptMap resources +
-exploded mapping rows, translate with OTHERMAP delegation, and a
-partitioned warehouse.
+"""ConceptMaps collection: ConceptMap resources, their exploded mapping
+rows, and translate with OTHERMAP delegation
+(`AbstractConceptMaps.java` / `stu3/codes/ConceptMaps.java`).
 
-Re-expresses `AbstractConceptMaps.java` / `stu3/codes/ConceptMaps.java`:
 - explode (D4, `ConceptMaps.java:207-275`): group[].element[].target[] →
   flat mapping rows via three chained explodes (Catalyst-native, no
   per-row Java);
 - payload strip (D7, `ConceptMaps.java:277-301`): metadata rows keep the
   ConceptMap structure with `group[].element := []`;
-- latest-version (A1, `AbstractConceptMaps.java:456-492`): the reference
-  drops to RDD reduceByKey because it believed SQL ``max`` was
-  numeric-only; Spark SQL ``max`` is lexicographic on strings, so this is
-  a one-line groupBy;
-- duplicate rejection (J5) and disjoint import (J1) via semi/anti joins;
 - translate with delegation (D12, `BroadcastableConceptMap.java:93-125`,
   topo sort `ConceptMaps.java:386-441`): instead of an opaque broadcast
   dict behind a Java UDF, delegation chains are FLATTENED into an
@@ -20,16 +14,20 @@ Re-expresses `AbstractConceptMaps.java` / `stu3/codes/ConceptMaps.java`:
   source codes the base leaves unmapped, resolved recursively), so
   translation of a fact table is a plain broadcast hash join that
   Catalyst can push around;
-- warehouse (S9/S10, `AbstractConceptMaps.java:515-678`): `mappings`
-  parquet table partitioned by (conceptmapuri, conceptmapversion).
+- warehouse tables `mappings`, partitioned by (conceptmapuri,
+  conceptmapversion), and `conceptmaps`.
+
+The (url, version) bookkeeping shared with ValueSets lives in
+:mod:`._terminology`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..localrel import empty_df, values_df
+from ..localrel import values_df
+from ._terminology import Collection, _struct_like, by_code, ddl, element_type, splice
 
 MAPPINGS_COLUMNS = [
     "sourcevalueset",
@@ -42,7 +40,6 @@ MAPPINGS_COLUMNS = [
     "conceptmapuri",
     "conceptmapversion",
 ]
-_MAPPINGS_DDL = ", ".join(f"{c} string" for c in MAPPINGS_COLUMNS)
 
 #: equivalences that count as a usable source→target mapping
 #: (`stu3/codes/ConceptMaps.java:348-353`)
@@ -90,21 +87,6 @@ def expand_mappings(concept_maps: DataFrame) -> DataFrame:
     )
 
 
-def _struct_like(struct_type, overrides: dict) -> "F.Column":
-    """A struct literal matching ``struct_type`` exactly: ``overrides``
-    supply named columns, every other field is a typed NULL. Keeps the
-    re-assembly plans SCHEMA-DRIVEN so the same code rebuilds STU3 and
-    R4 backbone shapes (which differ in field sets, e.g. the R4
-    ConceptMap target's dependsOn/product and missing ``id``)."""
-    cols = []
-    for f in struct_type.fields:
-        if f.name in overrides:
-            cols.append(overrides[f.name].cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return F.struct(*cols)
-
-
 def _strip_elements(concept_maps: DataFrame) -> DataFrame:
     """Metadata view: drop the (potentially huge) element payload (D7)."""
     stripped_group = F.transform(
@@ -118,58 +100,30 @@ def _strip_elements(concept_maps: DataFrame) -> DataFrame:
     )
 
 
-class ConceptMaps:
-    """Immutable collection; every ``with_*`` returns a new instance
-    (U1, `AbstractConceptMaps.java:283-298`).
+class ConceptMaps(Collection):
+    """``resource_type`` is "ConceptMap" (STU3) or "r4:ConceptMap"."""
 
-    ``resource_type`` selects the spec generation: the default STU3
-    "ConceptMap", or "r4:ConceptMap" resolved through the R4 registry
-    (mirroring the reference's parallel `r4/codes/ConceptMaps` class) —
-    all plans are schema-driven, so explode/strip/re-assemble/XML work
-    identically over either generation's shapes."""
+    RESOURCE_TYPE = "ConceptMap"
+    NOUN = "concept map"
+    META_TABLE = "conceptmaps"
+    FLAT_TABLE = "mappings"
+    FLAT_COLUMNS = MAPPINGS_COLUMNS
+    _explode = staticmethod(expand_mappings)
+    _strip = staticmethod(_strip_elements)
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        concept_maps: DataFrame,
-        mappings: DataFrame,
-        resource_type: str = "ConceptMap",
-    ):
-        self.spark = spark
-        self.concept_maps = concept_maps
-        self.mappings = mappings
-        self.resource_type = resource_type
-
-    @classmethod
-    def empty(cls, spark: SparkSession, resource_type: str = "ConceptMap") -> "ConceptMaps":
-        from ..schema import spark_schema_for
-
-        cm = empty_df(spark, spark_schema_for(resource_type))
-        mp = values_df(spark, [], _MAPPINGS_DDL)
-        return cls(spark, cm, mp, resource_type)
+    concept_maps = property(lambda self: self._meta)
+    mappings = property(lambda self: self._flat)
 
     def with_concept_maps(self, df: DataFrame) -> "ConceptMaps":
-        """Add ConceptMap resources (spec schema). Rejects (url, version)
-        duplicates within the batch or against current members
-        (`AbstractConceptMaps.java:494-512`)."""
-        new_members = df.select("url", "version").distinct()
-        if new_members.count() != df.count():
-            raise ValueError("duplicate (url, version) within added concept maps")
-        if self.concept_maps.join(new_members, ["url", "version"], "left_semi").count() > 0:
-            raise ValueError("concept map (url, version) already present in collection")
-        return ConceptMaps(
-            self.spark,
-            self.concept_maps.unionByName(_strip_elements(df)),
-            self.mappings.unionByName(expand_mappings(df)),
-            self.resource_type,
-        )
+        """Add ConceptMap resources (spec schema)."""
+        return self._add_resources(df)
 
     def with_maps_from_directory(self, path: str) -> "ConceptMaps":
-        from ..sources.resources import read_resources_from_directory
+        return self._import(path)
 
-        return self.with_concept_maps(
-            read_resources_from_directory(self.spark, path, self.resource_type)
-        )
+    def with_disjoint_maps_from_directory(self, path: str) -> "ConceptMaps":
+        """Load only the maps whose (url, version) is not stored (J1)."""
+        return self._import(path, disjoint=True)
 
     def with_new_map(
         self,
@@ -183,94 +137,49 @@ class ConceptMaps:
         """Construct a map from (sourcesystem, sourcevalue,
         targetsystem, targetvalue, equivalence) tuples and add it
         (`python/bunsen/codes/__init__.py:with_new_map`,
-        `ConceptMaps.java` createMap path): the nested resource is
-        assembled as JSON and run through the standard ingest plan, so
-        schema and converter behavior are identical to file imports."""
-        import json as _json
-
+        `ConceptMaps.java` createMap path)."""
         groups: dict[tuple[str, str], dict[str, list]] = {}
         for ss, sv, ts, tv, eq in mappings:
             elems = groups.setdefault((ss, ts), {})
             elems.setdefault(sv, []).append({"code": tv, "equivalence": eq})
-        doc = {
-            "resourceType": "ConceptMap",
-            "url": url,
-            "version": version,
-            "status": "draft" if experimental else "active",
-            "experimental": experimental,
-            "sourceUri": source,
-            "targetUri": target,
-            "group": [
-                {
-                    "source": ss,
-                    "target": ts,
-                    "element": [
-                        {"code": sv, "target": tgts} for sv, tgts in elems.items()
-                    ],
-                }
-                for (ss, ts), elems in groups.items()
-            ],
-        }
-        from ..sources.resources import resources_from_json_strings
-
-        raw = values_df(self.spark, [(_json.dumps(doc),)], "resource_json string")
-        return self.with_concept_maps(
-            resources_from_json_strings(raw, "resource_json", self.resource_type)
+        return self._add_json(
+            {
+                "resourceType": "ConceptMap",
+                "url": url,
+                "version": version,
+                "status": "draft" if experimental else "active",
+                "experimental": experimental,
+                "sourceUri": source,
+                "targetUri": target,
+                "group": [
+                    {
+                        "source": ss,
+                        "target": ts,
+                        "element": [
+                            {"code": sv, "target": tgts} for sv, tgts in elems.items()
+                        ],
+                    }
+                    for (ss, ts), elems in groups.items()
+                ],
+            }
         )
 
     def add_mappings(
         self, url: str, version: str, new_version: str, mappings: list[tuple]
     ) -> "ConceptMaps":
         """New VERSION of a stored map with extra mappings appended
-        (`python/bunsen/codes/__init__.py:add_mappings`): metadata is
-        copied with the new version; the mapping table is the old
-        version's rows plus the new tuples."""
-        meta = self.concept_maps.where(
-            (F.col("url") == url) & (F.col("version") == version)
-        ).withColumn("version", F.lit(new_version))
-        if meta.isEmpty():
-            raise ValueError(f"no stored map {url}@{version}")
-        old = self.get_mappings(url, version).withColumn(
-            "conceptmapversion", F.lit(new_version)
-        )
-        row = meta.select(F.col("source.uri"), F.col("target.uri")).collect()[0]
-        fresh = values_df(
-            self.spark,
-            [
-                (row[0], row[1], ss, sv, ts, tv, eq, url, new_version)
-                for ss, sv, ts, tv, eq in mappings
-            ],
-            _MAPPINGS_DDL,
-        )
-        return ConceptMaps(
-            self.spark,
-            self.concept_maps.unionByName(meta),
-            self.mappings.unionByName(old.select(*MAPPINGS_COLUMNS)).unionByName(
-                fresh
-            ),
-            self.resource_type,
-        )
+        (`python/bunsen/codes/__init__.py:add_mappings`)."""
+
+        def rows(meta):
+            ends = [meta[c] and meta[c]["uri"] for c in ("source", "target")]
+            return [(*ends, *m) for m in mappings]
+
+        return self._add_version(url, version, new_version, rows, "no stored map")
 
     def get_map_as_xml(self, url: str, version: str | None = None) -> str:
         """Re-assembled map as one FHIR XML string
         (`python/bunsen/codes/__init__.py:get_map_as_xml`)."""
-        from ..sources.export import to_resource_xml
-
-        return to_resource_xml(
-            self.get_concept_map(url, version), self.resource_type
-        ).collect()[0]["xml"]
-
-    def with_disjoint_maps_from_directory(self, path: str) -> "ConceptMaps":
-        """Disjoint import (J1, `AbstractConceptMaps.java:220-234`): load
-        only maps whose (url, version) the collection does not already
-        have — a left anti-join, not a collect-and-diff."""
-        from ..sources.resources import read_resources_from_directory
-
-        candidates = read_resources_from_directory(self.spark, path, self.resource_type)
-        fresh = candidates.join(
-            self.concept_maps.select("url", "version"), ["url", "version"], "left_anti"
-        )
-        return self.with_concept_maps(fresh)
+        return self._xml(self.get_concept_map(url, version))
 
     # -- queries ------------------------------------------------------------
 
@@ -278,97 +187,29 @@ class ConceptMaps:
         return self.concept_maps
 
     def get_mappings(self, uri: str | None = None, version: str | None = None) -> DataFrame:
-        if uri is None:
-            return self.mappings
-        v = version or self.latest_version(uri)
-        # equality on the partition columns → partition pruning on the
-        # warehouse-backed table (P4)
-        return self.mappings.where(
-            (F.col("conceptmapuri") == uri) & (F.col("conceptmapversion") == v)
-        )
-
-    def latest_version(self, url: str) -> str | None:
-        row = (
-            self.concept_maps.where(F.col("url") == url)
-            .agg(F.max("version").alias("v"))
-            .collect()[0]
-        )
-        return row["v"]
-
-    def get_latest_versions(self, include_experimental: bool = False) -> DataFrame:
-        df = self.concept_maps
-        if not include_experimental:
-            df = df.where(F.col("experimental").isNull() | ~F.col("experimental"))
-        return df.groupBy("url").agg(F.max("version").alias("version"))
+        return self.mappings if uri is None else self._member(uri, version)[1]
 
     def get_concept_map(self, uri: str, version: str | None = None) -> DataFrame:
         """Re-assemble ONE stored map as a full ConceptMap resource row
-        (D5, `stu3/codes/ConceptMaps.java:134-199`): the stripped
-        metadata's ``group[].element`` arrays are rebuilt from the flat
-        mapping rows with two grouped collects, then spliced back into
-        each group struct by (source, target) system pair.
-
-        Element and target arrays are returned sorted by code — the
-        flat table does not record document order (FHIR imposes none).
-        """
-        v = version or self.latest_version(uri)
-        meta = self.concept_maps.where((F.col("url") == uri) & (F.col("version") == v))
-        maps = self.mappings.where(
-            (F.col("conceptmapuri") == uri) & (F.col("conceptmapversion") == v)
-        )
-
-        by_code = lambda l, r: F.when(l["code"] < r["code"], -1).when(  # noqa: E731
-            l["code"] > r["code"], 1
-        ).otherwise(F.lit(0))
-        group_t = self.concept_maps.schema["group"].dataType.elementType
-        element_t = group_t["element"].dataType.elementType
-        target_t = element_t["target"].dataType.elementType
-        target_struct = _struct_like(
-            target_t,
+        (D5, `stu3/codes/ConceptMaps.java:134-199`): two grouped
+        collects rebuild the element arrays from the flat mapping rows,
+        spliced back into the group structs by (source, target) system
+        pair. Element and target arrays come back sorted by code."""
+        meta, maps = self._member(uri, version)
+        element_t = element_type(meta.schema, "group", "element")
+        target = _struct_like(
+            element_type(element_t, "target"),
             {"code": F.col("targetvalue"), "equivalence": F.col("equivalence")},
         )
         targets = maps.groupBy("sourcesystem", "targetsystem", "sourcevalue").agg(
-            F.collect_list(target_struct).alias("target")
+            F.array_sort(F.collect_list(target), by_code).alias("target")
         )
-        element_struct = _struct_like(
-            element_t,
-            {
-                "code": F.col("sourcevalue"),
-                "target": F.array_sort(F.col("target"), by_code),
-            },
-        )
+        element = _struct_like(element_t, {"code": F.col("sourcevalue"), "target": F.col("target")})
         elements = targets.groupBy("sourcesystem", "targetsystem").agg(
-            F.collect_list(element_struct).alias("_element")
-        ).withColumn("_element", F.array_sort(F.col("_element"), by_code))
-
-        g = meta.select("url", "version", F.posexplode("group").alias("pos", "g"))
-        joined = g.join(
-            elements,
-            (g["g.source"] == elements["sourcesystem"])
-            & (g["g.target"] == elements["targetsystem"]),
-            "left",
+            F.array_sort(F.collect_list(element), by_code).alias("_members")
         )
-        rebuilt = joined.select(
-            "url",
-            "version",
-            F.struct(
-                F.col("pos"),
-                F.col("g").withField(
-                    "element", F.coalesce(F.col("_element"), F.col("g.element"))
-                ).alias("g"),
-            ).alias("pg"),
-        )
-        groups = rebuilt.groupBy("url", "version").agg(
-            F.transform(F.array_sort(F.collect_list("pg")), lambda x: x["g"]).alias("_group")
-        )
-        return (
-            meta.join(groups, ["url", "version"], "left")
-            .withColumn(
-                "group", F.when(F.col("_group").isNotNull(), F.col("_group")).otherwise(F.col("group"))
-            )
-            # equi-join hoists the keys to the front; restore resource order
-            .select(*meta.columns)
-        )
+        on = {"source": "sourcesystem", "target": "targetsystem"}
+        return splice(meta, "group", "element", elements, on)
 
     # -- translate (D12) ----------------------------------------------------
 
@@ -401,7 +242,7 @@ class ConceptMaps:
                 raise ValueError(f"unknown concept map: {u}")
             key = f"{u}|{v}"
             if key in visited:  # cycle guard — reference topo-sorts instead
-                return values_df(self.spark, [], ", ".join(f"{c} string" for c in out_cols))
+                return values_df(self.spark, [], ddl(out_cols))
             visited.add(key)
             own = (
                 self.get_mappings(u, v)
@@ -440,52 +281,3 @@ class ConceptMaps:
             "targetvalue",
         )
         return df.join(F.broadcast(m), [system_col, code_col], "left")
-
-    # -- warehouse ----------------------------------------------------------
-
-    def write_to_database(self, database: str, path: str | None = None) -> None:
-        spark = self.spark
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-        mappings_table = f"{database}.mappings"
-        meta_table = f"{database}.conceptmaps"
-        if spark.catalog.tableExists(mappings_table):
-            existing = (
-                spark.table(mappings_table)
-                .select("conceptmapuri", "conceptmapversion")
-                .distinct()
-            )
-            dup = existing.join(
-                self.mappings.select("conceptmapuri", "conceptmapversion").distinct(),
-                ["conceptmapuri", "conceptmapversion"],
-            )
-            if dup.count() > 0:
-                raise ValueError("concept map uri/version already exists in database")
-            self.mappings.select(*MAPPINGS_COLUMNS).write.insertInto(mappings_table)
-            self.concept_maps.write.mode("append").saveAsTable(meta_table)
-        else:
-            mw = (
-                self.mappings.select(*MAPPINGS_COLUMNS)
-                .write.format("parquet")
-                .partitionBy("conceptmapuri", "conceptmapversion")
-            )
-            if path:
-                mw = mw.option("path", f"{path}/mappings")
-            mw.saveAsTable(mappings_table)
-            cw = self.concept_maps.write.format("parquet")
-            if path:
-                cw = cw.option("path", f"{path}/conceptmaps")
-            cw.saveAsTable(meta_table)
-
-    @classmethod
-    def get_from_database(
-        cls, spark: SparkSession, database: str, resource_type: str = "ConceptMap"
-    ) -> "ConceptMaps":
-        # the warehouse stores generation-shaped metadata rows but does
-        # not tag the generation; the caller's API module supplies it
-        # (bunsen_spark.codes -> STU3, bunsen_spark.r4.codes -> r4:)
-        return cls(
-            spark,
-            spark.table(f"{database}.conceptmaps"),
-            spark.table(f"{database}.mappings"),
-            resource_type,
-        )

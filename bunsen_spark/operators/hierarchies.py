@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..localrel import values_df
 from ..persist import materialize, release
+from ._terminology import ddl, latest, write_partitioned
 
 LOINC_CODE_SYSTEM = "http://loinc.org"
 SNOMED_CODE_SYSTEM = "http://snomed.info/sct"
@@ -142,8 +143,7 @@ class Hierarchies:
 
     @classmethod
     def empty(cls, spark: SparkSession) -> "Hierarchies":
-        schema = ", ".join(f"{c} string" for c in ANCESTOR_COLUMNS)
-        return cls(spark, values_df(spark, [], schema))
+        return cls(spark, values_df(spark, [], ddl(ANCESTOR_COLUMNS)))
 
     @classmethod
     def from_edges(
@@ -171,12 +171,8 @@ class Hierarchies:
         return df
 
     def latest_versions(self) -> DataFrame:
-        """Lexicographic max version per uri (`Hierarchies.java:174-200`,
-        done there via RDD reduceByKey; Spark SQL max() on strings is the
-        idiomatic one-liner)."""
-        return self.ancestors.select("uri", "version").groupBy("uri").agg(
-            F.max("version").alias("version")
-        )
+        """Latest version per uri (`Hierarchies.java:174-200`)."""
+        return latest(self.ancestors, "uri")
 
     def descendants_of(
         self,
@@ -195,16 +191,9 @@ class Hierarchies:
         version per uri (lexicographic max), so loading a newer
         hierarchy version changes unpinned valuesets but never pinned
         ones. ``uri`` optionally restricts to one hierarchy."""
-        df = self.ancestors
-        if uri is not None:
-            df = df.where(F.col("uri") == uri)
-        if version is not None:
-            df = df.where(F.col("version") == version)
-        else:
-            latest = self.latest_versions()
-            if uri is not None:
-                latest = latest.where(F.col("uri") == uri)
-            df = df.join(F.broadcast(latest), ["uri", "version"], "left_semi")
+        df = self.get_ancestors(uri, version)
+        if version is None:
+            df = df.join(F.broadcast(latest(df, "uri")), ["uri", "version"], "left_semi")
         hits = (
             df.where(
                 (F.col("ancestorSystem") == system) & (F.col("ancestorValue") == value)
@@ -221,28 +210,10 @@ class Hierarchies:
     # -- warehouse (S9/S10) -------------------------------------------------
 
     def write_to_database(self, database: str, path: str | None = None) -> None:
-        """Create/append the partitioned ancestors table; duplicate
-        (uri, version) partitions are rejected (`Hierarchies.java:393-396`)."""
-        spark = self.spark
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-        table = f"{database}.ancestors"
-        if spark.catalog.tableExists(table):
-            existing = spark.table(table).select("uri", "version").distinct()
-            dup = existing.join(
-                self.ancestors.select("uri", "version").distinct(), ["uri", "version"]
-            )
-            if dup.count() > 0:
-                raise ValueError("hierarchy uri/version already exists in database")
-            self.ancestors.select(*ANCESTOR_COLUMNS).write.insertInto(table)
-        else:
-            writer = (
-                self.ancestors.select(*ANCESTOR_COLUMNS)
-                .write.format("parquet")
-                .partitionBy("uri", "version")
-            )
-            if path:
-                writer = writer.option("path", path)
-            writer.saveAsTable(table)
+        """Create or append the ancestors table; a (uri, version) it
+        already holds is rejected."""
+        ancestors = self.ancestors.select(*ANCESTOR_COLUMNS)
+        write_partitioned(database, "hierarchy", ancestors, "ancestors", path=path)
 
     @classmethod
     def get_from_database(cls, spark: SparkSession, database: str) -> "Hierarchies":

@@ -1,27 +1,25 @@
-"""ValueSets collection: immutable accumulator of ValueSet resources +
-exploded member values, with partitioned-warehouse persistence.
+"""ValueSets collection: ValueSet resources and their exploded member
+values (`AbstractValueSets.java` / `stu3/codes/ValueSets.java`).
 
-Re-expresses `AbstractValueSets.java` / `stu3/codes/ValueSets.java`:
-- explode (D6): compose.include[].concept[] → flat (valueseturi,
-  valuesetversion, system, version, value) rows via chained explodes;
+- explode (D6): compose.include[].concept[] → flat (system, version,
+  value, valueseturi, valuesetversion) rows via chained explodes;
 - payload strip (D7): metadata rows keep the ValueSet structure with
   `compose.include[].concept := []` (higher-order transform, no UDF);
-- latest-version (A1): groupBy(url).max(version) — Spark SQL max() is
-  lexicographic on strings, replacing the reference's RDD workaround;
-- duplicate rejection (J5) via anti-join semantics;
-- warehouse (S9/S10): `values` parquet-partitioned by
-  (valueseturi, valuesetversion); `valuesets` metadata table.
+- warehouse tables `values`, partitioned by (valueseturi,
+  valuesetversion), and `valuesets`.
+
+The (url, version) bookkeeping shared with ConceptMaps lives in
+:mod:`._terminology`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..localrel import empty_df, values_df
+from ._terminology import Collection, _struct_like, by_code, element_type, splice
 
 VALUES_COLUMNS = ["system", "version", "value", "valueseturi", "valuesetversion"]
-_VALUES_DDL = ", ".join(f"{c} string" for c in VALUES_COLUMNS)
 
 
 def expand_values(value_sets: DataFrame) -> DataFrame:
@@ -62,57 +60,30 @@ def _strip_concepts(value_sets: DataFrame) -> DataFrame:
     )
 
 
-class ValueSets:
-    """``resource_type`` selects the spec generation: the default STU3
-    "ValueSet", or "r4:ValueSet" resolved through the R4 registry
-    (mirroring the reference's parallel `r4/codes/ValueSets` class);
-    the explode/strip/re-assemble plans are schema-driven, so both
-    generations flow through the same code."""
+class ValueSets(Collection):
+    """``resource_type`` is "ValueSet" (STU3) or "r4:ValueSet"."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        value_sets: DataFrame,
-        values: DataFrame,
-        resource_type: str = "ValueSet",
-    ):
-        self.spark = spark
-        self.value_sets = value_sets
-        self.values = values
-        self.resource_type = resource_type
+    RESOURCE_TYPE = "ValueSet"
+    NOUN = "valueset"
+    META_TABLE = "valuesets"
+    FLAT_TABLE = "values"
+    FLAT_COLUMNS = VALUES_COLUMNS
+    _explode = staticmethod(expand_values)
+    _strip = staticmethod(_strip_concepts)
 
-    @classmethod
-    def empty(cls, spark: SparkSession, resource_type: str = "ValueSet") -> "ValueSets":
-        from ..schema import spark_schema_for
-
-        vs = empty_df(spark, spark_schema_for(resource_type))
-        vals = values_df(spark, [], _VALUES_DDL)
-        return cls(spark, vs, vals, resource_type)
+    value_sets = property(lambda self: self._meta)
+    values = property(lambda self: self._flat)
 
     def with_value_sets(self, df: DataFrame) -> "ValueSets":
-        """Add ValueSet resources (spec schema). Rejects (url, version)
-        duplicates within the batch or against current members
-        (`AbstractValueSets.java:296-299,372-387`)."""
-        new_members = df.select("url", "version").distinct()
-        if new_members.count() != df.count():
-            raise ValueError("duplicate (url, version) within added valuesets")
-        if self.value_sets.join(new_members, ["url", "version"], "left_semi").count() > 0:
-            raise ValueError("valueset (url, version) already present in collection")
-        return ValueSets(
-            self.spark,
-            self.value_sets.unionByName(_strip_concepts(df)),
-            self.values.unionByName(expand_values(df)),
-            self.resource_type,
-        )
+        """Add ValueSet resources (spec schema)."""
+        return self._add_resources(df)
 
     def with_value_sets_from_directory(self, path: str) -> "ValueSets":
-        from ..sources.resources import read_resources_from_directory
+        return self._import(path)
 
-        return self.with_value_sets(
-            read_resources_from_directory(self.spark, path, self.resource_type)
-        )
-
-    # -- queries ------------------------------------------------------------
+    def with_disjoint_value_sets_from_directory(self, path: str) -> "ValueSets":
+        """Load only the value sets whose (url, version) is not stored."""
+        return self._import(path, disjoint=True)
 
     def with_new_value_set(
         self,
@@ -123,41 +94,28 @@ class ValueSets:
     ) -> "ValueSets":
         """Construct a value set from (system, code) or (system,
         system_version, code) tuples and add it
-        (`python/bunsen/codes/__init__.py:with_new_value_set`): the
-        nested resource is assembled as JSON and run through the
-        standard ingest plan."""
-        import json as _json
-
+        (`python/bunsen/codes/__init__.py:with_new_value_set`)."""
         systems: dict[tuple[str, str | None], list[str]] = {}
-        for t in values:
-            if len(t) == 2:
-                system, code = t
-                sys_version = None
-            else:
-                system, sys_version, code = t
+        for system, sys_version, code in map(_with_system_version, values):
             systems.setdefault((system, sys_version), []).append(code)
-        doc = {
-            "resourceType": "ValueSet",
-            "url": url,
-            "version": version,
-            "status": "draft" if experimental else "active",
-            "experimental": experimental,
-            "compose": {
-                "include": [
-                    {
-                        "system": system,
-                        **({"version": sv} if sv else {}),
-                        "concept": [{"code": c} for c in codes],
-                    }
-                    for (system, sv), codes in systems.items()
-                ]
-            },
-        }
-        from ..sources.resources import resources_from_json_strings
-
-        raw = values_df(self.spark, [(_json.dumps(doc),)], "resource_json string")
-        return self.with_value_sets(
-            resources_from_json_strings(raw, "resource_json", self.resource_type)
+        return self._add_json(
+            {
+                "resourceType": "ValueSet",
+                "url": url,
+                "version": version,
+                "status": "draft" if experimental else "active",
+                "experimental": experimental,
+                "compose": {
+                    "include": [
+                        {
+                            "system": system,
+                            **({"version": sv} if sv else {}),
+                            "concept": [{"code": c} for c in codes],
+                        }
+                        for (system, sv), codes in systems.items()
+                    ]
+                },
+            }
         )
 
     def add_values(
@@ -165,180 +123,38 @@ class ValueSets:
     ) -> "ValueSets":
         """New VERSION of a stored set with extra member values appended
         (`python/bunsen/codes/__init__.py:add_values`)."""
-        meta = self.value_sets.where(
-            (F.col("url") == url) & (F.col("version") == version)
-        ).withColumn("version", F.lit(new_version))
-        if meta.isEmpty():
-            raise ValueError(f"no stored value set {url}@{version}")
-        old = self.values.where(
-            (F.col("valueseturi") == url) & (F.col("valuesetversion") == version)
-        ).withColumn("valuesetversion", F.lit(new_version))
-        rows = []
-        for t in values:
-            system, sys_version, code = t if len(t) == 3 else (t[0], None, t[1])
-            rows.append((system, sys_version, code, url, new_version))
-        fresh = values_df(self.spark, rows, _VALUES_DDL)
-        return ValueSets(
-            self.spark,
-            self.value_sets.unionByName(meta),
-            self.values.unionByName(old.select(*VALUES_COLUMNS)).unionByName(fresh),
-            self.resource_type,
-        )
+        rows = lambda _: map(_with_system_version, values)  # noqa: E731
+        return self._add_version(url, version, new_version, rows, "no stored value set")
 
     def get_value_set_as_xml(self, url: str, version: str | None = None) -> str:
         """Re-assembled set as one FHIR XML string
         (`python/bunsen/codes/__init__.py:get_value_set_as_xml`)."""
-        from ..sources.export import to_resource_xml
+        return self._xml(self.get_value_set(url, version))
 
-        return to_resource_xml(
-            self.get_value_set(url, version), self.resource_type
-        ).collect()[0]["xml"]
-
-    def with_disjoint_value_sets_from_directory(self, path: str) -> "ValueSets":
-        """Disjoint import: load only value sets whose (url, version)
-        is not already stored (`AbstractValueSets.java` disjoint path,
-        mirroring the ConceptMaps J1 anti-join)."""
-        from ..sources.resources import read_resources_from_directory
-
-        fresh = read_resources_from_directory(self.spark, path, self.resource_type).join(
-            self.value_sets.select("url", "version"), ["url", "version"], "left_anti"
-        )
-        return self.with_value_sets(fresh)
+    # -- queries ------------------------------------------------------------
 
     def get_value_sets(self) -> DataFrame:
         return self.value_sets
 
-    def latest_version(self, url: str) -> str | None:
-        row = (
-            self.value_sets.where(F.col("url") == url)
-            .agg(F.max("version").alias("v"))
-            .collect()[0]
-        )
-        return row["v"]
-
-    def get_latest_versions(self, include_experimental: bool = False) -> DataFrame:
-        df = self.value_sets
-        if not include_experimental:
-            df = df.where(F.col("experimental").isNull() | ~F.col("experimental"))
-        return df.groupBy("url").agg(F.max("version").alias("version"))
-
     def get_values(self, uri: str, version: str | None = None) -> DataFrame:
-        v = version or self.latest_version(uri)
-        return self.values.where(
-            (F.col("valueseturi") == uri) & (F.col("valuesetversion") == v)
-        ).select("system", "version", "value")
+        return self._member(uri, version)[1].select("system", "version", "value")
 
     def get_value_set(self, uri: str, version: str | None = None) -> DataFrame:
         """Re-assemble ONE stored set as a full ValueSet resource row
-        (D6 read-back, `stu3/codes/ValueSets.java:237-285`): the
-        stripped metadata's ``compose.include[].concept`` arrays are
-        rebuilt from the flat value rows (grouped collect per code
-        system) and spliced back into each include struct by
-        null-safe (system, version) match.
+        (D6 read-back, `stu3/codes/ValueSets.java:237-285`): concept
+        arrays are collected per (system, version) from the flat value
+        rows and spliced back into the include structs they match.
+        Concept arrays come back sorted by code."""
+        meta, values = self._member(uri, version)
+        concept_t = element_type(meta.schema, "compose", "include", "concept")
+        concept = _struct_like(concept_t, {"code": F.col("value")})
+        concepts = values.groupBy("system", "version").agg(
+            F.array_sort(F.collect_list(concept), by_code).alias("_members")
+        )
+        on = {"system": "system", "version": "version"}
+        return splice(meta, "compose.include", "concept", concepts, on)
 
-        Concept arrays come back sorted by code — the flat table does
-        not record document order (FHIR imposes none).
-        """
-        v = version or self.latest_version(uri)
-        meta = self.value_sets.where((F.col("url") == uri) & (F.col("version") == v))
-        vals = self.values.where(
-            (F.col("valueseturi") == uri) & (F.col("valuesetversion") == v)
-        )
 
-        by_code = lambda l, r: F.when(l["code"] < r["code"], -1).when(  # noqa: E731
-            l["code"] > r["code"], 1
-        ).otherwise(F.lit(0))
-        from .concept_maps import _struct_like
-
-        include_t = (
-            self.value_sets.schema["compose"].dataType["include"].dataType.elementType
-        )
-        concept_t = include_t["concept"].dataType.elementType
-        concept_struct = _struct_like(concept_t, {"code": F.col("value")})
-        concepts = vals.groupBy("system", "version").agg(
-            F.collect_list(concept_struct).alias("_concept")
-        ).withColumn("_concept", F.array_sort(F.col("_concept"), by_code))
-
-        inc = meta.select(
-            F.col("url").alias("_u"),
-            F.col("version").alias("_v"),
-            F.posexplode("compose.include").alias("pos", "inc"),
-        )
-        joined = inc.join(
-            concepts,
-            (inc["inc.system"] == concepts["system"])
-            & inc["inc.version"].eqNullSafe(concepts["version"]),
-            "left",
-        )
-        rebuilt = joined.select(
-            "_u",
-            "_v",
-            F.struct(
-                F.col("pos"),
-                F.col("inc").withField(
-                    "concept", F.coalesce(F.col("_concept"), F.col("inc.concept"))
-                ).alias("inc"),
-            ).alias("pi"),
-        )
-        includes = rebuilt.groupBy("_u", "_v").agg(
-            F.transform(F.array_sort(F.collect_list("pi")), lambda x: x["inc"]).alias("_include")
-        )
-        return (
-            meta.join(
-                includes,
-                (meta["url"] == includes["_u"]) & (meta["version"] == includes["_v"]),
-                "left",
-            )
-            .withColumn(
-                "compose",
-                F.when(
-                    F.col("_include").isNotNull(),
-                    F.col("compose").withField("include", F.col("_include")),
-                ).otherwise(F.col("compose")),
-            )
-            .select(*meta.columns)
-        )
-
-    # -- warehouse ----------------------------------------------------------
-
-    def write_to_database(self, database: str, path: str | None = None) -> None:
-        spark = self.spark
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-        values_table = f"{database}.values"
-        meta_table = f"{database}.valuesets"
-        if spark.catalog.tableExists(values_table):
-            existing = spark.table(values_table).select("valueseturi", "valuesetversion").distinct()
-            dup = existing.join(
-                self.values.select("valueseturi", "valuesetversion").distinct(),
-                ["valueseturi", "valuesetversion"],
-            )
-            if dup.count() > 0:
-                raise ValueError("valueset uri/version already exists in database")
-            self.values.select(*VALUES_COLUMNS).write.insertInto(values_table)
-            self.value_sets.write.mode("append").saveAsTable(meta_table)
-        else:
-            vw = (
-                self.values.select(*VALUES_COLUMNS)
-                .write.format("parquet")
-                .partitionBy("valueseturi", "valuesetversion")
-            )
-            if path:
-                vw = vw.option("path", f"{path}/values")
-            vw.saveAsTable(values_table)
-            mw = self.value_sets.write.format("parquet")
-            if path:
-                mw = mw.option("path", f"{path}/valuesets")
-            mw.saveAsTable(meta_table)
-
-    @classmethod
-    def get_from_database(
-        cls, spark: SparkSession, database: str, resource_type: str = "ValueSet"
-    ) -> "ValueSets":
-        # the warehouse does not tag the spec generation; the caller's
-        # API module supplies it (codes -> STU3, r4.codes -> r4:)
-        return cls(
-            spark,
-            spark.table(f"{database}.valuesets"),
-            spark.table(f"{database}.values"),
-            resource_type,
-        )
+def _with_system_version(t: tuple) -> tuple:
+    """(system, code) → (system, None, code); 3-tuples pass through."""
+    return t if len(t) == 3 else (t[0], None, t[1])

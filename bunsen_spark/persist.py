@@ -26,7 +26,8 @@ otherwise. Set the conf explicitly to override either way — e.g.
 fixpoint rounds are deep enough for lineage growth to hurt.
 
 :func:`has_committed_batches` is the matching probe on the storage
-side: whether a ``batch_id``-partitioned parquet table exists yet.
+side: whether a ``batch_id``-partitioned parquet table exists yet;
+:func:`overwrite_batch_partition` is the one write to such a table.
 """
 
 from __future__ import annotations
@@ -166,3 +167,15 @@ def has_committed_batches(spark, path: str) -> bool:
         return False
     committed = fs.globStatus(jvm.org.apache.hadoop.fs.Path(path + "/batch_id=*/*.parquet"))
     return committed is not None and len(committed) > 0
+
+
+def overwrite_batch_partition(df: DataFrame, path: str) -> None:
+    """Dynamic-partition overwrite of ``df``'s own ``batch_id``
+    partitions of the parquet table at ``path`` (a replayed micro-batch
+    rewrites only itself)."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )

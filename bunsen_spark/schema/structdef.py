@@ -51,7 +51,16 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from .core import PRIMITIVES, Choice, Complex, Extension, Field, Reference
+from .core import (
+    PRIMITIVES,
+    Choice,
+    Complex,
+    Extension,
+    Field,
+    Reference,
+    _lower_first,
+    _upper_first,
+)
 from . import datatypes as dt
 
 # ---------------------------------------------------------------------------
@@ -163,14 +172,6 @@ def _profiles(t: dict, key: str) -> list[str]:
     if isinstance(v, str):
         return [v]
     return [x for x in v if isinstance(x, str)]
-
-
-def _upper_first(s: str) -> str:
-    return s[0].upper() + s[1:]
-
-
-def _lower_first(s: str) -> str:
-    return s[0].lower() + s[1:]
 
 
 def _is_many(el: dict) -> bool:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..localrel import values_df
-from ..persist import has_committed_batches, materialize, release
+from ..persist import has_committed_batches, materialize, overwrite_batch_partition, release
 from ..sources.bundles import _explode_bundles, extract_entry
 
 
@@ -105,18 +105,6 @@ def write_resource_stream(
     return writer.start()
 
 
-def _overwrite_batch_partition(df: DataFrame, path: str) -> None:
-    """Dynamic-partition overwrite of ``df``'s own ``batch_id``
-    partitions of the parquet table at ``path`` (a replayed micro-batch
-    rewrites only itself)."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
-    )
-
-
 def stream_near_dup_filter(
     docs_stream: DataFrame,
     state_path: str,
@@ -167,9 +155,9 @@ def stream_near_dup_filter(
         kept = kept.withColumn("batch_id", F.lit(batch_id))
         kept = materialize(kept, eager=True)  # finish reading state first
         try:
-            _overwrite_batch_partition(kept, state_path)
+            overwrite_batch_partition(kept, state_path)
             if out_path:
-                _overwrite_batch_partition(
+                overwrite_batch_partition(
                     batch_df.join(kept.select("doc_id"), "doc_id", "left_semi")
                     .withColumn("batch_id", F.lit(batch_id)),
                     out_path,
@@ -239,8 +227,8 @@ def stream_novelty_scores(
         scores = materialize(scores, eager=True)
         new_grams = materialize(new_grams, eager=True)
         try:
-            _overwrite_batch_partition(scores, out_path)
-            _overwrite_batch_partition(new_grams, state_path)
+            overwrite_batch_partition(scores, out_path)
+            overwrite_batch_partition(new_grams, state_path)
         finally:
             release(scores)
             release(new_grams)
@@ -297,8 +285,8 @@ def stream_segment_dedup(
         cleaned = materialize(cleaned, eager=True)
         new_segs = materialize(new_segs, eager=True)
         try:
-            _overwrite_batch_partition(cleaned, out_path)
-            _overwrite_batch_partition(new_segs, state_path)
+            overwrite_batch_partition(cleaned, out_path)
+            overwrite_batch_partition(new_segs, state_path)
         finally:
             release(cleaned)
             release(new_segs)

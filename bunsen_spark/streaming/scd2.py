@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..persist import materialize, release
+from ..persist import has_committed_batches, materialize, overwrite_batch_partition, release
 
 _KIND_OPEN = "open"
 _KIND_CLOSE = "close"
@@ -85,16 +85,6 @@ def stream_scd2_upserts(
     if not payload_cols:
         raise ValueError("payload_cols must be non-empty")
 
-    def _dim_exists(spark: SparkSession) -> bool:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(dim_path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return False
-        glob = jvm.org.apache.hadoop.fs.Path(dim_path + "/batch_id=*/*.parquet")
-        committed = fs.globStatus(glob)
-        return committed is not None and len(committed) > 0
-
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         ts = batch_id + 1  # dim seeds at valid_from=0; batch N commits at N+1
@@ -109,7 +99,7 @@ def stream_scd2_upserts(
             batch = winner.select(key, "__p.*")
         else:
             batch = batch_df.select(key, *payload_cols).dropDuplicates([key])
-        if _dim_exists(spark):
+        if has_committed_batches(spark, dim_path):
             log = spark.read.parquet(dim_path).where(
                 F.col("batch_id") < F.lit(batch_id)
             )
@@ -173,12 +163,7 @@ def stream_scd2_upserts(
         out = out.withColumn("batch_id", F.lit(batch_id))
         out = materialize(out, eager=True)  # finish reading the log first
         try:
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(dim_path)
-            )
+            overwrite_batch_partition(out, dim_path)
         finally:
             release(out)
 

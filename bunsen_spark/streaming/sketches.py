@@ -29,6 +29,7 @@ from ..operators.sketches import (
     DEFAULT_CM_WIDTH,
     countmin_table,
 )
+from ..persist import overwrite_batch_partition
 
 
 def read_countmin(spark: SparkSession, sketch_path: str) -> DataFrame:
@@ -57,14 +58,11 @@ def stream_countmin(
     families must never be summed together."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        out = (
             countmin_table(batch_df, value_col, width, depth, portable)
             .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_path)
         )
+        overwrite_batch_partition(out, sketch_path)
 
     writer = events_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint
@@ -105,15 +103,12 @@ def stream_distinct_sketches(
     from ..operators.sketches import distinct_sketches
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        out = (
             distinct_sketches(batch_df, group_col, value_col, lg_k)
             .select("grp", "sketch")
             .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_path)
         )
+        overwrite_batch_partition(out, sketch_path)
 
     writer = events_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint
@@ -154,14 +149,11 @@ def stream_bloom(
     nh = DEFAULT_NUM_HASHES if num_hashes is None else num_hashes
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        out = (
             bloom_words(batch_df, key_col, nb, nh)
             .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_path)
         )
+        overwrite_batch_partition(out, sketch_path)
 
     writer = keys_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint

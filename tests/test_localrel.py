@@ -132,48 +132,75 @@ def test_empty_collections_are_local_relations(spark):
     assert empty_df(spark, spark_schema_for("ValueSet")).schema == spark_schema_for("ValueSet")
 
 
-#: The modules under bunsen_spark/ allowed to call ``createDataFrame``:
-#: the LocalRelation builders themselves, and the one-slice media
-#: synthesizer (its comment gives the reason), by enclosing function.
-_CREATE_DATAFRAME_ALLOWED = {
-    "localrel.py": {"values_df", "empty_df"},
-    "operators/multimodal.py": {"synthesize_media"},
+#: The single paths: each guarded call attribute, the enclosing
+#: (module, function) pairs under bunsen_spark/ allowed to call it, and
+#: what to do instead.
+_SINGLE_PATHS = {
+    # ``spark.createDataFrame(<python list>)`` is RDD-backed: its rows
+    # become ``defaultParallelism`` pickled partitions that every later
+    # scan pays for. The LocalRelation builders may call it, and so may
+    # the one-slice media synthesizer (its comment gives the reason).
+    "createDataFrame": (
+        {"localrel.py": {"values_df", "empty_df"}, "operators/multimodal.py": {"synthesize_media"}},
+        "createDataFrame outside bunsen_spark/localrel.py; build driver frames with "
+        "localrel.values_df (or localrel.empty_df for an empty spec schema)",
+    ),
+    # a Hadoop-FS glob is how a batch_id-partitioned table is probed
+    "globStatus": (
+        {"persist.py": {"has_committed_batches"}},
+        "globStatus outside persist.has_committed_batches; probe a batch_id-partitioned "
+        "table with persist.has_committed_batches",
+    ),
+    # positional appends into the terminology warehouse, after its
+    # (uri, version) check
+    "insertInto": (
+        {"operators/_terminology.py": {"write_partitioned"}},
+        "insertInto outside operators/_terminology.write_partitioned; land terminology "
+        "tables through write_partitioned",
+    ),
 }
 
 
-def _create_dataframe_calls(node, func="<module>"):
-    """(line, enclosing function name) of each ``.createDataFrame(...)``
-    call under ``node``."""
+def _calls(node, attr, func="<module>"):
+    """(line, enclosing function name) of each ``.<attr>(...)`` call
+    under ``node``."""
     import ast
 
     for child in ast.iter_child_nodes(node):
         if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            yield from _create_dataframe_calls(child, child.name)
+            yield from _calls(child, attr, child.name)
             continue
         if (
             isinstance(child, ast.Call)
             and isinstance(child.func, ast.Attribute)
-            and child.func.attr == "createDataFrame"
+            and child.func.attr == attr
         ):
             yield child.lineno, func
-        yield from _create_dataframe_calls(child, func)
+        yield from _calls(child, attr, func)
 
 
-def test_driver_frames_go_through_localrel():
-    """``spark.createDataFrame(<python list>)`` is RDD-backed: its rows
-    become ``defaultParallelism`` pickled partitions that every later
-    scan pays for. Driver-built frames go through ``localrel`` instead."""
+def _assert_single_path(attr):
     import ast
     from pathlib import Path
 
+    allowed, message = _SINGLE_PATHS[attr]
     root = Path(__file__).resolve().parent.parent / "bunsen_spark"
     found = [
         f"{path.relative_to(root).as_posix()}:{line} in {func}"
         for path in sorted(root.rglob("*.py"))
-        for line, func in _create_dataframe_calls(ast.parse(path.read_text()))
-        if func not in _CREATE_DATAFRAME_ALLOWED.get(path.relative_to(root).as_posix(), ())
+        for line, func in _calls(ast.parse(path.read_text()), attr)
+        if func not in allowed.get(path.relative_to(root).as_posix(), ())
     ]
-    assert not found, (
-        "createDataFrame outside bunsen_spark/localrel.py; build driver frames with "
-        f"localrel.values_df (or localrel.empty_df for an empty spec schema): {found}"
-    )
+    assert not found, f"{message}: {found}"
+
+
+def test_driver_frames_go_through_localrel():
+    """Driver-built frames go through ``localrel``."""
+    _assert_single_path("createDataFrame")
+
+
+@pytest.mark.parametrize("attr", ["globStatus", "insertInto"])
+def test_one_probe_and_one_terminology_writer(attr):
+    """The batch-table probe and the terminology warehouse writer each
+    have one home."""
+    _assert_single_path(attr)
