@@ -1,12 +1,16 @@
 """The library's broadcast decisions: the one gather-or-scatter rule
-(:func:`gathers`) and the row-cap gate for HINT-FORCED broadcasts.
+(:func:`gathers`), the one whole-input gather (:func:`gather`) and the
+row-cap gate for HINT-FORCED broadcasts.
 
 :func:`gathers` decides, from plan statistics alone, whether an input
-is small enough to bring into one process: the driver gathers it with
-one ``toArrow()`` and then either computes on it there (the ANN
+is small enough to bring into one process; :func:`gather` then brings
+it there, and the caller either computes on it on the driver (the ANN
 searches) or broadcasts it (exact embedding dedup). Each caller passes
 its own measured compute cap; the auto-broadcast threshold is the
-shared memory guard.
+shared memory guard. At these sizes the cost of a gather is the Spark
+job, not the data, so an input whose plan is only columns of local
+Parquet files is read on the driver with ``pyarrow.parquet`` and runs
+no job; any other input is collected with one ``toArrow()``.
 
 The fixpoint/verify operators broadcast node-sized relations (labels,
 ranks, candidate pairs) whose built size deliberately exceeds the
@@ -37,6 +41,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 #: threshold the per-operator row defaults were sized against
 _REFERENCE_THRESHOLD = 64 * 1024 * 1024
+
+_PROJECT = "org.apache.spark.sql.catalyst.plans.logical.Project"
+_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
+_ATTRIBUTE = "org.apache.spark.sql.catalyst.expressions.AttributeReference"
+_ALIAS = "org.apache.spark.sql.catalyst.expressions.Alias"
 
 
 def _threshold_bytes(spark: SparkSession) -> int:
@@ -82,6 +93,114 @@ def gathers(df: DataFrame, cap: int | None = None) -> bool:
     if cap is not None:
         limit = min(limit, cap)
     return size is not None and 0 < limit and size <= limit
+
+
+def _class(obj) -> str:
+    return obj.getClass().getName()
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _plain(dt) -> bool:
+    """An integral or floating Spark type, or an array of one: the
+    types whose Parquet values Spark and pyarrow read alike, whatever
+    the session's conf."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        dt = dt.elementType
+    return isinstance(
+        dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType, T.DoubleType)
+    )
+
+
+def _parquet_columns(df: DataFrame):
+    """``(paths, [(file column, output name)], arrow schema)`` when
+    ``df``'s optimized plan is a plain Parquet relation — exactly
+    ``ParquetFileFormat`` (no subclass), no partition columns, only
+    ``file:`` inputs — under at most one ``Project`` of attribute
+    references and aliases of them, every column of a :func:`_plain`
+    type, and Spark matching Parquet columns by name (as it does unless
+    ``spark.sql.parquet.fieldId.read.enabled`` is set); else None. The
+    schema is ``to_arrow_schema`` of ``df``'s columns. Driver-only:
+    reads the plan and the file index."""
+    from urllib.parse import unquote, urlparse
+
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructField, StructType, _parse_datatype_json_string
+
+    by_field_id = df.sparkSession.conf.get("spark.sql.parquet.fieldId.read.enabled", "false")
+    if by_field_id.lower() == "true":
+        return None
+    plan = df._jdf.queryExecution().optimizedPlan()
+    project = None
+    if _class(plan) == _PROJECT:
+        project, plan = _seq(plan.projectList()), plan.child()
+    if _class(plan) != _RELATION or _class(plan.relation()) != _FS_RELATION:
+        return None
+    relation = plan.relation()
+    if _class(relation.fileFormat()) != _PARQUET or relation.partitionSchema().length():
+        return None
+    cols = []
+    for expr in project if project is not None else _seq(plan.output()):
+        attr = expr.child() if _class(expr) == _ALIAS else expr
+        if _class(attr) != _ATTRIBUTE:
+            return None
+        cols.append((attr.name(), expr.name(), _parse_datatype_json_string(attr.dataType().json())))
+    if not all(_plain(dt) for _, _, dt in cols):
+        return None
+    uris = [urlparse(u) for u in relation.location().inputFiles()]
+    if any(u.scheme != "file" or u.netloc not in ("", "localhost") for u in uris):
+        return None
+    schema = to_arrow_schema(StructType([StructField(out, dt) for _, out, dt in cols]))
+    return [unquote(u.path) for u in uris], [(src, out) for src, out, _ in cols], schema
+
+
+def _read_parquet(paths: list[str], cols: list[tuple[str, str]], schema):
+    """The ``cols`` of the Parquet files ``paths`` as one Arrow table
+    with ``schema``, read one file at a time and only the read columns;
+    None when a file lacks a column under its exact name (or has it
+    twice, ignoring case) or stores it as another Arrow type than
+    ``schema`` gives, or cannot be read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    srcs = list(dict.fromkeys(src for src, _ in cols))
+    want = {src: schema.field(i).type for i, (src, _) in enumerate(cols)}
+    tables = []
+    try:
+        for path in paths:
+            with pq.ParquetFile(path) as f:
+                stored = f.schema_arrow
+                lower = [n.lower() for n in stored.names]
+                for src in srcs:
+                    if lower.count(src.lower()) != 1 or src not in stored.names:
+                        return None
+                    if stored.field(src).type != want[src]:
+                        return None
+                t = f.read(columns=srcs)
+            tables.append(pa.Table.from_arrays([t[src] for src, _ in cols], schema=schema))
+    except (OSError, pa.ArrowException):
+        return None
+    return pa.concat_tables(tables) if tables else schema.empty_table()
+
+
+def gather(df: DataFrame) -> "pyarrow.Table":
+    """``df``'s rows as one ``pyarrow.Table`` on the driver: the
+    library's one whole-input gather, for an input :func:`gathers`
+    accepted. When the optimized plan proves ``df`` is only columns of
+    local Parquet files (:func:`_parquet_columns`) and every file
+    stores each read column under its name as the Arrow type Spark's
+    column type maps to, the files are read here with
+    ``pyarrow.parquet`` — the same values, no Spark job. Any other
+    input, or any failed check, is ``df.toArrow()`` (one job,
+    ``spark.driver.maxResultSize`` still guards it). Row order is not
+    part of the contract."""
+    found = _parquet_columns(df)
+    table = _read_parquet(*found) if found is not None else None
+    return df.toArrow() if table is None else table
 
 
 def broadcast_row_cap(spark: SparkSession, default_rows: int) -> int:

@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -134,8 +134,11 @@ def splice(
     ``path`` (``compose.include``, ``group``) gets its ``field`` back
     from the ``_members`` column of the ``members`` row whose ``on``
     columns (struct field -> members column) match it null-safely. A
-    struct with no match keeps what it had. Array order, the
-    resource's columns and their order are kept."""
+    members row goes back to the first struct (lowest position) it
+    matches only, since the flat rows do not record which of two
+    structs with the same key they came from. A struct with no members
+    keeps what it had. Array order, the resource's columns and their
+    order are kept."""
     items = meta.select(
         F.col("url").alias("_u"),
         F.col("version").alias("_v"),
@@ -145,8 +148,11 @@ def splice(
         lambda a, b: a & b,
         [items["_item"][k].eqNullSafe(members[c]) for k, c in on.items()],
     )
+    matched = F.when(F.col("_members").isNotNull(), F.col("_pos"))
+    first = F.min(matched).over(Window.partitionBy("_u", "_v", *on.values()))
     item = F.col("_item").withField(
-        field, F.coalesce(F.col("_members"), F.col("_item")[field])
+        field,
+        F.coalesce(F.when(F.col("_pos") == first, F.col("_members")), F.col("_item")[field]),
     )
     arrays = (
         items.join(members, match, "left")

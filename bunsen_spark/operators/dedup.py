@@ -1036,10 +1036,12 @@ def embedding_near_dup_pairs(
     :func:`_cosine_pairs` and give the same rows. A zero-norm vector
     never matches.
 
-    - **broadcast**: a corpus the rule accepts is gathered once with
-      ``toArrow()`` and its normalized matrix broadcast; each partition
-      scores its rows against it in ``mapInArrow``. The output is never
-      collected: an all-duplicate corpus makes it quadratic.
+    - **broadcast**: a corpus the rule accepts is gathered once
+      (:func:`_bcast.gather`: no job for a Parquet corpus of float or
+      double vectors, read from its files; else one ``toArrow()``) and
+      its normalized matrix broadcast; each partition scores its rows
+      against it in ``mapInArrow``. The output is never collected: an
+      all-duplicate corpus makes it quadratic.
     - **blocked**: the 100 TB path — no driver collect anywhere.
       Vectors are hashed into ``num_blocks`` blocks; each of the
       B(B+1)/2 unordered block pairs is a shuffle group whose two
@@ -1054,16 +1056,16 @@ def embedding_near_dup_pairs(
     import pandas as pd
     import pyarrow as pa
 
-    from ._bcast import gathers
-    from .similarity import _batch_mat
+    from ._bcast import gather, gathers
+    from .similarity import _batch_mat, _corpus, _gather_input
     from ..localrel import values_df
 
     spark = embeddings.sparkSession
-    src = embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    src = _corpus(embeddings)
     out_ddl = "a_id long, b_id long"
 
     if gathers(src, EMBEDDING_GATHER_MAX_BYTES):
-        corpus = src.toArrow().combine_chunks()
+        corpus = gather(_gather_input(embeddings, src)).combine_chunks()
         if not corpus.num_rows:
             return values_df(spark, [], out_ddl)
         dim = len(corpus["v"][0])

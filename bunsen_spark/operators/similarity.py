@@ -14,9 +14,14 @@ the kernel runs is decided once per search (:func:`_bcast.gathers`):
   ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark would
   broadcast) and :data:`GATHER_MAX_BYTES` (the measured point where
   the one-thread driver kernel stops beating parallel tasks) is
-  collected with one ``toArrow()``; the queries are filtered from that
-  table and the kernel runs over its batches on the driver. One job,
-  no Python worker.
+  brought to the driver by :func:`_bcast.gather`; the queries are
+  filtered from that table and the kernel runs over its batches on
+  the driver, with no Python worker. A Parquet corpus of float or
+  double vectors is read from its files, so the default-scan members
+  (brute force, seeded IVF, the probe sweep, LSH, Hamming) run no
+  gather job (brute force, LSH and Hamming run none at all); other
+  inputs, and the lattice scans of JL and trained IVF, are collected
+  with one ``toArrow()`` job.
 - **scatter-gather**: otherwise the query set (small by construction)
   is collected and carried in the task closure, each corpus partition
   is scored in ONE ``mapInArrow`` pass emitting only its top-k per
@@ -42,7 +47,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._bcast import gathers
+from ._bcast import gather, gathers
 from .text_analysis import md5int_sql
 from ..localrel import arrow_schema, values_df
 from ..persist import has_committed_batches, materialize
@@ -135,11 +140,11 @@ def brute_force_topk(
     One :func:`_topk_scan` corpus pass, merged on the driver by
     :func:`_rank_topk` into a LocalRelation. A corpus within
     ``spark.sql.autoBroadcastJoinThreshold`` and :data:`GATHER_MAX_BYTES`
-    is gathered and scanned on the driver (one job;
-    ``spark.driver.maxResultSize`` still guards the gather), a larger
-    one is scanned by ``mapInArrow`` with the queries in the task
-    closure (two jobs); neither shuffles, and both give the same rows
-    (:func:`_with_queries`). Bit-parity:
+    is gathered and scanned on the driver (no job for a Parquet
+    corpus, else one, which ``spark.driver.maxResultSize`` still
+    guards), a larger one is scanned by ``mapInArrow`` with the queries
+    in the task closure (two jobs); neither shuffles, and all give the
+    same rows (:func:`_with_queries`). Bit-parity:
     sims are :func:`_cosine` values (strict left-to-right dots, single
     IEEE norm-multiply/divide — the exact ``aggregate(zip_with)``
     values), all queries scored in one matrix per batch. No query rows
@@ -1186,28 +1191,27 @@ def _with_queries(
     ``out_ddl`` columns as a LocalRelation (collecting the result
     launches no job).
 
-    - A ``scan`` that the rule accepts is gathered with one ``toArrow()``
-      (``spark.driver.maxResultSize`` still guards it) and passed on as
-      that Arrow table: the queries are filtered from it, so the search
-      runs one job and :func:`_topk_scan` runs on the driver.
+    - A ``scan`` that the rule accepts is brought to the driver with
+      :func:`_bcast.gather` and passed on as that Arrow table: the
+      queries are filtered from it and :func:`_topk_scan` runs on the
+      driver. The default scan is gathered from :func:`_gather_input`,
+      so a Parquet corpus of float or double vectors is read from its
+      files and the search runs no job; any other scan input runs one.
     - Otherwise ``scan`` stays a frame and the query set — ≤32 rows by
-      construction — is collected with ``toArrow()`` so the scan can
-      carry it in its task closure: two jobs.
+      construction — is collected (:func:`_query_rows`) so the scan
+      can carry it in its task closure: two jobs.
 
-    Both give the same rows. No query rows gives an empty ``out_ddl``
+    All give the same rows. No query rows gives an empty ``out_ddl``
     frame, built on the driver without calling ``build``;
     ``num_queries ≤ 0`` decides that before touching the corpus."""
-    import pyarrow.compute as pc
-
     spark = embeddings.sparkSession
     if num_queries <= 0:
         return values_df(spark, [], out_ddl)
-    scan = _corpus(embeddings) if scan is None else scan
+    default = scan is None
+    scan = _corpus(embeddings) if default else scan
     if gathers(scan, GATHER_MAX_BYTES):
-        scan = scan.toArrow()
-        rows = scan.filter(pc.less(scan["vec_id"], num_queries))
-    else:
-        rows = scan.where(F.col("vec_id") < num_queries).select("vec_id", "v").toArrow()
+        scan = gather(_gather_input(embeddings, scan) if default else scan)
+    rows = _query_rows(scan, num_queries)
     if not rows.num_rows:
         return values_df(spark, [], out_ddl)
     pairs = sorted(zip(rows["vec_id"].to_pylist(), rows["v"].to_pylist()))
@@ -1217,6 +1221,33 @@ def _with_queries(
     return values_df(spark, top.select(_ddl_names(out_ddl)), out_ddl)
 
 
+def _gather_input(embeddings: DataFrame, corpus: DataFrame) -> DataFrame:
+    """What a gather of the cast ``corpus`` (:func:`_corpus` of
+    ``embeddings``) reads: for float or double elements, the uncast
+    ``(vec_id, embedding AS v)`` projection — a plain column read,
+    which :func:`_bcast.gather` serves from a Parquet corpus's files
+    without a job; :func:`_batch_mat` and ``to_pylist`` widen float32
+    to exactly the doubles Spark's cast gives. Other element types
+    keep the cast ``corpus``."""
+    from pyspark.sql.types import DoubleType, FloatType
+
+    if isinstance(embeddings.schema["embedding"].dataType.elementType, (FloatType, DoubleType)):
+        return embeddings.select("vec_id", F.col("embedding").alias("v"))
+    return corpus
+
+
+def _query_rows(scan, num_queries: int):
+    """The (vec_id, v) rows with vec_id < ``num_queries`` of a scan
+    input, as an Arrow table: filtered on the driver from a gathered
+    table, or collected from a frame with one ``toArrow()`` — the
+    scatter side's query collect."""
+    import pyarrow.compute as pc
+
+    if isinstance(scan, DataFrame):
+        return scan.where(F.col("vec_id") < num_queries).select("vec_id", "v").toArrow()
+    return scan.filter(pc.less(scan["vec_id"], num_queries))
+
+
 def _ddl_names(ddl: str) -> list[str]:
     return [part.split()[0] for part in ddl.split(",")]
 
@@ -1224,13 +1255,18 @@ def _ddl_names(ddl: str) -> list[str]:
 def _topk_sel(ids, sims, k: int, largest: bool):
     """Positions of the per-partition top-``k`` by (sim, id asc) —
     ``largest`` picks sim DESC (the cosine/dot rankings), else ASC
-    (distances). np.lexsort's last key is primary; equal sims
-    (including ±0.0, which compare equal) fall to the id key — exactly
-    the :func:`_rank_topk` merge ordering these partials feed."""
+    (distances). Only keys ≤ the k-th smallest (``np.partition``) can
+    be selected, so the (key, id) lexsort — np.lexsort's last key is
+    primary — runs on those alone; equal sims (including ±0.0, which
+    compare equal) fall to the id key, exactly the :func:`_rank_topk`
+    merge ordering these partials feed."""
     import numpy as np
 
     key = -sims if largest else sims
-    return np.lexsort((ids, key))[:k]
+    cand = np.arange(len(key))
+    if len(key) > k:
+        cand = np.nonzero(key <= np.partition(key, k - 1)[k - 1])[0]
+    return cand[np.lexsort((ids[cand], key[cand]))[:k]]
 
 
 def _nan_to_floor(a):

@@ -122,17 +122,10 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # no mapInArrow); larger corpora keep round 15's scatter-gather.
     # These rows supersede the round-15 entries of the same gates (ANN
     # top-k as scatter-gather, driver-side merge, LocalRelation
-    # results), which are live whenever these are. rrf_fused_topk fuses
-    # the brute and JL results; ann_eval_scorecard carries the IVF
-    # probe sweep (the former ann_ivf_probe_curve gate).
-    ("ann_brute_topk", 16),
-    ("ann_ivf_topk", 16),
+    # results), which are live whenever these are. The default-scan
+    # members' rows moved to round 19 below.
     ("ann_ivf_kmeans_topk", 16),
-    ("ann_lsh_topk", 16),
     ("ann_jl_topk", 16),
-    ("ann_hamming_topk", 16),
-    ("ann_eval_scorecard", 16),
-    ("rrf_fused_topk", 16),
     # round 17: one exact set-overlap path — one saturation guard, one
     # array-intersection verify and one MinHash band-candidate join for
     # the dedup/set-join operators; prefix_jaccard_pairs keys its tokens
@@ -149,11 +142,22 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("dedup_incremental_near", 17),
     ("fuzzy_join_even_odd", 17),
     ("split_leakage_pairs", 17),
-    # round 18: exact embedding dedup takes its placement from the one
-    # gather-or-scatter rule (_bcast.gathers): a broadcast-sized corpus
-    # is gathered once and scored against its broadcast matrix, no
-    # longer pinned to the blocked shuffle. Supersedes the round-14 row.
-    ("dedup_embedding", 18),
+    # round 19: a broadcast-sized Parquet corpus of float or double
+    # vectors is read on the driver from its files (_bcast.gather), not
+    # collected by a Spark job, for the default-scan ANN members and
+    # the exact embedding dedup's broadcast path; the top-k selection
+    # partitions before it sorts. Supersedes these gates' round-16 and
+    # round-18 rows (round 18: exact embedding dedup takes its placement
+    # from the one gather-or-scatter rule). rrf_fused_topk fuses the
+    # brute and JL results; ann_eval_scorecard carries the IVF probe
+    # sweep (the former ann_ivf_probe_curve gate).
+    ("ann_brute_topk", 19),
+    ("ann_ivf_topk", 19),
+    ("ann_lsh_topk", 19),
+    ("ann_hamming_topk", 19),
+    ("ann_eval_scorecard", 19),
+    ("rrf_fused_topk", 19),
+    ("dedup_embedding", 19),
 ]
 
 

@@ -149,3 +149,32 @@ def test_get_concept_map_after_warehouse(spark, concept_maps, tmp_path):
     elements = {e["code"] for g in row["group"] for e in g["element"]}
     assert elements == {"F", "f", "M", "m", "U"}
     spark.sql("DROP DATABASE IF EXISTS reassembly_cm CASCADE")
+
+
+def test_same_system_pair_groups_get_their_own_elements(spark):
+    """Two groups with the same (source, target) system pair — one with
+    an element, one with only an unmapped rule — re-assemble as they
+    were stored: the flat mapping rows go back to the first matching
+    group only."""
+    from bunsen_spark.operators.concept_maps import ConceptMaps
+
+    url = "urn:bunsen-spark:conceptmap:same_pair"
+    cm = ConceptMaps.empty(spark)._add_json(
+        {
+            "resourceType": "ConceptMap",
+            "url": url,
+            "version": "1",
+            "status": "draft",
+            "group": [
+                {
+                    "source": "sysA",
+                    "target": "sysB",
+                    "element": [{"code": "a", "target": [{"code": "b", "equivalence": "equivalent"}]}],
+                },
+                {"source": "sysA", "target": "sysB", "unmapped": {"mode": "provided"}},
+            ],
+        }
+    )
+    groups = cm.get_concept_map(url).select("group").collect()[0][0]
+    assert [[e.code for e in g.element or []] for g in groups] == [["a"], []]
+    assert groups[1].element is None  # stored without elements

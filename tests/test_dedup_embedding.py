@@ -1,8 +1,10 @@
 """Exact embedding near-dup pairs under both placements of the one
 gather-or-scatter rule (``_bcast.gathers``): the broadcast path (corpus
-gathered once, its matrix broadcast) and the blocked path (no driver
-collect) give the same pairs, the DuckDB twin's, and choosing between
-them runs no Spark job."""
+gathered once — read from its Parquet files, or by Spark — its matrix
+broadcast) and the blocked path (no driver collect) give the same
+pairs, the DuckDB twin's, and choosing between them runs no Spark job.
+The two placements are told apart by their plans: only the blocked
+path has an Exchange."""
 
 from __future__ import annotations
 
@@ -26,6 +28,12 @@ def _src(emb):
 def _gathers(emb):
     """The operator's placement decision for ``emb``."""
     return gathers(_src(emb), dedup.EMBEDDING_GATHER_MAX_BYTES)
+
+
+def _blocked(df) -> bool:
+    """Whether ``df`` is the blocked path's plan: its block-pair groups
+    are the only Exchange either placement has."""
+    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def _jobs(spark, build):
@@ -52,7 +60,8 @@ def _duckdb_pairs(path: str, threshold: float = 0.45):
 @pytest.fixture(scope="module")
 def corpora(tmp_path_factory):
     """Parquet paths of degenerate 8-d corpora: empty, one row, one
-    zero-norm vector among random ones, and all-identical vectors."""
+    zero-norm vector among random ones (stored as float and as
+    double), and all-identical vectors."""
     import random
 
     import pyarrow as pa
@@ -66,13 +75,15 @@ def corpora(tmp_path_factory):
         "zero_norm": [[0.0] * 8 if i == 7 else v for i, v in enumerate(rand)],
         "all_identical": [rand[0]] * 12,
     }
+    vecs["zero_norm_f64"] = vecs["zero_norm"]
     paths = {}
     for name, vs in vecs.items():
         path = str(tmp_path_factory.mktemp(name) / "embeddings.parquet")
+        elem = pa.float64() if name.endswith("_f64") else pa.float32()
         table = pa.table(
             {
                 "vec_id": pa.array(range(len(vs)), pa.int64()),
-                "embedding": pa.array(vs, pa.list_(pa.float32())),
+                "embedding": pa.array(vs, pa.list_(elem)),
             }
         )
         pq.write_table(table, path)
@@ -105,15 +116,18 @@ def test_blocked_single_block_degenerate(spark, sf_dir, scatter_gather):
 
 def test_placement_decision_runs_no_spark_job(spark, sf_dir, scatter_gather):
     """The decision reads plan statistics only: zero jobs to decide, zero
-    to build the blocked plan, and exactly the one gather job to build
-    the broadcast plan."""
+    to build the blocked plan, zero to build the broadcast plan of a
+    Parquet corpus (read from its files) and exactly the one gather job
+    for a corpus Spark gathers."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     assert _jobs(spark, lambda: _gathers(emb)) == (True, 0)
-    _, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
-    assert n == 1
+    df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    assert n == 0 and not _blocked(df)
+    df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb.where(F.col("vec_id") >= 0)))
+    assert n == 1 and not _blocked(df)
     with scatter_gather():
-        _, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
-    assert n == 0
+        df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    assert n == 0 and _blocked(df)
 
 
 def test_no_size_estimate_runs_blocked(spark, sf_dir):
@@ -124,24 +138,24 @@ def test_no_size_estimate_runs_blocked(spark, sf_dir):
     rdd_backed = spark.createDataFrame(emb.rdd, emb.schema)
     assert not _gathers(rdd_backed)
     df, n = _jobs(spark, lambda: embedding_near_dup_pairs(rdd_backed))
-    assert n == 0
+    assert n == 0 and _blocked(df)
     assert _pairs(df) == _pairs(embedding_near_dup_pairs(emb))
 
 
 def test_corpus_over_gather_cap_runs_blocked(spark, sf_dir, monkeypatch):
     """The operator places its corpus by ``EMBEDDING_GATHER_MAX_BYTES``:
-    one byte below the corpus's plan size it runs blocked (no job to
-    build), with the same pairs as the gathered run (one job)."""
+    at the corpus's plan size it is gathered, one byte below it runs
+    blocked, with the same pairs; neither runs a job to build."""
     from bunsen_spark.operators._bcast import plan_size_bytes
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     size = plan_size_bytes(_src(emb))
     monkeypatch.setattr(dedup, "EMBEDDING_GATHER_MAX_BYTES", size)
     broadcast, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
-    assert n == 1
+    assert n == 0 and not _blocked(broadcast)
     monkeypatch.setattr(dedup, "EMBEDDING_GATHER_MAX_BYTES", size - 1)
     blocked, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
-    assert n == 0
+    assert n == 0 and _blocked(blocked)
     assert _pairs(blocked) == _pairs(broadcast)
 
 
@@ -156,22 +170,29 @@ def test_corpus_over_threshold_runs_blocked(spark, sf_dir):
     try:
         assert not _gathers(emb)
         df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
-        assert n == 0
+        assert n == 0 and _blocked(df)
         assert _pairs(df) == want
     finally:
         spark.conf.set(key, before)
 
 
-@pytest.mark.parametrize("corpus", ["empty", "one_row", "zero_norm", "all_identical"])
+@pytest.mark.parametrize(
+    "corpus", ["empty", "one_row", "zero_norm", "zero_norm_f64", "all_identical"]
+)
 def test_placement_parity_degenerate(spark, scatter_gather, corpora, corpus):
-    """Both placements give the DuckDB twin's pairs on degenerate
-    corpora; a zero-norm vector matches nothing, and an all-identical
-    corpus gives every pair once."""
+    """Every placement gives the DuckDB twin's pairs on degenerate
+    corpora — the broadcast path over a corpus read from its Parquet
+    files or gathered by Spark, and the blocked path; a zero-norm
+    vector (stored as float or double) matches nothing, and an
+    all-identical corpus gives every pair once."""
     emb = spark.read.parquet(corpora[corpus])
     assert _gathers(emb)
     broadcast = _pairs(embedding_near_dup_pairs(emb))
+    spread = emb.repartition(3)
+    assert _gathers(spread)
+    gathered = _pairs(embedding_near_dup_pairs(spread))
     with scatter_gather():
-        blocked = _pairs(embedding_near_dup_pairs(emb.repartition(3), num_blocks=3))
-    assert broadcast == blocked == _duckdb_pairs(corpora[corpus])
+        blocked = _pairs(embedding_near_dup_pairs(spread, num_blocks=3))
+    assert broadcast == gathered == blocked == _duckdb_pairs(corpora[corpus])
     if corpus == "all_identical":
         assert len(blocked) == 12 * 11 // 2

@@ -151,6 +151,16 @@ _SINGLE_PATHS = {
         "globStatus outside persist.has_committed_batches; probe a batch_id-partitioned "
         "table with persist.has_committed_batches",
     ),
+    # a whole input comes to the driver through one gather, which reads
+    # a plain Parquet corpus without a job; the scatter side collects
+    # only its query rows and its top-k partials
+    "toArrow": (
+        {
+            "operators/_bcast.py": {"gather"},
+            "operators/similarity.py": {"_query_rows", "_topk_scan"},
+        },
+        "toArrow outside operators/_bcast.gather; gather a whole input with _bcast.gather",
+    ),
     # positional appends into the terminology warehouse, after its
     # (uri, version) check
     "insertInto": (
@@ -204,3 +214,10 @@ def test_one_probe_and_one_terminology_writer(attr):
     """The batch-table probe and the terminology warehouse writer each
     have one home."""
     _assert_single_path(attr)
+
+
+def test_one_whole_input_gather():
+    """Whole inputs come to the driver only through ``_bcast.gather``;
+    the ANN scatter side's query and partials collects are the other
+    ``toArrow()`` calls."""
+    _assert_single_path("toArrow")

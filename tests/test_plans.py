@@ -172,20 +172,28 @@ def test_brute_force_topk_two_jobs_no_shuffle(spark, sf_dir, scatter_gather):
     assert sum(st.shuffleWriteBytes() for st in run.stages) == 0
 
 
-def test_brute_force_topk_gathered_one_job(spark, sf_dir):
-    """A broadcast-sized corpus is gathered with one ``toArrow()`` and
-    scanned on the driver: one job, no MapInArrow node (no Python
-    worker), no shuffle, and a LocalRelation result."""
+def test_brute_force_topk_gathered_one_job(spark, sf_dir, tmp_path):
+    """A broadcast-sized corpus is gathered and scanned on the driver:
+    no MapInArrow node (no Python worker), no shuffle, and a
+    LocalRelation result. A Parquet corpus is read from its files, so
+    the search runs no job; the same corpus as JSON is gathered with
+    one ``toArrow()`` job, with the same rows."""
     from bunsen_spark.operators.similarity import brute_force_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    run = _executed(spark, lambda: brute_force_topk(emb, k=5, num_queries=8))
-    assert len(run.jobs) == 1, run.plans
-    assert not any("MapInArrow" in tree for tree, _ in run.plans), run.plans
-    assert not any("Exchange" in tree for tree, _ in run.plans), run.plans
-    assert sum(st.shuffleWriteBytes() for st in run.stages) == 0
-    plan = run.df._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.startswith("LocalRelation"), plan
+    emb.write.json(str(tmp_path / "json"))
+    as_json = spark.read.schema(emb.schema).json(str(tmp_path / "json"))
+    rows = []
+    for corpus, jobs in ((emb, 0), (as_json, 1)):
+        run = _executed(spark, lambda: brute_force_topk(corpus, k=5, num_queries=8))
+        assert len(run.jobs) == jobs, run.plans
+        assert not any("MapInArrow" in tree for tree, _ in run.plans), run.plans
+        assert not any("Exchange" in tree for tree, _ in run.plans), run.plans
+        assert sum(st.shuffleWriteBytes() for st in run.stages) == 0
+        plan = run.df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), plan
+        rows.append(sorted(map(tuple, run.df.collect())))
+    assert rows[0] == rows[1] and rows[0]
 
 
 def test_ann_members_gather_their_own_scan_input_once(spark, sf_dir):

@@ -250,8 +250,9 @@ def _twin(path, op, **kw):
     return sorted(con.execute(getattr(sim, f"{op.__name__}_sql")(**kw)).fetchall())
 
 
-def _corpus_path(tmp_path_factory, name: str, vecs) -> str:
-    """Parquet path of ``vecs`` as (vec_id, embedding array<float>)."""
+def _corpus_path(tmp_path_factory, name: str, vecs, elem: str = "float32") -> str:
+    """Parquet path of ``vecs`` as (vec_id, embedding array<elem>),
+    ``elem`` a pyarrow type name (float32 is Spark's float)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -259,24 +260,34 @@ def _corpus_path(tmp_path_factory, name: str, vecs) -> str:
     table = pa.table(
         {
             "vec_id": pa.array(range(len(vecs)), pa.int64()),
-            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "embedding": pa.array(vecs, pa.list_(getattr(pa, elem)())),
         }
     )
     pq.write_table(table, path)
     return path
 
 
-@pytest.fixture(scope="module")
-def zero_vector_corpus(tmp_path_factory):
-    """Parquet path of 200 random 64-d vectors, vector 150 all zeros."""
+def _zero_vector_vecs():
+    """200 random 64-d vectors, vector 150 all zeros."""
     import random
 
     rng = random.Random(7)
-    vecs = [
+    return [
         [0.0] * 64 if i == 150 else [rng.uniform(-1, 1) for _ in range(64)]
         for i in range(200)
     ]
-    return _corpus_path(tmp_path_factory, "zero_vec", vecs)
+
+
+@pytest.fixture(scope="module")
+def zero_vector_corpus(tmp_path_factory):
+    """Parquet path of :func:`_zero_vector_vecs` as floats."""
+    return _corpus_path(tmp_path_factory, "zero_vec", _zero_vector_vecs())
+
+
+@pytest.fixture(scope="module")
+def zero_vector_corpus_f64(tmp_path_factory):
+    """Parquet path of :func:`_zero_vector_vecs` as doubles."""
+    return _corpus_path(tmp_path_factory, "zero_vec_f64", _zero_vector_vecs(), "float64")
 
 
 @pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
@@ -380,6 +391,30 @@ def test_seq_dots_bit_identical_to_outer_product_loop():
         assert np.array_equal(got.view(np.int64), want.view(np.int64))
 
 
+def test_topk_sel_matches_full_lexsort():
+    """The partition-first ``_topk_sel`` picks the positions of the full
+    (key, id) lexsort: ties at the k-th key, ±0.0 (equal keys), both
+    directions, integer scores, and inputs of at most ``k`` rows."""
+    import numpy as np
+
+    def full(ids, sims, k, largest):
+        return np.lexsort((ids, -sims if largest else sims))[:k]
+
+    rng = np.random.default_rng(9)
+    for n in (0, 1, 4, 5, 6, 50, 400):
+        ids = rng.permutation(10 * n + 1)[:n].astype(np.int64)
+        cases = [
+            rng.choice([0.0, -0.0, 0.5, -0.5, 1.0, -1.0], n),
+            rng.uniform(-1, 1, n),
+            rng.integers(0, 4, n).astype(np.int64),
+        ]
+        for sims in cases:
+            for k in (1, 3, 5, 10):
+                for largest in (True, False):
+                    got = sim._topk_sel(ids, sims, k, largest)
+                    assert np.array_equal(got, full(ids, sims, k, largest)), (n, k, largest)
+
+
 @pytest.fixture(scope="module")
 def tiny_corpora(tmp_path_factory):
     """Parquet paths of a one-row and a two-row 64-d corpus."""
@@ -390,28 +425,136 @@ def tiny_corpora(tmp_path_factory):
     return {n: _corpus_path(tmp_path_factory, f"rows{n}", vecs[:n]) for n in (1, 2)}
 
 
-@pytest.mark.parametrize("corpus", ["tie", "zero_norm", "one_row", "two_rows"])
+def _direct(df) -> bool:
+    """Whether :func:`_bcast.gather` reads ``df`` from its Parquet
+    files (no job) rather than with ``toArrow()``."""
+    from bunsen_spark.operators._bcast import _parquet_columns
+
+    return _parquet_columns(df) is not None
+
+
+def _rows(df) -> list:
+    return sorted(map(tuple, df.collect()))
+
+
+def _jobs(spark, build):
+    """(``build()``, the number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"similarity_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("corpus", ["tie", "zero_norm", "zero_norm_f64", "one_row", "two_rows"])
 @pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
-def test_placement_parity(spark, scatter_gather, tie_corpus, zero_vector_corpus, tiny_corpora, op, corpus):
+def test_placement_parity(
+    spark, scatter_gather, tie_corpus, zero_vector_corpus, zero_vector_corpus_f64, tiny_corpora, op, corpus
+):
     """Every ``_topk_scan`` member returns identical rows whether the
-    corpus is gathered and scanned on the driver or scanned in
-    partitions and merged: on ties, a zero-norm vector, and corpora of
-    one row (the query is its only row) and two rows."""
+    corpus is gathered and scanned on the driver — read from its
+    Parquet files (the default-scan members) or gathered by Spark —
+    or scanned in partitions and merged: on ties, a zero-norm vector
+    stored as float and as double, and corpora of one row (the query
+    is its only row) and two rows."""
     path = {
         "tie": tie_corpus,
         "zero_norm": zero_vector_corpus,
+        "zero_norm_f64": zero_vector_corpus_f64,
         "one_row": tiny_corpora[1],
         "two_rows": tiny_corpora[2],
     }[corpus]
     emb = spark.read.parquet(path)
     assert gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
-    gathered = sorted(map(tuple, op(emb, k=5, num_queries=8).collect()))
+    assert _direct(sim._gather_input(emb, sim._corpus(emb)))
+    direct = _rows(op(emb, k=5, num_queries=8))
+    spread = emb.repartition(3)
+    assert gathers(sim._corpus(spread), sim.GATHER_MAX_BYTES)
+    assert not _direct(sim._gather_input(spread, sim._corpus(spread)))
+    gathered = _rows(op(spread, k=5, num_queries=8))
     with scatter_gather():
         assert not gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
-        scatter = sorted(map(tuple, op(emb.repartition(3), k=5, num_queries=8).collect()))
-    assert gathered == scatter
-    if corpus in ("tie", "zero_norm"):
-        assert gathered
+        scatter = _rows(op(spread, k=5, num_queries=8))
+    assert direct == gathered == scatter
+    if corpus in ("tie", "zero_norm", "zero_norm_f64"):
+        assert direct
+
+
+#: The members whose scan input is the default :func:`_corpus`, and the
+#: Spark jobs each runs besides the gather: the seeded IVF's centroid
+#: collect.
+_DEFAULT_SCAN_JOBS = {
+    sim.brute_force_topk: 0,
+    sim.ivf_topk: 1,
+    sim.ivf_probe_sweep: 1,
+    sim.lsh_topk: 0,
+    sim.hamming_rerank_topk: 0,
+}
+
+
+@pytest.mark.parametrize("stored", ["float32", "float64"])
+@pytest.mark.parametrize("op", list(_DEFAULT_SCAN_JOBS), ids=lambda op: op.__name__)
+def test_parquet_corpus_gathers_without_a_job(spark, tmp_path_factory, op, stored):
+    """A broadcast-sized Parquet corpus of floats or doubles is read on
+    the driver from its files: the search runs no gather job, and gives
+    the rows of the same corpus gathered by Spark (one more job)."""
+    vecs = _zero_vector_vecs()
+    emb = spark.read.parquet(_corpus_path(tmp_path_factory, f"direct_{stored}", vecs, stored))
+    direct, jobs = _jobs(spark, lambda: _rows(op(emb, k=5, num_queries=8)))
+    assert jobs == _DEFAULT_SCAN_JOBS[op]
+    filtered = emb.where(F.col("vec_id") >= 0)
+    gathered, spark_jobs = _jobs(spark, lambda: _rows(op(filtered, k=5, num_queries=8)))
+    assert spark_jobs == jobs + 1
+    assert direct == gathered and direct
+
+
+@pytest.fixture(scope="module")
+def ineligible_corpora(spark, tmp_path_factory):
+    """Broadcast-sized corpora that ``_bcast.gather`` must not read from
+    files — a partitioned Parquet directory, a filtered frame, a JSON
+    source, an integer-element Parquet corpus and a LocalRelation — each
+    with its (vec_id, embedding) rows."""
+    from bunsen_spark.localrel import values_df
+
+    vecs = [[round(x * 8) for x in v] for v in _zero_vector_vecs()]
+    ints = spark.read.parquet(_corpus_path(tmp_path_factory, "int_elems", vecs, "int32"))
+    floats = spark.read.parquet(_corpus_path(tmp_path_factory, "ineligible", _zero_vector_vecs()))
+    root = tmp_path_factory.mktemp("ineligible_out")
+    floats.withColumn("part", F.col("vec_id") % 2).write.partitionBy("part").parquet(str(root / "parted"))
+    floats.write.json(str(root / "json"))
+    return {
+        "partitioned": spark.read.parquet(str(root / "parted")).drop("part"),
+        "filtered": floats.where(F.col("vec_id") >= 0),
+        "json": spark.read.schema(floats.schema).json(str(root / "json")),
+        "int_elements": ints,
+        "local_relation": values_df(
+            spark, list(enumerate(_zero_vector_vecs())), "vec_id long, embedding array<double>"
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "corpus", ["partitioned", "filtered", "json", "int_elements", "local_relation"]
+)
+def test_ineligible_corpus_takes_spark_gather(spark, scatter_gather, ineligible_corpora, corpus):
+    """A corpus whose plan is not only columns of plain local Parquet
+    files, or whose elements are not float or double, is gathered by
+    Spark: the search runs its one ``toArrow()`` job, with the rows of
+    scatter-gather."""
+    emb = ineligible_corpora[corpus]
+    assert gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
+    assert not _direct(sim._gather_input(emb, sim._corpus(emb)))
+    gathered, jobs = _jobs(spark, lambda: _rows(sim.brute_force_topk(emb, k=5, num_queries=8)))
+    assert jobs == 1
+    with scatter_gather():
+        scatter = _rows(sim.brute_force_topk(emb, k=5, num_queries=8))
+    assert gathered == scatter and gathered
 
 
 @pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
@@ -453,11 +596,53 @@ def test_gathers_rule(spark, sf_dir):
         spark.conf.set(key, before)
 
 
-@pytest.mark.parametrize("cap_offset,jobs", [(0, 1), (-1, 2)])
+def test_gather_checks_every_file(spark, tmp_path):
+    """A Parquet directory whose files disagree with Spark's schema — one
+    stores ``vec_id`` as int32, which Spark reads as a long — is
+    gathered by Spark, not read from its files: one job, and the rows
+    of ``toArrow()``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bunsen_spark.operators._bcast import gather
+
+    vecs = _zero_vector_vecs()
+    for part, (ids, typ) in enumerate(((range(0, 100), pa.int64()), (range(100, 200), pa.int32()))):
+        table = pa.table(
+            {
+                "vec_id": pa.array(ids, typ),
+                "embedding": pa.array([vecs[i] for i in ids], pa.list_(pa.float32())),
+            }
+        )
+        pq.write_table(table, str(tmp_path / f"part-{part}.parquet"))
+    emb = spark.read.schema("vec_id long, embedding array<float>").parquet(str(tmp_path))
+    assert _direct(emb)
+    got, jobs = _jobs(spark, lambda: gather(emb))
+    assert jobs == 1
+    key = lambda r: r["vec_id"]  # noqa: E731
+    assert sorted(got.to_pylist(), key=key) == sorted(emb.toArrow().to_pylist(), key=key)
+
+
+def test_gather_needs_columns_matched_by_name(spark, zero_vector_corpus):
+    """Spark reading Parquet columns by field id rather than by name is
+    a read the files alone cannot reproduce: such a corpus is gathered
+    by Spark."""
+    key = "spark.sql.parquet.fieldId.read.enabled"
+    emb = spark.read.parquet(zero_vector_corpus)
+    assert _direct(emb)
+    spark.conf.set(key, "true")
+    try:
+        assert not _direct(emb)
+    finally:
+        spark.conf.unset(key)
+
+
+@pytest.mark.parametrize("cap_offset,jobs", [(0, 0), (-1, 2)])
 def test_search_obeys_gather_max_bytes(spark, sf_dir, monkeypatch, cap_offset, jobs):
     """The searches place their scan by ``sim.GATHER_MAX_BYTES``: with
-    the cap at the corpus's plan size it is gathered (one job), one byte
-    below it the search scatters (the query collect, then the scan)."""
+    the cap at the corpus's plan size it is gathered (read from its
+    Parquet file: no job), one byte below it the search scatters (the
+    query collect, then the scan)."""
     import uuid
 
     from bunsen_spark.operators._bcast import plan_size_bytes

@@ -102,3 +102,29 @@ def test_get_value_set_reassembles_nested_resource(spark, valuesets):
         return d
 
     assert norm(got, False) == norm(want, True)
+
+
+def test_same_system_includes_get_their_own_concepts(spark):
+    """Two includes with the same (system, version) — one with a
+    concept, one filter-only — re-assemble as they were stored: the
+    flat value rows go back to the first matching include only."""
+    from bunsen_spark.operators.value_sets import ValueSets
+
+    url = "urn:bunsen-spark:valueset:same_system"
+    vs = ValueSets.empty(spark)._add_json(
+        {
+            "resourceType": "ValueSet",
+            "url": url,
+            "version": "1",
+            "status": "draft",
+            "compose": {
+                "include": [
+                    {"system": "sysA", "concept": [{"code": "a"}]},
+                    {"system": "sysA", "filter": [{"property": "concept", "op": "is-a", "value": "a"}]},
+                ]
+            },
+        }
+    )
+    row = vs.get_value_set(url).select("compose.include").collect()[0][0]
+    assert [[c.code for c in i.concept or []] for i in row] == [["a"], []]
+    assert row[1].concept is None  # stored without concepts
