@@ -3,31 +3,32 @@ brute-force cosine top-k as the exact baseline, and approximate
 variants (IVF, LSH, JL projection, Hamming rerank, PQ) as the scale
 path.
 
-Beyond-reference scale extension (SURVEY §7 M7). The top-k searches
-run ONE partition-local top-k kernel (:func:`_topk_scan`; numpy,
-strict left-to-right dot products for bit-parity with the DuckDB
-twins) and merge its partials on the driver (REPOSE's
+Beyond-reference scale extension (SURVEY §7 M7). Every top-k member
+outside the PQ/IVF-PQ code-join family runs ONE partition-local top-k
+kernel (:func:`_topk_scan`; numpy, strict left-to-right dot products
+and a HALF_UP lattice for bit-parity with the DuckDB twins) and merges
+its partials on the driver (:func:`_rank_topk`, REPOSE's
 prune-locally-then-merge shape); the result is a LocalRelation. Where
-the kernel runs is decided once per search (:func:`_bcast.gathers`):
+the kernel runs is decided once per search (:func:`_scan_input`):
 
 - **gathered**: a scan input no larger than
   ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark would
   broadcast) and :data:`GATHER_MAX_BYTES` (the measured point where
   the one-thread driver kernel stops beating parallel tasks) is
-  brought to the driver by :func:`_bcast.gather`; the queries are
-  filtered from that table and the kernel runs over its batches on
-  the driver, with no Python worker. A Parquet corpus of float or
-  double vectors is read from its files, so the default-scan members
-  (brute force, seeded IVF, the probe sweep, LSH, Hamming) run no
-  gather job (brute force, LSH and Hamming run none at all); other
-  inputs, and the lattice scans of JL and trained IVF, are collected
-  with one ``toArrow()`` job.
+  brought to the driver by :func:`_bcast.gather`; the queries, the
+  seeded IVF's centroids and the label centroids come from that table
+  and the kernel runs over its batches on the driver, with no Python
+  worker. A Parquet corpus of float or double vectors (a ``label``
+  column carried beside it) is read from its files, so these members
+  run no job (trained IVF: only its codebook training's); other inputs
+  are collected with one ``toArrow()`` job.
 - **scatter-gather**: otherwise the query set (small by construction)
   is collected and carried in the task closure, each corpus partition
   is scored in ONE ``mapInArrow`` pass emitting only its top-k per
   query, and those ≤ partitions × queries × k partial rows are
-  collected. Two jobs (queries, scan); the corpus is never joined or
-  shuffled.
+  collected. Two jobs (queries, scan; the label centroids' partial
+  sums take the place of the queries), and one more for the seeded
+  IVF's centroid pick; the corpus is never joined or shuffled.
 - **LSH top-k**: each vector gets a ``NUM_PLANES``-bit bucket from the
   signs of dot products with fixed pseudo-random hyperplanes; bucket
   bits are split into bands, candidates must share a band value with
@@ -48,7 +49,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ._bcast import gather, gathers
-from .text_analysis import md5int_sql
+from .text_analysis import md5int, md5int_py, md5int_sql
 from ..localrel import arrow_schema, values_df
 from ..persist import has_committed_batches, materialize
 
@@ -61,10 +62,7 @@ BAND_BITS = NUM_PLANES // LSH_BANDS
 def _plane_weight(p: int, d: int) -> float:
     """Deterministic pseudo-random weight in [-1, 1] for plane ``p``,
     dim ``d`` — the md5int of ``"plane<p>_<d>"`` reduced mod 2001."""
-    import hashlib
-
-    h = int(hashlib.md5(f"plane{p}_{d}".encode()).hexdigest()[:13], 16)
-    return ((h % 2001) - 1000) / 1000.0
+    return ((md5int_py(f"plane{p}_{d}") % 2001) - 1000) / 1000.0
 
 
 PLANES: list[list[float]] = [
@@ -78,47 +76,11 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-#: (applicationId, plan semanticHash) -> scan partition count, so
-#: repeated _spread calls on the same logical plan (ivf_kmeans_topk
-#: builds its base four times) pay the df.rdd physical-planning probe
-#: ONCE (ADVICE r6). Keyed on the SparkContext applicationId — stable
-#: and unique per application — not ``id(session)``, whose CPython
-#: address can be REUSED by a new session after the old one is
-#: garbage-collected and silently serve stale counts (ADVICE r7).
-#: Bounded; cleared wholesale when full.
-_SPREAD_CACHE: dict[tuple[str, int], int] = {}
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Fan a narrow scan out to the session's parallelism before
-    per-vector scoring. A small local fixture reads as ONE parquet
-    row-group -> one partition, which serializes every cosine /
-    higher-order-function evaluation on a single core (measured: the
-    whole Lloyd training of ``kmeans_codebook`` ran single-threaded at
-    sf0.1). A cluster-scale table already scans as hundreds of
-    partitions, where the job-free partition-count guard makes this a
-    no-op — no corpus shuffle is ever added at scale. The partition
-    probe (``df.rdd`` forces physical planning, no job) is memoized per
-    logical plan via ``semanticHash``."""
-    sc = df.sparkSession.sparkContext
-    target = min(sc.defaultParallelism, 32)
-    key = (sc.applicationId, df.semanticHash())
-    n = _SPREAD_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if len(_SPREAD_CACHE) >= 256:
-            _SPREAD_CACHE.clear()
-        _SPREAD_CACHE[key] = n
-    if n < target:
-        return df.repartition(target)
-    return df
-
-
-def _corpus(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, v array<double>): a scan's input at its natural
-    partitioning (numpy consumers need no :func:`_spread`)."""
+def _corpus(embeddings: DataFrame, *carry: str) -> DataFrame:
+    """(vec_id, v array<double>, *carry): a scan's input at its natural
+    partitioning, with the ``carry`` columns (a ``label``) uncast."""
     return embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"), *carry
     )
 
 
@@ -200,14 +162,16 @@ def ivf_topk(
     assignment/probe plan.
 
     One :func:`_topk_scan` corpus pass (see :func:`_ivf_scan`): the
-    centroids ride in the task closure, the pass assigns cells and
-    scores only the probed candidates in numpy (n_centroids/n_probe
-    fewer cosines than brute force), emitting partition-local top-k
-    partials that :func:`_rank_topk` merges on the driver; candidate
-    sims are :func:`_cosine`."""
+    centroids are picked from the same scan input (on the driver when
+    it is gathered, so a Parquet corpus runs no job) and ride in the
+    scorer, the pass assigns cells and scores only the probed
+    candidates in numpy (n_centroids/n_probe fewer cosines than brute
+    force), emitting partition-local top-k partials that
+    :func:`_rank_topk` merges on the driver; candidate sims are
+    :func:`_cosine`."""
 
     def build(q: _Queries, corpus):
-        return _rank_topk(_ivf_scan(embeddings, corpus, q, k, n_centroids, (n_probe,)), k)
+        return _rank_topk(_ivf_scan(corpus, q, k, n_centroids, (n_probe,)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -225,43 +189,55 @@ def _codebook_rows(cents: DataFrame) -> list:
     )
 
 
-def _ivf_probe_lists(cents: list, vecs: list, norms: list, max_p: int) -> list:
+def _ivf_probe_lists(cents: list, vecs, norms, max_p: int) -> list:
     """Per query vector, the top-``max_p`` probed cells as a list of
     (centroid INDEX into the cid-ascending ``cents``, probe_rn) — the
     former ``slice(array_sort(struct(negsim, cid)), 1, n_probe)``:
-    csim DESC then cid ASC, ±0.0 comparing equal (Python float ==,
-    matching Spark's normalized struct order)."""
-    out = []
-    for qv, qnorm in zip(vecs, norms):
-        scored = sorted(
-            (
-                (-(_py_seq_dot(qv, cv) / (qnorm * cnorm)), cid, idx)
-                for idx, (cid, cv, cnorm) in enumerate(cents)
-            ),
-        )
-        out.append([(idx, rn + 1) for rn, (_, _, idx) in enumerate(scored[:max_p])])
-    return out
+    :func:`_cos_csim` DESC, then cid ASC by a stable sort of the
+    cid-ascending cells, ±0.0 comparing equal, and a zero query's 0/0
+    cosines -1.0 (:func:`_nan_to_floor`), as in the DuckDB twins."""
+    import numpy as np
+
+    c_mat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
+    cnorms = np.asarray([cn for _, _, cn in cents], dtype=np.float64)
+    with np.errstate(invalid="ignore"):
+        csim = _cos_csim(np.asarray(vecs, dtype=np.float64), np.asarray(norms), c_mat, cnorms)
+    order = np.argsort(-_nan_to_floor(csim), axis=1, kind="stable")[:, :max_p]
+    return [[(int(idx), rn + 1) for rn, idx in enumerate(row)] for row in order]
 
 
-def _ivf_scan(
-    embeddings: DataFrame, corpus, q: _Queries, k: int, n_centroids: int, probes
-):
+def _seeded_codebook(scan, n: int) -> list:
+    """The seeded IVF's coarse quantizer as :func:`_codebook_rows`
+    gives a codebook: the ``n`` rows of the scan input with the smallest
+    (md5int(vec_id), vec_id), ascending by cid, each cnorm the
+    :func:`_seq_norms` value (``_with_norm``'s, bit for bit). Picked on
+    the driver from a gathered table; a frame runs one
+    ``orderBy().limit()`` job, the scatter side's."""
+    import numpy as np
+
+    if isinstance(scan, DataFrame):
+        ordered = scan.orderBy(md5int(F.col("vec_id").cast("string")), "vec_id")
+        seeds = [(r.vec_id, r.v) for r in ordered.limit(n).select("vec_id", "v").collect()]
+    else:
+        ids = scan["vec_id"].to_numpy()
+        h = np.fromiter((md5int_py(str(i)) for i in ids.tolist()), np.int64, len(ids))
+        top = scan.take(np.lexsort((ids, h))[:n])
+        seeds = zip(top["vec_id"].to_pylist(), top["v"].to_pylist())
+    seeds = sorted(seeds, key=lambda t: t[0])
+    mat = np.asarray([v for _, v in seeds], dtype=np.float64)
+    return [
+        (int(cid), [float(x) for x in cv], float(cnorm))
+        for (cid, _), cv, cnorm in zip(seeds, mat, _seq_norms(mat))
+    ]
+
+
+def _ivf_scan(corpus, q: _Queries, k: int, n_centroids: int, probes):
     """The :func:`_topk_scan` partials over ``corpus`` (query_id,
     neighbor_id, sim, probe_rn) of the md5-seeded IVF at every probe
-    level in ``probes``. The ``n_centroids`` corpus vectors with the
-    smallest md5(vec_id) are collected with their Spark-computed
-    cnorms; the query probe lists are derived driver-side with the
+    level in ``probes``, over the :func:`_seeded_codebook` of the same
+    scan input; the query probe lists are derived driver-side with the
     identical float arithmetic."""
-    from .text_analysis import md5int
-
-    seeded = (
-        _with_norm(embeddings)
-        .withColumn("h", md5int(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(n_centroids)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"), F.col("norm").alias("cnorm"))
-    )
-    cents = _codebook_rows(seeded)
+    cents = _seeded_codebook(corpus, n_centroids)
     probe_lists = _ivf_probe_lists(cents, q.vecs, q.norms, max(probes))
     return _topk_scan(
         corpus,
@@ -299,7 +275,7 @@ def ivf_probe_sweep(
         import numpy as np
         import pyarrow as pa
 
-        cand = _ivf_scan(embeddings, corpus, q, k, n_centroids, probes)
+        cand = _ivf_scan(corpus, q, k, n_centroids, probes)
         prn = cand["probe_rn"].to_numpy()
         levels = []
         for p in probes:
@@ -383,25 +359,21 @@ def kmeans_codebook(
 
     Seeding is the deterministic md5-min pick (engine-portable);
     each refinement assigns every vector to its max-cosine centroid
-    (broadcast join — centroids are tiny) and recomputes centroids as
-    element-wise means via ``posexplode`` + a map-side-combined
-    aggregation — the shuffle per iteration is partitions × centroids
-    × dim partial sums, NOT the corpus. The whole training is one
-    declarative plan (no driver collect between iterations); at much
-    deeper iteration counts, localCheckpoint per iteration is the
-    drop-in lineage cut. Centroids that lose all members drop out
-    (standard Lloyd behavior, mirrored by the oracle).
+    (the centroids ride in the task closure) and recomputes centroids
+    as element-wise means of per-batch partial sums, combined by one
+    map-side-combined aggregation — the shuffle per iteration is
+    partitions × centroids × dim partial sums, NOT the corpus — and
+    collected as driver data for the next round. Centroids that lose
+    all members drop out (standard Lloyd behavior, mirrored by the
+    oracle).
 
     Assignment ranks are cosine comparisons, so they are reproducible
     across engines on the quantized integral vectors; the means are
     exact integer-sum averages (see :func:`_quantized`)."""
     # the quantized corpus is re-read by every Lloyd iteration's
-    # assignment pass; spread it across cores and materialize it once
-    # (state: id + int vector)
-    # numpy consumer: natural partitioning, no _spread (see pq_codebooks)
+    # assignment pass: materialize it once (state: id + int vector), at
+    # its natural partitioning (see pq_codebooks)
     base = _quantized(embeddings).transform(materialize)
-    from .text_analysis import md5int
-
     seed_rows = (
         base.withColumn("h", md5int(F.col("vec_id").cast("string")))
         .orderBy("h", "vec_id")
@@ -494,24 +466,25 @@ def ivf_kmeans_topk(
     centroids on the quantized vectors; final ranking among candidates
     is exact cosine on the original vectors.
 
-    One :func:`_topk_scan` corpus pass (the seeded-IVF scan of
-    :func:`ivf_topk` over the trained codebook): the LocalRelation
-    codebook collects driver-only, query probe lists derive
-    driver-side with the identical quantized-cosine arithmetic (HALF_UP
-    lattice, struct ordering via Python tuple compare), and the pass
-    assigns cells on the quantized columns while scoring probed
+    One :func:`_topk_scan` pass over the default corpus scan (the
+    seeded-IVF scan of :func:`ivf_topk` over the trained codebook): the
+    LocalRelation codebook collects driver-only, query probe lists
+    derive driver-side with the identical quantized-cosine arithmetic
+    (HALF_UP lattice, struct ordering via Python tuple compare), and
+    the pass assigns cells on each batch's lattice while scoring probed
     candidates on the raw vectors — partition-local top-k partials that
-    :func:`_rank_topk` merges on the driver."""
+    :func:`_rank_topk` merges on the driver. Besides the training, a
+    Parquet corpus runs no job."""
 
-    def build(q: _Queries, scan):
+    def build(q: _Queries, corpus):
+        import numpy as np
+
         cents = _codebook_rows(kmeans_codebook(embeddings, n_centroids, n_iters))
         # probe lists on the QUANTIZED lattice (the assignment geometry)
-        lattice = [[_round_half_up(x * KMEANS_QUANT) for x in v] for v in q.vecs]
-        probe_lists = _ivf_probe_lists(
-            cents, lattice, [_py_norm(v) for v in lattice], n_probe
-        )
+        lattice = _round_half_up(np.asarray(q.vecs, dtype=np.float64) * KMEANS_QUANT)
+        probe_lists = _ivf_probe_lists(cents, lattice, _seq_norms(lattice), n_probe)
         partials = _topk_scan(
-            scan,
+            corpus,
             q,
             k,
             _ivf_scorer(cents, q, probe_lists, (n_probe,), quantized=True),
@@ -519,9 +492,7 @@ def ivf_kmeans_topk(
         )
         return _rank_topk(partials, k)
 
-    return _with_queries(
-        embeddings, num_queries, _TOPK_DDL, build, _with_lattice(_corpus(embeddings))
-    )
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
 def _kmeans_cte_parts(
@@ -600,7 +571,7 @@ def semantic_dedup(
     single cid is still one task)."""
     # the trained codebook is a local relation (r14) — no materialize
     cents = kmeans_codebook(embeddings, n_centroids, n_iters)
-    src = _with_lattice(_with_norm(embeddings))  # numpy consumer: no _spread
+    src = _with_lattice(_with_norm(embeddings))
     assigned = _kmeans_assign(src, cents, "v array<double>, norm double")
     return assigned.groupBy("cid").applyInArrow(
         _dominance_fn(threshold), "vec_id long, keep_id long, n_dupes long"
@@ -993,18 +964,24 @@ def _d2(a: Column, b: Column) -> Column:
 #   one IEEE multiply + divide for the norm step; argmax first-occurrence
 #   over cid-ascending rows == max(struct(csim, -cid, cid)).
 # - centroid updates: sums are exact integers; the mean is the identical
-#   single IEEE division; _pq_train's lattice rounding uses
-#   decimal.Decimal(float) (exact binary expansion) with ROUND_HALF_UP —
-#   Java BigDecimal HALF_UP semantics, divergence-free in the quantized
-#   value range (halves are exactly representable far beyond it).
+#   single IEEE division; lattice rounding (_pq_train's means, the JL,
+#   trained-IVF and label-centroid lattices) is _round_half_up: an exact
+#   fraction test, Spark round()'s HALF_UP bit for bit.
 # ---------------------------------------------------------------------------
 
 
-def _round_half_up(x: float) -> float:
-    """Spark/DuckDB ``round(x)`` for doubles: HALF_UP (away from zero)."""
-    from decimal import ROUND_HALF_UP, Decimal
+def _round_half_up(x):
+    """Spark's ``round(x, 0)`` on doubles (DuckDB's ``round(x)``),
+    elementwise over a float or a float64 array, bit for bit: HALF_UP,
+    halves away from zero. ``x - trunc(x)`` is exact, so the half test
+    sees the true fraction (0.49999999999999994 rounds to 0, where
+    ``floor(x + 0.5)`` gives 1); NaN and ±inf pass through, and the
+    final ``+ 0.0`` turns a -0.0 into Spark's 0.0."""
+    import numpy as np
 
-    return float(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+    t = np.trunc(x)
+    with np.errstate(invalid="ignore"):  # inf - inf: inf passes through
+        return t + np.copysign(np.abs(x - t) >= 0.5, x) + 0.0
 
 
 def _batch_mat(batch, name: str, dim: int, dtype: str = "float64"):
@@ -1150,20 +1127,16 @@ def _py_seq_dot(a, b) -> float:
     return acc
 
 
-def _py_norm(v) -> float:
-    """Driver-side :func:`_seq_norms` for one vector."""
-    import math
-
-    return math.sqrt(_py_seq_dot(v, v))
-
-
 class _Queries(NamedTuple):
-    """The ANN query rows as driver data, ascending by vec_id, each
-    with its :func:`_py_norm`."""
+    """The ANN queries as driver data, ascending by id: query rows of
+    the scan input, their :func:`_seq_norms`, and ``rows``, their
+    Arrow table with every scan column (a carried ``label``); or other
+    query vectors (the label centroids), with no rows."""
 
     ids: list[int]
     vecs: list[list[float]]
-    norms: list[float]
+    norms: object
+    rows: object = None
 
 
 #: The largest scan input (optimized-plan ``sizeInBytes``) an ANN search
@@ -1179,27 +1152,15 @@ class _Queries(NamedTuple):
 GATHER_MAX_BYTES = 16 * 1024 * 1024
 
 
-def _with_queries(
-    embeddings: DataFrame, num_queries: int, out_ddl: str, build, scan: DataFrame | None = None
-):
-    """The ANN family's driver step, and its one placement decision
-    (:func:`_bcast.gathers` with :data:`GATHER_MAX_BYTES` on the
-    member's scan input ``scan``, by default :func:`_corpus`; it
-    carries ``vec_id``, and ``v`` at least on the query rows): call
-    ``build(q, scan)`` for the query rows' (vec_id < ``num_queries``)
-    :class:`_Queries`, and return its Arrow table's
-    ``out_ddl`` columns as a LocalRelation (collecting the result
-    launches no job).
-
-    - A ``scan`` that the rule accepts is brought to the driver with
-      :func:`_bcast.gather` and passed on as that Arrow table: the
-      queries are filtered from it and :func:`_topk_scan` runs on the
-      driver. The default scan is gathered from :func:`_gather_input`,
-      so a Parquet corpus of float or double vectors is read from its
-      files and the search runs no job; any other scan input runs one.
-    - Otherwise ``scan`` stays a frame and the query set — ≤32 rows by
-      construction — is collected (:func:`_query_rows`) so the scan
-      can carry it in its task closure: two jobs.
+def _with_queries(embeddings: DataFrame, num_queries: int, out_ddl: str, build, carry=()):
+    """The ANN family's driver step: call ``build(q, scan)`` for the
+    :class:`_Queries` of the query rows (vec_id < ``num_queries``) of
+    the :func:`_scan_input` ``scan``, and return its result — an Arrow
+    table with the ``out_ddl`` columns, or tuples in their order — as a
+    LocalRelation (collecting the result launches no job). The query
+    rows are filtered on the driver from a gathered scan input, or
+    collected from a scattered one — ≤32 rows by construction — so the
+    scan can carry them in its task closure: two jobs.
 
     All give the same rows. No query rows gives an empty ``out_ddl``
     frame, built on the driver without calling ``build``;
@@ -1207,44 +1168,62 @@ def _with_queries(
     spark = embeddings.sparkSession
     if num_queries <= 0:
         return values_df(spark, [], out_ddl)
-    default = scan is None
-    scan = _corpus(embeddings) if default else scan
-    if gathers(scan, GATHER_MAX_BYTES):
-        scan = gather(_gather_input(embeddings, scan) if default else scan)
+    scan = _scan_input(embeddings, carry)
     rows = _query_rows(scan, num_queries)
     if not rows.num_rows:
         return values_df(spark, [], out_ddl)
-    pairs = sorted(zip(rows["vec_id"].to_pylist(), rows["v"].to_pylist()))
-    vecs = [v for _, v in pairs]
-    q = _Queries([i for i, _ in pairs], vecs, [_py_norm(v) for v in vecs])
+    import numpy as np
+
+    rows = rows.sort_by("vec_id")
+    vecs = rows["v"].to_pylist()
+    norms = _seq_norms(np.asarray(vecs, dtype=np.float64))
+    q = _Queries(rows["vec_id"].to_pylist(), vecs, norms, rows)
     top = build(q, scan)
-    return values_df(spark, top.select(_ddl_names(out_ddl)), out_ddl)
+    if not isinstance(top, list):
+        top = top.select(_ddl_names(out_ddl))
+    return values_df(spark, top, out_ddl)
+
+
+def _scan_input(embeddings: DataFrame, carry=()):
+    """The ANN family's one placement decision (:func:`_bcast.gathers`
+    with :data:`GATHER_MAX_BYTES`) on its scan input, the
+    :func:`_corpus` of ``embeddings`` with the ``carry`` columns: one
+    the rule accepts is brought to the driver with
+    :func:`_bcast.gather` from :func:`_gather_input` and returned as
+    that Arrow table, where :func:`_topk_scan` runs — a Parquet corpus
+    of float or double vectors is read from its files, no job; any
+    other input runs one. Otherwise the frame is returned, for a
+    scatter-gather scan."""
+    scan = _corpus(embeddings, *carry)
+    if gathers(scan, GATHER_MAX_BYTES):
+        return gather(_gather_input(embeddings, scan))
+    return scan
 
 
 def _gather_input(embeddings: DataFrame, corpus: DataFrame) -> DataFrame:
     """What a gather of the cast ``corpus`` (:func:`_corpus` of
     ``embeddings``) reads: for float or double elements, the uncast
-    ``(vec_id, embedding AS v)`` projection — a plain column read,
-    which :func:`_bcast.gather` serves from a Parquet corpus's files
-    without a job; :func:`_batch_mat` and ``to_pylist`` widen float32
-    to exactly the doubles Spark's cast gives. Other element types
-    keep the cast ``corpus``."""
+    ``(vec_id, embedding AS v)`` projection with ``corpus``'s carried
+    columns — a plain column read, which :func:`_bcast.gather` serves
+    from a Parquet corpus's files without a job; :func:`_batch_mat` and
+    ``to_pylist`` widen float32 to exactly the doubles Spark's cast
+    gives. Other element types keep the cast ``corpus``."""
     from pyspark.sql.types import DoubleType, FloatType
 
     if isinstance(embeddings.schema["embedding"].dataType.elementType, (FloatType, DoubleType)):
-        return embeddings.select("vec_id", F.col("embedding").alias("v"))
+        return embeddings.select("vec_id", F.col("embedding").alias("v"), *corpus.columns[2:])
     return corpus
 
 
 def _query_rows(scan, num_queries: int):
-    """The (vec_id, v) rows with vec_id < ``num_queries`` of a scan
-    input, as an Arrow table: filtered on the driver from a gathered
+    """The rows with vec_id < ``num_queries`` of a scan input, every
+    column, as an Arrow table: filtered on the driver from a gathered
     table, or collected from a frame with one ``toArrow()`` — the
     scatter side's query collect."""
     import pyarrow.compute as pc
 
     if isinstance(scan, DataFrame):
-        return scan.where(F.col("vec_id") < num_queries).select("vec_id", "v").toArrow()
+        return scan.where(F.col("vec_id") < num_queries).toArrow()
     return scan.filter(pc.less(scan["vec_id"], num_queries))
 
 
@@ -1288,7 +1267,7 @@ def _no_extra(sel) -> tuple:
 
 
 def _topk_scan(
-    corpus, q: _Queries, k: int, score, cols: str = "sim double", largest: bool = True
+    corpus, q: _Queries, k: int, score, cols="sim double", largest=True, carry=(), drop_own=True
 ):
     """The ANN family's top-k scan kernel: ONE vectorized corpus pass
     emitting, per batch and query, the top-``k`` rows (query_id,
@@ -1314,13 +1293,15 @@ def _topk_scan(
     selected positions ``sel`` into ``pos``, computed for those only.
 
     The kernel owns the rest: the vec_id decode, dropping the query's
-    own row, mapping NaN to -1.0 in every float column before selecting
-    and emitting (:func:`_nan_to_floor`, so a zero vector ranks as in
-    the DuckDB twins whatever the partitioning), the (score, id)
-    selection (:func:`_topk_sel`, score DESC when ``largest``) and the
-    record batch."""
+    own row (unless not ``drop_own``: queries that are not corpus rows),
+    mapping NaN to -1.0 in every float column before selecting and
+    emitting (:func:`_nan_to_floor`, so a zero vector ranks as in the
+    DuckDB twins whatever the partitioning), the (score, id) selection
+    (:func:`_topk_sel`, score DESC when ``largest``), the selected rows'
+    ``carry`` columns, taken from the batch as they are (a NULL label
+    stays NULL), and the record batch."""
     qids = q.ids
-    names = ["query_id", "neighbor_id", *_ddl_names(cols)]
+    names = ["query_id", "neighbor_id", *_ddl_names(cols), *carry]
 
     def fn(batches):
         import numpy as np
@@ -1330,11 +1311,11 @@ def _topk_scan(
             if not batch.num_rows:
                 continue
             ids = _batch_np(batch, "vec_id")
-            out = []
+            out, taken = [], []
             for qid, (pos, scores, levels, extra) in zip(qids, score(batch)):
                 nbr = ids[pos]
                 scores = _nan_to_floor(scores)
-                own = nbr != qid
+                own = nbr != qid if drop_own else np.ones(len(nbr), dtype=bool)
                 picked = []
                 for lv in levels:
                     cand = np.nonzero(lv & own)[0]
@@ -1344,19 +1325,27 @@ def _topk_scan(
                     [np.full(len(sel), qid, dtype=np.int64), nbr[sel], scores[sel]]
                     + [_nan_to_floor(x) for x in extra(sel)]
                 )
-            yield pa.record_batch(
-                [pa.array(np.concatenate(c)) for c in zip(*out)], names=names
-            )
+                if carry:
+                    taken.append(np.arange(batch.num_rows)[pos][sel])
+            arrays = [pa.array(np.concatenate(c)) for c in zip(*out)]
+            if carry:
+                rows = pa.array(np.concatenate(taken))
+                arrays += [batch.column(batch.schema.get_field_index(c)).take(rows) for c in carry]
+            yield pa.record_batch(arrays, names=names)
 
     ddl = f"query_id long, neighbor_id long, {cols}"
     if isinstance(corpus, DataFrame):
+        ddl += "".join(f", {c} {corpus.schema[c].dataType.simpleString()}" for c in carry)
         return corpus.mapInArrow(fn, ddl).toArrow()
     import numpy as np
     import pyarrow as pa
 
+    schema = arrow_schema(ddl)
+    for c in carry:
+        schema = schema.append(pa.field(c, corpus.schema.field(c).type))
     # a zero-norm row's 0/0 cosine is expected (mapped to -1.0 above)
     with np.errstate(invalid="ignore"):
-        return pa.Table.from_batches(fn(corpus.to_batches()), arrow_schema(ddl))
+        return pa.Table.from_batches(fn(corpus.to_batches()), schema)
 
 
 def _rank_topk(partials, k: int, score: str = "sim", largest: bool = True, rank: str = "rank"):
@@ -1421,8 +1410,9 @@ def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: 
     level (probe_rn ≤ p) and the extra ``probe_rn`` column. A row's
     cell is its max-cosine centroid of the cid-ascending ``cents``
     (argmax first occurrence == the former ``array_min(struct(negsim,
-    cid))``), taken on the batch's (q, qnorm) lattice columns when
-    ``quantized`` — the trained codebook's geometry — else on v. A
+    cid))``), taken on the ``round(v*1000)`` lattice (:func:`_round_half_up`)
+    and its :func:`_seq_norms` when ``quantized`` — the trained
+    codebook's geometry — else on v. A
     vector lives in one cell, so a (query, neighbor) pair is emitted at
     most once per batch."""
     import numpy as np
@@ -1442,8 +1432,8 @@ def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: 
         vecs = _batch_mat(batch, "v", qm.shape[1])
         norms = _seq_norms(vecs)
         if quantized:
-            cell_vecs = _batch_mat(batch, "q", qm.shape[1])
-            cells = _cos_csim(cell_vecs, _batch_np(batch, "qnorm"), c_mat, cnorms)
+            lattice = _round_half_up(vecs * KMEANS_QUANT)
+            cells = _cos_csim(lattice, _seq_norms(lattice), c_mat, cnorms)
         else:
             cells = _cos_csim(vecs, norms, c_mat, cnorms)
         amax = cells.argmax(axis=1)
@@ -1463,20 +1453,19 @@ def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: 
 
 def _jl_scorer(q: _Queries, out_dim: int):
     """Every row, scored by its EXACT int64 dot product with the query
-    in the ``out_dim``-axis JL projection of the integral lattice (any
-    summation order is exact). The queries' projections use the
-    identical HALF_UP lattice rounding (:func:`_round_half_up`)."""
+    in the ``out_dim``-axis JL projection of the integral
+    ``round(v*1000)`` lattice (any summation order is exact). Rows and
+    queries share the HALF_UP lattice rounding (:func:`_round_half_up`),
+    the rows' computed per batch from v."""
     import numpy as np
 
     signs = np.asarray(_jl_matrix(out_dim, EMBED_DIM), dtype=np.int64)
-    qq = np.asarray(
-        [[int(_round_half_up(x * KMEANS_QUANT)) for x in v] for v in q.vecs],
-        dtype=np.int64,
-    )
-    qproj = qq @ signs.T  # (num_queries × out_dim), exact int64
+    qq = _round_half_up(np.asarray(q.vecs, dtype=np.float64) * KMEANS_QUANT)
+    qproj = qq.astype(np.int64) @ signs.T  # (num_queries × out_dim), exact int64
 
     def score(batch):
-        lattice = _batch_mat(batch, "q", signs.shape[1], "int64")
+        vecs = _batch_mat(batch, "v", signs.shape[1])
+        lattice = _round_half_up(vecs * KMEANS_QUANT).astype(np.int64)
         sims = (lattice @ signs.T) @ qproj.T  # (n × num_queries), exact
         for j in range(len(qproj)):
             yield _EVERY_ROW, sims[:, j], _ONE_LEVEL, _no_extra
@@ -1736,8 +1725,6 @@ def pq_codebooks(
 
 def _seed_ids(embeddings: DataFrame, k: int) -> DataFrame:
     """Deterministic md5-min seed pick over vec_ids (engine-portable)."""
-    from .text_analysis import md5int
-
     return (
         embeddings.select("vec_id")
         .withColumn("h", md5int(F.col("vec_id").cast("string")))
@@ -1773,8 +1760,10 @@ def _pq_train(
     Arithmetic is unchanged and order-free: integral-double sums are
     exact under any accumulation order (numpy's blocked summation
     included), the mean is the identical single IEEE division, and the
-    lattice rounding is Decimal-exact HALF_UP — Spark ``round()``'s
-    semantics (see the r14 substrate comment above :func:`_round_half_up`)."""
+    lattice rounding is :func:`_round_half_up`, Spark ``round()``'s
+    HALF_UP."""
+    import numpy as np
+
     spark = base.sparkSession
     seed_rows = (
         base.join(F.broadcast(seed_ids), base["vec_id"] == seed_ids["cid"])
@@ -1801,8 +1790,8 @@ def _pq_train(
             # rounded mean: centroids stay ON the integer lattice, so
             # the next round's distances remain integral-exact. The
             # mean itself is one exact IEEE division; the rounding is
-            # Decimal-exact HALF_UP == Spark/DuckDB round().
-            cv = [_round_half_up(sv / r.n) for sv in r.s]
+            # HALF_UP == Spark/DuckDB round().
+            cv = _round_half_up(np.asarray(r.s, dtype=np.float64) / r.n)
             by_sub.setdefault(r.sub, []).append((r.cid, cv))
         cents = _pack_cents(by_sub)
     rows = [
@@ -2071,7 +2060,7 @@ def ivfpq_topk(
     residual codebook is shared across cells (standard IVFADC), so the
     broadcast stays n_subs × k rows."""
     # numpy consumers only (train / residual slicing / 32-row query
-    # filter): natural partitioning, no _spread (see pq_codebooks)
+    # filter): natural partitioning (see pq_codebooks)
     full = materialize(_sub_quantized(embeddings, 1))
     # the trained coarse codebook is a LOCAL RELATION (r14 _pq_train) —
     # no materialize, free broadcasts/collects downstream
@@ -2516,7 +2505,7 @@ def _ivfpq_residual_subs(embeddings: DataFrame, coarse: DataFrame, n_subs: int) 
     IVF-PQ index (same arithmetic as the inline :func:`ivfpq_topk`
     corpus side, against a FROZEN ``coarse`` table). One vectorized
     corpus pass (r14, guide §4.2)."""
-    full = _sub_quantized(embeddings, 1)  # numpy consumer: no _spread
+    full = _sub_quantized(embeddings, 1)
     ccids, cc_mat = _collect_coarse(coarse)
     return full.select("vec_id", "sq").mapInArrow(
         _residual_slices_fn(ccids, cc_mat, n_subs),
@@ -3205,48 +3194,44 @@ def knn_label_vote(
     """Leave-one-out kNN classification audit — THE standard intrinsic
     embedding-quality eval (does the space cluster by label?): for each
     query vector (vec_id < ``num_queries``) take its ``k`` exact-cosine
-    nearest OTHER vectors (:func:`brute_force_topk`, the gate-proven
-    ranking) and majority-vote their ``label`` column; ties break on
-    the smaller label. Output: ``(query_id, true_label, pred_label,
-    votes, correct)`` — aggregate ``avg(correct)`` is the LOO kNN
-    accuracy.
+    nearest OTHER vectors (:func:`brute_force_topk`'s ranking) and
+    majority-vote their integer ``label`` column; ties break on the
+    smaller label, a NULL label last (the DuckDB twin's ``label ASC``).
+    Output: ``(query_id, true_label, pred_label, votes, correct)`` —
+    aggregate ``avg(correct)`` is the LOO kNN accuracy.
 
-    Scale: the neighbor table is ``num_queries*k`` rows — it is the
-    BROADCAST side of both label joins (the corpus-sized label table
-    is never shuffled); the vote argmax is a window over ≤k rows per
-    query. Cost is dominated by the exact scan inside
-    ``brute_force_topk`` — swap in any of the IVF/PQ variants for an
-    approximate audit at larger ``num_queries``."""
-    nn = brute_force_topk(embeddings, k, num_queries)
-    labels = embeddings.select(
-        "vec_id", F.col("label").cast("long").alias("label")
-    )
-    neigh = labels.join(
-        F.broadcast(nn), labels.vec_id == nn.neighbor_id
-    ).select("query_id", "label")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("votes"), F.asc("label")
-    )
-    pred = (
-        neigh.groupBy("query_id", "label")
-        .agg(F.count(F.lit(1)).cast("long").alias("votes"))
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select("query_id", F.col("label").alias("pred_label"), "votes")
-    )
-    truth = labels.join(
-        F.broadcast(pred), labels.vec_id == pred.query_id
-    ).select(
-        "query_id",
-        F.col("label").alias("true_label"),
-        "pred_label",
-        "votes",
-        F.when(F.col("label") == F.col("pred_label"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("correct"),
-    )
-    return truth
+    Scale: ``label`` rides through the one :func:`_topk_scan` pass, so
+    the vote is counted on the driver from the ``num_queries*k`` merged
+    neighbours — no join, no window; a Parquet corpus runs no job."""
+
+    def build(q: _Queries, corpus):
+        truth, nn = _labelled_neighbors(q, corpus, k)
+        tally: dict = {}
+        for qid, _, label, _ in nn:
+            votes = tally.setdefault(qid, {})
+            votes[label] = votes.get(label, 0) + 1
+        rows = []
+        for qid, votes in tally.items():
+            pred, n = min(votes.items(), key=lambda lv: (-lv[1], lv[0] is None, lv[0] or 0))
+            true = truth[qid]
+            rows.append((qid, true, pred, n, int(true is not None and true == pred)))
+        return rows
+
+    ddl = "query_id long, true_label long, pred_label long, votes long, correct long"
+    return _with_queries(embeddings, num_queries, ddl, build, ("label",))
+
+
+def _labelled_neighbors(q: _Queries, corpus, k: int):
+    """The query rows' labels ``{query_id: label}`` and their exact-cosine
+    top-``k`` as (query_id, neighbor_id, label, rank) tuples by
+    (query_id, rank): one :func:`_topk_scan` pass carrying ``label``,
+    every value a Python int (labels cast to long) or None for NULL."""
+    import pyarrow as pa
+
+    nn = _rank_topk(_topk_scan(corpus, q, k, _brute_scorer(q), carry=("label",)), k)
+    longs = lambda col: col.cast(pa.int64()).to_pylist()  # noqa: E731
+    truth = dict(zip(q.ids, longs(q.rows["label"])))
+    return truth, list(zip(*(longs(nn[c]) for c in ("query_id", "neighbor_id", "label", "rank"))))
 
 
 def knn_label_vote_sql(
@@ -3313,40 +3298,28 @@ def jl_topk(
     candidates by EXACT INTEGER dot product in the projected space —
     ties on neighbor_id. Output: (query_id, neighbor_id, rank).
 
-    Scale: the projection is a map stage (``out_dim`` integer dots per
-    vector, sign rows are plan literals — nothing is shuffled or
-    broadcast for the matrix); the scoring scan then touches
-    ``out_dim``-wide vectors instead of the full dimension — the
-    classic "project once, scan cheap" trade: at 100 TB the projected
-    corpus is dim/out_dim× smaller to scan, and recall follows the JL
-    distance-preservation bound rather than an inverted-list prune.
-    All arithmetic is integer (products of round(x*1000) sums stay far
-    under 2^63 for out_dim·dim ≤ ~10^5), so any engine reproduces the
-    ranking bit-for-bit — and the r14 vectorized pass inherits that
-    exactness for free (int64 lattice: any summation order; numpy and
-    Java longs share wrap-around semantics even hypothetically).
+    Scale: the projection is ``out_dim`` integer dots per vector (the
+    sign rows are constants — nothing is shuffled or broadcast for the
+    matrix); the scoring then touches ``out_dim``-wide vectors instead
+    of the full dimension — the classic "project once, scan cheap"
+    trade: at 100 TB the projected corpus is dim/out_dim× smaller to
+    scan, and recall follows the JL distance-preservation bound rather
+    than an inverted-list prune. All arithmetic is integer (products of
+    round(x*1000) sums stay far under 2^63 for out_dim·dim ≤ ~10^5), so
+    any engine reproduces the ranking bit-for-bit, and so does the
+    vectorized pass (int64 lattice: any summation order; numpy and Java
+    longs share wrap-around semantics even hypothetically).
 
-    One :func:`_topk_scan` corpus pass: projection and scoring run as
+    One :func:`_topk_scan` pass over the default corpus scan (a Parquet
+    corpus runs no job): the lattice (:func:`_round_half_up`, Spark's
+    ``round`` bit for bit), projection and scoring run per batch as
     int64 numpy matmuls (:func:`_jl_scorer`); :func:`_rank_topk` merges
     the partition-local top-k partials on the driver."""
-    # the corpus quantization stays the Spark expression _quantized
-    # uses (same HALF_UP round), so the lattice is pinned in one place
-    lattice = F.transform(
-        F.col("v"), lambda x: F.round(x * F.lit(KMEANS_QUANT), 0).cast("long")
-    )
 
-    def build(q: _Queries, scan):
-        # the kernel reads only the lattice (a frame or a gathered table)
-        scan = scan.select(["vec_id", "q"])
-        return _rank_topk(_topk_scan(scan, q, k, _jl_scorer(q, out_dim), "sim long"), k)
+    def build(q: _Queries, corpus):
+        return _rank_topk(_topk_scan(corpus, q, k, _jl_scorer(q, out_dim), "sim long"), k)
 
-    # v is kept on the query rows only: a gathered scan ships the lattice
-    scan = _corpus(embeddings).select(
-        "vec_id",
-        F.when(F.col("vec_id") < num_queries, F.col("v")).alias("v"),
-        lattice.alias("q"),
-    )
-    return _with_queries(embeddings, num_queries, _TOPK_DDL, build, scan)
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
 def jl_topk_sql(
@@ -3420,7 +3393,7 @@ def cluster_label_purity(
             F.col("label").cast("long").alias("label"),
             F.col("embedding").cast("array<double>").alias("v"),
         )
-    )  # numpy consumer: no _spread
+    )
     labeled = _kmeans_assign(src, cents, "label long")
     votes = labeled.groupBy("cid", "label").agg(
         F.count(F.lit(1)).cast("long").alias("votes")
@@ -3499,51 +3472,24 @@ def hard_negative_mining(
     hardest to tell apart. Output: ``(query_id, true_label, neg_id,
     neg_label, neg_rank)``; queries whose entire top-``k`` shares
     their label emit no row (no hard negative that close — raise
-    ``k``).
+    ``k``), and a NULL label differs from nothing.
 
-    Scale shape: rides :func:`brute_force_topk`'s gate-proven ranking
-    (swap in the IVF/PQ variants for approximate mining at larger
-    query sets); the ``num_queries*k`` neighbor table is the BROADCAST
-    side of both label joins, so the corpus-sized label table never
-    shuffles; the per-query argmin is a max-of-struct aggregate over
-    <= k rows."""
-    nn = brute_force_topk(embeddings, k, num_queries)
-    labels = embeddings.select(
-        "vec_id", F.col("label").cast("long").alias("label")
-    )
-    neigh = labels.join(
-        F.broadcast(nn), labels.vec_id == nn.neighbor_id
-    ).select(
-        "query_id",
-        F.col("neighbor_id"),
-        F.col("label").alias("neg_label"),
-        "rank",
-    )
-    qlab = labels.join(
-        F.broadcast(neigh.select("query_id").distinct()),
-        labels.vec_id == F.col("query_id"),
-    ).select("query_id", F.col("label").alias("true_label"))
-    diff = neigh.join(F.broadcast(qlab), "query_id").where(
-        F.col("neg_label") != F.col("true_label")
-    )
-    best = F.struct(
-        (-F.col("rank")).alias("negrank"),
-        F.col("rank").alias("rank"),
-        F.col("neighbor_id").alias("neg_id"),
-        F.col("neg_label").alias("neg_label"),
-    )
-    return (
-        diff.select("query_id", "true_label", best.alias("s"))
-        .groupBy("query_id", "true_label")
-        .agg(F.max("s").alias("s"))
-        .select(
-            "query_id",
-            "true_label",
-            F.col("s.neg_id").cast("long").alias("neg_id"),
-            F.col("s.neg_label").alias("neg_label"),
-            F.col("s.rank").cast("long").alias("neg_rank"),
-        )
-    )
+    Scale shape: :func:`knn_label_vote`'s labelled top-k scan, then the
+    pick on the driver from the ``num_queries*k`` merged rows — no join,
+    no aggregate; a Parquet corpus runs no job."""
+
+    def build(q: _Queries, corpus):
+        truth, nn = _labelled_neighbors(q, corpus, k)
+        rows, done = [], set()
+        for qid, nid, label, rank in nn:
+            true = truth[qid]
+            if qid not in done and None not in (true, label) and label != true:
+                done.add(qid)
+                rows.append((qid, true, nid, label, rank))
+        return rows
+
+    ddl = "query_id long, true_label long, neg_id long, neg_label long, neg_rank long"
+    return _with_queries(embeddings, num_queries, ddl, build, ("label",))
 
 
 def hard_negative_mining_sql(
@@ -3702,66 +3648,101 @@ def label_centroid_topk(
     like this class" retrieval shape (few-shot data selection, cluster
     naming, prototype audit). Exact across engines: vectors are
     fixed-point quantized (``round(x*scale)`` int64, the gram-matrix
-    lattice), each label's centroid is the INTEGER SUM vector (same
-    direction as the mean, so cosine ranking is identical), and the
-    score ``dot / sqrt(q·q)`` is an integer-exact dot followed by two
-    exactly-rounded IEEE ops — bit-identical in any engine. (The
-    centroid's own norm is constant per label and cannot change its
-    ranking.)
+    lattice), each label's centroid (a NULL label has one too) is the
+    INTEGER SUM vector (same direction as the mean, so cosine ranking
+    is identical), and the score ``dot / sqrt(q·q)`` is an
+    integer-exact dot followed by two exactly-rounded IEEE ops —
+    bit-identical in any engine. (The centroid's own norm is constant
+    per label and cannot change its ranking.) A zero vector has no
+    score (the twin's NULL) and ranks last.
 
-    100 TB design: centroids are labels × dims cells from one map-side-
-    combinable aggregate, reassembled into 10 array rows and BROADCAST
-    against the corpus scan; the per-label top-k window sees only
-    (label, vec_id, score) rows. Output: (label, vec_id, rank,
-    same_label)."""
-    q = embeddings.select(
-        "vec_id",
-        F.col("label").alias("vlabel"),
-        F.transform(
-            F.col("embedding").cast("array<double>"),
-            lambda x: F.round(x * scale, 0).cast("long"),
-        ).alias("q"),
-    ).transform(_spread)
-    cells = q.select(
-        F.col("vlabel").alias("label"), F.posexplode("q").alias("d", "qv")
-    )
-    cent = (
-        cells.groupBy("label", "d")
-        .agg(F.sum("qv").alias("s"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "s"))), lambda x: x["s"]
-            ).alias("c")
+    100 TB design: the labels × dims centroid sums (:func:`_label_sums`)
+    are the queries of one :func:`_topk_scan` pass carrying each row's
+    ``label``, merged per centroid on the driver; a Parquet corpus runs
+    no job. Output: (label, vec_id, rank, same_label), ``label`` of the
+    input's type: int, long, string, double or boolean."""
+    spark = embeddings.sparkSession
+    ltype = embeddings.schema["label"].dataType.simpleString()
+    ddl = f"label {ltype}, vec_id long, rank long, same_label boolean"
+    scan = _scan_input(embeddings, ("label",))
+    labels, sums = _label_sums(scan, scale)
+    if not labels:
+        return values_df(spark, [], ddl)
+    # the queries are the centroids, not corpus rows: ids index labels
+    q = _Queries(list(range(len(labels))), sums, [])
+    scorer = _centroid_scorer(q, scale)
+    top = _rank_topk(_topk_scan(scan, q, k, scorer, carry=("label",), drop_own=False), k)
+    rows = [
+        (labels[i], vec_id, rank, None if None in (own, labels[i]) else own == labels[i])
+        for i, vec_id, own, rank in zip(
+            *(top[c].to_pylist() for c in ("query_id", "neighbor_id", "label", "rank"))
         )
-    )
-    dot = F.aggregate(
-        F.zip_with("c", "q", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    qq = F.aggregate(
-        F.zip_with("q", "q", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = q.join(F.broadcast(cent)).select(
-        "label",
-        "vec_id",
-        "vlabel",
-        (dot.cast("double") / F.sqrt(qq.cast("double"))).alias("score"),
-    )
-    w = Window.partitionBy("label").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            "label",
-            "vec_id",
-            "rank",
-            (F.col("vlabel") == F.col("label")).alias("same_label"),
-        )
-    )
+    ]
+    return values_df(spark, rows, ddl)
+
+
+def _label_sums(scan, scale: int):
+    """Each distinct ``label`` of the scan input (NULL is one), and the
+    int64 sums of its rows' ``round(v*scale)`` lattice vectors as a
+    labels × dims matrix: per-batch partial sums — over a gathered
+    table's batches on the driver, or in one ``mapInArrow`` pass over a
+    frame (one job) — merged on the driver."""
+    import numpy as np
+    import pyarrow as pa
+
+    def partial(batches):
+        for batch in (b for b in batches if b.num_rows):
+            lattice = _round_half_up(_batch_mat(batch, "v", -1) * scale).astype(np.int64)
+            keys, sums = _group_sums(batch.column(batch.schema.get_field_index("label")), lattice)
+            yield pa.record_batch([keys, pa.array(list(sums))], names=["label", "s"])
+
+    if isinstance(scan, DataFrame):
+        ddl = f"label {scan.schema['label'].dataType.simpleString()}, s array<long>"
+        parts = scan.mapInArrow(partial, ddl).collect()
+    else:
+        parts = [r for b in partial(scan.to_batches()) for r in b.to_pylist()]
+    if not parts:
+        return [], []
+    keys, sums = _group_sums(pa.array([r["label"] for r in parts]), np.asarray([r["s"] for r in parts]))
+    return keys.to_pylist(), sums
+
+
+def _group_sums(keys, mat):
+    """The distinct values of the Arrow array ``keys`` (NULL is one), in
+    first-seen order, and for each the int64 sum of the rows of ``mat``
+    with that key."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    uniq = pc.unique(keys)
+    gid = pc.index_in(keys, value_set=uniq, skip_nulls=False).to_numpy()
+    sums = np.zeros((len(uniq), mat.shape[1]), dtype=np.int64)
+    np.add.at(sums, gid, mat)
+    return uniq, sums
+
+
+def _centroid_scorer(q: _Queries, scale: int):
+    """Every row, scored against each query — a label centroid, its
+    int64 sum vector in ``q.vecs`` — by ``dot / sqrt(q·q)`` on the row's
+    ``round(v*scale)`` lattice: int64-exact dots, then one IEEE sqrt and
+    one divide, the DuckDB twin's expression bit for bit. A zero row
+    (q·q = 0, whose score the twin leaves NULL) scores -inf, last —
+    not the kernel's -1.0, which these unbounded scores can pass."""
+    import numpy as np
+
+    cents = np.asarray(q.vecs, dtype=np.int64)
+
+    def score(batch):
+        vecs = _batch_mat(batch, "v", cents.shape[1])
+        lattice = _round_half_up(vecs * scale).astype(np.int64)
+        dots = (lattice @ cents.T).astype(np.float64)
+        norms = np.sqrt((lattice * lattice).sum(axis=1).astype(np.float64))[:, None]
+        sims = np.full(dots.shape, -np.inf)
+        np.divide(dots, norms, out=sims, where=norms > 0)
+        for j in range(len(cents)):
+            yield _EVERY_ROW, sims[:, j], _ONE_LEVEL, _no_extra
+
+    return score
 
 
 def label_centroid_topk_sql(

@@ -36,6 +36,13 @@ def md5int_sql(expr: str) -> str:
     return f"CAST(('0x' || substring(md5({expr}), 1, 13)) AS BIGINT)"
 
 
+def md5int_py(s: str) -> int:
+    """Driver-side :func:`md5int` of one string."""
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:13], 16)
+
+
 def hash31(col: Column, portable: bool = False) -> Column:
     """Non-negative integer hash in ``[0, MERSENNE31)`` of a string
     column — THE hash family switch for the shingle/gram hot loops

@@ -117,15 +117,6 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("bm25_multiquery_topk", 14),
     ("valueset_membership_lineitem", 14),
     ("closure_part_hierarchy", 14),
-    # round 16: a broadcast-sized ANN corpus is gathered with one
-    # toArrow() and the top-k scan kernel runs on the driver (one job,
-    # no mapInArrow); larger corpora keep round 15's scatter-gather.
-    # These rows supersede the round-15 entries of the same gates (ANN
-    # top-k as scatter-gather, driver-side merge, LocalRelation
-    # results), which are live whenever these are. The default-scan
-    # members' rows moved to round 19 below.
-    ("ann_ivf_kmeans_topk", 16),
-    ("ann_jl_topk", 16),
     # round 17: one exact set-overlap path — one saturation guard, one
     # array-intersection verify and one MinHash band-candidate join for
     # the dedup/set-join operators; prefix_jaccard_pairs keys its tokens
@@ -148,16 +139,29 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # the exact embedding dedup's broadcast path; the top-k selection
     # partitions before it sorts. Supersedes these gates' round-16 and
     # round-18 rows (round 18: exact embedding dedup takes its placement
-    # from the one gather-or-scatter rule). rrf_fused_topk fuses the
-    # brute and JL results; ann_eval_scorecard carries the IVF probe
-    # sweep (the former ann_ivf_probe_curve gate).
+    # from the one gather-or-scatter rule). The seeded IVF, the probe
+    # sweep's gates and the fused brute+JL gate moved to round 20 below.
     ("ann_brute_topk", 19),
-    ("ann_ivf_topk", 19),
     ("ann_lsh_topk", 19),
     ("ann_hamming_topk", 19),
-    ("ann_eval_scorecard", 19),
-    ("rrf_fused_topk", 19),
     ("dedup_embedding", 19),
+    # round 20: every ANN member outside the PQ family ranks through the
+    # one top-k scan kernel: the seeded IVF picks its centroids from the
+    # scan input, JL and trained IVF build their round(x*1000) lattice
+    # per batch, the kNN vote and hard negatives carry labels through
+    # the scan and decide on the driver (no joins, windows or
+    # aggregates), and the label centroids are the queries of a kernel
+    # scan (a zero vector ranks last instead of failing). Supersedes
+    # these gates' round-16 and round-19 rows; ann_eval_scorecard runs
+    # the IVF probe sweep and JL, rrf_fused_topk fuses JL.
+    ("ann_ivf_topk", 20),
+    ("ann_ivf_kmeans_topk", 20),
+    ("ann_jl_topk", 20),
+    ("knn_label_accuracy", 20),
+    ("hard_negatives_topk", 20),
+    ("centroid_label_topk", 20),
+    ("ann_eval_scorecard", 20),
+    ("rrf_fused_topk", 20),
 ]
 
 

@@ -58,6 +58,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF top-5 over 16 md5-seeded coarse centroids, picked from the
+    same scan input as the search (`operators/similarity.py:ivf_topk`)."""
     from ..operators.similarity import ivf_topk
 
     return ivf_topk(load(spark, sf_dir, "embeddings"))
@@ -156,7 +158,8 @@ def _mmr_sql() -> str:
 
 def knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out 5-NN majority-vote label audit over the first 32
-    embedding vectors (`operators/similarity.py:knn_label_vote`)."""
+    embedding vectors (`operators/similarity.py:knn_label_vote`): the
+    labels ride the exact top-k scan and the vote runs on the driver."""
     from ..operators.similarity import knn_label_vote
 
     emb = load(spark, sf_dir, "embeddings")
@@ -171,9 +174,9 @@ def _knn_vote_sql() -> str:
 
 def ann_jl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL random-projection ANN top-5 for the first 32 queries:
-    64-dim -> 8-dim deterministic ±1 projection, exact integer dot
-    ranking in the projected space
-    (`operators/similarity.py:jl_topk`)."""
+    64-dim -> 8-dim deterministic ±1 projection of the round(x*1000)
+    lattice, built per scan batch, exact integer dot ranking in the
+    projected space (`operators/similarity.py:jl_topk`)."""
     from ..operators.similarity import jl_topk
 
     emb = load(spark, sf_dir, "embeddings")
@@ -205,7 +208,8 @@ def _purity_sql() -> str:
 def hard_negatives_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest different-label neighbor within each query's exact
     top-8 (`operators/similarity.py:hard_negative_mining`) — the
-    DPR-style contrastive hard-negative miner."""
+    DPR-style contrastive hard-negative miner, picked on the driver
+    from the labelled top-k scan."""
     from ..operators.similarity import hard_negative_mining
 
     return hard_negative_mining(load(spark, sf_dir, "embeddings"))
@@ -276,8 +280,9 @@ def _ann_hamming_sql() -> str:
 
 def centroid_label_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest vectors to each label centroid (`operators/similarity.py:
-    label_centroid_topk`): integer-lattice sum centroids broadcast
-    against the corpus, exact bit-identical scores."""
+    label_centroid_topk`): integer-lattice sum centroids as the queries
+    of the one top-k scan kernel, exact bit-identical scores, a zero
+    vector ranked last."""
     from ..operators.similarity import label_centroid_topk
 
     return label_centroid_topk(load(spark, sf_dir, "embeddings"))

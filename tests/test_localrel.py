@@ -221,3 +221,47 @@ def test_one_whole_input_gather():
     the ANN scatter side's query and partials collects are the other
     ``toArrow()`` calls."""
     _assert_single_path("toArrow")
+
+
+#: The functions of operators/similarity.py that may name a Spark-side
+#: ranking tool: a window only in the PQ/IVF-PQ ADC join scorers (they
+#: rank codes joined to a lookup table, not a kernel scorer's scores),
+#: and posexplode only in gram_matrix's cell aggregate, which ranks
+#: nothing.
+_SPARK_RANK_HOMES = {
+    "Window": {"_pq_adc_topk", "_ivfpq_adc_topk"},
+    "posexplode": {"gram_matrix"},
+}
+
+
+def _names(node, func="<module>"):
+    """(identifier, line, enclosing function name) of each name and
+    attribute reference under ``node``."""
+    import ast
+
+    for child in ast.iter_child_nodes(node):
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _names(child, child.name)
+            continue
+        if isinstance(child, ast.Name):
+            yield child.id, child.lineno, func
+        elif isinstance(child, ast.Attribute):
+            yield child.attr, child.lineno, func
+        yield from _names(child, func)
+
+
+def test_ann_members_rank_through_the_kernel():
+    """Every ANN member outside the PQ/IVF-PQ family ranks through
+    ``_topk_scan`` and ``_rank_topk``: no other function in
+    operators/similarity.py names a Spark window or posexplode, so a
+    new member cannot bring back a Spark-side rank."""
+    import ast
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "bunsen_spark" / "operators" / "similarity.py"
+    found = [
+        f"similarity.py:{line} {name} in {func}"
+        for name, line, func in _names(ast.parse(path.read_text()))
+        if name in _SPARK_RANK_HOMES and func not in _SPARK_RANK_HOMES[name]
+    ]
+    assert not found, found

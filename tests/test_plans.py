@@ -197,19 +197,19 @@ def test_brute_force_topk_gathered_one_job(spark, sf_dir, tmp_path):
 
 
 def test_ann_members_gather_their_own_scan_input_once(spark, sf_dir):
-    """A member whose scan input is not the plain corpus gathers that
-    input, and only it: JL (the lattice) runs one job; trained IVF
-    (the lattice plus its norm) runs its codebook training's jobs plus
-    one, and no MapInArrow beyond the training's."""
+    """The lattice members scan the plain corpus and build their
+    ``round(x*1000)`` lattice per batch, so a Parquet corpus is read
+    from its files: JL runs no job; trained IVF runs only its codebook
+    training's jobs, and no MapInArrow beyond the training's."""
     from bunsen_spark.operators.similarity import ivf_kmeans_topk, jl_topk, kmeans_codebook
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     jl = _executed(spark, lambda: jl_topk(emb, k=5, num_queries=8))
-    assert len(jl.jobs) == 1, jl.plans
+    assert len(jl.jobs) == 0, jl.plans
     assert not any("MapInArrow" in tree for tree, _ in jl.plans), jl.plans
     train = _executed(spark, lambda: kmeans_codebook(emb))
     ivf = _executed(spark, lambda: ivf_kmeans_topk(emb, k=5, num_queries=8))
-    assert len(ivf.jobs) == len(train.jobs) + 1, ivf.plans
+    assert len(ivf.jobs) == len(train.jobs), ivf.plans
     scans = lambda run: sum("MapInArrow" in tree for tree, _ in run.plans)  # noqa: E731
     assert scans(ivf) == scans(train), ivf.plans
 

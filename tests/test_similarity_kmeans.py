@@ -229,6 +229,23 @@ _SCAN_OPS = [
 ]
 
 
+#: The members that carry ``label`` through the same scan: the kNN vote
+#: and hard negatives (query rows vec_id < num_queries) and the label
+#: centroids (one query per label, no ``num_queries``).
+_LABEL_OPS = [sim.knn_label_vote, sim.hard_negative_mining, sim.label_centroid_topk]
+
+
+def _kw(op, k: int = 5) -> dict:
+    """``op``'s arguments in these tests: ``k``, and 8 query rows for
+    the members that take ``num_queries``."""
+    return {"k": k} if op is sim.label_centroid_topk else {"k": k, "num_queries": 8}
+
+
+def _sorted(rows) -> list:
+    """``rows`` as sorted tuples, a NULL (None) after every value."""
+    return sorted((tuple(r) for r in rows), key=lambda r: tuple((x is None, x) for x in r))
+
+
 @pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
 def test_brute_force_topk_empty_query_set(spark, sf_dir, op):
     """No query rows returns an empty frame with the operator's output
@@ -247,12 +264,13 @@ def _twin(path, op, **kw):
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')")
-    return sorted(con.execute(getattr(sim, f"{op.__name__}_sql")(**kw)).fetchall())
+    return _sorted(con.execute(getattr(sim, f"{op.__name__}_sql")(**kw)).fetchall())
 
 
-def _corpus_path(tmp_path_factory, name: str, vecs, elem: str = "float32") -> str:
-    """Parquet path of ``vecs`` as (vec_id, embedding array<elem>),
-    ``elem`` a pyarrow type name (float32 is Spark's float)."""
+def _corpus_path(tmp_path_factory, name: str, vecs, elem: str = "float32", labels=None) -> str:
+    """Parquet path of ``vecs`` as (vec_id, embedding array<elem>, label
+    int), ``elem`` a pyarrow type name (float32 is Spark's float), the
+    labels ``vec_id % 3`` unless given."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -261,6 +279,7 @@ def _corpus_path(tmp_path_factory, name: str, vecs, elem: str = "float32") -> st
         {
             "vec_id": pa.array(range(len(vecs)), pa.int64()),
             "embedding": pa.array(vecs, pa.list_(getattr(pa, elem)())),
+            "label": pa.array([i % 3 for i in range(len(vecs))] if labels is None else labels, pa.int32()),
         }
     )
     pq.write_table(table, path)
@@ -290,18 +309,81 @@ def zero_vector_corpus_f64(tmp_path_factory):
     return _corpus_path(tmp_path_factory, "zero_vec_f64", _zero_vector_vecs(), "float64")
 
 
-@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+@pytest.mark.parametrize("op", _SCAN_OPS + _LABEL_OPS, ids=lambda op: op.__name__)
 def test_zero_norm_vector_independent_of_partitioning(spark, zero_vector_corpus, op):
     """A zero-norm vector's cosine (0/0) ranks as -1.0, DuckDB's
-    ``list_cosine_similarity`` value, so the result does not depend on
-    how the corpus is partitioned, and matches the DuckDB twin."""
+    ``list_cosine_similarity`` value (a label centroid's unbounded score
+    of it: last, the twin's NULL), so the result does not depend on how
+    the corpus is partitioned, and matches the DuckDB twin."""
     path = zero_vector_corpus
     emb = spark.read.parquet(path)
-    one = sorted(map(tuple, op(emb.repartition(1), k=5, num_queries=8).collect()))
-    many = sorted(map(tuple, op(emb.repartition(64), k=5, num_queries=8).collect()))
+    one = _sorted(op(emb.repartition(1), **_kw(op)).collect())
+    many = _sorted(op(emb.repartition(64), **_kw(op)).collect())
     assert one == many
     if hasattr(sim, f"{op.__name__}_sql"):
-        assert one == _twin(path, op, k=5, num_queries=8)
+        assert one == _twin(path, op, **_kw(op))
+
+
+@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+def test_zero_query_vector_matches_twin(spark, tmp_path_factory, op):
+    """A zero query vector's cosines are 0/0, -1.0 as in DuckDB: every
+    IVF cell ties, so the probes are the lowest cids (the seeded and
+    trained IVF raised ZeroDivisionError building the probe lists) —
+    the same rows from 1 and 64 input partitions, equal to the twin."""
+    vecs = _zero_vector_vecs()
+    vecs[3] = [0.0] * 64
+    path = _corpus_path(tmp_path_factory, "zero_query", vecs)
+    emb = spark.read.parquet(path)
+    one = _sorted(op(emb.repartition(1), **_kw(op)).collect())
+    many = _sorted(op(emb.repartition(64), **_kw(op)).collect())
+    assert one == many and any(r[0] == 3 or r[1] == 3 for r in one)
+    if hasattr(sim, f"{op.__name__}_sql"):
+        assert one == _twin(path, op, **_kw(op))
+
+
+def _null_labels():
+    """Labels ``vec_id % 3`` for :func:`_zero_vector_vecs`, NULL for
+    every odd vec_id."""
+    return [None if i % 2 else i % 3 for i in range(200)]
+
+
+@pytest.fixture(scope="module")
+def null_label_corpus(tmp_path_factory):
+    """Parquet path of :func:`_zero_vector_vecs` with the labels of
+    :func:`_null_labels`."""
+    return _corpus_path(tmp_path_factory, "null_label", _zero_vector_vecs(), labels=_null_labels())
+
+
+@pytest.mark.parametrize("op", _LABEL_OPS, ids=lambda op: op.__name__)
+def test_null_labels_match_twin(spark, null_label_corpus, op):
+    """A NULL label is a label of its own: the kNN vote breaks a tie on
+    the smaller label with NULL last (query 4's two NULL and two
+    label-1 neighbours vote 1, as the twin's ``label ASC`` does), a hard
+    negative never has or faces a NULL label, and the NULL label has a
+    centroid — from 1 or 64 input partitions, equal to the DuckDB twin."""
+    emb = spark.read.parquet(null_label_corpus)
+    one = _sorted(op(emb.repartition(1), **_kw(op)).collect())
+    many = _sorted(op(emb.repartition(64), **_kw(op)).collect())
+    assert one == many == _twin(null_label_corpus, op, **_kw(op))
+    if op is sim.knn_label_vote:
+        assert (4, 1, 1, 2, 1) in one
+
+
+def test_label_centroid_ranks_zero_row_last(spark, scatter_gather):
+    """A zero vector's centroid score is ``0 / sqrt(0)``: no score (the
+    twin's NULL, where Spark's former division raised), ranked after
+    every real score, even a negative one — under both placements."""
+    from bunsen_spark.localrel import values_df
+
+    rows = [(0, [1.0, 0.5], 7), (1, [0.0, 0.0], 7), (2, [-0.25, 1.0], 7), (3, [-1.0, -1.0], 8)]
+    emb = values_df(spark, rows, "vec_id long, embedding array<double>, label int")
+    want = [
+        (7, 0, 1, True), (7, 1, 4, True), (7, 2, 2, True), (7, 3, 3, False),
+        (8, 0, 3, False), (8, 1, 4, False), (8, 2, 2, False), (8, 3, 1, True),
+    ]
+    assert _rows(sim.label_centroid_topk(emb, k=5)) == want
+    with scatter_gather():
+        assert _rows(sim.label_centroid_topk(emb, k=5)) == want
 
 
 @pytest.fixture(scope="module")
@@ -318,16 +400,17 @@ def tie_corpus(tmp_path_factory):
 
 
 @pytest.mark.parametrize("k", [3, 250], ids=["k3", "k_over_candidates"])
-@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+@pytest.mark.parametrize("op", _SCAN_OPS + _LABEL_OPS, ids=lambda op: op.__name__)
 def test_driver_merge_parity_on_ties(spark, tie_corpus, op, k):
     """The driver-side merge keeps the former window's order on a corpus
     where most scores tie: ties break by neighbor_id, the zero vector
-    ranks at -1.0, and a ``k`` above the candidate count ranks every
-    candidate — the same rows from 1 and 64 input partitions, equal to
-    the DuckDB twin (each sweep level: to standalone ``ivf_topk``)."""
+    ranks at -1.0 (last, for a label centroid), and a ``k`` above the
+    candidate count ranks every candidate — the same rows from 1 and 64
+    input partitions, equal to the DuckDB twin (each sweep level: to
+    standalone ``ivf_topk``)."""
     emb = spark.read.parquet(tie_corpus)
-    one = sorted(map(tuple, op(emb.repartition(1), k=k, num_queries=8).collect()))
-    many = sorted(map(tuple, op(emb.repartition(64), k=k, num_queries=8).collect()))
+    one = _sorted(op(emb.repartition(1), **_kw(op, k)).collect())
+    many = _sorted(op(emb.repartition(64), **_kw(op, k)).collect())
     assert one == many
     if op is sim.ivf_probe_sweep:
         for p in (1, 2, 4):
@@ -335,7 +418,7 @@ def test_driver_merge_parity_on_ties(spark, tie_corpus, op, k):
             assert level == sorted(map(tuple, ivf_topk(emb, k=k, num_queries=8, n_probe=p).collect()))
             assert level == _twin(tie_corpus, ivf_topk, k=k, num_queries=8, n_probe=p)
     else:
-        assert one == _twin(tie_corpus, op, k=k, num_queries=8)
+        assert one == _twin(tie_corpus, op, **_kw(op, k))
 
 
 def test_rank_topk_matches_row_number_window(spark):
@@ -434,7 +517,7 @@ def _direct(df) -> bool:
 
 
 def _rows(df) -> list:
-    return sorted(map(tuple, df.collect()))
+    return _sorted(df.collect())
 
 
 def _jobs(spark, build):
@@ -452,47 +535,59 @@ def _jobs(spark, build):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("corpus", ["tie", "zero_norm", "zero_norm_f64", "one_row", "two_rows"])
-@pytest.mark.parametrize("op", _SCAN_OPS, ids=lambda op: op.__name__)
+@pytest.mark.parametrize(
+    "corpus", ["tie", "zero_norm", "zero_norm_f64", "one_row", "two_rows", "null_label"]
+)
+@pytest.mark.parametrize("op", _SCAN_OPS + _LABEL_OPS, ids=lambda op: op.__name__)
 def test_placement_parity(
-    spark, scatter_gather, tie_corpus, zero_vector_corpus, zero_vector_corpus_f64, tiny_corpora, op, corpus
+    spark,
+    scatter_gather,
+    tie_corpus,
+    zero_vector_corpus,
+    zero_vector_corpus_f64,
+    tiny_corpora,
+    null_label_corpus,
+    op,
+    corpus,
 ):
     """Every ``_topk_scan`` member returns identical rows whether the
     corpus is gathered and scanned on the driver — read from its
-    Parquet files (the default-scan members) or gathered by Spark —
-    or scanned in partitions and merged: on ties, a zero-norm vector
-    stored as float and as double, and corpora of one row (the query
-    is its only row) and two rows."""
+    Parquet files, labels included, or gathered by Spark — or scanned
+    in partitions and merged: on ties, a zero-norm vector stored as
+    float and as double, corpora of one row (the query is its only row)
+    and two rows, and NULL labels."""
     path = {
         "tie": tie_corpus,
         "zero_norm": zero_vector_corpus,
         "zero_norm_f64": zero_vector_corpus_f64,
         "one_row": tiny_corpora[1],
         "two_rows": tiny_corpora[2],
+        "null_label": null_label_corpus,
     }[corpus]
     emb = spark.read.parquet(path)
-    assert gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
-    assert _direct(sim._gather_input(emb, sim._corpus(emb)))
-    direct = _rows(op(emb, k=5, num_queries=8))
+    scan = sim._corpus(emb, "label")
+    assert gathers(scan, sim.GATHER_MAX_BYTES)
+    assert _direct(sim._gather_input(emb, scan))
+    direct = _rows(op(emb, **_kw(op)))
     spread = emb.repartition(3)
-    assert gathers(sim._corpus(spread), sim.GATHER_MAX_BYTES)
-    assert not _direct(sim._gather_input(spread, sim._corpus(spread)))
-    gathered = _rows(op(spread, k=5, num_queries=8))
+    assert gathers(sim._corpus(spread, "label"), sim.GATHER_MAX_BYTES)
+    assert not _direct(sim._gather_input(spread, sim._corpus(spread, "label")))
+    gathered = _rows(op(spread, **_kw(op)))
     with scatter_gather():
-        assert not gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
-        scatter = _rows(op(spread, k=5, num_queries=8))
+        assert not gathers(scan, sim.GATHER_MAX_BYTES)
+        scatter = _rows(op(spread, **_kw(op)))
     assert direct == gathered == scatter
-    if corpus in ("tie", "zero_norm", "zero_norm_f64"):
+    if corpus in ("tie", "zero_norm", "zero_norm_f64", "null_label"):
         assert direct
 
 
 #: The members whose scan input is the default :func:`_corpus`, and the
-#: Spark jobs each runs besides the gather: the seeded IVF's centroid
-#: collect.
+#: Spark jobs each runs besides the gather: none, since the seeded IVF
+#: picks its centroids from the gathered table.
 _DEFAULT_SCAN_JOBS = {
     sim.brute_force_topk: 0,
-    sim.ivf_topk: 1,
-    sim.ivf_probe_sweep: 1,
+    sim.ivf_topk: 0,
+    sim.ivf_probe_sweep: 0,
     sim.lsh_topk: 0,
     sim.hamming_rerank_topk: 0,
 }
@@ -512,6 +607,49 @@ def test_parquet_corpus_gathers_without_a_job(spark, tmp_path_factory, op, store
     gathered, spark_jobs = _jobs(spark, lambda: _rows(op(filtered, k=5, num_queries=8)))
     assert spark_jobs == jobs + 1
     assert direct == gathered and direct
+
+
+@pytest.mark.parametrize(
+    "op",
+    [sim.ivf_topk, sim.ivf_probe_sweep, sim.jl_topk, *_LABEL_OPS],
+    ids=lambda op: op.__name__,
+)
+def test_parquet_search_runs_no_job(spark, zero_vector_corpus, op):
+    """On a broadcast-sized Parquet corpus the seeded IVF and its probe
+    sweep pick their centroids, JL builds its lattice, and the label
+    members read, vote on and sum their labels on the driver: no job
+    (trained IVF: test_plans.py, only its training's jobs)."""
+    emb = spark.read.parquet(zero_vector_corpus)
+    rows, jobs = _jobs(spark, lambda: _rows(op(emb, **_kw(op))))
+    assert jobs == 0 and rows
+
+
+def test_round_half_up_matches_spark_round(spark):
+    """The array ``_round_half_up`` gives Spark's ``round(x, 0)`` on
+    doubles bit for bit: halves away from zero, the doubles next to a
+    half (0.49999999999999994 is not a half), the last binades with a
+    fraction, -0.0, subnormals, huge values, ±inf and NaN — and the
+    lattice values ``x * 1000`` of float32 inputs."""
+    import math
+    import random
+    import struct
+
+    import numpy as np
+
+    from bunsen_spark.localrel import values_df
+
+    edges = [0.5, 1.5, 2.5, 999.5, 0.49999999999999994, 0.5000000000000001, 1.4999999999999998]
+    edges += [2.0**52 - 0.5, 2.0**51 + 0.5, 2.0**52 + 1, 2.0**53, 1e300, 5e-324, 0.3, 0.0, math.inf]
+    rng = random.Random(3)
+    lattice = [float(np.float32(rng.uniform(-1, 1))) * 1000.0 for _ in range(200)]
+    xs = edges + [-x for x in edges] + lattice + [math.nan]
+    df = values_df(spark, [(i, x) for i, x in enumerate(xs)], "i long, x double")
+    want = [r.r for r in df.select("i", F.round("x", 0).alias("r")).orderBy("i").collect()]
+    got = sim._round_half_up(np.asarray(xs, dtype=np.float64))
+    bits = lambda x: struct.pack("<d", x)  # noqa: E731
+    assert [bits(x) for x in got[:-1]] == [bits(x) for x in want[:-1]]
+    assert math.isnan(got[-1]) and math.isnan(want[-1])
+    assert [sim._round_half_up(x) for x in (0.5, -0.5, 0.49999999999999994)] == [1.0, -1.0, 0.0]
 
 
 @pytest.fixture(scope="module")
