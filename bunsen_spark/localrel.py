@@ -13,6 +13,9 @@ for driver rows, :func:`empty_df` for an empty frame under a nested
 spec schema (``tests/test_localrel.py`` fails on a ``createDataFrame``
 call elsewhere).
 
+The schema is built on the driver from :data:`_TYPES` (cached per DDL
+string), so a frame costs no round trip to the JVM's DDL parser.
+
 Value fidelity: the table goes to the JVM as Arrow buffers, so longs,
 doubles (NaN, -0.0, inf included) and ``array<double>`` elements
 arrive bit-identical — no text round trip (the trained k-means and PQ
@@ -20,12 +23,13 @@ codebooks are built this way)."""
 
 from __future__ import annotations
 
+from functools import lru_cache
 from numbers import Integral, Real
 
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import types as T
 
 
 def _integral(bits: int):
@@ -37,21 +41,21 @@ def _real(v) -> bool:
     return isinstance(v, Real) and not isinstance(v, bool)
 
 
-#: DDL type -> (Arrow type, the check of one non-NULL value)
+#: DDL type -> (Arrow type, Spark type, the check of one non-NULL value)
 _TYPES = {
-    "string": (pa.string(), lambda v: isinstance(v, str)),
-    "long": (pa.int64(), _integral(64)),
-    "int": (pa.int32(), _integral(32)),
-    "double": (pa.float64(), _real),
-    "boolean": (pa.bool_(), lambda v: isinstance(v, (bool, np.bool_))),
+    "string": (pa.string(), T.StringType(), lambda v: isinstance(v, str)),
+    "long": (pa.int64(), T.LongType(), _integral(64)),
+    "int": (pa.int32(), T.IntegerType(), _integral(32)),
+    "double": (pa.float64(), T.DoubleType(), _real),
+    "boolean": (pa.bool_(), T.BooleanType(), lambda v: isinstance(v, (bool, np.bool_))),
     "array<double>": (
         pa.list_(pa.float64()),
+        T.ArrayType(T.DoubleType()),
         lambda v: isinstance(v, (list, tuple, np.ndarray)) and all(x is None or _real(x) for x in v),
     ),
 }
 _TYPES["bigint"] = _TYPES["long"]
 _TYPES["integer"] = _TYPES["int"]
-_TYPES["varchar"] = _TYPES["string"]
 
 
 def _ddl_cols(ddl: str) -> list[tuple[str, str]]:
@@ -62,6 +66,14 @@ def _ddl_cols(ddl: str) -> list[tuple[str, str]]:
             raise ValueError(f"unsupported values_df type {typ!r}")
         cols.append((name, typ.lower()))
     return cols
+
+
+@lru_cache(maxsize=256)
+def _fields(ddl: str) -> tuple:
+    """The nullable Spark fields of a :func:`values_df` DDL string, as
+    the JVM's DDL parser would give them, built here from
+    :data:`_TYPES` — no py4j round trip."""
+    return tuple(T.StructField(name, _TYPES[typ][1]) for name, typ in _ddl_cols(ddl))
 
 
 def arrow_schema(ddl: str) -> pa.Schema:
@@ -89,16 +101,16 @@ def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
                     f"row {i} has {len(row)} values, expected {len(cols)} columns ({ddl})"
                 )
             for v, (name, typ) in zip(row, cols):
-                if v is not None and not _TYPES[typ][1](v):
+                if v is not None and not _TYPES[typ][2](v):
                     raise ValueError(f"row {i} column {name!r}: {v!r} is not a {typ} value")
         rows = pa.table(
             [pa.array([r[j] for r in rows], _TYPES[t][0]) for j, (_, t) in enumerate(cols)],
             names=[n for n, _ in cols],
         )
-    return spark.createDataFrame(rows, ddl)
+    return spark.createDataFrame(rows, T.StructType(list(_fields(ddl))))
 
 
-def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:
+def empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """An empty LocalRelation under any ``schema``, nested spec schemas
     included (the empty terminology collections)."""
     from pyspark.sql.pandas.types import to_arrow_schema

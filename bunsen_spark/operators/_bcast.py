@@ -10,7 +10,13 @@ its own measured compute cap; the auto-broadcast threshold is the
 shared memory guard. At these sizes the cost of a gather is the Spark
 job, not the data, so an input whose plan is only columns of local
 Parquet files is read on the driver with ``pyarrow.parquet`` and runs
-no job; any other input is collected with one ``toArrow()``.
+no job; any other input is collected with one ``toArrow()``. A column
+may be a ``Cast`` of a float or double array to ``array<double>`` —
+the ANN scan input's ``embedding`` — which an Arrow cast widens to the
+same doubles as Spark's, so the callers gather the very frame whose
+size they measured. Any other cast (from integer elements, to
+``array<float>``, to a string, of a scalar column) is collected by
+Spark.
 
 The fixpoint/verify operators broadcast node-sized relations (labels,
 ranks, candidate pairs) whose built size deliberately exceeds the
@@ -48,6 +54,7 @@ _FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
 _PARQUET = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
 _ATTRIBUTE = "org.apache.spark.sql.catalyst.expressions.AttributeReference"
 _ALIAS = "org.apache.spark.sql.catalyst.expressions.Alias"
+_CAST = "org.apache.spark.sql.catalyst.expressions.Cast"
 
 
 def _threshold_bytes(spark: SparkSession) -> int:
@@ -116,16 +123,31 @@ def _plain(dt) -> bool:
     )
 
 
+def _widens(src, out) -> bool:
+    """Whether a ``Cast`` from ``src`` to ``out`` is one an Arrow cast
+    reproduces bit for bit: a float or double array to ``array<double>``
+    (IEEE widening is exact, -0.0 included; double to double is the
+    identity)."""
+    from pyspark.sql import types as T
+
+    return (
+        isinstance(src, T.ArrayType)
+        and isinstance(src.elementType, (T.FloatType, T.DoubleType))
+        and out == T.ArrayType(T.DoubleType())
+    )
+
+
 def _parquet_columns(df: DataFrame):
-    """``(paths, [(file column, output name)], arrow schema)`` when
-    ``df``'s optimized plan is a plain Parquet relation — exactly
+    """``(paths, [(file column, output name)], file schema, schema)``
+    when ``df``'s optimized plan is a plain Parquet relation — exactly
     ``ParquetFileFormat`` (no subclass), no partition columns, only
     ``file:`` inputs — under at most one ``Project`` of attribute
-    references and aliases of them, every column of a :func:`_plain`
-    type, and Spark matching Parquet columns by name (as it does unless
+    references, aliases of them and aliases of a :func:`_widens` cast
+    of one, every read column of a :func:`_plain` type, and Spark
+    matching Parquet columns by name (as it does unless
     ``spark.sql.parquet.fieldId.read.enabled`` is set); else None. The
-    schema is ``to_arrow_schema`` of ``df``'s columns. Driver-only:
-    reads the plan and the file index."""
+    schemas are ``to_arrow_schema`` of the read columns' types and of
+    ``df``'s. Driver-only: reads the plan and the file index."""
     from urllib.parse import unquote, urlparse
 
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -143,32 +165,42 @@ def _parquet_columns(df: DataFrame):
     relation = plan.relation()
     if _class(relation.fileFormat()) != _PARQUET or relation.partitionSchema().length():
         return None
+
+    def dtype(e):
+        return _parse_datatype_json_string(e.dataType().json())
+
     cols = []
     for expr in project if project is not None else _seq(plan.output()):
-        attr = expr.child() if _class(expr) == _ALIAS else expr
+        out = expr.child() if _class(expr) == _ALIAS else expr
+        attr = out.child() if _class(out) == _CAST else out
         if _class(attr) != _ATTRIBUTE:
             return None
-        cols.append((attr.name(), expr.name(), _parse_datatype_json_string(attr.dataType().json())))
-    if not all(_plain(dt) for _, _, dt in cols):
+        cols.append((attr.name(), expr.name(), dtype(attr), dtype(out)))
+    if not all(_plain(src) and (src == out or _widens(src, out)) for _, _, src, out in cols):
         return None
     uris = [urlparse(u) for u in relation.location().inputFiles()]
     if any(u.scheme != "file" or u.netloc not in ("", "localhost") for u in uris):
         return None
-    schema = to_arrow_schema(StructType([StructField(out, dt) for _, out, dt in cols]))
-    return [unquote(u.path) for u in uris], [(src, out) for src, out, _ in cols], schema
+
+    def arrow(i):
+        return to_arrow_schema(StructType([StructField(c[1], c[i]) for c in cols]))
+
+    return [unquote(u.path) for u in uris], [(src, out) for src, out, _, _ in cols], arrow(2), arrow(3)
 
 
-def _read_parquet(paths: list[str], cols: list[tuple[str, str]], schema):
+def _read_parquet(paths: list[str], cols: list[tuple[str, str]], stored_as, schema):
     """The ``cols`` of the Parquet files ``paths`` as one Arrow table
-    with ``schema``, read one file at a time and only the read columns;
-    None when a file lacks a column under its exact name (or has it
-    twice, ignoring case) or stores it as another Arrow type than
-    ``schema`` gives, or cannot be read."""
+    with ``schema``, read one file at a time and only the read columns,
+    each Arrow-cast from its ``stored_as`` type to its ``schema`` type
+    (an exact widening, :func:`_widens`, or the identity); None when a
+    file lacks a column under its exact name (or has it twice, ignoring
+    case) or stores it as another Arrow type than ``stored_as`` gives,
+    or cannot be read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     srcs = list(dict.fromkeys(src for src, _ in cols))
-    want = {src: schema.field(i).type for i, (src, _) in enumerate(cols)}
+    want = {src: stored_as.field(i).type for i, (src, _) in enumerate(cols)}
     tables = []
     try:
         for path in paths:
@@ -181,6 +213,7 @@ def _read_parquet(paths: list[str], cols: list[tuple[str, str]], schema):
                     if stored.field(src).type != want[src]:
                         return None
                 t = f.read(columns=srcs)
+            # from_arrays casts each column to its schema type
             tables.append(pa.Table.from_arrays([t[src] for src, _ in cols], schema=schema))
     except (OSError, pa.ArrowException):
         return None
@@ -191,10 +224,11 @@ def gather(df: DataFrame) -> "pyarrow.Table":
     """``df``'s rows as one ``pyarrow.Table`` on the driver: the
     library's one whole-input gather, for an input :func:`gathers`
     accepted. When the optimized plan proves ``df`` is only columns of
-    local Parquet files (:func:`_parquet_columns`) and every file
-    stores each read column under its name as the Arrow type Spark's
-    column type maps to, the files are read here with
-    ``pyarrow.parquet`` — the same values, no Spark job. Any other
+    local Parquet files, some widened to ``array<double>``
+    (:func:`_parquet_columns`), and every file stores each read column
+    under its name as the Arrow type Spark's column type maps to, the
+    files are read here with ``pyarrow.parquet`` and the widened
+    columns Arrow-cast — the same values, no Spark job. Any other
     input, or any failed check, is ``df.toArrow()`` (one job,
     ``spark.driver.maxResultSize`` still guards it). Row order is not
     part of the contract."""

@@ -1057,7 +1057,7 @@ def embedding_near_dup_pairs(
     import pyarrow as pa
 
     from ._bcast import gather, gathers
-    from .similarity import _batch_mat, _corpus, _gather_input
+    from .similarity import _batch_mat, _corpus
     from ..localrel import values_df
 
     spark = embeddings.sparkSession
@@ -1065,7 +1065,7 @@ def embedding_near_dup_pairs(
     out_ddl = "a_id long, b_id long"
 
     if gathers(src, EMBEDDING_GATHER_MAX_BYTES):
-        corpus = gather(_gather_input(embeddings, src)).combine_chunks()
+        corpus = gather(src).combine_chunks()
         if not corpus.num_rows:
             return values_df(spark, [], out_ddl)
         dim = len(corpus["v"][0])

@@ -6,7 +6,8 @@ path.
 Beyond-reference scale extension (SURVEY §7 M7). Every top-k member
 outside the PQ/IVF-PQ code-join family runs ONE partition-local top-k
 kernel (:func:`_topk_scan`; numpy, strict left-to-right dot products
-and a HALF_UP lattice for bit-parity with the DuckDB twins) and merges
+— for brute force only on the rows a fast ``einsum`` screen cannot rule
+out — and a HALF_UP lattice for bit-parity with the DuckDB twins) and merges
 its partials on the driver (:func:`_rank_topk`, REPOSE's
 prune-locally-then-merge shape); the result is a LocalRelation. Where
 the kernel runs is decided once per search (:func:`_scan_input`):
@@ -106,10 +107,14 @@ def brute_force_topk(
     corpus, else one, which ``spark.driver.maxResultSize`` still
     guards), a larger one is scanned by ``mapInArrow`` with the queries
     in the task closure (two jobs); neither shuffles, and all give the
-    same rows (:func:`_with_queries`). Bit-parity:
-    sims are :func:`_cosine` values (strict left-to-right dots, single
-    IEEE norm-multiply/divide — the exact ``aggregate(zip_with)``
-    values), all queries scored in one matrix per batch. No query rows
+    same rows (:func:`_with_queries`). Bit-parity: every row that can
+    reach a query's top-k, or tie with its k-th, is scored by
+    :func:`_pair_cos` (strict left-to-right dots, single IEEE
+    norm-multiply/divide — the exact ``aggregate(zip_with)`` values).
+    Which rows can is decided by a screen (:func:`_brute_scorer`): one
+    fast ``einsum`` cosine matrix per batch, and a margin of twice its
+    proven error bound around each query's (k+1)-th fast score, so the
+    fast scores choose candidates and never ranks. No query rows
     (e.g. ``num_queries=0``) gives an empty frame, built on the
     driver.
 
@@ -117,7 +122,7 @@ def brute_force_topk(
     ``list_cosine_similarity`` value, in every member of the family."""
 
     def build(q: _Queries, corpus):
-        return _rank_topk(_topk_scan(corpus, q, k, _brute_scorer(q)), k)
+        return _rank_topk(_topk_scan(corpus, q, k, _brute_scorer(q, k)), k)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -168,7 +173,7 @@ def ivf_topk(
     candidates in numpy (n_centroids/n_probe fewer cosines than brute
     force), emitting partition-local top-k partials that
     :func:`_rank_topk` merges on the driver; candidate sims are
-    :func:`_cosine`."""
+    :func:`_pair_cos`."""
 
     def build(q: _Queries, corpus):
         return _rank_topk(_ivf_scan(corpus, q, k, n_centroids, (n_probe,)), k)
@@ -724,7 +729,7 @@ def lsh_topk(
     :func:`_rank_topk` merges on the driver. Bit-parity: plane dots
     accumulate left-to-right against the identical PLANES literals, the
     ``> 0`` sign predicate is unchanged, and candidate sims are
-    :func:`_cosine`."""
+    :func:`_pair_cos`."""
 
     def build(q: _Queries, corpus):
         return _rank_topk(_topk_scan(corpus, q, k, _lsh_scorer(q)), k)
@@ -1023,6 +1028,32 @@ def _seq_dots(a, b):
     return acc
 
 
+def _pair_dots(a, b, ai, bi):
+    """The dots ``a[ai[j]]·b[bi[j]]`` of the index pairs ``(ai, bi)``,
+    each accumulated strictly left-to-right as ``acc = acc + a[ai, d] *
+    b[bi, d]``: for each pair, its :func:`_seq_dots` cell bit for bit
+    (the same products, added in the same order), computed for only the
+    pairs asked for, 1,024 pairs at a time so a chunk's products stay
+    in cache."""
+    import numpy as np
+
+    out = np.empty(len(ai), dtype=np.float64)
+    for s in range(0, len(ai), 1024):
+        prod = a[ai[s : s + 1024]] * b[bi[s : s + 1024]]
+        acc = np.zeros(len(prod), dtype=np.float64)
+        for d in range(prod.shape[1]):
+            acc = acc + prod[:, d]
+        out[s : s + 1024] = acc
+    return out
+
+
+def _pair_cos(qm, qn, vecs, norms, qi, ri):
+    """Exact cosines of the (query ``qi``, row ``ri``) pairs: the strict
+    :func:`_pair_dots`, one IEEE norm multiply, one IEEE divide — the
+    ``aggregate(zip_with)`` value, and the :func:`_cos_csim` cell."""
+    return _pair_dots(qm, vecs, qi, ri) / (qn[qi] * norms[ri])
+
+
 def _pack_cents(by_sub: dict) -> dict:
     """{sub: (cids ascending, k × subdim matrix)} — ascending cid makes
     numpy's first-occurrence argmin/argmax the struct tiebreak."""
@@ -1189,30 +1220,16 @@ def _scan_input(embeddings: DataFrame, carry=()):
     with :data:`GATHER_MAX_BYTES`) on its scan input, the
     :func:`_corpus` of ``embeddings`` with the ``carry`` columns: one
     the rule accepts is brought to the driver with
-    :func:`_bcast.gather` from :func:`_gather_input` and returned as
-    that Arrow table, where :func:`_topk_scan` runs — a Parquet corpus
-    of float or double vectors is read from its files, no job; any
-    other input runs one. Otherwise the frame is returned, for a
-    scatter-gather scan."""
+    :func:`_bcast.gather` — the same frame, so its plan is built and
+    optimized once — and returned as that Arrow table, where
+    :func:`_topk_scan` runs: a Parquet corpus of float or double
+    vectors is read from its files and widened by an Arrow cast, no
+    job; any other input runs one. Otherwise the frame is returned,
+    for a scatter-gather scan."""
     scan = _corpus(embeddings, *carry)
     if gathers(scan, GATHER_MAX_BYTES):
-        return gather(_gather_input(embeddings, scan))
+        return gather(scan)
     return scan
-
-
-def _gather_input(embeddings: DataFrame, corpus: DataFrame) -> DataFrame:
-    """What a gather of the cast ``corpus`` (:func:`_corpus` of
-    ``embeddings``) reads: for float or double elements, the uncast
-    ``(vec_id, embedding AS v)`` projection with ``corpus``'s carried
-    columns — a plain column read, which :func:`_bcast.gather` serves
-    from a Parquet corpus's files without a job; :func:`_batch_mat` and
-    ``to_pylist`` widen float32 to exactly the doubles Spark's cast
-    gives. Other element types keep the cast ``corpus``."""
-    from pyspark.sql.types import DoubleType, FloatType
-
-    if isinstance(embeddings.schema["embedding"].dataType.elementType, (FloatType, DoubleType)):
-        return embeddings.select("vec_id", F.col("embedding").alias("v"), *corpus.columns[2:])
-    return corpus
 
 
 def _query_rows(scan, num_queries: int):
@@ -1262,7 +1279,7 @@ _EVERY_ROW = slice(None)
 _ONE_LEVEL = (True,)
 
 
-def _no_extra(sel) -> tuple:
+def _no_extra(qi, ri) -> tuple:
     return ()
 
 
@@ -1283,14 +1300,36 @@ def _topk_scan(
     caps the scattered ones); the corpus is never joined or shuffled
     (REPOSE's prune-locally-then-merge shape).
 
-    ``score(batch)`` is the operator's scorer. For each query, in
-    ``q.ids`` order, it yields ``(pos, scores, levels, extra)``:
-    ``pos``, the candidate rows of the batch (``_EVERY_ROW`` for all);
-    ``scores``, their values of the first of ``cols``; ``levels``,
-    nested candidate subsets as boolean masks over ``pos`` — the top-k
-    of each is kept and their union emitted (``_ONE_LEVEL`` is the
-    plain top-k); and ``extra(sel)``, the other ``cols`` for the
-    selected positions ``sel`` into ``pos``, computed for those only.
+    ``score(batch)`` is the operator's scorer. It returns ``(cands,
+    extra)``. ``cands`` gives, for each query in ``q.ids`` order,
+    ``(pos, scores, levels)``: ``pos``, the candidate rows of the batch
+    (``_EVERY_ROW`` for all); ``scores``, their values of the first of
+    ``cols``; and ``levels``, nested candidate subsets as boolean masks
+    over ``pos`` — the top-k of each is kept and their union emitted
+    (``_ONE_LEVEL`` is the plain top-k). ``extra(qi, ri)`` gives the
+    other ``cols`` for the emitted (query index, batch row) pairs, all
+    of the batch's at once, computed for those pairs only.
+
+    Filter, then refine: a scorer may leave out rows that provably
+    cannot reach the top-k. The brute-force scorer screens with a fast
+    cosine ``f`` (an ``einsum``, any summation order) and rescores only
+    the rows with ``f ≥ T − 2δ``, ``T`` the query's (k+1)-th fast score
+    in the batch, with the strict-order cosine ``e``. Margin: by the
+    standard bound for a length-``n`` dot in any order, each dot is
+    within ``γ_n·‖x‖‖y‖`` of the true one (``γ_n = nu/(1−nu)``, ``u =
+    2⁻⁵³``), so the fast and strict dots differ by at most
+    ``2γ_n·‖x‖‖y‖``; both are divided by the same computed norm product
+    ``D ≥ ‖x‖‖y‖(1−γ_n)(1−u)³`` and rounded once more, so ``|f − e| ≤
+    2(γ_n + u + uγ_n)/((1−γ_n)(1−u)³) < δ = 2(n+3)u`` (for n = 64,
+    about 130u against 134u; the slack also absorbs rounding ``T − 2δ``
+    and, within :func:`_screenable`'s range, underflow). Proof sketch:
+    at least k + 1 rows have ``f ≥ T``, so at least k rows other than
+    the query's own have ``e ≥ T − δ``, so the k-th exact score ``E``
+    is at least ``T − δ``; a row in the exact top-k or tied with the
+    k-th has ``e ≥ E``, hence ``f ≥ e − δ ≥ T − 2δ``, and is
+    rescored. The selection among the rescored rows is then the
+    selection among all rows. A zero vector's 0/0 is NaN in both and
+    -1.0 after the mapping below.
 
     The kernel owns the rest: the vec_id decode, dropping the query's
     own row (unless not ``drop_own``: queries that are not corpus rows),
@@ -1307,29 +1346,32 @@ def _topk_scan(
         import numpy as np
         import pyarrow as pa
 
+        qarr = np.asarray(qids, dtype=np.int64)
         for batch in batches:
             if not batch.num_rows:
                 continue
             ids = _batch_np(batch, "vec_id")
-            out, taken = [], []
-            for qid, (pos, scores, levels, extra) in zip(qids, score(batch)):
-                nbr = ids[pos]
+            every = np.arange(batch.num_rows)
+            cands, extra = score(batch)
+            qi, ri, sc = [], [], []
+            for j, (pos, scores, levels) in enumerate(cands):
+                rows = every[pos]
+                nbr = ids[rows]
                 scores = _nan_to_floor(scores)
-                own = nbr != qid if drop_own else np.ones(len(nbr), dtype=bool)
+                own = nbr != qarr[j] if drop_own else np.ones(len(nbr), dtype=bool)
                 picked = []
                 for lv in levels:
                     cand = np.nonzero(lv & own)[0]
                     picked.append(cand[_topk_sel(nbr[cand], scores[cand], k, largest)])
                 sel = np.unique(np.concatenate(picked))
-                out.append(
-                    [np.full(len(sel), qid, dtype=np.int64), nbr[sel], scores[sel]]
-                    + [_nan_to_floor(x) for x in extra(sel)]
-                )
-                if carry:
-                    taken.append(np.arange(batch.num_rows)[pos][sel])
-            arrays = [pa.array(np.concatenate(c)) for c in zip(*out)]
+                qi.append(np.full(len(sel), j))
+                ri.append(rows[sel])
+                sc.append(scores[sel])
+            qi, ri = np.concatenate(qi), np.concatenate(ri)
+            arrays = [qarr[qi], ids[ri], np.concatenate(sc)]
+            arrays = [pa.array(a) for a in arrays + [_nan_to_floor(x) for x in extra(qi, ri)]]
             if carry:
-                rows = pa.array(np.concatenate(taken))
+                rows = pa.array(ri)
                 arrays += [batch.column(batch.schema.get_field_index(c)).take(rows) for c in carry]
             yield pa.record_batch(arrays, names=names)
 
@@ -1368,14 +1410,6 @@ def _rank_topk(partials, k: int, score: str = "sim", largest: bool = True, rank:
     return partials.take(order[keep]).append_column(rank, pa.array(rn[keep].astype(np.int32)))
 
 
-def _cosine(vecs, norms, qv, qnorm: float):
-    """Cosines of the rows ``vecs`` (norms ``norms``) to one query: the
-    strict left-to-right :func:`_seq_dots`, one IEEE norm multiply, one
-    IEEE divide — the ``aggregate(zip_with)`` value, and one column of
-    :func:`_cos_csim`."""
-    return _seq_dots(vecs, qv[None, :])[:, 0] / (norms * qnorm)
-
-
 def _popcount32(a):
     """Set bits of each int64 in ``a`` (all in [0, 2^32)), by SWAR bit
     counting — exact integer arithmetic."""
@@ -1385,42 +1419,88 @@ def _popcount32(a):
     return ((a * 0x01010101) & 0xFFFFFFFF) >> 24
 
 
-def _brute_scorer(q: _Queries):
-    """Every row, scored by exact cosine: one :func:`_seq_norms` per
-    batch (the bit-exact ``_with_norm`` order) and one queries × rows
-    :func:`_seq_dots` matrix per batch — each row of it the
-    :func:`_cosine` values, bit for bit."""
+def _per_query(qi, nq: int, *arrays) -> list:
+    """``arrays``, aligned with the query indices ``qi`` — ascending, as
+    ``np.nonzero`` of a queries × rows mask gives them — split into one
+    tuple of slices per query of the ``nq``."""
+    import numpy as np
+
+    bounds = np.cumsum(np.bincount(qi, minlength=nq))[:-1]
+    return list(zip(*(np.split(a, bounds) for a in arrays)))
+
+
+def _screenable(vecs, norms) -> bool:
+    """Whether the summation-error bound of :func:`_brute_scorer`'s
+    screen holds for these rows: every value finite, and each row all
+    zeros or of a norm in [2^-250, 2^250] — so no product or square
+    overflows, and underflow's absolute error (≤ 2^-1075 per product)
+    is below 2^-500 of any norm product, far inside the margin's
+    slack."""
+    import numpy as np
+
+    zero = norms == 0
+    in_range = (norms >= 2.0**-250) & (norms <= 2.0**250)
+    return bool((zero | in_range).all()) and not vecs[zero].any()
+
+
+def _brute_scorer(q: _Queries, k: int):
+    """Every row that can reach a query's top-``k``, scored by exact
+    cosine (:func:`_pair_cos`: strict left-to-right dots over the exact
+    :func:`_seq_norms`, one IEEE multiply and divide — the
+    ``aggregate(zip_with)`` value, bit for bit).
+
+    Filter, then refine (the screen :func:`_topk_scan` describes): one
+    non-BLAS ``einsum`` queries × rows cosine matrix per batch, any
+    summation order, NaN → -1.0; per query, only the rows whose fast
+    score is within ``2δ`` of the query's (k+1)-th fast score are
+    rescored exactly and yielded, ``δ = 2(dim+3)·2⁻⁵³`` bounding the
+    fast-minus-exact error of any cosine. A batch of at most ``k + 1``
+    rows, or one where the bound can fail (:func:`_screenable`: a
+    non-finite value, underflow, overflow), skips the screen: every row
+    is scored exactly. Never BLAS (``@``, ``np.dot``):
+    the driver runs without ``OMP_NUM_THREADS``, and OpenBLAS's idle
+    threads spin after each call."""
     import numpy as np
 
     qm = np.asarray(q.vecs, dtype=np.float64)
     qn = np.asarray(q.norms, dtype=np.float64)
+    delta = 2 * (qm.shape[1] + 3) * 2.0**-53
+    queries_ok = _screenable(qm, qn)
 
     def score(batch):
         vecs = _batch_mat(batch, "v", qm.shape[1])
-        sims = _seq_dots(qm, vecs) / np.multiply.outer(qn, _seq_norms(vecs))
-        for row in sims:
-            yield _EVERY_ROW, row, _ONE_LEVEL, _no_extra
+        norms = _seq_norms(vecs)
+        if len(vecs) <= k + 1 or not (queries_ok and _screenable(vecs, norms)):
+            keep = np.ones((len(qm), len(vecs)), dtype=bool)
+        else:
+            fast = np.einsum("id,jd->ij", qm, vecs, optimize=False) / np.multiply.outer(qn, norms)
+            fast = _nan_to_floor(fast)
+            kth = np.partition(fast, len(vecs) - k - 1, axis=1)[:, len(vecs) - k - 1]
+            keep = fast >= (kth - 2 * delta)[:, None]
+        qi, ri = np.nonzero(keep)
+        exact = _pair_cos(qm, qn, vecs, norms, qi, ri)
+        return ((pos, s, _ONE_LEVEL) for pos, s in _per_query(qi, len(qm), ri, exact)), _no_extra
 
     return score
 
 
 def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: bool = False):
     """Rows whose cell is one of the query's probed cells at the
-    deepest of ``levels``, scored by exact cosine, with one subset per
-    level (probe_rn ≤ p) and the extra ``probe_rn`` column. A row's
-    cell is its max-cosine centroid of the cid-ascending ``cents``
-    (argmax first occurrence == the former ``array_min(struct(negsim,
-    cid))``), taken on the ``round(v*1000)`` lattice (:func:`_round_half_up`)
-    and its :func:`_seq_norms` when ``quantized`` — the trained
-    codebook's geometry — else on v. A
-    vector lives in one cell, so a (query, neighbor) pair is emitted at
-    most once per batch."""
+    deepest of ``levels``, scored by exact cosine (:func:`_pair_cos`,
+    every query's candidates in one call), with one subset per level
+    (probe_rn ≤ p) and the extra ``probe_rn`` column. A row's cell is
+    its max-cosine centroid of the cid-ascending ``cents`` (argmax first
+    occurrence == the former ``array_min(struct(negsim, cid))``), taken
+    on the ``round(v*1000)`` lattice (:func:`_round_half_up`) and its
+    :func:`_seq_norms` when ``quantized`` — the trained codebook's
+    geometry — else on v. A vector lives in one cell, so a (query,
+    neighbor) pair is emitted at most once per batch."""
     import numpy as np
 
     c_mat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
     cnorms = [cn for _, _, cn in cents]
     qm = np.asarray(q.vecs, dtype=np.float64)
-    qn = q.norms
+    qn = np.asarray(q.norms, dtype=np.float64)
     max_p = max(levels)
     # centroid index → probe_rn per query (0 = not probed)
     rnmaps = np.zeros((len(qm), len(cents)), dtype=np.int32)
@@ -1437,16 +1517,14 @@ def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: 
         else:
             cells = _cos_csim(vecs, norms, c_mat, cnorms)
         amax = cells.argmax(axis=1)
-        for qv, qnorm, rnmap in zip(qm, qn, rnmaps):
-            prn = rnmap[amax]
-            pos = np.nonzero((prn >= 1) & (prn <= max_p))[0]
-            prn = prn[pos]
-            yield (
-                pos,
-                _cosine(vecs[pos], norms[pos], qv, qnorm),
-                [prn <= p for p in levels],
-                lambda sel, prn=prn: (prn[sel],),
-            )
+        prn = rnmaps[:, amax]  # (num_queries × rows)
+        qi, ri = np.nonzero((prn >= 1) & (prn <= max_p))
+        sims = _pair_cos(qm, qn, vecs, norms, qi, ri)
+        cands = (
+            (pos, s, [p <= lv for lv in levels])
+            for pos, s, p in _per_query(qi, len(qm), ri, sims, prn[qi, ri])
+        )
+        return cands, lambda qi, ri: (rnmaps[qi, amax[ri]],)
 
     return score
 
@@ -1467,21 +1545,21 @@ def _jl_scorer(q: _Queries, out_dim: int):
         vecs = _batch_mat(batch, "v", signs.shape[1])
         lattice = _round_half_up(vecs * KMEANS_QUANT).astype(np.int64)
         sims = (lattice @ signs.T) @ qproj.T  # (n × num_queries), exact
-        for j in range(len(qproj)):
-            yield _EVERY_ROW, sims[:, j], _ONE_LEVEL, _no_extra
+        return ((_EVERY_ROW, sims[:, j], _ONE_LEVEL) for j in range(len(qproj))), _no_extra
 
     return score
 
 
 def _lsh_scorer(q: _Queries):
     """Rows sharing ANY band value with the query — an OR over bands,
-    so a pair sharing both counts once — scored by exact cosine. Plane
+    so a pair sharing both counts once — scored by exact cosine
+    (:func:`_pair_cos`, every query's candidates in one call). Plane
     dots accumulate left-to-right against the PLANES literals under
     :func:`_bucket_col`'s ``> 0`` predicate."""
     import numpy as np
 
     qm = np.asarray(q.vecs, dtype=np.float64)
-    qn = q.norms
+    qn = np.asarray(q.norms, dtype=np.float64)
     qb = np.asarray([_py_bands(v) for v in q.vecs], dtype=np.int64)
     planes = np.asarray(PLANES, dtype=np.float64)
     mask_bits = (1 << BAND_BITS) - 1
@@ -1494,10 +1572,9 @@ def _lsh_scorer(q: _Queries):
             [(bucket >> (i * BAND_BITS)) & mask_bits for i in range(LSH_BANDS)],
             axis=1,
         )  # (n × LSH_BANDS)
-        norms = _seq_norms(vecs)
-        for qv, qnorm, qband in zip(qm, qn, qb):
-            pos = np.nonzero((bands == qband).any(axis=1))[0]
-            yield pos, _cosine(vecs[pos], norms[pos], qv, qnorm), _ONE_LEVEL, _no_extra
+        qi, ri = np.nonzero((bands[None, :, :] == qb[:, None, :]).any(axis=2))
+        sims = _pair_cos(qm, qn, vecs, _seq_norms(vecs), qi, ri)
+        return ((pos, s, _ONE_LEVEL) for pos, s in _per_query(qi, len(qm), ri, sims)), _no_extra
 
     return score
 
@@ -1506,12 +1583,12 @@ def _hamming_scorer(q: _Queries):
     """Every row, scored by the Hamming distance between its two
     32-bit sign words and the query's (bit i of word w ⇔ v[w*32+i] > 0,
     missing trailing dims read as 0, like :func:`_sign_words`); the
-    extra ``sim`` column is the exact cosine of the selected rows only,
-    for the rerank."""
+    extra ``sim`` column is the exact cosine of the selected pairs only
+    (:func:`_pair_cos`, one call per batch), for the rerank."""
     import numpy as np
 
     qm = np.asarray(q.vecs, dtype=np.float64)
-    qn = q.norms
+    qn = np.asarray(q.norms, dtype=np.float64)
     qw = np.asarray([_py_sign_words(v) for v in q.vecs], dtype=np.int64)
     pows = np.int64(1) << np.arange(32, dtype=np.int64)
 
@@ -1523,15 +1600,10 @@ def _hamming_scorer(q: _Queries):
         w0 = (b0 * pows[: b0.shape[1]]).sum(axis=1).astype(np.int64)
         w1 = (b1 * pows[: b1.shape[1]]).sum(axis=1).astype(np.int64)
         norms = _seq_norms(vecs)
-        for qv, qnorm, (q0, q1) in zip(qm, qn, qw):
-            yield (
-                _EVERY_ROW,
-                _popcount32(w0 ^ q0) + _popcount32(w1 ^ q1),
-                _ONE_LEVEL,
-                lambda sel, qv=qv, qnorm=qnorm: (
-                    _cosine(vecs[sel], norms[sel], qv, qnorm),
-                ),
-            )
+        cands = (
+            (_EVERY_ROW, _popcount32(w0 ^ q0) + _popcount32(w1 ^ q1), _ONE_LEVEL) for q0, q1 in qw
+        )
+        return cands, lambda qi, ri: (_pair_cos(qm, qn, vecs, norms, qi, ri),)
 
     return score
 
@@ -3228,7 +3300,7 @@ def _labelled_neighbors(q: _Queries, corpus, k: int):
     every value a Python int (labels cast to long) or None for NULL."""
     import pyarrow as pa
 
-    nn = _rank_topk(_topk_scan(corpus, q, k, _brute_scorer(q), carry=("label",)), k)
+    nn = _rank_topk(_topk_scan(corpus, q, k, _brute_scorer(q, k), carry=("label",)), k)
     longs = lambda col: col.cast(pa.int64()).to_pylist()  # noqa: E731
     truth = dict(zip(q.ids, longs(q.rows["label"])))
     return truth, list(zip(*(longs(nn[c]) for c in ("query_id", "neighbor_id", "label", "rank"))))
@@ -3581,7 +3653,7 @@ def hamming_rerank_topk(
     them: (hamming ASC, id ASC) keeps the true candidate set, then
     (sim DESC, id ASC) emits the top k. Bit-parity: packing is the
     identical ``x > 0`` bit predicate (ints exact), sims are
-    :func:`_cosine`.
+    :func:`_pair_cos`.
     Output: (query_id, neighbor_id, hamming, rank) — integers plus a
     cosine-ordered rank, ties by neighbor_id."""
 
@@ -3739,8 +3811,7 @@ def _centroid_scorer(q: _Queries, scale: int):
         norms = np.sqrt((lattice * lattice).sum(axis=1).astype(np.float64))[:, None]
         sims = np.full(dots.shape, -np.inf)
         np.divide(dots, norms, out=sims, where=norms > 0)
-        for j in range(len(cents)):
-            yield _EVERY_ROW, sims[:, j], _ONE_LEVEL, _no_extra
+        return ((_EVERY_ROW, sims[:, j], _ONE_LEVEL) for j in range(len(cents))), _no_extra
 
     return score
 

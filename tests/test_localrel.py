@@ -39,6 +39,19 @@ def test_values_df_array_double(spark):
     )
 
 
+def test_values_df_schema_matches_ddl_parser(spark):
+    """``values_df`` builds its schema on the driver from ``_TYPES``
+    (cached per DDL string, no round trip to the JVM's DDL parser): for
+    every supported type name, in any case, it is the schema the parser
+    gives, and a built frame's schema is its own object."""
+    from bunsen_spark.localrel import _TYPES
+
+    ddl = ", ".join(f"c{i} {t.upper() if i % 2 else t}" for i, t in enumerate(_TYPES))
+    want = spark.createDataFrame([], ddl).schema
+    assert values_df(spark, [], ddl).schema == want
+    assert values_df(spark, [], ddl).schema is not values_df(spark, [], ddl).schema
+
+
 def test_values_df_is_local_relation(spark):
     df = values_df(spark, [(1, "x")], "a int, b string")
     # a LocalRelation collect launches no job: executedPlan has no scan
@@ -168,22 +181,47 @@ _SINGLE_PATHS = {
         "insertInto outside operators/_terminology.write_partitioned; land terminology "
         "tables through write_partitioned",
     ),
+    # matrix products (``@``, ``.matmul(``, ``.dot(``): the ANN kernel
+    # runs on the driver, which has no OMP_NUM_THREADS, so a float
+    # product goes to OpenBLAS, whose threads spin after every call. The
+    # JL and label-centroid scorers multiply int64 matrices, which numpy
+    # never hands to BLAS; exact embedding dedup's float product runs in
+    # Python workers, which Spark gives one thread.
+    "@": (
+        {
+            "operators/similarity.py": {"_jl_scorer", "_jl_scorer.score", "_centroid_scorer.score"},
+            "operators/dedup.py": {"_cosine_pairs"},
+        },
+        "a matrix product (@, np.matmul, np.dot) outside the int64 JL and label-centroid "
+        "scorers; on the driver a float one calls OpenBLAS, whose threads spin after each "
+        "call (measured on 4 cores: one 32x64 by 64x5,000 product, then 100 ms idle, cost "
+        "103 ms of process CPU against 6.1 ms for np.einsum(optimize=False)); screen with "
+        "a non-BLAS einsum",
+    ),
 }
 
 
 def _calls(node, attr, func="<module>"):
-    """(line, enclosing function name) of each ``.<attr>(...)`` call
-    under ``node``."""
+    """(line, enclosing function) of each ``.<attr>(...)`` call under
+    ``node``, a nested function named by its dotted path
+    (``_jl_scorer.score``); for ``"@"``, of each matrix product: the
+    operator and ``.matmul(...)`` / ``.dot(...)`` calls."""
     import ast
 
+    names = ("matmul", "dot") if attr == "@" else (attr,)
     for child in ast.iter_child_nodes(node):
         if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            yield from _calls(child, attr, child.name)
+            path = child.name if func == "<module>" else f"{func}.{child.name}"
+            yield from _calls(child, attr, path)
             continue
         if (
             isinstance(child, ast.Call)
             and isinstance(child.func, ast.Attribute)
-            and child.func.attr == attr
+            and child.func.attr in names
+        ) or (
+            attr == "@"
+            and isinstance(child, (ast.BinOp, ast.AugAssign))
+            and isinstance(child.op, ast.MatMult)
         ):
             yield child.lineno, func
         yield from _calls(child, attr, func)
@@ -214,6 +252,13 @@ def test_one_probe_and_one_terminology_writer(attr):
     """The batch-table probe and the terminology warehouse writer each
     have one home."""
     _assert_single_path(attr)
+
+
+def test_no_blas_on_the_driver():
+    """No float matrix product runs on the driver: ``@``, ``np.matmul``
+    and ``np.dot`` appear only in the int64 JL and label-centroid
+    scorers (and in embedding dedup's executor-side pair scoring)."""
+    _assert_single_path("@")
 
 
 def test_one_whole_input_gather():

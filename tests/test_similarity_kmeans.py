@@ -456,7 +456,9 @@ def test_rank_topk_matches_row_number_window(spark):
 def test_seq_dots_bit_identical_to_outer_product_loop():
     """The transposed, preallocated ``_seq_dots`` yields the former
     ``acc += outer(a[:, d], b[:, d])`` loop bit for bit on non-integral
-    inputs (the same products, accumulated in the same order)."""
+    inputs (the same products, accumulated in the same order), and the
+    pairwise ``_pair_dots`` yields ``_seq_dots``' cells bit for bit, for
+    every pair and for a subset of pairs in any order."""
     import numpy as np
 
     def outer_loop(a, b):
@@ -472,6 +474,12 @@ def test_seq_dots_bit_identical_to_outer_product_loop():
         got, want = sim._seq_dots(a, b), outer_loop(a, b)
         assert got.shape == want.shape
         assert np.array_equal(got.view(np.int64), want.view(np.int64))
+        ai, bi = np.nonzero(np.ones((m, n), dtype=bool))
+        pairs = sim._pair_dots(a, b, ai, bi)
+        assert np.array_equal(pairs.view(np.int64), got[ai, bi].view(np.int64))
+        some = rng.permutation(len(ai))[: len(ai) // 3]
+        pairs = sim._pair_dots(a, b, ai[some], bi[some])
+        assert np.array_equal(pairs.view(np.int64), got[ai[some], bi[some]].view(np.int64))
 
 
 def test_topk_sel_matches_full_lexsort():
@@ -567,11 +575,11 @@ def test_placement_parity(
     emb = spark.read.parquet(path)
     scan = sim._corpus(emb, "label")
     assert gathers(scan, sim.GATHER_MAX_BYTES)
-    assert _direct(sim._gather_input(emb, scan))
+    assert _direct(scan)
     direct = _rows(op(emb, **_kw(op)))
     spread = emb.repartition(3)
     assert gathers(sim._corpus(spread, "label"), sim.GATHER_MAX_BYTES)
-    assert not _direct(sim._gather_input(spread, sim._corpus(spread, "label")))
+    assert not _direct(sim._corpus(spread, "label"))
     gathered = _rows(op(spread, **_kw(op)))
     with scatter_gather():
         assert not gathers(scan, sim.GATHER_MAX_BYTES)
@@ -607,6 +615,133 @@ def test_parquet_corpus_gathers_without_a_job(spark, tmp_path_factory, op, store
     gathered, spark_jobs = _jobs(spark, lambda: _rows(op(filtered, k=5, num_queries=8)))
     assert spark_jobs == jobs + 1
     assert direct == gathered and direct
+
+
+@pytest.mark.parametrize("stored", ["float32", "float64"])
+def test_gather_reads_the_cast_corpus_from_files(spark, tmp_path_factory, stored):
+    """``_bcast.gather`` of the scan input itself — ``_corpus``, whose
+    ``v`` is ``embedding`` cast to ``array<double>`` — reads a float or
+    double Parquet corpus from its files with no job, and its table is
+    ``toArrow()`` of the same frame bit for bit: the widened floats,
+    zero vectors and -0.0 included."""
+    import numpy as np
+
+    from bunsen_spark.operators._bcast import gather
+
+    vecs = _zero_vector_vecs()
+    vecs[7] = [-0.0] * 64
+    vecs[9] = [-0.0 if d % 2 else 0.0 for d in range(64)]
+    emb = spark.read.parquet(_corpus_path(tmp_path_factory, f"cast_{stored}", vecs, stored))
+    scan = sim._corpus(emb, "label")
+    assert _direct(scan)
+    got, jobs = _jobs(spark, lambda: gather(scan))
+    assert jobs == 0
+    want = scan.toArrow()
+    assert got.schema == want.schema
+    got, want = (t.sort_by("vec_id").combine_chunks() for t in (got, want))
+    bits = lambda t: np.asarray(t["v"].combine_chunks().flatten()).view(np.int64)  # noqa: E731
+    assert np.array_equal(bits(got), bits(want))
+    assert got.equals(want)
+
+
+@pytest.mark.parametrize(
+    "cast",
+    ["int_elements", "to_array_float", "to_array_int", "to_string", "scalar_column"],
+)
+def test_gather_takes_spark_for_other_casts(spark, tmp_path_factory, cast):
+    """Only a float or double array widened to ``array<double>`` is read
+    from the files: a cast from integer elements, to ``array<float>``,
+    ``array<int>`` or ``string``, or of a scalar column is gathered by
+    Spark — one job, the rows of ``toArrow()``."""
+    from bunsen_spark.operators._bcast import gather
+
+    vecs = _zero_vector_vecs()
+    if cast == "int_elements":
+        vecs = [[round(x * 8) for x in v] for v in vecs]
+    elem = {"int_elements": "int32", "to_array_float": "float64"}.get(cast, "float32")
+    emb = spark.read.parquet(_corpus_path(tmp_path_factory, f"other_cast_{cast}", vecs, elem))
+    v = {
+        "to_array_float": F.col("embedding").cast("array<float>"),
+        "to_array_int": F.col("embedding").cast("array<int>"),
+        "to_string": F.col("embedding").cast("string"),
+    }.get(cast, F.col("embedding").cast("array<double>"))
+    label = F.col("label").cast("long") if cast == "scalar_column" else F.col("label")
+    frame = emb.select("vec_id", v.alias("v"), label.alias("label"))
+    assert not _direct(frame)
+    got, jobs = _jobs(spark, lambda: gather(frame))
+    assert jobs == 1
+    assert got.sort_by("vec_id").equals(frame.toArrow().sort_by("vec_id"))
+
+
+def _rescore_vecs():
+    """24 64-d double vectors: 8 queries (vec_id 0-7), each followed by
+    two neighbours (8 + 2j, 9 + 2j) whose true cosines to it are equal —
+    the second is the first with its coordinates permuted among the
+    positions where the query's coordinates are equal (each query takes
+    4 distinct values), so both dots sum the same products in different
+    orders and their computed values differ only by rounding. Seed 252
+    is the one of seeds 0-299 where numpy's ``einsum`` order and the
+    strict left-to-right order rank all 8 pairs oppositely (numpy 1.26
+    on x86-64): a screen whose fast scores reached the output would
+    swap them."""
+    import random
+
+    rng = random.Random(252)
+    queries, pairs = [], []
+    for _ in range(8):
+        levels = [rng.uniform(-1, 1) for _ in range(4)]
+        q = [rng.choice(levels) for _ in range(64)]
+        a = [x + rng.gauss(0.0, 0.1) for x in q]
+        b = list(a)
+        for level in levels:
+            idx = [d for d in range(64) if q[d] == level]
+            perm = idx[:]
+            rng.shuffle(perm)
+            for src, dst in zip(idx, perm):
+                b[dst] = a[src]
+        queries.append(q)
+        pairs += [a, b]
+    return queries + pairs
+
+
+#: :func:`_rescore_vecs`' top-3 neighbours of each query by the strict
+#: left-to-right cosine (the ``aggregate(zip_with)`` value), ties by id.
+_RESCORE_TOP3 = [
+    (9, 8, 21), (11, 10, 21), (12, 13, 10), (15, 14, 20),
+    (17, 16, 21), (19, 18, 17), (21, 20, 1), (23, 22, 6),
+]
+
+
+def test_brute_force_rescores_screened_rows_exactly(spark, scatter_gather, tmp_path_factory):
+    """On a corpus whose neighbour pairs tie up to rounding, the
+    screened ``brute_force_topk`` returns the strict-order rows — those
+    of Spark's own ``aggregate(zip_with)`` cosine window — read from the
+    Parquet files, gathered by Spark and scattered alike: the fast
+    ``einsum`` scores only choose which rows are rescored."""
+    import numpy as np
+    from pyspark.sql import Window
+
+    vecs = _rescore_vecs()
+    mat = np.asarray(vecs)
+    assert sim._screenable(mat, sim._seq_norms(mat))
+    emb = spark.read.parquet(_corpus_path(tmp_path_factory, "rescore", vecs, "float64"))
+    want = sorted((q, n, r + 1) for q, top in enumerate(_RESCORE_TOP3) for r, n in enumerate(top))
+    c = sim._with_norm(emb).alias("c")
+    q = sim._with_norm(emb).where(F.col("vec_id") < 8).alias("q")
+    cos = sim._dot(F.col("q.v"), F.col("c.v")) / (F.col("q.norm") * F.col("c.norm"))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+    spark_rows = (
+        q.join(c, F.col("q.vec_id") != F.col("c.vec_id"))
+        .select(F.col("q.vec_id").alias("query_id"), F.col("c.vec_id").alias("neighbor_id"), cos.alias("cos"))
+        .withColumn("rank", F.row_number().over(w))
+        .where("rank <= 3")
+        .drop("cos")
+    )
+    assert _rows(spark_rows) == want
+    assert _rows(sim.brute_force_topk(emb, k=3, num_queries=8)) == want
+    assert _rows(sim.brute_force_topk(emb.repartition(3), k=3, num_queries=8)) == want
+    with scatter_gather():
+        assert _rows(sim.brute_force_topk(emb.repartition(3), k=3, num_queries=8)) == want
 
 
 @pytest.mark.parametrize(
@@ -687,7 +822,7 @@ def test_ineligible_corpus_takes_spark_gather(spark, scatter_gather, ineligible_
     scatter-gather."""
     emb = ineligible_corpora[corpus]
     assert gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
-    assert not _direct(sim._gather_input(emb, sim._corpus(emb)))
+    assert not _direct(sim._corpus(emb))
     gathered, jobs = _jobs(spark, lambda: _rows(sim.brute_force_topk(emb, k=5, num_queries=8)))
     assert jobs == 1
     with scatter_gather():
