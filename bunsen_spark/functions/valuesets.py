@@ -219,6 +219,11 @@ def _sql_call_re():
     return _SQL_CALL
 
 
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (``\\`` escaped before ``'``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def rewrite_in_valueset_sql(query: str, valuesets: dict | None = None) -> str:
     """Rewrite every ``in_valueset(col, 'ref')`` call in a SQL string
     into the native exists-expression the Column API emits, so the SQL
@@ -240,7 +245,7 @@ def rewrite_in_valueset_sql(query: str, valuesets: dict | None = None) -> str:
         members = _flat_members(vs[ref])
         if not members:
             return "false"
-        lits = ", ".join("'" + mb.replace("'", "''") + "'" for mb in members)
+        lits = ", ".join(_sql_string(mb) for mb in members)
         return (
             f"coalesce(exists({colexpr}.coding, "
             f"c -> concat(c.system, '|', c.code) IN ({lits})), false)"

@@ -9,8 +9,13 @@ terminology resources (ValueSet, ConceptMap).
 Public API:
     spark_schema_for("Observation")  -> nested analytic StructType
     json_schema_for("Observation")   -> FHIR-JSON parse StructType
-    converter_for("Observation", col) -> Column mapping parsed → analytic
+    converter_for("Observation", ()) -> Column mapping column PARSED → analytic
+    export_struct_for("Observation") -> Column mapping column ANALYTIC → FHIR JSON
     resource_names()                 -> supported type names
+
+The schema and Column functions are cached per type (``clear_caches``
+resets them); the Column ones read fixed input columns, so every decode of
+a type reuses one expression, lambda names included, and plans repeat.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ from __future__ import annotations
 from functools import lru_cache
 
 from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import core
@@ -674,6 +680,12 @@ def base_resource_type(resource_type: str) -> str:
     return resource_type
 
 
+#: the input column of every converter: a ``json_schema_with_contained`` parse
+PARSED = "r"
+#: the input column of every export struct: the analytic row as one struct
+ANALYTIC = "row"
+
+
 @lru_cache(maxsize=None)
 def spark_schema_for(resource_type: str) -> T.StructType:
     return core.spark_schema(definition_for(resource_type))
@@ -684,12 +696,43 @@ def json_schema_for(resource_type: str) -> T.StructType:
     return core.json_schema(definition_for(resource_type))
 
 
-def converter_for(resource_type: str, parsed: Column) -> Column:
-    return core.converter(definition_for(resource_type), parsed)
+@lru_cache(maxsize=None)
+def converter_for(resource_type: str, contained: tuple[str, ...]) -> Column:
+    """Column ``PARSED`` → the analytic struct of
+    ``spark_schema_with_contained``: the base conversion plus a
+    resourceType-dispatched conversion of each contained entry (decode
+    dispatch-by-type mirrors `DefinitionToSparkVisitor.java:180-233`)."""
+    parsed = F.col(PARSED)
+    if not contained:
+        return core.converter(definition_for(resource_type), parsed)
+
+    def conv_entry(c: Column) -> Column:
+        return F.struct(
+            *[
+                F.when(
+                    c["resourceType"] == rt, core.converter(definition_for(rt), c)
+                ).alias(_lower(rt))
+                for rt in contained
+            ]
+        )
+
+    contained_col = F.when(
+        parsed["contained"].isNotNull(), F.transform(parsed["contained"], conv_entry)
+    )
+    return converter_for(resource_type, ()).withField("contained", contained_col)
 
 
-def export_struct_for(resource_type: str, analytic: Column) -> Column:
-    return core.export_struct(definition_for(resource_type), analytic)
+@lru_cache(maxsize=None)
+def export_struct_for(resource_type: str) -> Column:
+    """Column ``ANALYTIC`` → the FHIR-JSON-spelling struct."""
+    return core.export_struct(definition_for(resource_type), F.col(ANALYTIC))
+
+
+def clear_caches() -> None:
+    """Forget every per-type schema and expression; call whenever the
+    definition behind a resource type name may have changed."""
+    for cached in (spark_schema_for, json_schema_for, converter_for, export_struct_for):
+        cached.cache_clear()
 
 
 def _lower(s: str) -> str:
@@ -721,6 +764,8 @@ def json_schema_with_contained(
     resource_type: str, contained: tuple[str, ...]
 ) -> T.StructType:
     base = json_schema_for(resource_type)
+    if not contained:
+        return base
     return T.StructType(
         [
             *base.fields,
@@ -740,6 +785,8 @@ def spark_schema_with_contained(
     field per permissible type (`SparkRowConverter.java:71-116`,
     `Stu3StructureDefinitions.java:624-635`)."""
     base = spark_schema_for(resource_type)
+    if not contained:
+        return base
     inner = T.StructType(
         [
             T.StructField(_lower(rt), spark_schema_for(rt), True)
@@ -751,29 +798,3 @@ def spark_schema_with_contained(
     return T.StructType(
         [*base.fields, T.StructField("contained", T.ArrayType(inner, False), True)]
     )
-
-
-def converter_with_contained(
-    resource_type: str, contained: tuple[str, ...], parsed: Column
-) -> Column:
-    """Base conversion + resourceType-dispatched conversion of each
-    contained entry (decode dispatch-by-type mirrors
-    `DefinitionToSparkVisitor.java:180-233`)."""
-    from pyspark.sql import functions as F
-
-    base = converter_for(resource_type, parsed)
-
-    def conv_entry(c: Column) -> Column:
-        return F.struct(
-            *[
-                F.when(
-                    c["resourceType"] == rt, core.converter(definition_for(rt), c)
-                ).alias(_lower(rt))
-                for rt in contained
-            ]
-        )
-
-    contained_col = F.when(
-        parsed["contained"].isNotNull(), F.transform(parsed["contained"], conv_entry)
-    )
-    return base.withField("contained", contained_col)

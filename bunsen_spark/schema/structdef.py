@@ -614,12 +614,11 @@ def load_structure_definitions(path: str | Path) -> list[str]:
     reg = default_registry()
     p = Path(path)
     urls = reg.load_dir(p) if p.is_dir() else reg.load_file(p)
-    # re-registering a definition must invalidate the schema caches in
-    # resources.py, which memoize per resource-type key
+    # re-registering a definition must invalidate the schema and
+    # expression caches in resources.py, which memoize per type key
     from . import resources
 
-    resources.spark_schema_for.cache_clear()
-    resources.json_schema_for.cache_clear()
+    resources.clear_caches()
     return urls
 
 
@@ -692,6 +691,5 @@ def load_r4_structure_definitions(path: str | Path) -> list[str]:
         _r4 = reg
     from . import resources
 
-    resources.spark_schema_for.cache_clear()
-    resources.json_schema_for.cache_clear()
+    resources.clear_caches()
     return urls

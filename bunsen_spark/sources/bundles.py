@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schema import converter_for, json_schema_for, spark_schema_for
+from .resources import resources_from_json_strings
 
 # bundle envelope: capture each entry's resource as a raw JSON string
 _BUNDLE_ENVELOPE = "struct<entry: array<struct<resource: string>>>"
@@ -35,7 +35,8 @@ def load_from_directory(spark: SparkSession, path: str) -> DataFrame:
     bundles as plain columns instead of a custom RDD container type.
     Each file is read whole (``wholetext``), so the scan's splits follow
     ``spark.sql.files.*`` (``maxPartitionBytes``, ``openCostInBytes``).
-    JSON only for now (reference also reads XML — S3 gap, tracked).
+    XML bundles load with ``xml.load_from_directory_xml`` into the same
+    columns.
     """
     raw = spark.read.text(path, wholetext=True).select(
         F.input_file_name().alias("bundle_file"), F.col("value").alias("content")
@@ -73,38 +74,9 @@ def extract_entry(
 
     The returned frame's schema is fixed by the FHIR definition — never
     inferred from data — so absent elements are typed nulls.
-    ``contained_types`` declares the permissible contained resource
-    types (`SparkRowConverter.forResource` containedUrls,
-    SparkRowConverter.java:71-116): the schema gains a ``contained``
-    array with one struct field per declared type, populated by
-    resourceType dispatch.
+    ``contained_types`` as in ``resources.resources_from_json_strings``.
     """
-    if contained_types:
-        from ..schema.resources import (
-            converter_with_contained,
-            json_schema_with_contained,
-            spark_schema_with_contained,
-        )
-
-        parse_schema = json_schema_with_contained(resource_type, contained_types)
-        target_schema = spark_schema_with_contained(resource_type, contained_types)
-        convert = lambda col: converter_with_contained(resource_type, contained_types, col)  # noqa: E731
-    else:
-        parse_schema = json_schema_for(resource_type)
-        target_schema = spark_schema_for(resource_type)
-        convert = lambda col: converter_for(resource_type, col)  # noqa: E731
-    from ..schema.resources import base_resource_type
-
-    parsed = (
-        bundles.where(F.col("resource_type") == base_resource_type(resource_type))
-        .select(F.from_json("resource_json", parse_schema).alias("r"))
-        .select(convert(F.col("r")).alias("res"))
-    )
-    # flatten the single struct column into top-level resource columns,
-    # casting through the spec schema for exact type parity
-    out = parsed.select("res.*")
-    assert out.schema == target_schema, "converter output must equal spec schema"
-    return out
+    return resources_from_json_strings(bundles, "resource_json", resource_type, contained_types)
 
 
 #: synthetic colocation column added by ``bucket_by_subject`` layouts

@@ -21,16 +21,13 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schema import export_struct_for
+from ..schema.resources import ANALYTIC, export_struct_for
 
 
 def to_resource_json(df: DataFrame, resource_type: str) -> DataFrame:
     """One FHIR JSON string per resource row, column ``json``."""
-    return df.select(
-        F.to_json(
-            export_struct_for(resource_type, F.struct(*df.columns)),
-            {"ignoreNullFields": "true"},
-        ).alias("json")
+    return df.select(F.struct(*df.columns).alias(ANALYTIC)).select(
+        F.to_json(export_struct_for(resource_type), {"ignoreNullFields": "true"}).alias("json")
     )
 
 

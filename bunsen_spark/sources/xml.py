@@ -30,7 +30,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .resources import resources_from_json_strings
 
 FHIR_NS = "http://hl7.org/fhir"
 XHTML_NS = "http://www.w3.org/1999/xhtml"
@@ -305,32 +306,23 @@ def fhir_json_to_xml(json_string: str) -> str:
     return "".join(out)
 
 
+def _xml_to_json(df: DataFrame, column: str) -> DataFrame:
+    """The FHIR XML documents in ``column`` → their FHIR JSON in column
+    ``json`` (the one per-row Python step of every XML reader)."""
+
+    def convert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({"json": [fhir_xml_to_json(x) for x in pdf[column]]})
+
+    return df.select(column).mapInPandas(convert, "json string")
+
+
 def resources_from_xml_column(
     df: DataFrame, column: str, resource_type: str
 ) -> DataFrame:
     """Standalone XML resources in a string column → spec-schema rows
-    (the column twin of :func:`read_xml_resources_from_directory`)."""
-    from ..schema import converter_for, json_schema_for
-
-    def convert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"resource_json": [fhir_xml_to_json(x) for x in pdf[column]]}
-            )
-
-    jsons = df.select(column).mapInPandas(convert, "resource_json string")
-    parse_schema = json_schema_for(resource_type)
-    from ..schema.resources import base_resource_type
-
-    return (
-        jsons.where(
-            F.get_json_object("resource_json", "$.resourceType")
-            == base_resource_type(resource_type)
-        )
-        .select(F.from_json("resource_json", parse_schema).alias("r"))
-        .select(converter_for(resource_type, F.col("r")).alias("res"))
-        .select("res.*")
-    )
+    (the XML twin of ``resources.resources_from_json_strings``)."""
+    return resources_from_json_strings(_xml_to_json(df, column), "json", resource_type)
 
 
 def from_xml_column(df: DataFrame, column: str) -> DataFrame:
@@ -338,18 +330,12 @@ def from_xml_column(df: DataFrame, column: str) -> DataFrame:
     (the XML twin of ``bundles.from_json_column``)."""
     from .bundles import from_json_column
 
-    def convert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({"content_json": [fhir_xml_to_json(x) for x in pdf[column]]})
-
-    converted = df.select(column).mapInPandas(convert, "content_json string")
-    return from_json_column(converted, "content_json")
+    return from_json_column(_xml_to_json(df, column), "json")
 
 
 def load_from_directory_xml(spark: SparkSession, path: str) -> DataFrame:
     """Directory of XML bundle files → one row per resource entry."""
-    raw = spark.read.text(path, wholetext=True).select(F.col("value").alias("content_xml"))
-    return from_xml_column(raw, "content_xml")
+    return from_xml_column(spark.read.text(path, wholetext=True), "value")
 
 
 def read_xml_resources_from_directory(
@@ -357,18 +343,4 @@ def read_xml_resources_from_directory(
 ) -> DataFrame:
     """Directory of standalone XML resources (ConceptMap / ValueSet
     imports, SURVEY S6) → spec-schema rows."""
-    from ..schema import converter_for, json_schema_for
-
-    def convert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({"resource_json": [fhir_xml_to_json(x) for x in pdf["value"]]})
-
-    raw = spark.read.text(path, wholetext=True)
-    jsons = raw.mapInPandas(convert, "resource_json string")
-    parse_schema = json_schema_for(resource_type)
-    return (
-        jsons.where(F.get_json_object("resource_json", "$.resourceType") == resource_type)
-        .select(F.from_json("resource_json", parse_schema).alias("r"))
-        .select(converter_for(resource_type, F.col("r")).alias("res"))
-        .select("res.*")
-    )
+    return resources_from_xml_column(spark.read.text(path, wholetext=True), "value", resource_type)

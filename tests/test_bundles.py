@@ -101,3 +101,36 @@ def test_medication_request_choice(spark, bundles):
     assert len(rows) == 4
     assert all(r["rx"] == "197361" for r in rows)
     assert all(r["prn"] is False for r in rows)
+
+
+def test_repeat_extract_entry_reuses_the_converter(spark, bundles, monkeypatch):
+    """The conversion expression is built once per resource type: a
+    second extraction of a type costs a few py4j round trips, not the
+    ~20k of a fresh build."""
+    from py4j.clientserver import ClientServerConnection
+
+    extract_entry(spark, bundles, "Observation")
+    calls = 0
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        nonlocal calls
+        calls += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    extract_entry(spark, bundles, "Observation")
+    monkeypatch.undo()
+    assert calls <= 200
+
+
+def test_repeat_extract_entry_plans_equal(spark, bundles):
+    """Two extractions of one type optimize to the same plan, up to
+    expression ids (the cached converter keeps its lambda names)."""
+    import re
+
+    def plan():
+        df = extract_entry(spark, bundles, "Observation")
+        return re.sub(r"#\d+L?", "#N", df._jdf.queryExecution().optimizedPlan().toString())
+
+    assert plan() == plan()

@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -19,17 +18,13 @@ def bundles(spark):
 
 
 def _roundtrip(spark, bundles, resource_type: str):
-    from bunsen_spark.schema import converter_for, json_schema_for
     from bunsen_spark.sources.bundles import extract_entry
     from bunsen_spark.sources.export import to_resource_json
+    from bunsen_spark.sources.resources import resources_from_json_strings
 
     original = extract_entry(spark, bundles, resource_type)
     exported = to_resource_json(original, resource_type)
-    reparsed = (
-        exported.select(F.from_json("json", json_schema_for(resource_type)).alias("r"))
-        .select(converter_for(resource_type, F.col("r")).alias("res"))
-        .select("res.*")
-    )
+    reparsed = resources_from_json_strings(exported, "json", resource_type)
     assert reparsed.schema == original.schema
     orig_rows = sorted(str(r) for r in original.collect())
     back_rows = sorted(str(r) for r in reparsed.collect())

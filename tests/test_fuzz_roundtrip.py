@@ -117,20 +117,14 @@ def test_xml_shim_roundtrip_fuzz(resource_type):
 )
 @pytest.mark.slow
 def test_spark_ingest_export_roundtrip_fuzz(spark, resource_type):
-    from pyspark.sql import functions as F
-
-    from bunsen_spark.schema import converter_for, json_schema_for
     from bunsen_spark.sources.export import to_resource_json
+    from bunsen_spark.sources.resources import resources_from_json_strings
 
     docs = [json.dumps(gen_resource(resource_type, s)) for s in range(40)]
     raw = spark.createDataFrame([(d,) for d in docs], "resource_json string")
 
     def ingest(df):
-        return (
-            df.select(F.from_json("resource_json", json_schema_for(resource_type)).alias("r"))
-            .select(converter_for(resource_type, F.col("r")).alias("res"))
-            .select("res.*")
-        )
+        return resources_from_json_strings(df, "resource_json", resource_type)
 
     first = ingest(raw)
     exported = to_resource_json(first, resource_type).withColumnRenamed("json", "resource_json")

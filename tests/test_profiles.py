@@ -57,11 +57,9 @@ def test_profiled_extensions_reexport_roundtrip(spark, bundles):
     round-trip back to identical rows."""
     import json
 
-    from pyspark.sql import functions as F
-
-    from bunsen_spark.schema import converter_for, json_schema_for
     from bunsen_spark.sources.bundles import extract_entry
     from bunsen_spark.sources.export import to_resource_json, to_resource_xml
+    from bunsen_spark.sources.resources import resources_from_json_strings
     from bunsen_spark.sources.xml import resources_from_xml_column
 
     pats = extract_entry(spark, bundles, "UsCorePatient")
@@ -80,11 +78,7 @@ def test_profiled_extensions_reexport_roundtrip(spark, bundles):
     # a row with no extensions exports none
     assert "extension" not in docs["pat-3002"]
 
-    back_json = (
-        jsons.select(F.from_json("json", json_schema_for("UsCorePatient")).alias("r"))
-        .select(converter_for("UsCorePatient", F.col("r")).alias("res"))
-        .select("res.*")
-    )
+    back_json = resources_from_json_strings(jsons, "json", "UsCorePatient")
     assert sorted(map(str, pats.collect())) == sorted(map(str, back_json.collect()))
 
     xml = to_resource_xml(pats, "UsCorePatient")

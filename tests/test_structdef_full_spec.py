@@ -145,8 +145,7 @@ def fresh_registry_after():
     from bunsen_spark.schema import resources, structdef
 
     structdef._default = None
-    resources.spark_schema_for.cache_clear()
-    resources.json_schema_for.cache_clear()
+    resources.clear_caches()
 
 
 def test_bundle_publish_format_minimize_and_register(spark, tmp_path, fresh_registry_after):
@@ -226,8 +225,7 @@ def test_spec_auto_load_from_env_dir(spark, tmp_path, monkeypatch, fresh_registr
     )
     monkeypatch.setenv("BUNSEN_SPARK_FHIR_SPEC_DIR", str(spec_dir))
     structdef._default = None  # force re-resolution with the env set
-    resources.spark_schema_for.cache_clear()
-    resources.json_schema_for.cache_clear()
+    resources.clear_caches()
 
     assert "http://hl7.org/fhir/StructureDefinition/Claim" in default_registry().urls()
     claim_bundle = {
@@ -270,8 +268,7 @@ def test_spec_auto_load_base_definition_wins_fallback_alias(
     )
     monkeypatch.setenv("BUNSEN_SPARK_FHIR_SPEC_DIR", str(spec_dir))
     structdef._default = None
-    resources.spark_schema_for.cache_clear()
-    resources.json_schema_for.cache_clear()
+    resources.clear_caches()
 
     reg = default_registry()
     assert reg.get("CarePlan") is reg.get("http://hl7.org/fhir/StructureDefinition/CarePlan")

@@ -119,6 +119,31 @@ def test_null_coding_parts_never_match(spark, system, code, expected):
     assert got == dict.fromkeys(got, expected)
 
 
+@pytest.mark.parametrize("code", ["it's", "a\\b"])
+def test_quoted_member_codes(spark, code):
+    """A member code holding a quote or a backslash is spelled as a SQL
+    literal that reads back as the same code: the SQL rewrite agrees
+    with the Column API and the UDF."""
+    from bunsen_spark.functions.valuesets import sql as native_sql
+
+    push_valuesets(spark, {"q": [(SCT, code)]})
+    try:
+        df = spark.createDataFrame(
+            [(([(SCT, code)],),)],
+            "code struct<coding: array<struct<system:string, code:string>>>",
+        )
+        df.createOrReplaceTempView("quoted_codings")
+        query = "SELECT in_valueset(code, 'q') AS m FROM quoted_codings"
+        got = {
+            "udf": spark.sql(query).first()["m"],
+            "rewrite": native_sql(spark, query).first()["m"],
+            "column": df.select(in_valueset(F.col("code"), "q")).first()[0],
+        }
+    finally:
+        pop_valuesets(spark)
+    assert got == dict.fromkeys(got, True)
+
+
 def test_unknown_reference_raises(pushed):
     with pytest.raises(ValueError, match="unknown valueset reference"):
         in_valueset(F.col("code"), "nope")

@@ -55,3 +55,25 @@ def test_xml_valueset_resource_scan(spark, tmp_path):
     assert sorted(str(r) for r in via_xml.collect()) == sorted(
         str(r) for r in via_json.collect()
     )
+
+
+def test_xml_profile_resource_scan(spark, tmp_path):
+    """A profile read from a directory of standalone XML resources keeps
+    the rows of its base type, as the JSON directory read does."""
+    import json as jsonlib
+
+    from bunsen_spark.sources.resources import read_resources_from_directory
+    from bunsen_spark.sources.xml import fhir_json_to_xml, read_xml_resources_from_directory
+
+    bundle = jsonlib.load(open("fixtures/bundles/uscore/pat-3001.bundle.json"))
+    (tmp_path / "json").mkdir()
+    (tmp_path / "xml").mkdir()
+    for i, entry in enumerate(bundle["entry"]):
+        doc = jsonlib.dumps(entry["resource"])
+        (tmp_path / "json" / f"{i}.json").write_text(doc)
+        (tmp_path / "xml" / f"{i}.xml").write_text(fhir_json_to_xml(doc))
+    via_json = read_resources_from_directory(spark, str(tmp_path / "json"), "UsCorePatient")
+    via_xml = read_xml_resources_from_directory(spark, str(tmp_path / "xml"), "UsCorePatient")
+    rows = sorted(str(r) for r in via_json.collect())
+    assert len(rows) == 2
+    assert sorted(str(r) for r in via_xml.collect()) == rows

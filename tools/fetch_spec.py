@@ -115,8 +115,7 @@ def main() -> int:
     # which the final line reminds them of)
     os.environ[structdef._SPEC_ENV] = str(dest)
     structdef._default = None
-    resources.spark_schema_for.cache_clear()
-    resources.json_schema_for.cache_clear()
+    resources.clear_caches()
     failed = []
     for rt in args.check:
         try:
