@@ -18,6 +18,14 @@ size they measured. Any other cast (from integer elements, to
 ``array<float>``, to a string, of a scalar column) is collected by
 Spark.
 
+A repeated search over one corpus gathers the same frame again (the
+ANN callers memoize their scan frame per input frame), so two facts
+are kept: :func:`_parquet_columns`' plan walk, weakly per frame (the
+conf it depends on is read on every call), and :func:`gather`'s most
+recent Parquet read, in one slot keyed on the frame and its files'
+``(path, st_size, st_mtime_ns)``, so at most one gathered table is
+held.
+
 The fixpoint/verify operators broadcast node-sized relations (labels,
 ranks, candidate pairs) whose built size deliberately exceeds the
 auto-broadcast threshold — that is the point of the hint. But the row
@@ -42,6 +50,10 @@ Semantics of :func:`broadcast_row_cap`:
 """
 
 from __future__ import annotations
+
+import os
+import weakref
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -137,6 +149,10 @@ def _widens(src, out) -> bool:
     )
 
 
+#: frame → its :func:`_parquet_columns` plan walk
+_PARQUET_FACTS: "weakref.WeakKeyDictionary[DataFrame, tuple | None]" = weakref.WeakKeyDictionary()
+
+
 def _parquet_columns(df: DataFrame):
     """``(paths, [(file column, output name)], file schema, schema)``
     when ``df``'s optimized plan is a plain Parquet relation — exactly
@@ -147,15 +163,26 @@ def _parquet_columns(df: DataFrame):
     matching Parquet columns by name (as it does unless
     ``spark.sql.parquet.fieldId.read.enabled`` is set); else None. The
     schemas are ``to_arrow_schema`` of the read columns' types and of
-    ``df``'s. Driver-only: reads the plan and the file index."""
+    ``df``'s. Driver-only: reads the conf on every call, and the plan
+    and the file index once per frame — a frame's optimized plan and
+    its ``InMemoryFileIndex`` listing never change, so the walk is
+    memoized weakly per frame."""
+    by_field_id = df.sparkSession.conf.get("spark.sql.parquet.fieldId.read.enabled", "false")
+    if by_field_id.lower() == "true":
+        return None
+    if df not in _PARQUET_FACTS:
+        _PARQUET_FACTS[df] = _walk_parquet_plan(df)
+    return _PARQUET_FACTS[df]
+
+
+def _walk_parquet_plan(df: DataFrame):
+    """:func:`_parquet_columns` less its conf check: the walk of
+    ``df``'s optimized plan and file index."""
     from urllib.parse import unquote, urlparse
 
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType, _parse_datatype_json_string
 
-    by_field_id = df.sparkSession.conf.get("spark.sql.parquet.fieldId.read.enabled", "false")
-    if by_field_id.lower() == "true":
-        return None
     plan = df._jdf.queryExecution().optimizedPlan()
     project = None
     if _class(plan) == _PROJECT:
@@ -220,6 +247,39 @@ def _read_parquet(paths: list[str], cols: list[tuple[str, str]], stored_as, sche
     return pa.concat_tables(tables) if tables else schema.empty_table()
 
 
+class _Gathered(NamedTuple):
+    """:func:`gather`'s slot: the frame it read, its files' stats
+    before the read, and the table read."""
+
+    frame: weakref.ref
+    stats: tuple
+    table: object
+
+
+#: the most recent Parquet read of :func:`gather`, or None
+_last: _Gathered | None = None
+
+
+def _forget(frame: weakref.ref) -> None:
+    """Empty :func:`gather`'s slot when the frame it holds is collected."""
+    global _last
+    if _last is not None and _last.frame is frame:
+        _last = None
+
+
+def _file_stats(paths: list[str]) -> tuple | None:
+    """Each file's ``(path, st_size, st_mtime_ns)``, or None when one
+    cannot be stat'ed."""
+    stats = []
+    try:
+        for path in paths:
+            st = os.stat(path)
+            stats.append((path, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(stats)
+
+
 def gather(df: DataFrame) -> "pyarrow.Table":
     """``df``'s rows as one ``pyarrow.Table`` on the driver: the
     library's one whole-input gather, for an input :func:`gathers`
@@ -231,10 +291,31 @@ def gather(df: DataFrame) -> "pyarrow.Table":
     columns Arrow-cast — the same values, no Spark job. Any other
     input, or any failed check, is ``df.toArrow()`` (one job,
     ``spark.driver.maxResultSize`` still guards it). Row order is not
-    part of the contract."""
+    part of the contract.
+
+    The Parquet read is kept in one slot for the next call: the same
+    frame (by identity) whose files all still stat to the same
+    ``(path, st_size, st_mtime_ns)`` gets the same table back, no read.
+    The file listing is the frame's, fixed when it was read, so a stat
+    is all a reuse needs; a mismatch or a stat error reads again. The
+    slot is emptied before each file read and when its frame is
+    collected; ``toArrow()`` results are never kept. Tables are
+    immutable, so callers share the kept one."""
+    global _last
     found = _parquet_columns(df)
-    table = _read_parquet(*found) if found is not None else None
-    return df.toArrow() if table is None else table
+    if found is None:
+        return df.toArrow()
+    stats = _file_stats(found[0])
+    last = _last
+    if stats is not None and last is not None and last.frame() is df and last.stats == stats:
+        return last.table
+    _last = None
+    table = _read_parquet(*found)
+    if table is None:
+        return df.toArrow()
+    if stats is not None:
+        _last = _Gathered(weakref.ref(df, _forget), stats, table)
+    return table
 
 
 def broadcast_row_cap(spark: SparkSession, default_rows: int) -> int:

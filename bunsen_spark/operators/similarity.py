@@ -44,6 +44,7 @@ float-summation differences.
 
 from __future__ import annotations
 
+import weakref
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
@@ -77,12 +78,29 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
+#: input frame → {(carry, is_cached): its :func:`_corpus` scan frame}
+_SCANS: "weakref.WeakKeyDictionary[DataFrame, dict]" = weakref.WeakKeyDictionary()
+
+
 def _corpus(embeddings: DataFrame, *carry: str) -> DataFrame:
     """(vec_id, v array<double>, *carry): a scan's input at its natural
-    partitioning, with the ``carry`` columns (a ``label``) uncast."""
-    return embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"), *carry
-    )
+    partitioning, with the ``carry`` columns (a ``label``) uncast.
+
+    One frame per input frame, ``carry`` and ``embeddings.is_cached``,
+    memoized weakly on the input frame, so every search over one corpus
+    builds, analyzes and optimizes its scan once (Spark keeps the
+    optimized plan and its statistics on the frame) and hands
+    :func:`_bcast.gather` the same frame to reuse its read. A
+    ``cache()``/``unpersist()`` of the input frame after a search gets
+    a frame of its own, planned against the cache manager as it then
+    is; the entry goes with the input frame."""
+    scans = _SCANS.setdefault(embeddings, {})
+    key = (carry, embeddings.is_cached)
+    if key not in scans:
+        scans[key] = embeddings.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v"), *carry
+        )
+    return scans[key]
 
 
 def _with_norm(embeddings: DataFrame) -> DataFrame:
@@ -991,11 +1009,28 @@ def _round_half_up(x):
 
 def _batch_mat(batch, name: str, dim: int, dtype: str = "float64"):
     """(n × dim) ``dtype`` matrix from a fixed-width list column of an
-    Arrow record batch (offsets honored via flatten)."""
+    Arrow record batch (offsets honored via flatten; ``dim`` -1 is the
+    longest row's length). A NULL row, or one of another length, raises
+    ValueError naming the first such row's vec_id (its position in a
+    batch without one), its length and ``dim`` — on the driver for a
+    gathered corpus, from the task for a scattered one. Flattening
+    alone would not: a NULL beside a row ``dim`` values too long
+    reshapes to ``n × dim`` with every row between them shifted."""
     import numpy as np
+    import pyarrow.compute as pc
 
     col = batch.column(batch.schema.get_field_index(name))
     n = len(col)
+    lengths = pc.list_value_length(col).fill_null(-1).to_numpy()
+    if n and dim < 0:
+        dim = int(lengths.max())
+    bad = np.flatnonzero((lengths != dim) | (lengths < 0))
+    if len(bad):
+        i = int(bad[0])
+        ids = batch.schema.get_field_index("vec_id")
+        row = f"vec_id {batch.column(ids)[i].as_py()}" if ids >= 0 else f"row {i}"
+        length = "NULL" if lengths[i] < 0 else int(lengths[i])
+        raise ValueError(f"{row}: {name} has length {length}, expected {dim}")
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return np.asarray(flat, dtype=dtype).reshape(n, dim)
 
@@ -1225,7 +1260,14 @@ def _scan_input(embeddings: DataFrame, carry=()):
     :func:`_topk_scan` runs: a Parquet corpus of float or double
     vectors is read from its files and widened by an Arrow cast, no
     job; any other input runs one. Otherwise the frame is returned,
-    for a scatter-gather scan."""
+    for a scatter-gather scan.
+
+    A repeat search of one input frame repeats only the decision: the
+    scan frame is :func:`_corpus`'s memo (plan and statistics built
+    once), and the rule reads the auto-broadcast threshold on every
+    call, so a search after a threshold change places itself anew. A
+    gathered Parquet corpus whose files still stat alike is the table
+    :func:`_bcast.gather` kept, not a re-read."""
     scan = _corpus(embeddings, *carry)
     if gathers(scan, GATHER_MAX_BYTES):
         return gather(scan)

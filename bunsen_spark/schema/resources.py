@@ -707,14 +707,13 @@ def converter_for(resource_type: str, contained: tuple[str, ...]) -> Column:
         return core.converter(definition_for(resource_type), parsed)
 
     def conv_entry(c: Column) -> Column:
-        return F.struct(
-            *[
-                F.when(
-                    c["resourceType"] == rt, core.converter(definition_for(rt), c)
-                ).alias(_lower(rt))
-                for rt in contained
-            ]
-        )
+        branches = []
+        for rt in contained:
+            name, base = _contained_field(rt)
+            branches.append(
+                F.when(c["resourceType"] == base, core.converter(definition_for(rt), c)).alias(name)
+            )
+        return F.struct(*branches)
 
     contained_col = F.when(
         parsed["contained"].isNotNull(), F.transform(parsed["contained"], conv_entry)
@@ -735,8 +734,12 @@ def clear_caches() -> None:
         cached.cache_clear()
 
 
-def _lower(s: str) -> str:
-    return s[0].lower() + s[1:]
+def _contained_field(resource_type: str) -> tuple[str, str]:
+    """A contained type's analytic field name — its name without the
+    ``r4:`` address prefix, first letter lowered — and the
+    ``resourceType`` its entries carry (:func:`base_resource_type`)."""
+    name = resource_type.removeprefix("r4:")
+    return name[0].lower() + name[1:], base_resource_type(resource_type)
 
 
 def _merged_contained_json_struct(contained: tuple[str, ...]) -> T.StructType:
@@ -789,7 +792,7 @@ def spark_schema_with_contained(
         return base
     inner = T.StructType(
         [
-            T.StructField(_lower(rt), spark_schema_for(rt), True)
+            T.StructField(_contained_field(rt)[0], spark_schema_for(rt), True)
             for rt in contained
         ]
     )

@@ -58,6 +58,58 @@ def scatter_gather(spark):
     return placement
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(build)`` → (``build()``, the number of Spark jobs it
+    ran): ``build`` runs in a job group of its own, and the caller's job
+    group, description and interrupt flag are restored afterwards."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+    def count(build):
+        group = f"count_jobs_{uuid.uuid4().hex}"
+        before = [sc.getLocalProperty(k) for k in keys]
+        sc.setJobGroup(group, group)
+        try:
+            out = build()
+        finally:
+            for k, v in zip(keys, before):
+                sc.setLocalProperty(k, v)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
+def count_py4j(monkeypatch):
+    """``count_py4j(build)`` → (``build()``, the number of py4j commands
+    it sent the JVM). Only the calling thread's commands count: py4j's
+    finalizer thread sends a release command for each Java object whose
+    Python proxy was collected, whenever that happens to be."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    def count(build):
+        calls = 0
+        caller = threading.get_ident()
+        send = ClientServerConnection.send_command
+
+        def counted(self, command):
+            nonlocal calls
+            calls += threading.get_ident() == caller
+            return send(self, command)
+
+        with monkeypatch.context() as m:
+            m.setattr(ClientServerConnection, "send_command", counted)
+            out = build()
+        return out, calls
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

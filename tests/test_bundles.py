@@ -103,24 +103,12 @@ def test_medication_request_choice(spark, bundles):
     assert all(r["prn"] is False for r in rows)
 
 
-def test_repeat_extract_entry_reuses_the_converter(spark, bundles, monkeypatch):
+def test_repeat_extract_entry_reuses_the_converter(spark, bundles, count_py4j):
     """The conversion expression is built once per resource type: a
     second extraction of a type costs a few py4j round trips, not the
     ~20k of a fresh build."""
-    from py4j.clientserver import ClientServerConnection
-
     extract_entry(spark, bundles, "Observation")
-    calls = 0
-    send = ClientServerConnection.send_command
-
-    def counted(self, command):
-        nonlocal calls
-        calls += 1
-        return send(self, command)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    extract_entry(spark, bundles, "Observation")
-    monkeypatch.undo()
+    _, calls = count_py4j(lambda: extract_entry(spark, bundles, "Observation"))
     assert calls <= 200
 
 

@@ -36,20 +36,6 @@ def _blocked(df) -> bool:
     return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
 
 
-def _jobs(spark, build):
-    """(``build()``, the number of Spark jobs it ran)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"dedup_embedding_probe_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "placement jobs")
-    try:
-        out = build()
-        return out, len(list(sc.statusTracker().getJobIdsForGroup(group)))
-    finally:
-        sc.setJobGroup("tests", "")
-
-
 def _duckdb_pairs(path: str, threshold: float = 0.45):
     import duckdb
 
@@ -114,35 +100,35 @@ def test_blocked_single_block_degenerate(spark, sf_dir, scatter_gather):
     assert len(one) == len(set(one))
 
 
-def test_placement_decision_runs_no_spark_job(spark, sf_dir, scatter_gather):
+def test_placement_decision_runs_no_spark_job(spark, count_jobs, sf_dir, scatter_gather):
     """The decision reads plan statistics only: zero jobs to decide, zero
     to build the blocked plan, zero to build the broadcast plan of a
     Parquet corpus (read from its files) and exactly the one gather job
     for a corpus Spark gathers."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert _jobs(spark, lambda: _gathers(emb)) == (True, 0)
-    df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    assert count_jobs(lambda: _gathers(emb)) == (True, 0)
+    df, n = count_jobs(lambda: embedding_near_dup_pairs(emb))
     assert n == 0 and not _blocked(df)
-    df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb.where(F.col("vec_id") >= 0)))
+    df, n = count_jobs(lambda: embedding_near_dup_pairs(emb.where(F.col("vec_id") >= 0)))
     assert n == 1 and not _blocked(df)
     with scatter_gather():
-        df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+        df, n = count_jobs(lambda: embedding_near_dup_pairs(emb))
     assert n == 0 and _blocked(df)
 
 
-def test_no_size_estimate_runs_blocked(spark, sf_dir):
+def test_no_size_estimate_runs_blocked(spark, count_jobs, sf_dir):
     """A corpus whose plan has no size estimate (RDD-backed) cannot be
     proven to fit, so it takes the no-driver-collect blocked path:
     building the frame runs no job."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     rdd_backed = spark.createDataFrame(emb.rdd, emb.schema)
     assert not _gathers(rdd_backed)
-    df, n = _jobs(spark, lambda: embedding_near_dup_pairs(rdd_backed))
+    df, n = count_jobs(lambda: embedding_near_dup_pairs(rdd_backed))
     assert n == 0 and _blocked(df)
     assert _pairs(df) == _pairs(embedding_near_dup_pairs(emb))
 
 
-def test_corpus_over_gather_cap_runs_blocked(spark, sf_dir, monkeypatch):
+def test_corpus_over_gather_cap_runs_blocked(spark, count_jobs, sf_dir, monkeypatch):
     """The operator places its corpus by ``EMBEDDING_GATHER_MAX_BYTES``:
     at the corpus's plan size it is gathered, one byte below it runs
     blocked, with the same pairs; neither runs a job to build."""
@@ -151,15 +137,15 @@ def test_corpus_over_gather_cap_runs_blocked(spark, sf_dir, monkeypatch):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     size = plan_size_bytes(_src(emb))
     monkeypatch.setattr(dedup, "EMBEDDING_GATHER_MAX_BYTES", size)
-    broadcast, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    broadcast, n = count_jobs(lambda: embedding_near_dup_pairs(emb))
     assert n == 0 and not _blocked(broadcast)
     monkeypatch.setattr(dedup, "EMBEDDING_GATHER_MAX_BYTES", size - 1)
-    blocked, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+    blocked, n = count_jobs(lambda: embedding_near_dup_pairs(emb))
     assert n == 0 and _blocked(blocked)
     assert _pairs(blocked) == _pairs(broadcast)
 
 
-def test_corpus_over_threshold_runs_blocked(spark, sf_dir):
+def test_corpus_over_threshold_runs_blocked(spark, count_jobs, sf_dir):
     """A corpus larger than ``spark.sql.autoBroadcastJoinThreshold`` is
     never gathered to the driver: it runs blocked, with the same pairs."""
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -169,7 +155,7 @@ def test_corpus_over_threshold_runs_blocked(spark, sf_dir):
     spark.conf.set(key, "1024")
     try:
         assert not _gathers(emb)
-        df, n = _jobs(spark, lambda: embedding_near_dup_pairs(emb))
+        df, n = count_jobs(lambda: embedding_near_dup_pairs(emb))
         assert n == 0 and _blocked(df)
         assert _pairs(df) == want
     finally:

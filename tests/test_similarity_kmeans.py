@@ -528,21 +528,6 @@ def _rows(df) -> list:
     return _sorted(df.collect())
 
 
-def _jobs(spark, build):
-    """(``build()``, the number of Spark jobs it ran)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"similarity_jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "corpus", ["tie", "zero_norm", "zero_norm_f64", "one_row", "two_rows", "null_label"]
 )
@@ -603,22 +588,22 @@ _DEFAULT_SCAN_JOBS = {
 
 @pytest.mark.parametrize("stored", ["float32", "float64"])
 @pytest.mark.parametrize("op", list(_DEFAULT_SCAN_JOBS), ids=lambda op: op.__name__)
-def test_parquet_corpus_gathers_without_a_job(spark, tmp_path_factory, op, stored):
+def test_parquet_corpus_gathers_without_a_job(spark, count_jobs, tmp_path_factory, op, stored):
     """A broadcast-sized Parquet corpus of floats or doubles is read on
     the driver from its files: the search runs no gather job, and gives
     the rows of the same corpus gathered by Spark (one more job)."""
     vecs = _zero_vector_vecs()
     emb = spark.read.parquet(_corpus_path(tmp_path_factory, f"direct_{stored}", vecs, stored))
-    direct, jobs = _jobs(spark, lambda: _rows(op(emb, k=5, num_queries=8)))
+    direct, jobs = count_jobs(lambda: _rows(op(emb, k=5, num_queries=8)))
     assert jobs == _DEFAULT_SCAN_JOBS[op]
     filtered = emb.where(F.col("vec_id") >= 0)
-    gathered, spark_jobs = _jobs(spark, lambda: _rows(op(filtered, k=5, num_queries=8)))
+    gathered, spark_jobs = count_jobs(lambda: _rows(op(filtered, k=5, num_queries=8)))
     assert spark_jobs == jobs + 1
     assert direct == gathered and direct
 
 
 @pytest.mark.parametrize("stored", ["float32", "float64"])
-def test_gather_reads_the_cast_corpus_from_files(spark, tmp_path_factory, stored):
+def test_gather_reads_the_cast_corpus_from_files(spark, count_jobs, tmp_path_factory, stored):
     """``_bcast.gather`` of the scan input itself — ``_corpus``, whose
     ``v`` is ``embedding`` cast to ``array<double>`` — reads a float or
     double Parquet corpus from its files with no job, and its table is
@@ -634,7 +619,7 @@ def test_gather_reads_the_cast_corpus_from_files(spark, tmp_path_factory, stored
     emb = spark.read.parquet(_corpus_path(tmp_path_factory, f"cast_{stored}", vecs, stored))
     scan = sim._corpus(emb, "label")
     assert _direct(scan)
-    got, jobs = _jobs(spark, lambda: gather(scan))
+    got, jobs = count_jobs(lambda: gather(scan))
     assert jobs == 0
     want = scan.toArrow()
     assert got.schema == want.schema
@@ -648,7 +633,7 @@ def test_gather_reads_the_cast_corpus_from_files(spark, tmp_path_factory, stored
     "cast",
     ["int_elements", "to_array_float", "to_array_int", "to_string", "scalar_column"],
 )
-def test_gather_takes_spark_for_other_casts(spark, tmp_path_factory, cast):
+def test_gather_takes_spark_for_other_casts(spark, count_jobs, tmp_path_factory, cast):
     """Only a float or double array widened to ``array<double>`` is read
     from the files: a cast from integer elements, to ``array<float>``,
     ``array<int>`` or ``string``, or of a scalar column is gathered by
@@ -668,7 +653,7 @@ def test_gather_takes_spark_for_other_casts(spark, tmp_path_factory, cast):
     label = F.col("label").cast("long") if cast == "scalar_column" else F.col("label")
     frame = emb.select("vec_id", v.alias("v"), label.alias("label"))
     assert not _direct(frame)
-    got, jobs = _jobs(spark, lambda: gather(frame))
+    got, jobs = count_jobs(lambda: gather(frame))
     assert jobs == 1
     assert got.sort_by("vec_id").equals(frame.toArrow().sort_by("vec_id"))
 
@@ -749,13 +734,13 @@ def test_brute_force_rescores_screened_rows_exactly(spark, scatter_gather, tmp_p
     [sim.ivf_topk, sim.ivf_probe_sweep, sim.jl_topk, *_LABEL_OPS],
     ids=lambda op: op.__name__,
 )
-def test_parquet_search_runs_no_job(spark, zero_vector_corpus, op):
+def test_parquet_search_runs_no_job(spark, count_jobs, zero_vector_corpus, op):
     """On a broadcast-sized Parquet corpus the seeded IVF and its probe
     sweep pick their centroids, JL builds its lattice, and the label
     members read, vote on and sum their labels on the driver: no job
     (trained IVF: test_plans.py, only its training's jobs)."""
     emb = spark.read.parquet(zero_vector_corpus)
-    rows, jobs = _jobs(spark, lambda: _rows(op(emb, **_kw(op))))
+    rows, jobs = count_jobs(lambda: _rows(op(emb, **_kw(op))))
     assert jobs == 0 and rows
 
 
@@ -815,7 +800,7 @@ def ineligible_corpora(spark, tmp_path_factory):
 @pytest.mark.parametrize(
     "corpus", ["partitioned", "filtered", "json", "int_elements", "local_relation"]
 )
-def test_ineligible_corpus_takes_spark_gather(spark, scatter_gather, ineligible_corpora, corpus):
+def test_ineligible_corpus_takes_spark_gather(spark, count_jobs, scatter_gather, ineligible_corpora, corpus):
     """A corpus whose plan is not only columns of plain local Parquet
     files, or whose elements are not float or double, is gathered by
     Spark: the search runs its one ``toArrow()`` job, with the rows of
@@ -823,7 +808,7 @@ def test_ineligible_corpus_takes_spark_gather(spark, scatter_gather, ineligible_
     emb = ineligible_corpora[corpus]
     assert gathers(sim._corpus(emb), sim.GATHER_MAX_BYTES)
     assert not _direct(sim._corpus(emb))
-    gathered, jobs = _jobs(spark, lambda: _rows(sim.brute_force_topk(emb, k=5, num_queries=8)))
+    gathered, jobs = count_jobs(lambda: _rows(sim.brute_force_topk(emb, k=5, num_queries=8)))
     assert jobs == 1
     with scatter_gather():
         scatter = _rows(sim.brute_force_topk(emb, k=5, num_queries=8))
@@ -869,7 +854,7 @@ def test_gathers_rule(spark, sf_dir):
         spark.conf.set(key, before)
 
 
-def test_gather_checks_every_file(spark, tmp_path):
+def test_gather_checks_every_file(spark, count_jobs, tmp_path):
     """A Parquet directory whose files disagree with Spark's schema — one
     stores ``vec_id`` as int32, which Spark reads as a long — is
     gathered by Spark, not read from its files: one job, and the rows
@@ -890,7 +875,7 @@ def test_gather_checks_every_file(spark, tmp_path):
         pq.write_table(table, str(tmp_path / f"part-{part}.parquet"))
     emb = spark.read.schema("vec_id long, embedding array<float>").parquet(str(tmp_path))
     assert _direct(emb)
-    got, jobs = _jobs(spark, lambda: gather(emb))
+    got, jobs = count_jobs(lambda: gather(emb))
     assert jobs == 1
     key = lambda r: r["vec_id"]  # noqa: E731
     assert sorted(got.to_pylist(), key=key) == sorted(emb.toArrow().to_pylist(), key=key)
@@ -911,23 +896,167 @@ def test_gather_needs_columns_matched_by_name(spark, zero_vector_corpus):
 
 
 @pytest.mark.parametrize("cap_offset,jobs", [(0, 0), (-1, 2)])
-def test_search_obeys_gather_max_bytes(spark, sf_dir, monkeypatch, cap_offset, jobs):
+def test_search_obeys_gather_max_bytes(spark, count_jobs, sf_dir, monkeypatch, cap_offset, jobs):
     """The searches place their scan by ``sim.GATHER_MAX_BYTES``: with
     the cap at the corpus's plan size it is gathered (read from its
     Parquet file: no job), one byte below it the search scatters (the
     query collect, then the scan)."""
-    import uuid
-
     from bunsen_spark.operators._bcast import plan_size_bytes
 
     emb = _emb(spark, sf_dir)
     monkeypatch.setattr(sim, "GATHER_MAX_BYTES", plan_size_bytes(sim._corpus(emb)) + cap_offset)
-    sc = spark.sparkContext
-    group = f"gather_cap_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
+    assert count_jobs(lambda: sim.brute_force_topk(emb, k=5, num_queries=8))[1] == jobs
+
+
+def _count_opens(monkeypatch) -> list:
+    """A list that gains an entry each time a Parquet file is opened
+    with ``pyarrow.parquet.ParquetFile``."""
+    import pyarrow.parquet as pq
+
+    opened = []
+    real = pq.ParquetFile
+
+    def counted(path, *args, **kwargs):
+        opened.append(path)
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counted)
+    return opened
+
+
+def test_repeat_search_reuses_the_scan_and_the_read(spark, count_py4j, zero_vector_corpus, monkeypatch):
+    """A second search of one frame reuses its scan frame, plan walk and
+    gathered table: at most 70 py4j round trips (~150 when each search
+    built, planned and walked its own frame) and no Parquet file opened,
+    with the first search's rows."""
+    emb = spark.read.parquet(zero_vector_corpus)
+    first = _rows(sim.brute_force_topk(emb, k=5, num_queries=8))
+    opened = _count_opens(monkeypatch)
+    top, calls = count_py4j(lambda: sim.brute_force_topk(emb, k=5, num_queries=8))
+    assert calls <= 70
+    assert opened == []
+    assert _rows(top) == first
+
+
+def _write_vecs(path: str, vecs) -> None:
+    """``vecs`` as one Parquet file (vec_id long, embedding array<float>)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        }
+    )
+    pq.write_table(table, path)
+
+
+def test_rewritten_file_is_read_again(spark, tmp_path):
+    """A Parquet file rewritten in place with new vectors (and a later
+    mtime) is read again: a repeat search of the old frame gives the
+    rows of a fresh ``spark.read`` of the new file."""
+    import os
+    import random
+
+    vecs = _zero_vector_vecs()
+    path = str(tmp_path / "embeddings.parquet")
+    _write_vecs(path, vecs)
+    emb = spark.read.parquet(path)
+    before = _rows(sim.brute_force_topk(emb, k=5, num_queries=8))
+    rng = random.Random(11)
+    _write_vecs(path, [[rng.uniform(-1, 1) for _ in range(64)] for _ in vecs])
+    st = os.stat(path)
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    after = _rows(sim.brute_force_topk(emb, k=5, num_queries=8))
+    assert after == _rows(sim.brute_force_topk(spark.read.parquet(path), k=5, num_queries=8))
+    assert after != before
+
+
+def test_repeat_search_reads_the_threshold(spark, count_jobs, scatter_gather, zero_vector_corpus):
+    """The placement is decided on every search: with broadcasts turned
+    off between two searches of one frame, the second scatters (the
+    query collect, then the scan) and gives the same rows."""
+    emb = spark.read.parquet(zero_vector_corpus)
+    gathered, jobs = count_jobs(lambda: _rows(sim.brute_force_topk(emb, k=5, num_queries=8)))
+    assert jobs == 0
+    with scatter_gather():
+        scattered, jobs = count_jobs(lambda: _rows(sim.brute_force_topk(emb, k=5, num_queries=8)))
+    assert jobs == 2
+    assert scattered == gathered
+
+
+def test_memos_go_with_the_frame(spark, zero_vector_corpus):
+    """The scan frame, its plan walk and its gathered table live only as
+    long as the input frame."""
+    import gc
+    import weakref
+
+    from bunsen_spark.operators import _bcast
+
+    emb = spark.read.parquet(zero_vector_corpus)
+    sim.brute_force_topk(emb, k=5, num_queries=8)
+    scan = weakref.ref(sim._corpus(emb))
+    assert scan() in _bcast._PARQUET_FACTS and _bcast._last.frame() is scan()
+    scans = len(sim._SCANS)
+    del emb
+    gc.collect()
+    assert scan() is None
+    assert len(sim._SCANS) == scans - 1
+    assert _bcast._last is None
+
+
+def test_cache_after_search_gets_a_fresh_scan(spark, zero_vector_corpus):
+    """``cache()`` after a search gives the next search a scan frame
+    planned over the cached data, with the same rows; ``unpersist()``
+    gives the first frame back."""
+    emb = spark.read.parquet(zero_vector_corpus)
+    rows = _rows(sim.brute_force_topk(emb, k=5, num_queries=8))
+    scan = sim._corpus(emb)
+    emb.cache()
     try:
-        sim.brute_force_topk(emb, k=5, num_queries=8)
+        assert _rows(sim.brute_force_topk(emb, k=5, num_queries=8)) == rows
+        cached = sim._corpus(emb)
+        assert cached is not scan
+        assert "InMemoryRelation" in cached._jdf.queryExecution().optimizedPlan().toString()
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+        emb.unpersist()
+    assert sim._corpus(emb) is scan
+
+
+def _ragged_vecs(case: str):
+    """20 random 4-d vectors, vector 5 NULL or 3 long, and in the
+    ``null_beside_long`` case vector 6 8 long, so the lengths still sum
+    to 20 × 4."""
+    import random
+
+    rng = random.Random(5)
+    vecs = [[rng.uniform(-1, 1) for _ in range(4)] for _ in range(20)]
+    if case == "short":
+        vecs[5] = vecs[5][:3]
+    else:
+        vecs[5] = None
+    if case == "null_beside_long":
+        vecs[6] = vecs[6] * 2
+    return vecs
+
+
+@pytest.mark.parametrize("placement", ["parquet", "spark", "scattered"])
+@pytest.mark.parametrize(
+    "case,length", [("null_beside_long", "NULL"), ("null", "NULL"), ("short", "3")]
+)
+def test_ragged_corpus_raises(spark, scatter_gather, tmp_path_factory, case, length, placement):
+    """A NULL vector, or one of another length than the queries', is an
+    error naming its vec_id, its length and the dimension, wherever the
+    scan runs — not a reshape that shifts every row after it."""
+    from contextlib import nullcontext
+
+    from pyspark.errors import PythonException
+
+    emb = spark.read.parquet(_corpus_path(tmp_path_factory, f"ragged_{case}", _ragged_vecs(case)))
+    if placement == "spark":
+        emb = emb.where(F.col("vec_id") >= 0)
+    error = PythonException if placement == "scattered" else ValueError
+    with scatter_gather() if placement == "scattered" else nullcontext():
+        with pytest.raises(error, match=f"vec_id 5: v has length {length}, expected 4"):
+            sim.brute_force_topk(emb, k=3, num_queries=3).collect()

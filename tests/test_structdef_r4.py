@@ -181,3 +181,30 @@ def test_r4_extract_entry_roundtrip(spark):
     pat = extract_entry(spark, rows, "r4:Patient")
     [p] = pat.collect()
     assert (p.id, p.gender) == ("p1", "female")
+
+
+def test_r4_contained_resource(spark):
+    """An R4 contained entry is dispatched on its resourceType and lands
+    in the field named by the unprefixed type."""
+    from bunsen_spark.r4.bundles import extract_entry
+    from bunsen_spark.sources.bundles import from_json_column
+
+    bundle = {
+        "resourceType": "Bundle",
+        "entry": [
+            {
+                "resource": {
+                    "resourceType": "Observation",
+                    "id": "o1",
+                    "status": "final",
+                    "contained": [{"resourceType": "Patient", "id": "p1", "gender": "female"}],
+                    "subject": {"reference": "#p1"},
+                }
+            }
+        ],
+    }
+    df = spark.createDataFrame([(json.dumps(bundle),)], "content string")
+    obs = extract_entry(spark, from_json_column(df, "content"), "Observation", contained_types=("Patient",))
+    assert obs.schema["contained"].dataType.elementType.names == ["patient"]
+    [r] = obs.collect()
+    assert (r.contained[0].patient.id, r.contained[0].patient.gender) == ("p1", "female")
