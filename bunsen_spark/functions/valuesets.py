@@ -27,6 +27,7 @@ Valueset sources, matching `BroadcastableValueSets.java:42-346`:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -118,15 +119,25 @@ def build_valuesets(
 # the membership expression (native fast path)
 # ---------------------------------------------------------------------------
 
-def _flat_members(systems: dict[str, set[str]]) -> list[str]:
-    return sorted(f"{s}|{c}" for s, codes in systems.items() for c in codes)
+def _members(systems: dict[str, set[str]]) -> list[tuple[str | None, list[str]]]:
+    """(system, sorted codes) of each system of a valueset that has a
+    code, in one fixed order (a NULL system first)."""
+    members = ((s, sorted(c)) for s, c in systems.items() if c)
+    return sorted(members, key=lambda m: (m[0] is not None, m[0] or ""))
 
 
-def _codeable_concept_matches(cc: Column, members: list[str]) -> Column:
-    return F.exists(
-        cc["coding"],
-        lambda c: F.concat(c["system"], F.lit("|"), c["code"]).isin(members),
-    )
+def _codeable_concept_matches(cc: Column, members: list) -> Column:
+    """Whether any coding of ``cc`` is one of the :func:`_members`: its
+    system equal to a member system (NULL to a NULL one) and its code in
+    that system's codes — the exact (system, code) pair, as the UDF
+    compares it (a joined ``system|code`` key would let a ``|`` in
+    either part move the boundary)."""
+
+    def member(c):
+        pairs = (c["system"].eqNullSafe(s) & c["code"].isin(codes) for s, codes in members)
+        return reduce(Column.__or__, pairs)
+
+    return F.exists(cc["coding"], member)
 
 
 def in_valueset(
@@ -148,7 +159,7 @@ def in_valueset(
         raise ValueError("no valuesets pushed; call push_valuesets first")
     if ref not in vs:
         raise ValueError(f"unknown valueset reference {ref!r}")
-    members = _flat_members(vs[ref])
+    members = _members(vs[ref])
     col = F.col(code) if isinstance(code, str) else code
     if not members:
         return F.lit(False)
@@ -219,8 +230,11 @@ def _sql_call_re():
     return _SQL_CALL
 
 
-def _sql_string(s: str) -> str:
-    """``s`` as a Spark SQL string literal (``\\`` escaped before ``'``)."""
+def _sql_string(s: str | None) -> str:
+    """``s`` as a Spark SQL string literal (``\\`` escaped before ``'``),
+    None as NULL."""
+    if s is None:
+        return "NULL"
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
@@ -242,14 +256,13 @@ def rewrite_in_valueset_sql(query: str, valuesets: dict | None = None) -> str:
             raise ValueError("no valuesets pushed; call push_valuesets first")
         if ref not in vs:
             raise ValueError(f"unknown valueset reference {ref!r}")
-        members = _flat_members(vs[ref])
+        members = " OR ".join(
+            f"(c.system <=> {_sql_string(s)} AND c.code IN ({', '.join(map(_sql_string, codes))}))"
+            for s, codes in _members(vs[ref])
+        )
         if not members:
             return "false"
-        lits = ", ".join(_sql_string(mb) for mb in members)
-        return (
-            f"coalesce(exists({colexpr}.coding, "
-            f"c -> concat(c.system, '|', c.code) IN ({lits})), false)"
-        )
+        return f"coalesce(exists({colexpr}.coding, c -> {members}), false)"
 
     return _sql_call_re().sub(repl, query)
 

@@ -1052,7 +1052,6 @@ def embedding_near_dup_pairs(
       so two blocks of n/num_blocks × dim doubles fit an executor (e.g.
       1 M × 768-d ≈ 6 GB/block at B=32 → ~12 GB per task).
     """
-    import numpy as np
     import pandas as pd
     import pyarrow as pa
 
@@ -1068,11 +1067,10 @@ def embedding_near_dup_pairs(
         corpus = gather(src).combine_chunks()
         if not corpus.num_rows:
             return values_df(spark, [], out_ddl)
-        dim = len(corpus["v"][0])
+        mat = _batch_mat(corpus.to_batches()[0], "v", -1)
+        dim = mat.shape[1]
         b_ids = spark.sparkContext.broadcast(corpus["vec_id"].to_numpy())
-        b_mat = spark.sparkContext.broadcast(
-            _unit_rows(_batch_mat(corpus.to_batches()[0], "v", dim))
-        )
+        b_mat = spark.sparkContext.broadcast(_unit_rows(mat))
 
         def score(batches):
             for batch in batches:
@@ -1108,8 +1106,8 @@ def embedding_near_dup_pairs(
         if a.empty or b.empty:
             return pd.DataFrame({"a_id": [], "b_id": []}).astype("int64")
         lo, hi = _cosine_pairs(
-            a["vec_id"].to_numpy(), np.array(a["v"].tolist(), dtype=np.float64),
-            b["vec_id"].to_numpy(), _unit_rows(np.array(b["v"].tolist(), dtype=np.float64)),
+            a["vec_id"].to_numpy(), _side_mat(a),
+            b["vec_id"].to_numpy(), _unit_rows(_side_mat(b)),
             threshold, one_set=pdf["bi"].iat[0] == pdf["bj"].iat[0],
         )
         return pd.DataFrame({"a_id": lo, "b_id": hi})
@@ -1117,6 +1115,18 @@ def embedding_near_dup_pairs(
     # each unordered pair meets in exactly one group, and is emitted
     # once there (_cosine_pairs' one_set rule on the diagonal groups)
     return both.groupBy("bi", "bj").applyInPandas(cross_score, out_ddl)
+
+
+def _side_mat(side):
+    """The vector matrix of one side of a blocked group, as
+    :func:`similarity._batch_mat` reads it: a NULL or short vector
+    raises naming its vec_id."""
+    import pyarrow as pa
+
+    from .similarity import _batch_mat
+
+    batch = pa.RecordBatch.from_pandas(side[["vec_id", "v"]], preserve_index=False)
+    return _batch_mat(batch, "v", -1)
 
 
 def embedding_near_dup_pairs_sql(

@@ -3,8 +3,8 @@ brute-force cosine top-k as the exact baseline, and approximate
 variants (IVF, LSH, JL projection, Hamming rerank, PQ) as the scale
 path.
 
-Beyond-reference scale extension (SURVEY §7 M7). Every top-k member
-outside the PQ/IVF-PQ code-join family runs ONE partition-local top-k
+Beyond-reference scale extension (SURVEY §7 M7). Every top-k member,
+the PQ/IVF-PQ code scans included, runs ONE partition-local top-k
 kernel (:func:`_topk_scan`; numpy, strict left-to-right dot products
 — for brute force only on the rows a fast ``einsum`` screen cannot rule
 out — and a HALF_UP lattice for bit-parity with the DuckDB twins) and merges
@@ -47,7 +47,7 @@ from __future__ import annotations
 import weakref
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ._bcast import gather, gathers
@@ -950,17 +950,6 @@ def _sub_quantized(embeddings: DataFrame, n_subs: int) -> DataFrame:
     )
 
 
-def _d2(a: Column, b: Column) -> Column:
-    """Squared L2 distance — integral-exact on integral inputs (every
-    addend and partial sum is an integer far below 2^53, so the value
-    is identical under ANY accumulation order / engine)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 # ---------------------------------------------------------------------------
 # r14 vectorized Lloyd substrate (guide §4.2). The r13 map-only argmin
 # rewrites evaluated nested higher-order functions (transform → struct →
@@ -1195,12 +1184,12 @@ def _py_seq_dot(a, b) -> float:
 
 class _Queries(NamedTuple):
     """The ANN queries as driver data, ascending by id: query rows of
-    the scan input, their :func:`_seq_norms`, and ``rows``, their
-    Arrow table with every scan column (a carried ``label``); or other
-    query vectors (the label centroids), with no rows."""
+    the scan input as a matrix, their :func:`_seq_norms`, and ``rows``,
+    their Arrow table with every scan column (a carried ``label``); or
+    other query vectors (the label centroids), with no rows."""
 
     ids: list[int]
-    vecs: list[list[float]]
+    vecs: object
     norms: object
     rows: object = None
 
@@ -1235,16 +1224,21 @@ def _with_queries(embeddings: DataFrame, num_queries: int, out_ddl: str, build, 
     if num_queries <= 0:
         return values_df(spark, [], out_ddl)
     scan = _scan_input(embeddings, carry)
-    rows = _query_rows(scan, num_queries)
+    return _answer(spark, _query_rows(scan, num_queries), out_ddl, lambda q: build(q, scan))
+
+
+def _answer(spark, rows, out_ddl: str, build):
+    """``build(q)`` for the :class:`_Queries` of the Arrow table
+    ``rows`` (vec_id, v, …), as a LocalRelation of the ``out_ddl``
+    columns: an empty one, without calling ``build``, when there are
+    no rows. The query matrix is :func:`_batch_mat`'s, as wide as the
+    longest row, so a NULL or short query vector raises naming its
+    vec_id."""
     if not rows.num_rows:
         return values_df(spark, [], out_ddl)
-    import numpy as np
-
-    rows = rows.sort_by("vec_id")
-    vecs = rows["v"].to_pylist()
-    norms = _seq_norms(np.asarray(vecs, dtype=np.float64))
-    q = _Queries(rows["vec_id"].to_pylist(), vecs, norms, rows)
-    top = build(q, scan)
+    rows = rows.sort_by("vec_id").combine_chunks()
+    vecs = _batch_mat(rows.to_batches()[0], "v", -1)
+    top = build(_Queries(rows["vec_id"].to_pylist(), vecs, _seq_norms(vecs), rows))
     if not isinstance(top, list):
         top = top.select(_ddl_names(out_ddl))
     return values_df(spark, top, out_ddl)
@@ -1815,7 +1809,7 @@ def pq_codebooks(
     """Per-subspace Lloyd codebooks for product quantization (Jégou,
     Douze, Schmid, "Product Quantization for Nearest Neighbor Search",
     TPAMI 2011): (sub, cid, cv). INTEGER-LATTICE Lloyd — assignment is
-    exact integral squared-L2 (:func:`_d2`), and the centroid update
+    exact integral squared-L2, and the centroid update
     rounds the element-wise mean back onto the integer lattice — so
     every quantity in training, encoding, and ADC scoring is an
     integral double and the DuckDB twin reproduces codebooks, codes,
@@ -1997,49 +1991,132 @@ def pq_topk(
     neighbor_id; every score is an integral double, so ranks are exact
     and engine-portable.
 
-    Scale shape: codebooks (n_subs × k rows) and the per-query lookup
-    tables (num_queries × n_subs × k rows) broadcast; the corpus-side
-    cost is the encode argmin plus one broadcast LUT join over the
-    (vec, sub) code rows — the corpus is never shuffled by value, and
-    the candidate scoring reads 8 longs per vector instead of 64
-    doubles: the 8× scan-compression that makes billion-vector ANN fit
-    in memory at 1000 executors."""
-    # the trained codebook is a local relation (r14) — no materialize
-    books = pq_codebooks(embeddings, n_subs, n_codewords, n_iters)
-    codes = pq_encode(embeddings, books, n_subs)
-    queries = embeddings.where(F.col("vec_id") < num_queries)
-    return _pq_adc_topk(queries, books, codes, k, n_subs)
+    The query rows are taken as :func:`_with_queries` takes them, and
+    no query row returns before training. The codebooks train and the
+    corpus is encoded in Spark; the search is :func:`_adc_topk`, one
+    :func:`_topk_scan` pass over the codes with the queries' lookup
+    tables in the scorer: the corpus is never joined or shuffled by
+    value, and the scan reads 8 longs per vector instead of 64 doubles
+    — the 8× scan-compression that makes billion-vector ANN fit in
+    memory at 1000 executors."""
+
+    def build(q: _Queries, _):
+        # the trained codebook is a local relation (r14) — no materialize
+        books = pq_codebooks(embeddings, n_subs, n_codewords, n_iters)
+        return _adc_topk(q, pq_encode(embeddings, books, n_subs), books, k, n_subs)
+
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
-def _pq_adc_topk(
-    queries: DataFrame, books: DataFrame, codes: DataFrame, k: int, n_subs: int
-) -> DataFrame:
-    """The ADC scorer of :func:`pq_topk` and :func:`pq_index_topk`: each
-    (vec_id, embedding) query's per-subspace lookup table against the
-    broadcast ``books`` is joined to the (vec_id, sub, code) ``codes``,
-    summed per candidate, and ranked by (adc, neighbor_id) with
-    self-matches excluded."""
-    qsubs = _sub_quantized(queries, n_subs).select(
-        F.col("vec_id").alias("query_id"), "sub", F.col("sq").alias("qsq")
-    )
-    lut = qsubs.join(F.broadcast(books), "sub").select(
-        "query_id",
-        "sub",
-        F.col("cid").alias("code"),
-        _d2(F.col("qsq"), F.col("cv")).alias("d2"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+def _adc_topk(
+    q: _Queries, codes: DataFrame, books: DataFrame, k: int, n_subs: int, coarse=None, n_probe: int = 1
+):
+    """The PQ family's search: the top-``k`` rows per query by (ADC,
+    neighbor_id), self-matches excluded, from ONE :func:`_topk_scan`
+    pass over the long (vec_id[, ccid], sub, code) table ``codes`` —
+    IVF-PQ when the ``coarse`` (ccid, ccv) quantizer is given, probing
+    ``n_probe`` cells per query; plain PQ is one all-zeros cell.
+
+    The scan input has one row per vector, its code rows grouped into
+    ``sc`` once, so every batch holds whole vectors; it is placed like
+    every ANN scan input (:func:`_bcast.gathers` with
+    :data:`GATHER_MAX_BYTES`). The scorer is :func:`_adc_scorer`."""
+    import numpy as np
+
+    cols = ["sub", "code"] + (["ccid"] if coarse is not None else [])
+    scan = codes.groupBy("vec_id").agg(F.array_sort(F.collect_list(F.struct(*cols))).alias("sc"))
+    if gathers(scan, GATHER_MAX_BYTES):
+        scan = gather(scan)
+    cells = ([0], np.zeros((1, q.vecs.shape[1]))) if coarse is None else _collect_coarse(coarse)
+    score = _adc_scorer(q, _collect_books(books), n_subs, cells, n_probe)
+    partials = _topk_scan(scan, q, k, score, "adc double", largest=False)
+    return _rank_topk(partials, k, "adc", largest=False)
+
+
+def _adc_scorer(q: _Queries, books: dict, n_subs: int, cells: tuple, n_probe: int):
+    """ADC scores, Σ_sub ``LUT[query, probe, sub, code]``, of the rows
+    of a batch of :func:`_adc_topk`'s scan input whose cell one of the
+    query's ``n_probe`` probes is, as one level. The probes and lookup
+    tables are built here, on the driver: a query probes the cells of
+    ``cells`` (:func:`_collect_coarse`) nearest to its ``round(v*1000)``
+    lattice (:func:`_round_half_up`, Spark ``round()``'s HALF_UP) by
+    (squared L2, ccid), and a probe's tables are the squared L2 of its
+    residual's subvectors to the :func:`_collect_books` codewords.
+    Every lattice value, residual, distance and sum is an integral
+    double below 2^53, so no summation order can change a score: the
+    DuckDB twins' values, bit for bit.
+
+    A row without one code row for each sub 0..``n_subs``-1 (a vector
+    appended twice), or with a code its sub's book lacks, raises
+    ValueError naming the vec_id — on the driver for a gathered scan
+    input, from the task for a scattered one."""
+    import numpy as np
+
+    lattice = _round_half_up(np.asarray(q.vecs, dtype=np.float64) * KMEANS_QUANT)
+    subdim = books[0][1].shape[1]
+    if lattice.shape[1] != n_subs * subdim:
+        raise ValueError(f"query vectors have {lattice.shape[1]} values, the books {n_subs} × {subdim}")
+    ccids, cc_mat = np.asarray(cells[0], dtype=np.int64), cells[1]
+    diff = lattice[:, None, :] - cc_mat[None]
+    # stable: a distance tie goes to the smaller ccid (ascending rows)
+    probes = np.argsort((diff * diff).sum(axis=2), axis=1, kind="stable")[:, :n_probe]
+    resid = lattice[:, None, :] - cc_mat[probes]
+    cids = [np.asarray(books[s][0], dtype=np.int64) for s in range(n_subs)]
+    # lut[query, probe, sub, codeword]; a sub's book may have fewer
+    # codewords than another's (a centroid that lost its members)
+    lut = np.zeros(probes.shape + (n_subs, max(map(len, cids))))
+    for s in range(n_subs):
+        part = resid[:, :, None, s * subdim : (s + 1) * subdim] - books[s][1]
+        lut[:, :, s, : len(cids[s])] = (part * part).sum(axis=3)
+    # probe slot of each (query, cell), -1 where not probed; cell -1, a
+    # ccid the quantizer lacks, reads the last column
+    slot = np.full((len(lattice), len(ccids) + 1), -1)
+    np.put_along_axis(slot, probes, np.arange(probes.shape[1])[None, :], axis=1)
+
+    def score(batch):
+        ids, fields = _batch_np(batch, "vec_id"), _adc_codes(batch, n_subs)
+        codes = fields["code"].reshape(-1, n_subs)
+        idx = np.stack([_positions(cids[s], codes[:, s]) for s in range(n_subs)], axis=1)
+        if (idx < 0).any():
+            i, s = np.argwhere(idx < 0)[0]
+            raise ValueError(f"vec_id {ids[i]}: sub {s} code {codes[i, s]} is not in the books")
+        ccid = fields["ccid"][::n_subs] if "ccid" in fields else np.zeros(len(ids), dtype=np.int64)
+        probe = slot[:, _positions(ccids, ccid)]
+        qi, ri = np.nonzero(probe >= 0)
+        adc = lut[qi[:, None], probe[qi, ri][:, None], np.arange(n_subs), idx[ri]].sum(axis=1)
+        return ((pos, a, _ONE_LEVEL) for pos, a in _per_query(qi, len(lattice), ri, adc)), _no_extra
+
+    return score
+
+
+def _positions(keys, values):
+    """Each of ``values``' index in the ascending array ``keys``, -1
+    where it is absent."""
+    import numpy as np
+
+    pos = np.minimum(np.searchsorted(keys, values), len(keys) - 1)
+    return np.where(keys[pos] == values, pos, -1)
+
+
+def _adc_codes(batch, n_subs: int) -> dict:
+    """{field: values} of the ``sc`` code-row lists of a batch of
+    :func:`_adc_topk`'s scan input, flattened, ``n_subs`` per vector in
+    sub order. A vector without one code row for each sub raises
+    ValueError naming its vec_id and its code-row count."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    col = batch.column(batch.schema.get_field_index("sc"))
+    rows = col.flatten()
+    fields = {f.name: a.to_numpy(zero_copy_only=False) for f, a in zip(rows.type, rows.flatten())}
+    counts = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    bad = np.flatnonzero(counts != n_subs)
+    if not len(bad):
+        bad = np.flatnonzero((fields["sub"].reshape(-1, n_subs) != np.arange(n_subs)).any(axis=1))
+    if len(bad):
+        vec_id, n = _batch_np(batch, "vec_id")[bad[0]], counts[bad[0]]
+        raise ValueError(f"vec_id {vec_id}: {n} code rows, expected one for each sub 0..{n_subs - 1}")
+    return fields
 
 
 def pq_topk_sql(
@@ -2134,18 +2211,6 @@ SELECT query_id, neighbor_id, rank FROM (
 # -- IVF-PQ: coarse inverted lists + residual product quantization -----------
 
 
-def _slices(col: str, n_subs: int, out: str = "p") -> Column:
-    """Explodable array of (sub, slice) structs over an integral
-    vector column."""
-    subdim = EMBED_DIM // n_subs
-    return F.explode(
-        F.expr(
-            f"transform(sequence(0, {n_subs - 1}),"
-            f" s -> struct(s AS sub, slice({col}, s * {subdim} + 1, {subdim}) AS sq))"
-        )
-    ).alias(out)
-
-
 def ivfpq_topk(
     embeddings: DataFrame,
     k: int = 5,
@@ -2171,94 +2236,37 @@ def ivfpq_topk(
     touches vectors in the query's probed cells (corpus/n_coarse ×
     n_probe expected), and the per-vector read is still 8 longs — the
     n_coarse/n_probe scan cut and the 8× compression COMPOSE. The
-    residual codebook is shared across cells (standard IVFADC), so the
-    broadcast stays n_subs × k rows."""
-    # numpy consumers only (train / residual slicing / 32-row query
-    # filter): natural partitioning (see pq_codebooks)
+    residual codebook is shared across cells (standard IVFADC). The
+    query rows are taken as :func:`_with_queries` takes them (no query
+    row returns before training); their probes and lookup tables are
+    built on the driver and the search is :func:`_adc_topk`'s one scan
+    over the codes."""
+
+    def build(q: _Queries, _):
+        coarse, books, codes = _ivfpq_train(embeddings, n_coarse, n_subs, n_codewords, n_iters)
+        return _adc_topk(q, codes, books, k, n_subs, coarse, n_probe)
+
+    return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
+
+
+def _ivfpq_train(embeddings: DataFrame, n_coarse: int, n_subs: int, n_codewords: int, n_iters: int):
+    """(coarse, books, codes) of IVF-PQ over ``embeddings``: the coarse
+    (ccid, ccv) and residual (sub, cid, cv) quantizers, both
+    integer-lattice Lloyd (:func:`_pq_train`) and local relations, and
+    the (vec_id, ccid, sub, code) codes — what :func:`ivfpq_topk`
+    searches and :func:`write_ivfpq_index` persists."""
+    # numpy consumers only: natural partitioning (see pq_codebooks)
     full = materialize(_sub_quantized(embeddings, 1))
-    # the trained coarse codebook is a LOCAL RELATION (r14 _pq_train) —
-    # no materialize, free broadcasts/collects downstream
-    coarse = _pq_train(
-        full, _seed_ids(embeddings, n_coarse), n_iters, EMBED_DIM
-    ).select(F.col("cid").alias("ccid"), F.col("cv").alias("ccv"))
-    # corpus coarse assignment + integral residuals + slicing in ONE
-    # vectorized numpy pass (r14, guide §4.2 — the r13 HOF chain
-    # crossJoin → struct-carrying array_min → zip_with → explode paid
-    # interpreted per-element evaluation AND heavy plan analysis).
-    # ccid rides on rsubs, so the former codes⋈resid join-back is gone.
-    # EAGER: rsubs' lazy residue is the whole corpus pass and it feeds
-    # both the residual-book training and the code assignment — racing
-    # consumers would recompute it (persist.py residue rule)
-    ccids, cc_mat = _collect_coarse(coarse)
-    rsubs = materialize(
-        full.select("vec_id", "sq").mapInArrow(
-            _residual_slices_fn(ccids, cc_mat, n_subs),
-            "vec_id long, ccid long, sub int, sq array<double>",
-        ),
-        eager=True,
+    coarse = _pq_train(full, _seed_ids(embeddings, n_coarse), n_iters, EMBED_DIM).select(
+        F.col("cid").alias("ccid"), F.col("cv").alias("ccv")
     )
-    books = _pq_train(
-        rsubs.select("vec_id", "sub", "sq"),
-        _seed_ids(embeddings, n_codewords),
-        n_iters,
-        EMBED_DIM // n_subs,
-    )
-    codes = _assign_residual_codes(rsubs, books)
-    qfull = full.where(F.col("vec_id") < num_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("sq").alias("qsq")
-    )
-    return _ivfpq_adc_topk(qfull, coarse, books, codes, k, n_probe, n_subs)
-
-
-def _ivfpq_adc_topk(
-    qfull: DataFrame,
-    coarse: DataFrame,
-    books: DataFrame,
-    codes: DataFrame,
-    k: int,
-    n_probe: int,
-    n_subs: int,
-) -> DataFrame:
-    """The IVFADC scorer of :func:`ivfpq_topk` and
-    :func:`ivfpq_index_topk`: each (query_id, qsq) query probes its
-    ``n_probe`` nearest ``coarse`` cells, its per-cell residual lookup
-    table against the broadcast ``books`` is joined to the (vec_id,
-    ccid, sub, code) ``codes`` of those cells, summed per candidate, and
-    ranked by (adc, neighbor_id) with self-matches excluded."""
-    qscored = qfull.join(F.broadcast(coarse)).select(
-        "query_id",
-        "ccid",
-        _d2(F.col("qsq"), F.col("ccv")).alias("cd2"),
-        F.zip_with("qsq", "ccv", lambda x, y: x - y).alias("qr"),
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.asc("cd2"), F.asc("ccid"))
-    probes = (
-        qscored.withColumn("rn", F.row_number().over(pw))
-        .where(F.col("rn") <= n_probe)
-        .select("query_id", "ccid", "qr")
-    )
-    qrsubs = probes.select("query_id", "ccid", _slices("qr", n_subs)).select(
-        "query_id", "ccid", F.col("p.sub").alias("sub"), F.col("p.sq").alias("qsq")
-    )
-    lut = qrsubs.join(F.broadcast(books), "sub").select(
-        "query_id",
-        "ccid",
-        "sub",
-        F.col("cid").alias("code"),
-        _d2(F.col("qsq"), F.col("cv")).alias("d2"),
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["ccid", "sub", "code"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d2").alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("neighbor_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    # EAGER: the residual pass feeds both the residual-book training and
+    # the code assignment — racing consumers would recompute it
+    # (persist.py residue rule)
+    rsubs = materialize(_ivfpq_residual_subs(embeddings, coarse, n_subs), eager=True)
+    seeds = _seed_ids(embeddings, n_codewords)
+    books = _pq_train(rsubs.select("vec_id", "sub", "sq"), seeds, n_iters, EMBED_DIM // n_subs)
+    return coarse, books, _assign_residual_codes(rsubs, books)
 
 
 def _lloyd_sql_parts(
@@ -2488,49 +2496,23 @@ def append_pq_index(
     """Batch-append new vectors to a persisted PQ index WITHOUT
     retraining — the plain-PQ twin of :func:`append_ivfpq_index`:
     encode against the FROZEN codebooks (:func:`pq_encode`, the exact
-    arithmetic the builder ran) and write to
-    ``{path}/codes_stream/batch_id={batch_id}``, the layout the
-    streaming encoder shares. ``batch_id`` defaults to the
-    content-derived id (:func:`_content_batch_id`) with the same
-    replay/collision/folded-id semantics as the IVF-PQ form. Returns
-    the batch id used."""
-    if batch_id is None:
-        batch_id = _content_batch_id(embeddings, ("vec_id", "embedding"))
-        if batch_id in set(_index_manifest(path)["folded_stream_batches"]):
-            return batch_id  # replay of an already-compacted drop: no-op
-    elif batch_id in set(_index_manifest(path)["folded_stream_batches"]):
-        raise ValueError(
-            f"batch_id {batch_id} was already folded into the base codes by"
-            " compact_pq_index; readers ignore its partition, so new data"
-            " written under it would be silently invisible. Use a fresh"
-            " batch id (or omit it to derive one from the content)."
-        )
-    spark = embeddings.sparkSession
-    books = spark.read.parquet(f"{path}/books")
-    (
-        pq_encode(embeddings, books, n_subs)
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{path}/codes_stream")
-    )
-    return batch_id
+    arithmetic the builder ran) and write the codes as
+    :func:`_append_index` does. Returns the batch id used."""
+    encode = lambda read: pq_encode(embeddings, read("books"), n_subs)  # noqa: E731
+    return _append_index(embeddings, path, batch_id, encode)
+
+
+#: The code-row columns of the two persisted index layouts.
+_PQ_CODES = ["vec_id", "sub", "code"]
+_IVFPQ_CODES = ["vec_id", "ccid", "sub", "code"]
 
 
 def read_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
-    """(books, codes) of a persisted PQ index. Codes merge the
-    manifest's base generation with any unfolded ``{path}/codes_stream``
-    partitions (ADVICE r7: the old read skipped the stream side, so
-    index searches silently missed streamed vectors), minus any live
-    tombstoned vec_ids — the full lifecycle contract
-    :func:`read_ivfpq_index` serves, on the plain-PQ layout."""
-    m = _index_manifest(path)
-    codes = _merged_index_codes(spark, path, ["vec_id", "sub", "code"], m)
-    tomb = _read_tombstones(spark, path, m)
-    if tomb is not None:
-        codes = codes.join(tomb, "vec_id", "left_anti")
-    return spark.read.parquet(f"{path}/books"), codes
+    """(books, codes) of a persisted PQ index, codes the live long
+    (vec_id, sub, code) table of :func:`_live_codes` — the full
+    lifecycle contract :func:`read_ivfpq_index` serves, on the plain-PQ
+    layout."""
+    return spark.read.parquet(f"{path}/books"), _live_codes(spark, path, _PQ_CODES)
 
 
 def pq_index_topk(
@@ -2541,28 +2523,28 @@ def pq_index_topk(
     n_subs: int = PQ_SUBS,
 ) -> DataFrame:
     """ADC top-k against a PERSISTED index: queries are (vec_id,
-    embedding) rows; scoring reads only the codes table + broadcast
-    books/LUTs — the raw corpus vectors are never touched. Output:
-    (query_id, neighbor_id, rank); self-matches (same vec_id) are
-    excluded so querying corpus members behaves like :func:`pq_topk`."""
+    embedding) rows; scoring reads only the codes table and the books
+    — the raw corpus vectors are never touched. Output: (query_id,
+    neighbor_id, rank); self-matches (same vec_id) are excluded so
+    querying corpus members behaves like :func:`pq_topk`.
+
+    Every query row is collected to the driver (one ``toArrow()``,
+    which ``spark.driver.maxResultSize`` guards; none for a plain
+    Parquet frame), where its lookup tables are built; the search is
+    :func:`_adc_topk`'s one scan over the live codes, so it raises
+    ValueError on a vector with more code rows than subs (appended
+    twice) or a code not in the books."""
     books, codes = read_pq_index(spark, path)
-    return _pq_adc_topk(queries, books, codes, k, n_subs)
+    build = lambda q: _adc_topk(q, codes, books, k, n_subs)  # noqa: E731
+    return _answer(spark, gather(_corpus(queries)), _TOPK_DDL, build)
 
 
 def _collect_coarse(coarse: DataFrame) -> tuple:
     """(ccids ascending, k × EMBED_DIM matrix) from a coarse codebook
     frame — a driver-only read when trained this session (local
     relation), one tiny job when read back from a persisted index."""
-    import numpy as np
-
-    rows = sorted(
-        ((r.ccid, list(r.ccv)) for r in coarse.select("ccid", "ccv").collect()),
-        key=lambda t: t[0],
-    )
-    return (
-        [cid for cid, _ in rows],
-        np.array([cv for _, cv in rows], dtype=np.float64),
-    )
+    rows = coarse.select("ccid", "ccv").collect()
+    return _pack_cents({0: [(r.ccid, list(r.ccv)) for r in rows]})[0]
 
 
 def _residual_slices_fn(ccids: list, cc_mat, n_subs: int):
@@ -2672,7 +2654,7 @@ def write_ivfpq_index(
     ``{path}/books`` (sub, cid, cv — the residual codebooks, shared
     across cells per standard IVFADC), and ``{path}/codes`` (vec_id,
     ccid, sub, code). The raw vectors are read ONCE at build time;
-    every later search touches only codes + the two tiny broadcast
+    every later search touches only codes + the two tiny quantizer
     tables (:func:`ivfpq_index_topk`), and streaming arrivals append
     codes against the frozen quantizers without retraining
     (:func:`bunsen_spark.streaming.ann.stream_ivfpq_encode`).
@@ -2680,21 +2662,10 @@ def write_ivfpq_index(
     per index path. Same integer-lattice Lloyd as :func:`ivfpq_topk`,
     so an index built and searched here reproduces the inline gate's
     arithmetic bit-for-bit."""
-    full = materialize(_sub_quantized(embeddings, 1))  # numpy consumer
-    # the trained quantizers are local relations (r14) — no materialize
-    coarse = _pq_train(full, _seed_ids(embeddings, n_coarse), n_iters, EMBED_DIM).select(
-        F.col("cid").alias("ccid"), F.col("cv").alias("ccv")
-    )
+    coarse, books, codes = _ivfpq_train(embeddings, n_coarse, n_subs, n_codewords, n_iters)
     coarse.write.mode(mode).parquet(f"{path}/coarse")
-    rsubs = materialize(_ivfpq_residual_subs(embeddings, coarse, n_subs))
-    books = _pq_train(
-        rsubs.select("vec_id", "sub", "sq"),
-        _seed_ids(embeddings, n_codewords),
-        n_iters,
-        EMBED_DIM // n_subs,
-    )
     books.write.mode(mode).parquet(f"{path}/books")
-    _assign_residual_codes(rsubs, books).write.mode(mode).parquet(f"{path}/codes")
+    codes.write.mode(mode).parquet(f"{path}/codes")
 
 
 def _index_manifest(path: str) -> dict:
@@ -2789,47 +2760,51 @@ def append_ivfpq_index(
     retraining: coarse-assign each row to its nearest FROZEN cell
     centroid, encode its residual against the FROZEN shared codebooks
     (:func:`ivfpq_encode` — the exact arithmetic the builder ran on the
-    base corpus), and write the codes to
-    ``{path}/codes_stream/batch_id={batch_id}`` — the same layout the
-    streaming encoder uses
-    (:func:`bunsen_spark.streaming.ann.stream_ivfpq_encode`), so
-    :func:`read_ivfpq_index` merges batch and streaming appends
-    uniformly and replayed batch ids overwrite their own partition
-    (idempotent backfill). When ``batch_id`` is None (default) it is
-    DERIVED from a content hash of the appended vec_ids
-    (:func:`_content_batch_id`): replays of the same drop stay
-    idempotent, distinct drops can never collide on a shared default
-    partition, and the derived ids (63-bit) cannot collide with the
-    small monotonic engine batch ids the streaming encoder writes.
-    Returns the batch id used. Appending under a batch id that
-    :func:`compact_ivfpq_index` already folded raises — the partition
-    would be silently ignored by readers; pick a fresh id (a replay of
-    the folded batch itself needs no action: its content is already in
-    the codes).
+    base corpus), and write the codes as :func:`_append_index` does.
+    Returns the batch id used.
 
     This is the bulk-ingest half of the index lifecycle a 100 TB
     deployment runs: train once on a base snapshot, then absorb each
     new data drop with ONE bounded encode pass over just the new rows
-    (two tiny broadcast quantizer tables; no shuffle of the existing
-    index, which is never read). Quantizer geometry is pinned by
+    (the two tiny quantizer tables in its closure; no shuffle of the
+    existing index, which is never read). Quantizer geometry is pinned by
     :func:`write_ivfpq_index`; rebuild when drift audits
     (``operators/drift.py``) say the frozen cells stopped fitting."""
+    encode = lambda read: ivfpq_encode(embeddings, read("coarse"), read("books"), n_subs)  # noqa: E731
+    return _append_index(embeddings, path, batch_id, encode)
+
+
+def _append_index(embeddings: DataFrame, path: str, batch_id: int | None, encode) -> int:
+    """The batch append of both index layouts: write the code rows
+    ``encode(read)`` builds (``read(name)`` reads the index's frozen
+    ``name`` quantizer) to ``{path}/codes_stream/batch_id={batch_id}``,
+    the layout the streaming encoders share
+    (:mod:`bunsen_spark.streaming.ann`), with dynamic partition
+    overwrite, so a replayed batch id overwrites its own partition
+    (idempotent backfill) and the readers merge batch and streaming
+    appends alike. When ``batch_id`` is None (default) it is DERIVED
+    from a content hash of the appended rows (:func:`_content_batch_id`):
+    replays of the same drop stay idempotent, distinct drops never
+    collide on a shared default partition, and the derived 63-bit ids
+    cannot collide with the small monotonic engine batch ids. A batch id
+    that compaction already folded raises — readers would ignore its
+    partition — unless derived: that replay's content is already in
+    the codes, a no-op. Returns the batch id used."""
+    folded = set(_index_manifest(path)["folded_stream_batches"])
     if batch_id is None:
         batch_id = _content_batch_id(embeddings, ("vec_id", "embedding"))
-        if batch_id in set(_index_manifest(path)["folded_stream_batches"]):
+        if batch_id in folded:
             return batch_id  # replay of an already-compacted drop: no-op
-    elif batch_id in set(_index_manifest(path)["folded_stream_batches"]):
+    elif batch_id in folded:
         raise ValueError(
             f"batch_id {batch_id} was already folded into the base codes by"
-            " compact_ivfpq_index; readers ignore its partition, so new data"
+            " compaction; readers ignore its partition, so new data"
             " written under it would be silently invisible. Use a fresh"
             " batch id (or omit it to derive one from the content)."
         )
     spark = embeddings.sparkSession
-    coarse = spark.read.parquet(f"{path}/coarse")
-    books = spark.read.parquet(f"{path}/books")
     (
-        ivfpq_encode(embeddings, coarse, books, n_subs)
+        encode(lambda name: spark.read.parquet(f"{path}/{name}"))
         .withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -2933,30 +2908,27 @@ def _merged_index_codes(
     return base.unionByName(extra.select(*cols))
 
 
-def _merged_ivfpq_codes(spark, path: str, manifest: dict | None = None) -> DataFrame:
-    """All live (vec_id, ccid, sub, code) rows of a persisted IVF-PQ
-    index — :func:`_merged_index_codes` on the IVF-PQ column set."""
-    return _merged_index_codes(
-        spark, path, ["vec_id", "ccid", "sub", "code"], manifest
-    )
+def _live_codes(spark, path: str, cols: list[str]) -> DataFrame:
+    """The live code rows of a persisted index, either layout: the
+    :func:`_merged_index_codes` (base generation plus unfolded stream
+    partitions) minus the live tombstoned vec_ids
+    (:func:`_read_tombstones`), both read under one manifest."""
+    m = _index_manifest(path)
+    codes = _merged_index_codes(spark, path, cols, m)
+    tomb = _read_tombstones(spark, path, m)
+    return codes if tomb is None else codes.join(tomb, "vec_id", "left_anti")
 
 
 def read_ivfpq_index(spark, path: str) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(coarse, books, codes) of a persisted IVF-PQ index; codes merge
     the manifest's base generation with any unfolded
     ``{path}/codes_stream`` partitions the streaming encoder or batch
-    appends added (same reader contract as :func:`read_pq_index`),
-    minus any live tombstoned vec_ids
-    (:func:`delete_from_ivfpq_index`)."""
-    m = _index_manifest(path)
-    codes = _merged_ivfpq_codes(spark, path, m)
-    tomb = _read_tombstones(spark, path, m)
-    if tomb is not None:
-        codes = codes.join(tomb, "vec_id", "left_anti")
+    appends added, minus any live tombstoned vec_ids
+    (:func:`delete_from_ivfpq_index`) — :func:`_live_codes`."""
     return (
         spark.read.parquet(f"{path}/coarse"),
         spark.read.parquet(f"{path}/books"),
-        codes,
+        _live_codes(spark, path, _IVFPQ_CODES),
     )
 
 
@@ -3111,7 +3083,7 @@ def compact_ivfpq_index(spark, path: str) -> bool:
     semantics and the atomic manifest-flip protocol: see
     :func:`_compact_index`. Returns True when a new generation was
     written."""
-    return _compact_index(spark, path, ["vec_id", "ccid", "sub", "code"])
+    return _compact_index(spark, path, _IVFPQ_CODES)
 
 
 def delete_from_pq_index(
@@ -3131,7 +3103,7 @@ def compact_pq_index(spark, path: str) -> bool:
     generation behind the same atomic manifest flip
     (:func:`_compact_index`); survivors byte-identical because the
     codes are frozen-codebook."""
-    return _compact_index(spark, path, ["vec_id", "sub", "code"])
+    return _compact_index(spark, path, _PQ_CODES)
 
 
 def ivfpq_index_topk(
@@ -3144,17 +3116,22 @@ def ivfpq_index_topk(
 ) -> DataFrame:
     """IVFADC top-k against a PERSISTED index: queries are (vec_id,
     embedding) rows; each query probes its ``n_probe`` nearest coarse
-    cells and ADC-scores ONLY the codes in those cells through the
-    broadcast residual LUT — the raw corpus vectors are never touched,
+    cells and ADC-scores ONLY the codes in those cells through its
+    residual lookup tables — the raw corpus vectors are never touched,
     and the scan is cut corpus/n_coarse × n_probe on top of the 8-byte
     reads. Output: (query_id, neighbor_id, rank); self-matches
     excluded so querying corpus members behaves like
-    :func:`ivfpq_topk`."""
+    :func:`ivfpq_topk`.
+
+    Every query row is collected to the driver (one ``toArrow()``,
+    which ``spark.driver.maxResultSize`` guards; none for a plain
+    Parquet frame), where its probes and lookup tables are built; the
+    search is :func:`_adc_topk`'s one scan over the live codes, so it
+    raises ValueError on a vector with more code rows than subs
+    (appended twice) or a code not in the books."""
     coarse, books, codes = read_ivfpq_index(spark, path)
-    qfull = _sub_quantized(queries, 1).select(
-        F.col("vec_id").alias("query_id"), F.col("sq").alias("qsq")
-    )
-    return _ivfpq_adc_topk(qfull, coarse, books, codes, k, n_probe, n_subs)
+    build = lambda q: _adc_topk(q, codes, books, k, n_subs, coarse, n_probe)  # noqa: E731
+    return _answer(spark, gather(_corpus(queries)), _TOPK_DDL, build)
 
 
 def mmr_select(

@@ -96,15 +96,10 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # codebooks, natural partitioning into the Python stages
     # (operators/similarity.py). Results proven identical against the
     # oracle at sf0.01 + sf0.001, but these gates run new plan/job
-    # shapes and deserve fresh driver rows.
-    ("ann_pq_topk", 14),
-    ("ann_ivfpq_topk", 14),
+    # shapes and deserve fresh driver rows. (The PQ and IVF-PQ gates'
+    # round-14 rows are superseded by their round-21 rows below.)
     ("semantic_dedup_drops", 14),
     ("cluster_purity_embeddings", 14),
-    # the index gates' build path shares the rewritten encode/train
-    ("ann_ivfpq_index_topk", 14),
-    ("ann_ivfpq_index_append_topk", 14),
-    ("ann_ivfpq_index_delete_topk", 14),
     # round 14 session 2: vectorized ANN query scans (numpy mapInArrow
     # partial top-k + tiny global window) and the LocalRelation sweep
     # of driver-built lookup/result tables (bunsen_spark/localrel.py)
@@ -162,6 +157,16 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     ("centroid_label_topk", 20),
     ("ann_eval_scorecard", 20),
     ("rrf_fused_topk", 20),
+    # round 21: PQ and IVF-PQ rank through the one top-k scan kernel —
+    # the queries' lookup tables (and IVF-PQ's probes) are built on the
+    # driver, the codes are grouped into one row per vector and scanned
+    # by the ADC scorer, and the index searches read their live codes
+    # through one reader. Supersedes these gates' round-14 rows.
+    ("ann_pq_topk", 21),
+    ("ann_ivfpq_topk", 21),
+    ("ann_ivfpq_index_topk", 21),
+    ("ann_ivfpq_index_append_topk", 21),
+    ("ann_ivfpq_index_delete_topk", 21),
 ]
 
 

@@ -78,9 +78,9 @@ def read_stream_codes(spark, index_path: str) -> DataFrame:
     has not folded — the frame :func:`pq_index_topk`-style scoring
     consumes (tombstones are applied by
     :func:`operators.similarity.read_pq_index`, not here)."""
-    from ..operators.similarity import _merged_index_codes
+    from ..operators.similarity import _PQ_CODES, _merged_index_codes
 
-    return _merged_index_codes(spark, index_path, ["vec_id", "sub", "code"])
+    return _merged_index_codes(spark, index_path, _PQ_CODES)
 
 
 def stream_ivfpq_encode(
@@ -124,9 +124,9 @@ def read_stream_ivfpq_codes(spark, index_path: str) -> DataFrame:
     the manifest-aware merge so batch and streaming readers can never
     disagree about which partitions are live
     (:func:`operators.similarity.compact_ivfpq_index`)."""
-    from ..operators.similarity import _merged_ivfpq_codes
+    from ..operators.similarity import _IVFPQ_CODES, _merged_index_codes
 
-    return _merged_ivfpq_codes(spark, index_path)
+    return _merged_index_codes(spark, index_path, _IVFPQ_CODES)
 
 
 def stream_tombstones(

@@ -182,3 +182,32 @@ def test_placement_parity_degenerate(spark, scatter_gather, corpora, corpus):
     assert broadcast == gathered == blocked == _duckdb_pairs(corpora[corpus])
     if corpus == "all_identical":
         assert len(blocked) == 12 * 11 // 2
+
+
+@pytest.mark.parametrize("placement", ["gathered", "scattered"])
+def test_null_first_vector_raises(spark, scatter_gather, tmp_path, placement):
+    """A NULL first vector is an error naming its vec_id under both
+    placements, not a ``TypeError`` from reading its length."""
+    import random
+    from contextlib import nullcontext
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import PythonException
+
+    rng = random.Random(5)
+    vecs = [None if i == 0 else [rng.uniform(-1, 1) for _ in range(4)] for i in range(20)]
+    path = str(tmp_path / "embeddings.parquet")
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(20), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        }
+    )
+    pq.write_table(table, path)
+    emb = spark.read.parquet(path)
+    assert _gathers(emb)
+    error = ValueError if placement == "gathered" else PythonException
+    with scatter_gather() if placement == "scattered" else nullcontext():
+        with pytest.raises(error, match="vec_id 0: v has length NULL"):
+            embedding_near_dup_pairs(emb, num_blocks=1).collect()

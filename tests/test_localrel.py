@@ -268,13 +268,11 @@ def test_one_whole_input_gather():
     _assert_single_path("toArrow")
 
 
-#: The functions of operators/similarity.py that may name a Spark-side
-#: ranking tool: a window only in the PQ/IVF-PQ ADC join scorers (they
-#: rank codes joined to a lookup table, not a kernel scorer's scores),
-#: and posexplode only in gram_matrix's cell aggregate, which ranks
-#: nothing.
+#: The Spark-side ranking tools, and the functions of
+#: operators/similarity.py that may name one: no function a window, and
+#: only gram_matrix's cell aggregate, which ranks nothing, posexplode.
+_SPARK_RANK_TOOLS = ("Window", "posexplode")
 _SPARK_RANK_HOMES = {
-    "Window": {"_pq_adc_topk", "_ivfpq_adc_topk"},
     "posexplode": {"gram_matrix"},
 }
 
@@ -296,10 +294,11 @@ def _names(node, func="<module>"):
 
 
 def test_ann_members_rank_through_the_kernel():
-    """Every ANN member outside the PQ/IVF-PQ family ranks through
-    ``_topk_scan`` and ``_rank_topk``: no other function in
-    operators/similarity.py names a Spark window or posexplode, so a
-    new member cannot bring back a Spark-side rank."""
+    """Every ANN member, PQ and IVF-PQ included, ranks through
+    ``_topk_scan`` and ``_rank_topk``: no function in
+    operators/similarity.py names a Spark window, and only gram_matrix
+    names posexplode, so a new member cannot bring back a Spark-side
+    rank."""
     import ast
     from pathlib import Path
 
@@ -307,6 +306,6 @@ def test_ann_members_rank_through_the_kernel():
     found = [
         f"similarity.py:{line} {name} in {func}"
         for name, line, func in _names(ast.parse(path.read_text()))
-        if name in _SPARK_RANK_HOMES and func not in _SPARK_RANK_HOMES[name]
+        if name in _SPARK_RANK_TOOLS and func not in _SPARK_RANK_HOMES.get(name, ())
     ]
     assert not found, found

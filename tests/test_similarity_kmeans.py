@@ -1060,3 +1060,20 @@ def test_ragged_corpus_raises(spark, scatter_gather, tmp_path_factory, case, len
     with scatter_gather() if placement == "scattered" else nullcontext():
         with pytest.raises(error, match=f"vec_id 5: v has length {length}, expected 4"):
             sim.brute_force_topk(emb, k=3, num_queries=3).collect()
+
+
+@pytest.mark.parametrize("placement", ["parquet", "scattered"])
+@pytest.mark.parametrize("op", [sim.brute_force_topk, sim.ivf_topk], ids=lambda op: op.__name__)
+def test_null_query_vector_raises(spark, scatter_gather, tmp_path_factory, op, placement):
+    """A NULL query vector is an error naming its vec_id, the query
+    matrix being read like the corpus batches, not numpy's
+    inhomogeneous-shape error."""
+    import random
+    from contextlib import nullcontext
+
+    rng = random.Random(5)
+    vecs = [None if i == 1 else [rng.uniform(-1, 1) for _ in range(4)] for i in range(20)]
+    emb = spark.read.parquet(_corpus_path(tmp_path_factory, "null_query", vecs))
+    with scatter_gather() if placement == "scattered" else nullcontext():
+        with pytest.raises(ValueError, match="vec_id 1: v has length NULL, expected 4"):
+            op(emb, k=3, num_queries=3)

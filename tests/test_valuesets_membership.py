@@ -144,6 +144,42 @@ def test_quoted_member_codes(spark, code):
     assert got == dict.fromkeys(got, True)
 
 
+def test_system_code_pair_is_exact(spark):
+    """Membership is of the exact (system, code) pair: a coding with
+    system ``http://a|b`` and code ``c`` is not the member
+    (``http://a``, ``b|c``), though both join to ``http://a|b|c``, and a
+    coding with system ``None`` is not a member with a NULL system,
+    though both spell ``None|n`` — the SQL rewrite, the Column API
+    (single and array) and the UDF agree, and the members themselves
+    match."""
+    from bunsen_spark.functions.valuesets import sql as native_sql
+
+    push_valuesets(spark, {"pipe": [("http://a", "b|c"), ("http://z", "y"), (None, "n")]})
+    try:
+        df = spark.createDataFrame(
+            [
+                (([("http://a|b", "c")],),),
+                (([("http://a", "b|c")],),),
+                (([("None", "n")],),),
+                (([(None, "n")],),),
+            ],
+            "code struct<coding: array<struct<system:string, code:string>>>",
+        ).withColumn("codes", F.array("code"))
+        df.createOrReplaceTempView("pipe_codings")
+        query = "SELECT in_valueset(code, 'pipe') AS m FROM pipe_codings"
+        got = {
+            "udf": [r["m"] for r in spark.sql(query).collect()],
+            "rewrite": [r["m"] for r in native_sql(spark, query).collect()],
+            "column": [r[0] for r in df.select(in_valueset(F.col("code"), "pipe")).collect()],
+            "array": [
+                r[0] for r in df.select(in_valueset(F.col("codes"), "pipe", is_array=True)).collect()
+            ],
+        }
+    finally:
+        pop_valuesets(spark)
+    assert got == dict.fromkeys(got, [False, True, False, True])
+
+
 def test_unknown_reference_raises(pushed):
     with pytest.raises(ValueError, match="unknown valueset reference"):
         in_valueset(F.col("code"), "nope")
