@@ -54,6 +54,11 @@ _TYPES = {
         lambda v: isinstance(v, (list, tuple, np.ndarray)) and all(x is None or _real(x) for x in v),
     ),
 }
+_TYPES["array<long>"] = (
+    pa.list_(pa.int64()),
+    T.ArrayType(T.LongType()),
+    lambda v: isinstance(v, (list, tuple, np.ndarray)) and all(x is None or _TYPES["long"][2](x) for x in v),
+)
 _TYPES["bigint"] = _TYPES["long"]
 _TYPES["integer"] = _TYPES["int"]
 
@@ -83,8 +88,8 @@ def arrow_schema(ddl: str) -> pa.Schema:
 
 def values_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A LocalRelation DataFrame for ``rows`` under a simple DDL schema
-    (``"name type, name type"``; string/int/long/double/boolean and
-    array<double> columns only — the driver-built lookup/result tables
+    (``"name type, name type"``; string/int/long/double/boolean,
+    array<double> and array<long> columns only — the driver-built lookup/result tables
     and codebooks). ``rows`` is a sequence of tuples, or a
     ``pyarrow.Table`` with the DDL's column names (numpy-built result
     tables; Arrow casts it to the schema). A row whose length differs

@@ -11,7 +11,7 @@ Exactness contract: ranks are kept in integer micro-units (BIGINT,
 iteration uses only integer division and integer sums, so the result
 is bit-identical across engines and partitionings — the same
 integral-quantization trick the k-means codebook uses
-(``operators/similarity.py:_quantized``). Floating point appears only
+(``operators/similarity.py:_lattice``). Floating point appears only
 in the final cosmetic ``rank`` column (one division).
 """
 

@@ -9,27 +9,33 @@ kernel (:func:`_topk_scan`; numpy, strict left-to-right dot products
 — for brute force only on the rows a fast ``einsum`` screen cannot rule
 out — and a HALF_UP lattice for bit-parity with the DuckDB twins) and merges
 its partials on the driver (:func:`_rank_topk`, REPOSE's
-prune-locally-then-merge shape); the result is a LocalRelation. Where
-the kernel runs is decided once per search (:func:`_scan_input`):
+prune-locally-then-merge shape); the result is a LocalRelation. The
+k-means codebooks (IVF, PQ, IVF-PQ) train in ONE Lloyd loop
+(:func:`_lloyd`: each round one per-batch pass of :func:`_nearest`
+assignments and partial sums, merged on the driver) and vectors are
+assigned or encoded by one pass (:func:`_codes`). Every per-batch pass
+runs through one runner (:func:`_on_batches`), where the search or
+training input was placed once (:func:`_scan_input`):
 
 - **gathered**: a scan input no larger than
   ``spark.sql.autoBroadcastJoinThreshold`` (the size Spark would
   broadcast) and :data:`GATHER_MAX_BYTES` (the measured point where
   the one-thread driver kernel stops beating parallel tasks) is
   brought to the driver by :func:`_bcast.gather`; the queries, the
-  seeded IVF's centroids and the label centroids come from that table
-  and the kernel runs over its batches on the driver, with no Python
+  codebook seeds and the label centroids come from that table and
+  every pass runs over its batches on the driver, with no Python
   worker. A Parquet corpus of float or double vectors (a ``label``
   column carried beside it) is read from its files, so these members
-  run no job (trained IVF: only its codebook training's); other inputs
-  are collected with one ``toArrow()`` job.
+  train, encode and search with no job; other inputs are collected
+  with one ``toArrow()`` job.
 - **scatter-gather**: otherwise the query set (small by construction)
   is collected and carried in the task closure, each corpus partition
   is scored in ONE ``mapInArrow`` pass emitting only its top-k per
   query, and those ≤ partitions × queries × k partial rows are
   collected. Two jobs (queries, scan; the label centroids' partial
-  sums take the place of the queries), and one more for the seeded
-  IVF's centroid pick; the corpus is never joined or shuffled.
+  sums take the place of the queries), one more for a centroid seed
+  pick and one per Lloyd round; the corpus is never joined or
+  shuffled.
 - **LSH top-k**: each vector gets a ``NUM_PLANES``-bit bucket from the
   signs of dot products with fixed pseudo-random hyperplanes; bucket
   bits are split into bands, candidates must share a band value with
@@ -199,74 +205,63 @@ def ivf_topk(
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
-def _codebook_rows(cents: DataFrame) -> list:
-    """A centroid frame's (cid, cv, cnorm) rows as driver data,
-    ascending by cid (so a numpy argmax's first occurrence is the cid
-    tiebreak), cnorm verbatim from its Spark-computed column."""
-    return sorted(
-        (
-            (int(r.cid), [float(x) for x in r.cv], float(r.cnorm))
-            for r in cents.select("cid", "cv", "cnorm").collect()
-        ),
-        key=lambda t: t[0],
-    )
-
-
-def _ivf_probe_lists(cents: list, vecs, norms, max_p: int) -> list:
+def _ivf_probe_lists(book: tuple, vecs, norms, max_p: int) -> list:
     """Per query vector, the top-``max_p`` probed cells as a list of
-    (centroid INDEX into the cid-ascending ``cents``, probe_rn) — the
-    former ``slice(array_sort(struct(negsim, cid)), 1, n_probe)``:
-    :func:`_cos_csim` DESC, then cid ASC by a stable sort of the
-    cid-ascending cells, ±0.0 comparing equal, and a zero query's 0/0
+    (centroid INDEX into the cid-ascending ``book`` (cids, centroids),
+    probe_rn) — the former ``slice(array_sort(struct(negsim, cid)), 1,
+    n_probe)``: :func:`_cos_csim` DESC, then cid ASC by a stable sort of
+    the cid-ascending cells, ±0.0 comparing equal, and a zero query's 0/0
     cosines -1.0 (:func:`_nan_to_floor`), as in the DuckDB twins."""
     import numpy as np
 
-    c_mat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
-    cnorms = np.asarray([cn for _, _, cn in cents], dtype=np.float64)
+    c_mat = book[1]
     with np.errstate(invalid="ignore"):
-        csim = _cos_csim(np.asarray(vecs, dtype=np.float64), np.asarray(norms), c_mat, cnorms)
+        csim = _cos_csim(np.asarray(vecs, dtype=np.float64), np.asarray(norms), c_mat, _seq_norms(c_mat))
     order = np.argsort(-_nan_to_floor(csim), axis=1, kind="stable")[:, :max_p]
     return [[(int(idx), rn + 1) for rn, idx in enumerate(row)] for row in order]
 
 
-def _seeded_codebook(scan, n: int) -> list:
-    """The seeded IVF's coarse quantizer as :func:`_codebook_rows`
-    gives a codebook: the ``n`` rows of the scan input with the smallest
-    (md5int(vec_id), vec_id), ascending by cid, each cnorm the
-    :func:`_seq_norms` value (``_with_norm``'s, bit for bit). Picked on
-    the driver from a gathered table; a frame runs one
+def _seeds(scan, n: int):
+    """The md5-min seed pick of every codebook here: the ``n`` rows of
+    the scan input with the smallest (md5int(vec_id), vec_id) —
+    engine-portable, the DuckDB twins' ``ORDER BY md5, vec_id LIMIT n``
+    — as one Arrow record batch of (vec_id, v), ascending by vec_id.
+    Picked on the driver from a gathered table; a frame runs one
     ``orderBy().limit()`` job, the scatter side's."""
     import numpy as np
+    import pyarrow as pa
 
     if isinstance(scan, DataFrame):
         ordered = scan.orderBy(md5int(F.col("vec_id").cast("string")), "vec_id")
-        seeds = [(r.vec_id, r.v) for r in ordered.limit(n).select("vec_id", "v").collect()]
+        rows = ordered.limit(n).select("vec_id", "v").collect()
+        top = pa.table(
+            {
+                "vec_id": pa.array([r.vec_id for r in rows], pa.int64()),
+                "v": pa.array([r.v for r in rows], pa.list_(pa.float64())),
+            }
+        )
     else:
         ids = scan["vec_id"].to_numpy()
         h = np.fromiter((md5int_py(str(i)) for i in ids.tolist()), np.int64, len(ids))
         top = scan.take(np.lexsort((ids, h))[:n])
-        seeds = zip(top["vec_id"].to_pylist(), top["v"].to_pylist())
-    seeds = sorted(seeds, key=lambda t: t[0])
-    mat = np.asarray([v for _, v in seeds], dtype=np.float64)
-    return [
-        (int(cid), [float(x) for x in cv], float(cnorm))
-        for (cid, _), cv, cnorm in zip(seeds, mat, _seq_norms(mat))
-    ]
+    top = top.sort_by("vec_id")
+    return pa.record_batch([top["vec_id"].combine_chunks(), top["v"].combine_chunks()], names=["vec_id", "v"])
 
 
 def _ivf_scan(corpus, q: _Queries, k: int, n_centroids: int, probes):
     """The :func:`_topk_scan` partials over ``corpus`` (query_id,
     neighbor_id, sim, probe_rn) of the md5-seeded IVF at every probe
-    level in ``probes``, over the :func:`_seeded_codebook` of the same
-    scan input; the query probe lists are derived driver-side with the
-    identical float arithmetic."""
-    cents = _seeded_codebook(corpus, n_centroids)
-    probe_lists = _ivf_probe_lists(cents, q.vecs, q.norms, max(probes))
+    level in ``probes``, its centroids the raw vectors of the
+    :func:`_seeds` of the same scan input; the query probe lists are
+    derived driver-side with the identical float arithmetic."""
+    seeds = _seeds(corpus, n_centroids)
+    book = (_batch_np(seeds, "vec_id"), _batch_mat(seeds, "v", -1))
+    probe_lists = _ivf_probe_lists(book, q.vecs, q.norms, max(probes))
     return _topk_scan(
         corpus,
         q,
         k,
-        _ivf_scorer(cents, q, probe_lists, tuple(probes)),
+        _ivf_scorer(book, q, probe_lists, tuple(probes)),
         "sim double, probe_rn int",
     )
 
@@ -359,18 +354,181 @@ SELECT query_id, neighbor_id, rank FROM (
 KMEANS_ITERS = 2
 KMEANS_QUANT = 1000.0
 
+#: The columns of a :func:`_lloyd` codebook.
+_BOOK_DDL = "sub int, cid long, cv array<double>"
 
-def _quantized(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, q, qnorm): vectors quantized to INTEGRAL doubles
-    (``round(x * 1000)``). Integral doubles make every k-means partial
-    sum exact regardless of accumulation order (all addends and sums
-    are integers far below 2^53), which is what lets an independent
-    engine reproduce the trained codebook bit-for-bit."""
-    v = F.col("embedding").cast("array<double>")
-    q = F.transform(v, lambda x: F.round(x * F.lit(KMEANS_QUANT), 0))
-    return embeddings.select(
-        "vec_id", q.alias("q")
-    ).withColumn("qnorm", F.sqrt(_dot(F.col("q"), F.col("q"))))
+
+def _lattice(batch, dim: int, coarse=None):
+    """The ``round(v*1000)`` lattice of a batch's ``v`` — integral
+    doubles, :func:`_round_half_up` being Spark ``round()``'s HALF_UP
+    — and None; given a ``coarse`` (ccids, centroids) quantizer, each
+    row's residual against its :func:`_nearest` ``"d2"`` centroid (an
+    integral subtraction, exact) and that centroid's ccid. ``dim`` is
+    :func:`_batch_mat`'s, so a NULL or ragged vector raises naming its
+    vec_id."""
+    mat = _round_half_up(_batch_mat(batch, "v", dim) * KMEANS_QUANT)
+    if coarse is None:
+        return mat, None
+    near = _nearest(mat, coarse[1], "d2")
+    return mat - coarse[1][near], coarse[0][near]
+
+
+def _nearest(mat, cents, metric: str, norms=None):
+    """Each row of ``mat``'s nearest centroid among the rows of the
+    cid-ascending matrix ``cents``, as an index: for ``"cos"`` the first
+    argmax of :func:`_cos_csim` (``norms``, the rows'
+    :func:`_seq_norms`, computed when not given; a 0/0 cosine ranks as
+    -1.0, :func:`_nan_to_floor`), for ``"d2"`` the first argmin of the
+    squared L2 distance, exact on lattice values under any summation
+    order. The first occurrence is the smallest cid: the DuckDB twins'
+    ``ORDER BY score, cid``."""
+    import numpy as np
+
+    if metric == "cos":
+        if norms is None:
+            norms = _seq_norms(mat)
+        return _nan_to_floor(_cos_csim(mat, norms, cents, _seq_norms(cents))).argmax(axis=1)
+    d2 = np.empty((len(mat), len(cents)))
+    for j, c in enumerate(cents):
+        diff = mat - c
+        d2[:, j] = (diff * diff).sum(axis=1)
+    return d2.argmin(axis=1)
+
+
+def _lloyd(spark, scan, k: int, n_iters: int, metric: str, n_subs: int = 1, coarse=None) -> DataFrame:
+    """The k-means (Lloyd) codebook of a :func:`_scan_input` ``scan``,
+    as a LocalRelation of :data:`_BOOK_DDL`: ``n_subs`` books of up to
+    ``k`` centroids over the :func:`_lattice` of every row (its residual
+    when a ``coarse`` quantizer is given), cut into ``n_subs``
+    contiguous subvectors. The seeds are the :func:`_seeds` rows, each
+    giving every book its subvector. Each of ``n_iters`` rounds assigns
+    every subvector to its :func:`_nearest` centroid and moves each
+    centroid to the mean of its members — for ``"d2"`` rounded back onto
+    the lattice with :func:`_round_half_up` — and a centroid that loses
+    all its members drops out: the DuckDB twins'
+    (:func:`_kmeans_cte_parts`, :func:`_lloyd_sql_parts`) codebook bit
+    for bit. The counts and sums are of integral doubles below 2^53, so
+    exact in any order, and a mean is the twins' one IEEE division.
+
+    A round is one :func:`_on_batches` pass emitting each batch's
+    (sub, cid, n, s) member counts and sums, merged on the driver: no
+    job over a gathered table, one ``mapInArrow`` job over a frame, and
+    the corpus is never shuffled. No seed (an empty corpus, ``k`` 0) or
+    an empty ``coarse`` gives an empty codebook."""
+    import numpy as np
+    import pyarrow as pa
+
+    seeds = _seeds(scan, k)
+    if not seeds.num_rows or (coarse is not None and not len(coarse[0])):
+        return values_df(spark, [], _BOOK_DDL)
+    mat, _ = _lattice(seeds, -1, coarse)
+    dim = mat.shape[1]
+    if dim % n_subs:
+        raise ValueError(f"vectors of {dim} values do not split into {n_subs} subs")
+    width = dim // n_subs
+    cut = [slice(s * width, (s + 1) * width) for s in range(n_subs)]
+    ids = _batch_np(seeds, "vec_id")
+    books = [(ids, mat[:, c]) for c in cut]
+    for _ in range(n_iters):
+
+        def sums(batches, books=books):
+            for batch in (b for b in batches if b.num_rows):
+                mat, _ = _lattice(batch, dim, coarse)
+                subs, cids, counts, totals = [], [], [], []
+                for s, (ids, cents) in enumerate(books):
+                    part = mat[:, cut[s]]
+                    near = _nearest(part, cents, metric)
+                    order = np.argsort(near, kind="stable")
+                    j, start = np.unique(near[order], return_index=True)
+                    subs.append(np.full(len(j), s, np.int32))
+                    cids.append(ids[j])
+                    counts.append(np.diff(start, append=len(near)))
+                    totals += list(np.add.reduceat(part[order], start, axis=0))
+                arrays = [pa.array(np.concatenate(a)) for a in (subs, cids, counts)]
+                arrays.append(pa.array(totals, pa.list_(pa.float64())))
+                yield pa.record_batch(arrays, names=["sub", "cid", "n", "s"])
+
+        parts = _on_batches(scan, sums, "sub int, cid long, n long, s array<double>")
+        sub, cid, n = (parts[c].to_numpy() for c in ("sub", "cid", "n"))
+        total = parts["s"].combine_chunks().flatten().to_numpy().reshape(-1, width)
+        moved = []
+        for s, (ids, cents) in enumerate(books):
+            at = sub == s
+            j = _positions(ids, cid[at])
+            count = np.bincount(j, n[at], len(ids))
+            acc = np.zeros(cents.shape)
+            np.add.at(acc, j, total[at])
+            live = count > 0
+            means = acc[live] / count[live, None]
+            moved.append((ids[live], _round_half_up(means) if metric == "d2" else means))
+        books = moved
+    rows = [(s, int(c), [float(x) for x in cv]) for s, (ids, cents) in enumerate(books) for c, cv in zip(ids, cents)]
+    return values_df(spark, rows, _BOOK_DDL)
+
+
+def _read_book(book: DataFrame, n_subs: int = 1, cid: str = "cid", cv: str = "cv") -> list:
+    """The (cids ascending, centroid matrix) of each sub 0..``n_subs``-1
+    of a codebook frame: a :func:`_lloyd` book, the k-means (cid, cv,
+    cnorm), the PQ (sub, cid, cv) or, with ``cid="ccid", cv="ccv"``, the
+    coarse layout (no ``sub`` column: sub 0). Every sub is empty when
+    the frame is. A LocalRelation (a book trained in this session) is
+    read on the driver; a persisted one runs one small job. Other subs
+    than 0..``n_subs``-1 raise ValueError."""
+    import numpy as np
+
+    sub = F.col("sub") if "sub" in book.columns else F.lit(0)
+    rows = sorted(((int(s), int(c), v) for s, c, v in book.select(sub, cid, cv).collect()), key=lambda r: r[:2])
+    subs = sorted({r[0] for r in rows})
+    if rows and subs != list(range(n_subs)):
+        raise ValueError(f"the codebook has subs {subs}, expected 0..{n_subs - 1}")
+    out = []
+    for s in range(n_subs):
+        these = [r for r in rows if r[0] == s]
+        mat = np.asarray([r[2] for r in these], dtype=np.float64) if these else np.zeros((0, 0))
+        out.append((np.asarray([r[1] for r in these], dtype=np.int64), mat))
+    return out
+
+
+def _codes(spark, scan, books: list, metric: str, coarse=None, with_v: bool = False) -> DataFrame:
+    """The code rows (vec_id[, ccid], sub, code[, v]) of a
+    :func:`_scan_input` ``scan`` against ``books`` (:func:`_read_book`):
+    for each vector and sub, the cid of its subvector's :func:`_nearest`
+    centroid on the :func:`_lattice` — the residual against the nearest
+    ``coarse`` cell, whose ccid the rows carry, when given; ``with_v``
+    carries the raw vector. One :func:`_on_batches` pass: a gathered
+    table is encoded on the driver (no job) into one partition of a
+    LocalRelation, a frame by ``mapInArrow``. An empty codebook or
+    quantizer encodes nothing, as the DuckDB twins' joins with it do."""
+    import numpy as np
+    import pyarrow as pa
+
+    ccid = ", ccid long" if coarse is not None else ""
+    ddl = f"vec_id long{ccid}, sub int, code long" + (", v array<double>" if with_v else "")
+    if not all(len(ids) for ids, _ in books) or (coarse is not None and not len(coarse[0])):
+        return values_df(spark, [], ddl)
+    n_subs, width = len(books), books[0][1].shape[1]
+
+    def encode(batches):
+        for batch in (b for b in batches if b.num_rows):
+            mat, cells = _lattice(batch, n_subs * width, coarse)
+            code = [
+                ids[_nearest(mat[:, s * width : (s + 1) * width], cents, metric)]
+                for s, (ids, cents) in enumerate(books)
+            ]
+            rows = np.repeat(np.arange(batch.num_rows), n_subs)
+            cols = [_batch_np(batch, "vec_id")[rows]] + ([] if cells is None else [cells[rows]])
+            cols += [np.tile(np.arange(n_subs, dtype=np.int32), batch.num_rows), np.stack(code, axis=1).ravel()]
+            arrays = [pa.array(c) for c in cols]
+            if with_v:
+                arrays.append(batch.column(batch.schema.get_field_index("v")).take(pa.array(rows)))
+            yield pa.record_batch(arrays, names=_ddl_names(ddl))
+
+    out = _on_batches(scan, encode, ddl, collect=False)
+    if isinstance(out, DataFrame):
+        return out
+    # one partition, as the gathered corpus is one table: a LocalRelation
+    # scans as defaultParallelism slices, so many files and tasks apiece
+    return values_df(spark, out, ddl).coalesce(1)
 
 
 def kmeans_codebook(
@@ -378,101 +536,26 @@ def kmeans_codebook(
     n_centroids: int = IVF_CENTROIDS,
     n_iters: int = KMEANS_ITERS,
 ) -> DataFrame:
-    """Distributed spherical k-means (Lloyd) codebook: (cid, cv, cnorm).
+    """Spherical k-means (Lloyd) codebook: (cid, cv, cnorm), a
+    LocalRelation.
 
-    Seeding is the deterministic md5-min pick (engine-portable);
-    each refinement assigns every vector to its max-cosine centroid
-    (the centroids ride in the task closure) and recomputes centroids
-    as element-wise means of per-batch partial sums, combined by one
-    map-side-combined aggregation — the shuffle per iteration is
-    partitions × centroids × dim partial sums, NOT the corpus — and
-    collected as driver data for the next round. Centroids that lose
-    all members drop out (standard Lloyd behavior, mirrored by the
-    oracle).
+    Seeding is the deterministic md5-min pick (engine-portable); each
+    refinement assigns every ``round(v*1000)`` lattice vector to its
+    max-cosine centroid and recomputes centroids as element-wise means
+    (:func:`_lloyd`: per-batch partial sums merged on the driver, the
+    centroids in the pass's closure). A broadcast-sized Parquet corpus
+    trains on the driver with no job; a scattered one runs one job for
+    the seed pick and one per round, and is never shuffled. Centroids
+    that lose all members drop out (standard Lloyd behavior, mirrored
+    by the oracle).
 
-    Assignment ranks are cosine comparisons, so they are reproducible
-    across engines on the quantized integral vectors; the means are
-    exact integer-sum averages (see :func:`_quantized`)."""
-    # the quantized corpus is re-read by every Lloyd iteration's
-    # assignment pass: materialize it once (state: id + int vector), at
-    # its natural partitioning (see pq_codebooks)
-    base = _quantized(embeddings).transform(materialize)
-    seed_rows = (
-        base.withColumn("h", md5int(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(n_centroids)
-        .select(F.col("vec_id").alias("cid"), F.col("q").alias("cv"))
-        .collect()
-    )
-    # Each refinement round is ONE vectorized corpus pass (r14, guide
-    # §4.2 — the same MLlib-shaped rewrite as _pq_train; see the r13
-    # HOF cost evidence there). Cosines are accumulated strictly
-    # left-to-right across dimensions (_seq_dots), the exact order of
-    # the aggregate(zip_with) form and the DuckDB kernel — required
-    # because post-round-1 centroid means are NON-integral, where
-    # blocked BLAS summation could differ in the last bit and flip a
-    # rank. Counts + element sums stay exact integers; the mean is the
-    # identical single IEEE division. argmax first-occurrence over
-    # cid-ascending rows == max(struct(csim, -cid, cid)). Centroids
-    # that lose all members drop out (standard Lloyd, mirrored by the
-    # oracle).
-    import numpy as np
-
-    pairs = sorted(((r.cid, list(r.cv)) for r in seed_rows), key=lambda t: t[0])
-    cids = [c for c, _ in pairs]
-    c_mat = np.array([v for _, v in pairs], dtype=np.float64)
-    corpus = base.select("q", "qnorm")
-    for _ in range(n_iters):
-        combined = (
-            corpus.mapInArrow(
-                _cos_partials_fn(cids, c_mat),
-                "cid long, n long, s array<double>",
-            )
-            .groupBy("cid")
-            .agg(F.sum("n").alias("n"), _elem_sums(EMBED_DIM).alias("s"))
-            .collect()
-        )
-        pairs = sorted(
-            ((r.cid, [sv / r.n for sv in r.s]) for r in combined),
-            key=lambda t: t[0],
-        )
-        cids = [c for c, _ in pairs]
-        c_mat = np.array([v for _, v in pairs], dtype=np.float64)
-    rows = [(int(c), [float(x) for x in c_mat[j]]) for j, c in enumerate(cids)]
-    cents = values_df(base.sparkSession, rows, "cid long, cv array<double>")
-    # Project over LocalRelation folds driver-side (ConvertToLocalRelation),
-    # so the returned frame stays a LocalRelation including cnorm
-    return cents.select(
-        "cid", "cv", F.sqrt(_dot(F.col("cv"), F.col("cv"))).alias("cnorm")
-    )
-
-
-def _with_lattice(df: DataFrame) -> DataFrame:
-    """``df`` plus the (q, qnorm) lattice columns of its ``v``: the same
-    Spark expressions :func:`_quantized` builds, so assignment inputs
-    are bit-identical to the codebook training's."""
-    return df.withColumn(
-        "q", F.transform(F.col("v"), lambda x: F.round(x * F.lit(KMEANS_QUANT), 0))
-    ).withColumn("qnorm", F.sqrt(_dot(F.col("q"), F.col("q"))))
-
-
-def _kmeans_assign(src: DataFrame, cents: DataFrame, payload: str) -> DataFrame:
-    """(vec_id, cid, *payload): each (vec_id, q, qnorm, *payload) row
-    of ``src`` assigned to its max-cosine centroid — the shared
-    assignment step of :func:`semantic_dedup` and
-    :func:`cluster_label_purity`; ``payload`` is the DDL of the columns
-    passed through. One vectorized corpus pass (r14, guide §4.2): the k
-    centroids (with their Spark-computed cnorms, verbatim) ride in the
-    task closure and the argmax runs in numpy with the strict
-    left-to-right cosine accumulation (_seq_dots) — first occurrence
-    over cid-ascending rows is exactly the former
-    ``array_max(struct(csim, -cid, cid))`` ordering. ``cents`` is a
-    local relation when trained this session, so the collect is
-    driver-only."""
-    return src.mapInArrow(
-        _cos_assign_payload_fn(_codebook_rows(cents), tuple(_ddl_names(payload))),
-        f"vec_id long, cid long, {payload}",
-    )
+    Assignment ranks are cosine comparisons with strict left-to-right
+    dots (:func:`_seq_dots`) — post-round-1 means are not integral, and
+    a blocked sum could flip a rank — so they reproduce across engines;
+    the means are exact integer-sum averages. cnorm is
+    ``sqrt(aggregate(zip_with(cv, cv)))``, folded on the driver."""
+    book = _lloyd(embeddings.sparkSession, _scan_input(embeddings), n_centroids, n_iters, "cos")
+    return book.select("cid", "cv", F.sqrt(_dot(F.col("cv"), F.col("cv"))).alias("cnorm"))
 
 
 def ivf_kmeans_topk(
@@ -496,21 +579,21 @@ def ivf_kmeans_topk(
     (HALF_UP lattice, struct ordering via Python tuple compare), and
     the pass assigns cells on each batch's lattice while scoring probed
     candidates on the raw vectors — partition-local top-k partials that
-    :func:`_rank_topk` merges on the driver. Besides the training, a
-    Parquet corpus runs no job."""
+    :func:`_rank_topk` merges on the driver. The codebook trains on the
+    same scan input (:func:`_lloyd`), so a Parquet corpus runs no job."""
 
     def build(q: _Queries, corpus):
         import numpy as np
 
-        cents = _codebook_rows(kmeans_codebook(embeddings, n_centroids, n_iters))
+        book = _read_book(_lloyd(embeddings.sparkSession, corpus, n_centroids, n_iters, "cos"))[0]
         # probe lists on the QUANTIZED lattice (the assignment geometry)
         lattice = _round_half_up(np.asarray(q.vecs, dtype=np.float64) * KMEANS_QUANT)
-        probe_lists = _ivf_probe_lists(cents, lattice, _seq_norms(lattice), n_probe)
+        probe_lists = _ivf_probe_lists(book, lattice, _seq_norms(lattice), n_probe)
         partials = _topk_scan(
             corpus,
             q,
             k,
-            _ivf_scorer(cents, q, probe_lists, (n_probe,), quantized=True),
+            _ivf_scorer(book, q, probe_lists, (n_probe,), quantized=True),
             "sim double, probe_rn int",
         )
         return _rank_topk(partials, k)
@@ -579,24 +662,21 @@ def semantic_dedup(
 
     Scale shape: the quadratic cosine comparison runs WITHIN clusters
     only — Σ nᵢ² vs n² for the naive all-pairs, the SemDeDup contract
-    (n_centroids grows with the corpus to bound nᵢ). One corpus pass
-    fuses the Lloyd assignment with the raw-vector payload (r14, guide
-    §4.2/§2.4 — the former shape eagerly checkpointed an
-    assignment-join table and exploded a per-pair interpreted-HOF
-    cosine self-join on it); ONE exchange groups each cluster, and a
-    grouped Arrow pass computes the within-cluster dominance in
-    vectorized numpy with the strict left-to-right accumulation
-    (:func:`_seq_dots` order — bit-identical to the
-    ``aggregate(zip_with)`` cosine it replaces, see the parity block
-    above :func:`_round_half_up`). A pathologically hot cluster is the
-    operator's documented skew risk (raise n_centroids — the grouped
-    pass row-chunks its similarity slabs, so memory is bounded, but a
-    single cid is still one task)."""
-    # the trained codebook is a local relation (r14) — no materialize
-    cents = kmeans_codebook(embeddings, n_centroids, n_iters)
-    src = _with_lattice(_with_norm(embeddings))
-    assigned = _kmeans_assign(src, cents, "v array<double>, norm double")
-    return assigned.groupBy("cid").applyInArrow(
+    (n_centroids grows with the corpus to bound nᵢ). The codebook trains
+    on the scan input (:func:`_lloyd`) and one :func:`_codes` pass
+    assigns each vector, carrying its raw values (on the driver into a
+    LocalRelation when the corpus is gathered); ONE exchange groups
+    each cluster, and a grouped Arrow pass computes the within-cluster
+    dominance with :func:`_cos_csim` (the ``aggregate(zip_with)``
+    cosine bit for bit). A pathologically hot cluster is the operator's
+    documented skew risk (raise n_centroids — the grouped pass
+    row-chunks its similarity slabs, so memory is bounded, but a single
+    cid is still one task)."""
+    spark = embeddings.sparkSession
+    scan = _scan_input(embeddings)
+    book = _read_book(_lloyd(spark, scan, n_centroids, n_iters, "cos"))
+    cells = _codes(spark, scan, book, "cos", with_v=True)
+    return cells.groupBy("code").applyInArrow(
         _dominance_fn(threshold), "vec_id long, keep_id long, n_dupes long"
     )
 
@@ -931,55 +1011,22 @@ PQ_SUBS = 8  #: subspaces (EMBED_DIM must divide evenly)
 PQ_K = 16  #: centroids per subspace codebook
 
 
-def _sub_quantized(embeddings: DataFrame, n_subs: int) -> DataFrame:
-    """(vec_id, sub, sq): quantized integral subvectors — vector split
-    into ``n_subs`` contiguous blocks. One map stage, no shuffle."""
-    subdim = EMBED_DIM // n_subs
-    q = F.transform(
-        F.col("embedding").cast("array<double>"),
-        lambda x: F.round(x * F.lit(KMEANS_QUANT), 0),
-    )
-    pieces = F.expr(
-        f"transform(sequence(0, {n_subs - 1}),"
-        f" s -> struct(s AS sub, slice(__q, s * {subdim} + 1, {subdim}) AS sq))"
-    )
-    return (
-        embeddings.select("vec_id", q.alias("__q"))
-        .select("vec_id", F.explode(pieces).alias("p"))
-        .select("vec_id", "p.sub", "p.sq")
-    )
-
-
-# ---------------------------------------------------------------------------
-# r14 vectorized Lloyd substrate (guide §4.2). The r13 map-only argmin
-# rewrites evaluated nested higher-order functions (transform → struct →
-# aggregate(zip_with)) per row — interpreted per ELEMENT, never codegen'd —
-# which doubled ann_ivfpq_topk's summed executor task time (24 s → 51 s at
-# sf0.1, tools/profile_gate.py) and, worse for the bench, made the driver
-# spend seconds ANALYZING the giant expression trees between jobs (build
-# ledger: ann_ivf_kmeans frame construction 1.9 s → 2.9 s r12→r13). The
-# fix is the canonical distributed-Lloyd shape (what Spark MLlib's KMeans
-# does): per iteration, ONE corpus pass computes per-partition partial
-# sums in vectorized numpy (mapInArrow), a k-bounded combine yields the
-# next centroids as plain driver data, and the trained codebook becomes a
-# LOCAL RELATION — downstream broadcasts of it cost no job and no analysis.
-#
-# Bit-parity argument (what lets the DuckDB twins keep hash-matching):
-# - integer-lattice paths (_pq_train: quantized subvectors, residuals):
-#   every product/sum is an integral double < 2^53, so numpy's blocked/
-#   SIMD summation order CANNOT change the value; argmin first-occurrence
-#   over cid-ascending centroid rows == min(struct(d2, cid)).
-# - cosine paths (kmeans_codebook, _kmeans_assign): centroid means after
-#   round 1 are NON-integral, so dot products are accumulated with the
-#   helper below — strictly left-to-right across dimensions, the exact
-#   order of F.aggregate(zip_with(...)) and DuckDB's list_cosine kernel —
-#   one IEEE multiply + divide for the norm step; argmax first-occurrence
-#   over cid-ascending rows == max(struct(csim, -cid, cid)).
-# - centroid updates: sums are exact integers; the mean is the identical
-#   single IEEE division; lattice rounding (_pq_train's means, the JL,
-#   trained-IVF and label-centroid lattices) is _round_half_up: an exact
-#   fraction test, Spark round()'s HALF_UP bit for bit.
-# ---------------------------------------------------------------------------
+# Bit-parity with the DuckDB twins (what lets every codebook, code and
+# rank hash-match):
+# - integer-lattice arithmetic (round(v*1000) vectors, PQ and IVF-PQ
+#   residuals, d2 distances, ADC sums): every product and sum is an
+#   integral double below 2^53, so numpy's blocked/SIMD summation order
+#   CANNOT change a value; argmin first occurrence over cid-ascending
+#   centroid rows == ``ORDER BY d2, cid``.
+# - cosines (the k-means codebook's assignment, IVF cells): centroid
+#   means after round 1 are NOT integral, so dots accumulate strictly
+#   left-to-right across dimensions (_seq_dots) — the order of
+#   F.aggregate(zip_with(...)) and DuckDB's list kernels — then one IEEE
+#   multiply and one divide for the norm step; argmax first occurrence
+#   over cid-ascending rows == ``ORDER BY csim DESC, cid``.
+# - centroid updates: sums are exact integers and the mean is the one
+#   IEEE division; lattice rounding is _round_half_up, an exact fraction
+#   test, Spark round()'s HALF_UP bit for bit.
 
 
 def _round_half_up(x):
@@ -1076,79 +1123,6 @@ def _pair_cos(qm, qn, vecs, norms, qi, ri):
     :func:`_pair_dots`, one IEEE norm multiply, one IEEE divide — the
     ``aggregate(zip_with)`` value, and the :func:`_cos_csim` cell."""
     return _pair_dots(qm, vecs, qi, ri) / (qn[qi] * norms[ri])
-
-
-def _pack_cents(by_sub: dict) -> dict:
-    """{sub: (cids ascending, k × subdim matrix)} — ascending cid makes
-    numpy's first-occurrence argmin/argmax the struct tiebreak."""
-    import numpy as np
-
-    return {
-        s: (
-            [cid for cid, _ in sorted(rows, key=lambda t: t[0])],
-            np.array(
-                [cv for _, cv in sorted(rows, key=lambda t: t[0])],
-                dtype=np.float64,
-            ),
-        )
-        for s, rows in by_sub.items()
-    }
-
-
-def _lloyd_partials_fn(cents: dict, subdim: int):
-    """mapInArrow body: per batch, integral-exact d2 argmin against the
-    captured centroids and per-(sub, cid) member counts + element sums.
-    Output rows are k-bounded per batch: (sub, cid, n, s)."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            subs = _batch_np(batch, "sub")
-            vecs = _batch_mat(batch, "sq", subdim)
-            out_sub, out_cid, out_n, out_s = [], [], [], []
-            for s in np.unique(subs):
-                key = int(s)
-                if key not in cents:
-                    continue
-                cids, c_mat = cents[key]
-                m = vecs[subs == s]
-                if not m.shape[0]:
-                    continue
-                d = np.empty((m.shape[0], len(cids)), dtype=np.float64)
-                for j in range(len(cids)):
-                    diff = m - c_mat[j]
-                    # integral squared-L2: exact under any order
-                    d[:, j] = (diff * diff).sum(axis=1)
-                amin = d.argmin(axis=1)
-                for j, cid in enumerate(cids):
-                    mem = m[amin == j]
-                    if not mem.shape[0]:
-                        continue
-                    out_sub.append(key)
-                    out_cid.append(int(cid))
-                    out_n.append(int(mem.shape[0]))
-                    out_s.append([float(x) for x in mem.sum(axis=0)])
-            yield pa.record_batch(
-                [
-                    pa.array(out_sub, pa.int32()),
-                    pa.array(out_cid, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_s, pa.list_(pa.float64())),
-                ],
-                names=["sub", "cid", "n", "s"],
-            )
-
-    return fn
-
-
-def _elem_sums(subdim: int) -> Column:
-    """ONE parsed expression for the element-wise sums of an
-    ``s array<double>`` column — a single py4j roundtrip regardless of
-    ``subdim`` (the per-element F.sum loop paid O(dim) roundtrips)."""
-    body = ",".join(f"sum(s[{i}])" for i in range(subdim))
-    return F.expr(f"array({body})")
 
 
 def _cos_csim(vecs, qnorm, c_mat, cnorms):
@@ -1411,19 +1385,32 @@ def _topk_scan(
                 arrays += [batch.column(batch.schema.get_field_index(c)).take(rows) for c in carry]
             yield pa.record_batch(arrays, names=names)
 
-    ddl = f"query_id long, neighbor_id long, {cols}"
-    if isinstance(corpus, DataFrame):
-        ddl += "".join(f", {c} {corpus.schema[c].dataType.simpleString()}" for c in carry)
-        return corpus.mapInArrow(fn, ddl).toArrow()
+    return _on_batches(corpus, fn, f"query_id long, neighbor_id long, {cols}", carry)
+
+
+def _on_batches(scan, fn, ddl: str, carry=(), collect: bool = True):
+    """The module's one placed batch pass: ``fn``, a generator from
+    Arrow record batches of the scan input to record batches of the
+    ``ddl`` columns and then the ``carry`` columns of ``scan`` (of their
+    type), run where :func:`_scan_input` placed ``scan``. A gathered
+    Arrow table's batches run here on the driver, no job, and the
+    result is an Arrow table; a frame runs ``fn`` in one ``mapInArrow``
+    pass, collected with ``toArrow()`` (one job; the callers emit
+    partials bounded by batches × k) — or, unless ``collect``, returned
+    as that frame, for a per-row pass that a later stage consumes."""
     import numpy as np
     import pyarrow as pa
 
+    if isinstance(scan, DataFrame):
+        ddl += "".join(f", {c} {scan.schema[c].dataType.simpleString()}" for c in carry)
+        out = scan.mapInArrow(fn, ddl)
+        return out.toArrow() if collect else out
     schema = arrow_schema(ddl)
     for c in carry:
-        schema = schema.append(pa.field(c, corpus.schema.field(c).type))
-    # a zero-norm row's 0/0 cosine is expected (mapped to -1.0 above)
+        schema = schema.append(pa.field(c, scan.schema.field(c).type))
+    # a zero-norm row's 0/0 cosine is expected (mapped to -1.0 where scored)
     with np.errstate(invalid="ignore"):
-        return pa.Table.from_batches(fn(corpus.to_batches()), schema)
+        return pa.Table.from_batches(fn(scan.to_batches()), schema)
 
 
 def _rank_topk(partials, k: int, score: str = "sim", largest: bool = True, rank: str = "rank"):
@@ -1520,26 +1507,24 @@ def _brute_scorer(q: _Queries, k: int):
     return score
 
 
-def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: bool = False):
+def _ivf_scorer(book: tuple, q: _Queries, probe_lists: list, levels, quantized: bool = False):
     """Rows whose cell is one of the query's probed cells at the
     deepest of ``levels``, scored by exact cosine (:func:`_pair_cos`,
     every query's candidates in one call), with one subset per level
     (probe_rn ≤ p) and the extra ``probe_rn`` column. A row's cell is
-    its max-cosine centroid of the cid-ascending ``cents`` (argmax first
-    occurrence == the former ``array_min(struct(negsim, cid))``), taken
-    on the ``round(v*1000)`` lattice (:func:`_round_half_up`) and its
-    :func:`_seq_norms` when ``quantized`` — the trained codebook's
-    geometry — else on v. A vector lives in one cell, so a (query,
-    neighbor) pair is emitted at most once per batch."""
+    its :func:`_nearest` ``"cos"`` centroid of the cid-ascending
+    ``book`` (cids, centroids), taken on the ``round(v*1000)`` lattice
+    (:func:`_round_half_up`) when ``quantized`` — the trained
+    codebook's geometry — else on v. A vector lives in one cell, so a
+    (query, neighbor) pair is emitted at most once per batch."""
     import numpy as np
 
-    c_mat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
-    cnorms = [cn for _, _, cn in cents]
+    c_mat = book[1]
     qm = np.asarray(q.vecs, dtype=np.float64)
     qn = np.asarray(q.norms, dtype=np.float64)
     max_p = max(levels)
     # centroid index → probe_rn per query (0 = not probed)
-    rnmaps = np.zeros((len(qm), len(cents)), dtype=np.int32)
+    rnmaps = np.zeros((len(qm), len(c_mat)), dtype=np.int32)
     for j, plist in enumerate(probe_lists):
         for idx, rn in plist:
             rnmaps[j, idx] = rn
@@ -1548,11 +1533,9 @@ def _ivf_scorer(cents: list, q: _Queries, probe_lists: list, levels, quantized: 
         vecs = _batch_mat(batch, "v", qm.shape[1])
         norms = _seq_norms(vecs)
         if quantized:
-            lattice = _round_half_up(vecs * KMEANS_QUANT)
-            cells = _cos_csim(lattice, _seq_norms(lattice), c_mat, cnorms)
+            amax = _nearest(_round_half_up(vecs * KMEANS_QUANT), c_mat, "cos")
         else:
-            cells = _cos_csim(vecs, norms, c_mat, cnorms)
-        amax = cells.argmax(axis=1)
+            amax = _nearest(vecs, c_mat, "cos", norms)
         prn = rnmaps[:, amax]  # (num_queries × rows)
         qi, ri = np.nonzero((prn >= 1) & (prn <= max_p))
         sims = _pair_cos(qm, qn, vecs, norms, qi, ri)
@@ -1644,44 +1627,6 @@ def _hamming_scorer(q: _Queries):
     return score
 
 
-def _cos_partials_fn(cids: list, c_mat):
-    """mapInArrow body for a kmeans_codebook round: max-cosine argmax
-    (first occurrence over cid-ascending rows == max(struct(csim,
-    -cid, cid))) + per-cid member counts and exact integral element
-    sums."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cmat = np.asarray(c_mat, dtype=np.float64)
-        cnorms = _seq_norms(cmat)
-        for batch in batches:
-            vecs = _batch_mat(batch, "q", cmat.shape[1])
-            qnorm = _batch_np(batch, "qnorm")
-            if not vecs.shape[0]:
-                continue
-            amax = _cos_csim(vecs, qnorm, cmat, cnorms).argmax(axis=1)
-            out_cid, out_n, out_s = [], [], []
-            for j, cid in enumerate(cids):
-                mem = vecs[amax == j]
-                if not mem.shape[0]:
-                    continue
-                out_cid.append(int(cid))
-                out_n.append(int(mem.shape[0]))
-                out_s.append([float(x) for x in mem.sum(axis=0)])
-            yield pa.record_batch(
-                [
-                    pa.array(out_cid, pa.int64()),
-                    pa.array(out_n, pa.int64()),
-                    pa.array(out_s, pa.list_(pa.float64())),
-                ],
-                names=["cid", "n", "s"],
-            )
-
-    return fn
-
-
 def _py_bands(v) -> list[int]:
     """Driver-side LSH band values for one vector: the
     :func:`_bucket_col` plane-sign bucket (strict left-to-right dots
@@ -1711,54 +1656,17 @@ def _py_sign_words(v) -> tuple[int, int]:
     return words[0], words[1]
 
 
-def _cos_assign_payload_fn(cents: list, payload: tuple):
-    """mapInArrow body: (vec_id, q, qnorm, *payload) → (vec_id, cid,
-    *payload) — max-cosine assignment to the cid-ascending ``cents``
-    [(cid, cv, cnorm)], with the payload columns passed through
-    untouched (zero-copy Arrow columns), so one corpus pass feeds a
-    downstream per-cluster consumer without a join back to the
-    embeddings."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cmat = np.asarray([cv for _, cv, _ in cents], dtype=np.float64)
-        cnorms = [cn for _, _, cn in cents]
-        cid_arr = np.asarray([c for c, _, _ in cents], dtype=np.int64)
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            vecs = _batch_mat(batch, "q", cmat.shape[1])
-            qnorm = _batch_np(batch, "qnorm")
-            amax = _cos_csim(vecs, qnorm, cmat, cnorms).argmax(axis=1)
-            yield pa.record_batch(
-                [
-                    batch.column(batch.schema.get_field_index("vec_id")),
-                    pa.array(cid_arr[amax], pa.int64()),
-                ]
-                + [
-                    batch.column(batch.schema.get_field_index(c))
-                    for c in payload
-                ],
-                names=["vec_id", "cid", *payload],
-            )
-
-    return fn
-
-
 def _dominance_fn(threshold: float):
-    """applyInArrow body for one semantic-dedup cluster: (vec_id, cid,
-    v, norm) rows → (vec_id, keep_id, n_dupes) for every vector
-    dominated by a lower-id cluster neighbor with cosine ≥ threshold.
+    """applyInArrow body for one semantic-dedup cluster: (vec_id, v, …)
+    rows → (vec_id, keep_id, n_dupes) for every vector dominated by a
+    lower-id cluster neighbor with cosine ≥ threshold.
 
-    Bit-parity with the JVM pair expression it replaces: the pairwise
-    dot matrix is accumulated dimension-by-dimension (each element sees
-    ``acc + a[d]*b[d]`` in ascending d — exactly the
-    ``aggregate(zip_with)`` / :func:`_seq_dots` order), the norm product
-    is the identical single IEEE multiply of the Spark-computed norm
-    column values, and the divide is one IEEE op. Row-chunked so the
-    similarity slab is bounded (~16M cells) however hot the cluster."""
+    Bit-parity with the pair expression of the twin: each chunk of rows
+    is scored against the cluster by :func:`_cos_csim` over the
+    :func:`_seq_norms` — strict left-to-right dots, one IEEE multiply
+    and one divide, the ``aggregate(zip_with)`` cosine. Row-chunked so
+    the similarity slab is bounded (~16M cells) however hot the
+    cluster."""
 
     def fn(table):
         import numpy as np
@@ -1767,21 +1675,17 @@ def _dominance_fn(threshold: float):
         ids = table.column("vec_id").to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        norms = table.column("norm").to_numpy()[order]
         n = len(ids)
         flat = table.column("v").combine_chunks().flatten().to_numpy(
             zero_copy_only=False
         )
         mat = np.asarray(flat, dtype=np.float64).reshape(n, -1)[order]
+        norms = _seq_norms(mat)
         out_id, out_keep, out_n = [], [], []
         chunk = max(1, 16_000_000 // max(1, n))
         for s in range(0, n, chunk):
             e = min(n, s + chunk)
-            acc = np.zeros((e - s, n), dtype=np.float64)
-            for d in range(mat.shape[1]):
-                acc = acc + np.multiply.outer(mat[s:e, d], mat[:, d])
-            csim = acc / np.multiply.outer(norms[s:e], norms[:])
-            hits = csim >= threshold
+            hits = _cos_csim(mat[s:e], norms[s:e], mat, norms) >= threshold
             # dominance only from strictly lower-id rows (ids ascending)
             hits &= np.arange(n)[None, :] < np.arange(s, e)[:, None]
             cnt = hits.sum(axis=1)
@@ -1816,147 +1720,14 @@ def pq_codebooks(
     and scores BIT-FOR-BIT with no float-summation-order caveats (a
     strictly stronger parity guarantee than the cosine codebook above).
 
-    All ``n_subs`` codebooks train in ONE plan: centroids are keyed
-    (sub, cid) and the corpus-side explode is n_subs narrow rows per
-    vector, so each Lloyd round is one broadcast join + two map-side-
-    combined aggregates regardless of n_subs. Seeds are the md5-min
-    pick of whole vectors (one seed set, each contributing its
-    subvector to every subspace book)."""
-    # numpy consumers (r14): keep the scan's natural partitioning — a
-    # small input fanned to 32 Python tasks pays ~0.3 s of per-task
-    # worker round-trips per stage for zero compute benefit (measured
-    # probe, OPTIMIZATION_r14.md); cluster-scale inputs arrive with
-    # natural parallelism and are untouched by this choice
-    base = materialize(_sub_quantized(embeddings, n_subs))
-    return _pq_train(base, _seed_ids(embeddings, k), n_iters, EMBED_DIM // n_subs)
-
-
-def _seed_ids(embeddings: DataFrame, k: int) -> DataFrame:
-    """Deterministic md5-min seed pick over vec_ids (engine-portable)."""
-    return (
-        embeddings.select("vec_id")
-        .withColumn("h", md5int(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(k)
-        .select(F.col("vec_id").alias("cid"))
-    )
-
-
-def _pq_train(
-    base: DataFrame, seed_ids: DataFrame, n_iters: int, subdim: int
-) -> DataFrame:
-    """Integer-lattice Lloyd over an integral subvector frame
-    ``(vec_id, sub, sq)``: returns (sub, cid, cv). Shared by the plain
-    PQ books and the IVF-PQ residual books.
-
-    Each refinement round is ONE vectorized corpus pass (r14, guide
-    §4.2 — the canonical MLlib-style distributed Lloyd): a numpy
-    ``mapInArrow`` computes the integral-exact d2 argmin and
-    per-(sub, cid) partial sums per partition, one tiny
-    map-side-combined aggregate reduces the partition × k × n_subs
-    partials, and the k-bounded result is combined ON THE DRIVER into
-    the next round's centroids (k × n_subs × subdim values — the same
-    driver footprint MLlib's KMeans carries; documented coordination,
-    like MMR's selected-vector literals). The corpus is never
-    shuffled, and the trained codebook returns as a LOCAL RELATION, so
-    downstream broadcasts of it cost no job and no plan analysis. This
-    replaces the r13 broadcast-array ``array_min`` HOF form, whose
-    per-element interpreted evaluation doubled executor task time and
-    whose expression trees dominated driver analysis between jobs
-    (profile_gate/build_ledger evidence in OPTIMIZATION_r14.md).
-
-    Arithmetic is unchanged and order-free: integral-double sums are
-    exact under any accumulation order (numpy's blocked summation
-    included), the mean is the identical single IEEE division, and the
-    lattice rounding is :func:`_round_half_up`, Spark ``round()``'s
-    HALF_UP."""
-    import numpy as np
-
-    spark = base.sparkSession
-    seed_rows = (
-        base.join(F.broadcast(seed_ids), base["vec_id"] == seed_ids["cid"])
-        .select("sub", "cid", "sq")
-        .collect()
-    )
-    by_sub: dict = {}
-    for r in seed_rows:
-        by_sub.setdefault(r.sub, []).append((r.cid, list(r.sq)))
-    cents = _pack_cents(by_sub)
-    corpus = base.select("sub", "sq")
-    for _ in range(n_iters):
-        combined = (
-            corpus.mapInArrow(
-                _lloyd_partials_fn(cents, subdim),
-                "sub int, cid long, n long, s array<double>",
-            )
-            .groupBy("sub", "cid")
-            .agg(F.sum("n").alias("n"), _elem_sums(subdim).alias("s"))
-            .collect()
-        )
-        by_sub = {}
-        for r in combined:
-            # rounded mean: centroids stay ON the integer lattice, so
-            # the next round's distances remain integral-exact. The
-            # mean itself is one exact IEEE division; the rounding is
-            # HALF_UP == Spark/DuckDB round().
-            cv = _round_half_up(np.asarray(r.s, dtype=np.float64) / r.n)
-            by_sub.setdefault(r.sub, []).append((r.cid, cv))
-        cents = _pack_cents(by_sub)
-    rows = [
-        (int(s), int(cid), [float(x) for x in c_mat[j]])
-        for s, (cids, c_mat) in sorted(cents.items())
-        for j, cid in enumerate(cids)
-    ]
-    return values_df(spark, rows, "sub int, cid long, cv array<double>")
-
-
-def _collect_books(codebooks: DataFrame) -> dict:
-    """{sub: (cids ascending, k × subdim matrix)} from a trained
-    codebook frame. The trained books are local relations (or tiny
-    persisted tables), so this is a driver-only (or one small-job)
-    read of k × n_subs rows."""
-    by_sub: dict = {}
-    for r in codebooks.select("sub", "cid", "cv").collect():
-        by_sub.setdefault(r.sub, []).append((r.cid, list(r.cv)))
-    return _pack_cents(by_sub)
-
-
-def _assign_codes_fn(books: dict, subdim: int, carry_ccid: bool):
-    """mapInArrow body: vectorized integral-exact d2 argmin code
-    assignment; first-occurrence argmin over cid-ascending rows ==
-    ``min(struct(d2, cid))`` (ties to the smallest cid)."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = _batch_np(batch, "vec_id")
-            subs = _batch_np(batch, "sub")
-            vecs = _batch_mat(batch, "sq", subdim)
-            ccids = _batch_np(batch, "ccid") if carry_ccid else None
-            code = np.zeros(len(ids), dtype=np.int64)
-            for s in np.unique(subs):
-                cids, c_mat = books[int(s)]
-                m_idx = np.nonzero(subs == s)[0]
-                m = vecs[m_idx]
-                d = np.empty((m.shape[0], len(cids)), dtype=np.float64)
-                for j in range(len(cids)):
-                    diff = m - c_mat[j]
-                    d[:, j] = (diff * diff).sum(axis=1)
-                code[m_idx] = np.asarray(cids, dtype=np.int64)[d.argmin(axis=1)]
-            cols = [
-                pa.array(ids, pa.int64()),
-                pa.array(subs.astype("int32"), pa.int32()),
-                pa.array(code, pa.int64()),
-            ]
-            names = ["vec_id", "sub", "code"]
-            if carry_ccid:
-                cols.insert(1, pa.array(ccids, pa.int64()))
-                names.insert(1, "ccid")
-            yield pa.record_batch(cols, names=names)
-
-    return fn
+    All ``n_subs`` codebooks train in ONE :func:`_lloyd` loop: each
+    round is one pass over the scan input that assigns every subvector
+    and emits per-batch (sub, cid) partial sums, merged on the driver —
+    no job for a broadcast-sized Parquet corpus, one per round (and
+    one for the seeds) for a scattered one. Seeds are the md5-min pick
+    of whole vectors (one seed set, each contributing its subvector to
+    every subspace book)."""
+    return _lloyd(embeddings.sparkSession, _scan_input(embeddings), k, n_iters, "d2", n_subs)
 
 
 def pq_encode(
@@ -1964,16 +1735,12 @@ def pq_encode(
 ) -> DataFrame:
     """(vec_id, sub, code): nearest-codeword assignment per subspace —
     the 8-byte-per-vector compressed representation (ties by smallest
-    cid). One vectorized corpus pass (r14, guide §4.2): the k × n_subs
-    codebook rides in the task closure and the argmin runs in numpy —
-    no row expansion, no exchange, no per-element interpreted HOF."""
-    subdim = EMBED_DIM // n_subs
-    # natural partitioning into the numpy pass (see pq_codebooks)
-    subs = _sub_quantized(embeddings, n_subs)
-    return subs.select("vec_id", "sub", "sq").mapInArrow(
-        _assign_codes_fn(_collect_books(codebooks), subdim, carry_ccid=False),
-        "vec_id long, sub int, code long",
-    )
+    cid). One :func:`_codes` pass, the ``n_subs`` books in its closure:
+    a broadcast-sized Parquet corpus is encoded on the driver with no
+    job, a larger one by ``mapInArrow`` — no row expansion, no
+    exchange."""
+    scan = _scan_input(embeddings)
+    return _codes(embeddings.sparkSession, scan, _read_book(codebooks, n_subs), "d2")
 
 
 def pq_topk(
@@ -1993,17 +1760,19 @@ def pq_topk(
 
     The query rows are taken as :func:`_with_queries` takes them, and
     no query row returns before training. The codebooks train and the
-    corpus is encoded in Spark; the search is :func:`_adc_topk`, one
+    corpus is encoded over the same scan input (:func:`_lloyd`,
+    :func:`_codes`); the search is :func:`_adc_topk`, one
     :func:`_topk_scan` pass over the codes with the queries' lookup
     tables in the scorer: the corpus is never joined or shuffled by
     value, and the scan reads 8 longs per vector instead of 64 doubles
     — the 8× scan-compression that makes billion-vector ANN fit in
     memory at 1000 executors."""
 
-    def build(q: _Queries, _):
-        # the trained codebook is a local relation (r14) — no materialize
-        books = pq_codebooks(embeddings, n_subs, n_codewords, n_iters)
-        return _adc_topk(q, pq_encode(embeddings, books, n_subs), books, k, n_subs)
+    def build(q: _Queries, corpus):
+        spark = embeddings.sparkSession
+        books = _lloyd(spark, corpus, n_codewords, n_iters, "d2", n_subs)
+        codes = _codes(spark, corpus, _read_book(books, n_subs), "d2")
+        return _adc_topk(q, codes, books, k, n_subs)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
@@ -2020,28 +1789,35 @@ def _adc_topk(
     The scan input has one row per vector, its code rows grouped into
     ``sc`` once, so every batch holds whole vectors; it is placed like
     every ANN scan input (:func:`_bcast.gathers` with
-    :data:`GATHER_MAX_BYTES`). The scorer is :func:`_adc_scorer`."""
+    :data:`GATHER_MAX_BYTES`). The scorer is :func:`_adc_scorer`. An
+    empty codebook (an index built on an empty corpus) ranks nothing:
+    no rows, no scan."""
     import numpy as np
 
+    books = _read_book(books, n_subs)
+    if not len(books[0][0]):
+        return []
     cols = ["sub", "code"] + (["ccid"] if coarse is not None else [])
     scan = codes.groupBy("vec_id").agg(F.array_sort(F.collect_list(F.struct(*cols))).alias("sc"))
     if gathers(scan, GATHER_MAX_BYTES):
         scan = gather(scan)
-    cells = ([0], np.zeros((1, q.vecs.shape[1]))) if coarse is None else _collect_coarse(coarse)
-    score = _adc_scorer(q, _collect_books(books), n_subs, cells, n_probe)
+    cells = (np.zeros(1, np.int64), np.zeros((1, q.vecs.shape[1])))
+    if coarse is not None:
+        cells = _read_book(coarse, 1, "ccid", "ccv")[0]
+    score = _adc_scorer(q, books, n_subs, cells, n_probe)
     partials = _topk_scan(scan, q, k, score, "adc double", largest=False)
     return _rank_topk(partials, k, "adc", largest=False)
 
 
-def _adc_scorer(q: _Queries, books: dict, n_subs: int, cells: tuple, n_probe: int):
+def _adc_scorer(q: _Queries, books: list, n_subs: int, cells: tuple, n_probe: int):
     """ADC scores, Σ_sub ``LUT[query, probe, sub, code]``, of the rows
     of a batch of :func:`_adc_topk`'s scan input whose cell one of the
     query's ``n_probe`` probes is, as one level. The probes and lookup
     tables are built here, on the driver: a query probes the cells of
-    ``cells`` (:func:`_collect_coarse`) nearest to its ``round(v*1000)``
+    ``cells`` (:func:`_read_book`) nearest to its ``round(v*1000)``
     lattice (:func:`_round_half_up`, Spark ``round()``'s HALF_UP) by
     (squared L2, ccid), and a probe's tables are the squared L2 of its
-    residual's subvectors to the :func:`_collect_books` codewords.
+    residual's subvectors to the ``books`` codewords.
     Every lattice value, residual, distance and sum is an integral
     double below 2^53, so no summation order can change a score: the
     DuckDB twins' values, bit for bit.
@@ -2226,7 +2002,7 @@ def ivfpq_topk(
     ``n_probe`` inverted lists per query, and a product quantizer over
     the RESIDUALS (x − coarse_centroid) scores candidates through
     8-byte codes. Both quantizers are the integer-lattice Lloyd
-    (:func:`_pq_train`; the coarse stage is simply n_subs=1), and the
+    (:func:`_lloyd`; the coarse stage is simply n_subs=1), and the
     residual of an integral vector minus an integral centroid is
     integral, so every trained centroid, code, and ADC score reproduces
     bit-for-bit in the DuckDB twin. Output: (query_id, neighbor_id,
@@ -2242,31 +2018,27 @@ def ivfpq_topk(
     built on the driver and the search is :func:`_adc_topk`'s one scan
     over the codes."""
 
-    def build(q: _Queries, _):
-        coarse, books, codes = _ivfpq_train(embeddings, n_coarse, n_subs, n_codewords, n_iters)
+    def build(q: _Queries, corpus):
+        coarse, books, codes = _ivfpq_train(embeddings.sparkSession, corpus, n_coarse, n_subs, n_codewords, n_iters)
         return _adc_topk(q, codes, books, k, n_subs, coarse, n_probe)
 
     return _with_queries(embeddings, num_queries, _TOPK_DDL, build)
 
 
-def _ivfpq_train(embeddings: DataFrame, n_coarse: int, n_subs: int, n_codewords: int, n_iters: int):
-    """(coarse, books, codes) of IVF-PQ over ``embeddings``: the coarse
-    (ccid, ccv) and residual (sub, cid, cv) quantizers, both
-    integer-lattice Lloyd (:func:`_pq_train`) and local relations, and
-    the (vec_id, ccid, sub, code) codes — what :func:`ivfpq_topk`
-    searches and :func:`write_ivfpq_index` persists."""
-    # numpy consumers only: natural partitioning (see pq_codebooks)
-    full = materialize(_sub_quantized(embeddings, 1))
-    coarse = _pq_train(full, _seed_ids(embeddings, n_coarse), n_iters, EMBED_DIM).select(
+def _ivfpq_train(spark, scan, n_coarse: int, n_subs: int, n_codewords: int, n_iters: int):
+    """(coarse, books, codes) of IVF-PQ over a :func:`_scan_input`
+    ``scan``: the coarse (ccid, ccv) and residual (sub, cid, cv)
+    quantizers, both integer-lattice :func:`_lloyd` LocalRelations (the
+    residual books over each vector's residual against its nearest
+    cell), and the (vec_id, ccid, sub, code) :func:`_codes` — what
+    :func:`ivfpq_topk` searches and :func:`write_ivfpq_index`
+    persists. A gathered corpus trains and encodes with no job."""
+    coarse = _lloyd(spark, scan, n_coarse, n_iters, "d2").select(
         F.col("cid").alias("ccid"), F.col("cv").alias("ccv")
     )
-    # EAGER: the residual pass feeds both the residual-book training and
-    # the code assignment — racing consumers would recompute it
-    # (persist.py residue rule)
-    rsubs = materialize(_ivfpq_residual_subs(embeddings, coarse, n_subs), eager=True)
-    seeds = _seed_ids(embeddings, n_codewords)
-    books = _pq_train(rsubs.select("vec_id", "sub", "sq"), seeds, n_iters, EMBED_DIM // n_subs)
-    return coarse, books, _assign_residual_codes(rsubs, books)
+    cells = _read_book(coarse, 1, "ccid", "ccv")[0]
+    books = _lloyd(spark, scan, n_codewords, n_iters, "d2", n_subs, cells)
+    return coarse, books, _codes(spark, scan, _read_book(books, n_subs), "d2", cells)
 
 
 def _lloyd_sql_parts(
@@ -2481,7 +2253,6 @@ def write_pq_index(
     streaming arrivals append codes without retraining
     (:func:`bunsen_spark.streaming.ann.stream_pq_encode`).
     ``(n_subs, k, n_iters)`` must stay constant per index path."""
-    # the trained codebook is a local relation (r14) — no materialize
     books = pq_codebooks(embeddings, n_subs, k, n_iters)
     books.write.mode(mode).parquet(f"{path}/books")
     pq_encode(embeddings, books, n_subs).write.mode(mode).parquet(f"{path}/codes")
@@ -2539,90 +2310,6 @@ def pq_index_topk(
     return _answer(spark, gather(_corpus(queries)), _TOPK_DDL, build)
 
 
-def _collect_coarse(coarse: DataFrame) -> tuple:
-    """(ccids ascending, k × EMBED_DIM matrix) from a coarse codebook
-    frame — a driver-only read when trained this session (local
-    relation), one tiny job when read back from a persisted index."""
-    rows = coarse.select("ccid", "ccv").collect()
-    return _pack_cents({0: [(r.ccid, list(r.ccv)) for r in rows]})[0]
-
-
-def _residual_slices_fn(ccids: list, cc_mat, n_subs: int):
-    """mapInArrow body: coarse-assign each integral vector (d2 argmin,
-    ties to the smallest ccid via first-occurrence over ascending
-    rows), subtract its centroid, and emit the n_subs residual slices
-    directly — the former crossJoin + struct-carrying array_min +
-    zip_with + explode chain in ONE vectorized pass."""
-
-    def fn(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        cc = np.asarray(cc_mat, dtype=np.float64)
-        subdim = cc.shape[1] // n_subs
-        cid_arr = np.asarray(ccids, dtype=np.int64)
-        for batch in batches:
-            ids = _batch_np(batch, "vec_id")
-            vecs = _batch_mat(batch, "sq", cc.shape[1])
-            n = vecs.shape[0]
-            if not n:
-                continue
-            d = np.empty((n, len(ccids)), dtype=np.float64)
-            for j in range(len(ccids)):
-                diff = vecs - cc[j]
-                d[:, j] = (diff * diff).sum(axis=1)  # integral-exact
-            amin = d.argmin(axis=1)
-            resid = vecs - cc[amin]  # integral subtraction: exact
-            out_id = np.repeat(ids, n_subs)
-            out_ccid = np.repeat(cid_arr[amin], n_subs)
-            out_sub = np.tile(np.arange(n_subs, dtype=np.int32), n)
-            values = pa.array(resid.ravel(), pa.float64())
-            offsets = pa.array(
-                np.arange(0, n * n_subs + 1, dtype=np.int32) * subdim,
-                pa.int32(),
-            )
-            yield pa.record_batch(
-                [
-                    pa.array(out_id, pa.int64()),
-                    pa.array(out_ccid, pa.int64()),
-                    pa.array(out_sub, pa.int32()),
-                    pa.ListArray.from_arrays(offsets, values),
-                ],
-                names=["vec_id", "ccid", "sub", "sq"],
-            )
-
-    return fn
-
-
-def _ivfpq_residual_subs(embeddings: DataFrame, coarse: DataFrame, n_subs: int) -> DataFrame:
-    """(vec_id, ccid, sub, sq): coarse-assign each vector to its
-    nearest centroid and slice the integral residual (x − centroid)
-    into PQ subvectors — the shared encode substrate of the persisted
-    IVF-PQ index (same arithmetic as the inline :func:`ivfpq_topk`
-    corpus side, against a FROZEN ``coarse`` table). One vectorized
-    corpus pass (r14, guide §4.2)."""
-    full = _sub_quantized(embeddings, 1)
-    ccids, cc_mat = _collect_coarse(coarse)
-    return full.select("vec_id", "sq").mapInArrow(
-        _residual_slices_fn(ccids, cc_mat, n_subs),
-        "vec_id long, ccid long, sub int, sq array<double>",
-    )
-
-
-def _assign_residual_codes(rsubs: DataFrame, books: DataFrame) -> DataFrame:
-    """(vec_id, ccid, sub, code): nearest residual codeword per
-    subspace (ties by smallest cid, matching :func:`ivfpq_topk`). One
-    vectorized corpus pass (r14, guide §4.2): codebooks in the task
-    closure, numpy argmin — no row expansion, no exchange, no
-    interpreted HOF."""
-    packed = _collect_books(books)
-    subdim = next(iter(packed.values()))[1].shape[1] if packed else 0
-    return rsubs.select("vec_id", "ccid", "sub", "sq").mapInArrow(
-        _assign_codes_fn(packed, subdim, carry_ccid=True),
-        "vec_id long, ccid long, sub int, code long",
-    )
-
-
 def ivfpq_encode(
     embeddings: DataFrame,
     coarse: DataFrame,
@@ -2633,10 +2320,11 @@ def ivfpq_encode(
     against FROZEN quantizers — coarse cell assignment plus residual
     codewords. This is what the index builder persists and what
     streaming arrivals run
-    (:func:`bunsen_spark.streaming.ann.stream_ivfpq_encode`)."""
-    return _assign_residual_codes(
-        _ivfpq_residual_subs(embeddings, coarse, n_subs), books
-    )
+    (:func:`bunsen_spark.streaming.ann.stream_ivfpq_encode`): one
+    :func:`_codes` pass, on the driver for a gathered batch."""
+    cells = _read_book(coarse, 1, "ccid", "ccv")[0]
+    scan = _scan_input(embeddings)
+    return _codes(embeddings.sparkSession, scan, _read_book(books, n_subs), "d2", cells)
 
 
 def write_ivfpq_index(
@@ -2653,7 +2341,7 @@ def write_ivfpq_index(
     ``{path}/coarse`` (ccid, ccv — the cell centroids),
     ``{path}/books`` (sub, cid, cv — the residual codebooks, shared
     across cells per standard IVFADC), and ``{path}/codes`` (vec_id,
-    ccid, sub, code). The raw vectors are read ONCE at build time;
+    ccid, sub, code). The raw vectors are read only at build time;
     every later search touches only codes + the two tiny quantizer
     tables (:func:`ivfpq_index_topk`), and streaming arrivals append
     codes against the frozen quantizers without retraining
@@ -2661,8 +2349,10 @@ def write_ivfpq_index(
     ``(n_coarse, n_subs, n_codewords, n_iters)`` must stay constant
     per index path. Same integer-lattice Lloyd as :func:`ivfpq_topk`,
     so an index built and searched here reproduces the inline gate's
-    arithmetic bit-for-bit."""
-    coarse, books, codes = _ivfpq_train(embeddings, n_coarse, n_subs, n_codewords, n_iters)
+    arithmetic bit-for-bit. An empty corpus builds an empty index,
+    whose searches return no rows."""
+    scan = _scan_input(embeddings)
+    coarse, books, codes = _ivfpq_train(embeddings.sparkSession, scan, n_coarse, n_subs, n_codewords, n_iters)
     coarse.write.mode(mode).parquet(f"{path}/coarse")
     books.write.mode(mode).parquet(f"{path}/books")
     codes.write.mode(mode).parquet(f"{path}/codes")
@@ -3468,47 +3158,49 @@ def cluster_label_purity(
     — corpus purity = ``sum(majority_votes) / sum(n_members)``, left
     as a ratio of exact longs for the consumer.
 
-    Scale shape: assignment is the broadcast max-of-struct aggregate
-    shared with :func:`semantic_dedup` (no window over the corpus);
-    both the member count and the majority vote are map-side-combined
-    aggregates on ``(cid[, label])`` — state bounded by clusters ×
-    labels, never corpus rows."""
-    # the trained codebook is a local relation (r14) — no materialize.
-    # The label rides THROUGH the assignment pass as an Arrow
-    # passthrough column (r14 session 2), deleting the join back to
-    # the embeddings (two exchanges) — same fusion as semantic_dedup.
-    cents = kmeans_codebook(embeddings, n_centroids, n_iters)
-    src = _with_lattice(
-        embeddings.select(
-            "vec_id",
-            F.col("label").cast("long").alias("label"),
-            F.col("embedding").cast("array<double>").alias("v"),
-        )
-    )
-    labeled = _kmeans_assign(src, cents, "label long")
-    votes = labeled.groupBy("cid", "label").agg(
-        F.count(F.lit(1)).cast("long").alias("votes")
-    )
-    # majority label via max-of-struct in (votes DESC, label ASC)
-    # order — same windowless argmax as the Lloyd assignment
-    top = (
-        votes.select(
-            "cid",
-            F.struct(
-                F.col("votes").alias("votes"),
-                (-F.col("label")).alias("neglabel"),
-                F.col("label").alias("label"),
-            ).alias("s"),
-        )
-        .groupBy("cid")
-        .agg(F.max("s").alias("s"), F.sum("s.votes").alias("n_members"))
-    )
-    return top.select(
-        F.col("cid").cast("long").alias("cid"),
-        F.col("n_members").cast("long").alias("n_members"),
-        F.col("s.label").alias("majority_label"),
-        F.col("s.votes").alias("majority_votes"),
-    )
+    Scale shape: the codebook trains on the scan input
+    (:func:`_lloyd`), and one more :func:`_on_batches` pass assigns
+    each vector to its :func:`_nearest` centroid and counts each
+    batch's (cid, label) votes, merged on the driver with the majority
+    pick (votes DESC, then label ASC, a NULL label last) — state
+    bounded by clusters × labels, never corpus rows; a broadcast-sized
+    Parquet corpus runs no job. Labels are cast to long as Arrow casts
+    (a fraction truncates)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    spark = embeddings.sparkSession
+    ddl = "cid long, n_members long, majority_label long, majority_votes long"
+    scan = _scan_input(embeddings, ("label",))
+    ids, cents = _read_book(_lloyd(spark, scan, n_centroids, n_iters, "cos"))[0]
+    if not len(ids):
+        return values_df(spark, [], ddl)
+
+    def votes(batches):
+        for batch in (b for b in batches if b.num_rows):
+            cid = ids[_nearest(_lattice(batch, cents.shape[1])[0], cents, "cos")]
+            label = batch.column(batch.schema.get_field_index("label"))
+            pairs = pa.table({"cid": cid, "label": pc.cast(label, pa.int64(), safe=False)})
+            yield from _count_pairs(pairs, ("cid", "count")).to_batches()
+
+    counts = _count_pairs(_on_batches(scan, votes, "cid long, label long, n long"), ("n", "sum"))
+    members, best = {}, {}
+    for cid, label, n in zip(*(counts[c].to_pylist() for c in ("cid", "label", "n"))):
+        members[cid] = members.get(cid, 0) + n
+        key = (n, label is not None, -(label or 0))
+        if cid not in best or key > best[cid][0]:
+            best[cid] = (key, label, n)
+    return values_df(spark, [(c, members[c], lb, n) for c, (_, lb, n) in sorted(best.items())], ddl)
+
+
+def _count_pairs(table, agg: tuple):
+    """(cid, label, n): the ``agg`` (column, function) aggregate of each
+    (cid, label) pair of the Arrow ``table``, a NULL label a pair of
+    its own."""
+    import pyarrow as pa
+
+    out = table.group_by(["cid", "label"]).aggregate([agg])
+    return pa.table({"cid": out["cid"], "label": out["label"], "n": out["_".join(agg)]})
 
 
 def cluster_label_purity_sql(
@@ -3775,9 +3467,8 @@ def label_centroid_topk(
 def _label_sums(scan, scale: int):
     """Each distinct ``label`` of the scan input (NULL is one), and the
     int64 sums of its rows' ``round(v*scale)`` lattice vectors as a
-    labels × dims matrix: per-batch partial sums — over a gathered
-    table's batches on the driver, or in one ``mapInArrow`` pass over a
-    frame (one job) — merged on the driver."""
+    labels × dims matrix: per-batch partial sums (one
+    :func:`_on_batches` pass) merged on the driver."""
     import numpy as np
     import pyarrow as pa
 
@@ -3785,16 +3476,12 @@ def _label_sums(scan, scale: int):
         for batch in (b for b in batches if b.num_rows):
             lattice = _round_half_up(_batch_mat(batch, "v", -1) * scale).astype(np.int64)
             keys, sums = _group_sums(batch.column(batch.schema.get_field_index("label")), lattice)
-            yield pa.record_batch([keys, pa.array(list(sums))], names=["label", "s"])
+            yield pa.record_batch([pa.array(list(sums), pa.list_(pa.int64())), keys], names=["s", "label"])
 
-    if isinstance(scan, DataFrame):
-        ddl = f"label {scan.schema['label'].dataType.simpleString()}, s array<long>"
-        parts = scan.mapInArrow(partial, ddl).collect()
-    else:
-        parts = [r for b in partial(scan.to_batches()) for r in b.to_pylist()]
-    if not parts:
+    parts = _on_batches(scan, partial, "s array<long>", ("label",))
+    if not parts.num_rows:
         return [], []
-    keys, sums = _group_sums(pa.array([r["label"] for r in parts]), np.asarray([r["s"] for r in parts]))
+    keys, sums = _group_sums(parts["label"].combine_chunks(), np.asarray(parts["s"].to_pylist()))
     return keys.to_pylist(), sums
 
 

@@ -96,10 +96,8 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # codebooks, natural partitioning into the Python stages
     # (operators/similarity.py). Results proven identical against the
     # oracle at sf0.01 + sf0.001, but these gates run new plan/job
-    # shapes and deserve fresh driver rows. (The PQ and IVF-PQ gates'
-    # round-14 rows are superseded by their round-21 rows below.)
-    ("semantic_dedup_drops", 14),
-    ("cluster_purity_embeddings", 14),
+    # shapes and deserve fresh driver rows. (The Lloyd-family gates'
+    # round-14 rows are superseded by their round-22 rows below.)
     # round 14 session 2: vectorized ANN query scans (numpy mapInArrow
     # partial top-k + tiny global window) and the LocalRelation sweep
     # of driver-built lookup/result tables (bunsen_spark/localrel.py)
@@ -148,9 +146,9 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # aggregates), and the label centroids are the queries of a kernel
     # scan (a zero vector ranks last instead of failing). Supersedes
     # these gates' round-16 and round-19 rows; ann_eval_scorecard runs
-    # the IVF probe sweep and JL, rrf_fused_topk fuses JL.
+    # the IVF probe sweep and JL, rrf_fused_topk fuses JL. (The trained
+    # IVF's round-20 row is superseded by its round-22 row below.)
     ("ann_ivf_topk", 20),
-    ("ann_ivf_kmeans_topk", 20),
     ("ann_jl_topk", 20),
     ("knn_label_accuracy", 20),
     ("hard_negatives_topk", 20),
@@ -161,12 +159,21 @@ _CHANGED_GATES: list[tuple[str, int]] = [
     # the queries' lookup tables (and IVF-PQ's probes) are built on the
     # driver, the codes are grouped into one row per vector and scanned
     # by the ADC scorer, and the index searches read their live codes
-    # through one reader. Supersedes these gates' round-14 rows.
-    ("ann_pq_topk", 21),
-    ("ann_ivfpq_topk", 21),
-    ("ann_ivfpq_index_topk", 21),
-    ("ann_ivfpq_index_append_topk", 21),
-    ("ann_ivfpq_index_delete_topk", 21),
+    # through one reader. Supersedes these gates' round-14 rows. (Their
+    # round-21 rows are superseded by their round-22 rows below.)
+    # round 22: one Lloyd kernel — every k-means codebook (trained IVF,
+    # semantic dedup, cluster purity, PQ, IVF-PQ coarse and residual
+    # books) trains in one loop of per-batch partial sums merged on the
+    # driver, and every assignment and encode is one nearest-centroid
+    # pass; a gathered corpus trains and encodes with no job.
+    ("ann_ivf_kmeans_topk", 22),
+    ("semantic_dedup_drops", 22),
+    ("cluster_purity_embeddings", 22),
+    ("ann_pq_topk", 22),
+    ("ann_ivfpq_topk", 22),
+    ("ann_ivfpq_index_topk", 22),
+    ("ann_ivfpq_index_append_topk", 22),
+    ("ann_ivfpq_index_delete_topk", 22),
 ]
 
 

@@ -67,7 +67,7 @@ def test_values_df_empty_rows(spark):
 
 def test_values_df_rejects_unknown_type(spark):
     with pytest.raises(ValueError):
-        values_df(spark, [([1],)], "a array<long>")
+        values_df(spark, [(["x"],)], "a array<string>")
 
 
 @pytest.mark.parametrize("bad", [(1,), (1, "x", 2.0)])
@@ -170,9 +170,18 @@ _SINGLE_PATHS = {
     "toArrow": (
         {
             "operators/_bcast.py": {"gather"},
-            "operators/similarity.py": {"_query_rows", "_topk_scan"},
+            "operators/similarity.py": {"_query_rows", "_on_batches"},
         },
         "toArrow outside operators/_bcast.gather; gather a whole input with _bcast.gather",
+    ),
+    # a per-batch Arrow pass over a placed scan input runs through the
+    # one runner, which runs it on the driver over a gathered table or
+    # scatters it; exact embedding dedup scores its blocks in its own
+    # pass
+    "mapInArrow": (
+        {"operators/similarity.py": {"_on_batches"}, "operators/dedup.py": {"embedding_near_dup_pairs"}},
+        "mapInArrow outside similarity._on_batches; run a per-batch pass over a scan input "
+        "through _on_batches",
     ),
     # positional appends into the terminology warehouse, after its
     # (uri, version) check
@@ -247,6 +256,14 @@ def test_driver_frames_go_through_localrel():
     _assert_single_path("createDataFrame")
 
 
+def test_one_batch_runner():
+    """Every per-batch Arrow pass of the similarity module — the top-k
+    scan, each Lloyd round, the encode and vote passes, the label sums
+    — goes through ``_on_batches``, so none brings back a scatter branch
+    of its own."""
+    _assert_single_path("mapInArrow")
+
+
 @pytest.mark.parametrize("attr", ["globStatus", "insertInto"])
 def test_one_probe_and_one_terminology_writer(attr):
     """The batch-table probe and the terminology warehouse writer each
@@ -263,8 +280,8 @@ def test_no_blas_on_the_driver():
 
 def test_one_whole_input_gather():
     """Whole inputs come to the driver only through ``_bcast.gather``;
-    the ANN scatter side's query and partials collects are the other
-    ``toArrow()`` calls."""
+    the ANN scatter side's query collect and the batch runner's
+    partials collect are the other ``toArrow()`` calls."""
     _assert_single_path("toArrow")
 
 

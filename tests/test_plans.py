@@ -199,8 +199,9 @@ def test_brute_force_topk_gathered_one_job(spark, sf_dir, tmp_path):
 def test_ann_members_gather_their_own_scan_input_once(spark, sf_dir):
     """The lattice members scan the plain corpus and build their
     ``round(x*1000)`` lattice per batch, so a Parquet corpus is read
-    from its files: JL runs no job; trained IVF runs only its codebook
-    training's jobs, and no MapInArrow beyond the training's."""
+    from its files: JL runs no job, and trained IVF, whose codebook
+    trains on the driver over the same gathered table, runs what
+    ``kmeans_codebook`` alone runs — no job and no MapInArrow."""
     from bunsen_spark.operators.similarity import ivf_kmeans_topk, jl_topk, kmeans_codebook
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

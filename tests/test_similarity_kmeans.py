@@ -1077,3 +1077,140 @@ def test_null_query_vector_raises(spark, scatter_gather, tmp_path_factory, op, p
     with scatter_gather() if placement == "scattered" else nullcontext():
         with pytest.raises(ValueError, match="vec_id 1: v has length NULL, expected 4"):
             op(emb, k=3, num_queries=3)
+
+
+def _ivfpq_parts(spark, emb) -> list:
+    """The IVF-PQ coarse codebook, residual books and codes of ``emb``
+    as :func:`_ivfpq_train` builds them on its placed scan input."""
+    return [
+        frame.select(sorted(frame.columns))
+        for frame in sim._ivfpq_train(spark, sim._scan_input(emb), 16, 8, 16, 2)
+    ]
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "kmeans_codebook",
+        "pq_codebooks",
+        "ivfpq_coarse",
+        "ivfpq_books",
+        "ivfpq_codes",
+        "pq_encode",
+        "semantic_dedup",
+        "cluster_label_purity",
+    ],
+)
+def test_lloyd_placement_parity(spark, scatter_gather, zero_vector_corpus, op):
+    """Every Lloyd codebook, code table and k-means consumer gives the
+    same rows with the corpus gathered to the driver and scanned in
+    partitions."""
+    emb = spark.read.parquet(zero_vector_corpus)
+    builds = {
+        "kmeans_codebook": lambda: sim.kmeans_codebook(emb),
+        "pq_codebooks": lambda: sim.pq_codebooks(emb),
+        "ivfpq_coarse": lambda: _ivfpq_parts(spark, emb)[0],
+        "ivfpq_books": lambda: _ivfpq_parts(spark, emb)[1],
+        "ivfpq_codes": lambda: _ivfpq_parts(spark, emb)[2],
+        "pq_encode": lambda: sim.pq_encode(emb, sim.pq_codebooks(emb)),
+        "semantic_dedup": lambda: sim.semantic_dedup(emb, threshold=0.2),
+        "cluster_label_purity": lambda: sim.cluster_label_purity(emb),
+    }
+    gathered = _rows(builds[op]())
+    with scatter_gather():
+        scattered = _rows(builds[op]())
+    assert gathered == scattered and gathered
+
+
+@pytest.mark.parametrize("op", ["kmeans_codebook", "pq_codebooks", "cluster_label_purity"])
+def test_parquet_corpus_trains_without_a_job(spark, count_jobs, zero_vector_corpus, op):
+    """A broadcast-sized Parquet corpus trains its codebooks and votes
+    on the driver: no Spark job."""
+    emb = spark.read.parquet(zero_vector_corpus)
+    build = {
+        "kmeans_codebook": lambda: sim.kmeans_codebook(emb),
+        "pq_codebooks": lambda: sim.pq_codebooks(emb),
+        "cluster_label_purity": lambda: sim.cluster_label_purity(emb),
+    }[op]
+    rows, jobs = count_jobs(lambda: _rows(build()))
+    assert jobs == 0 and rows
+
+
+@pytest.fixture(scope="module")
+def empty_corpus(tmp_path_factory):
+    """Parquet path of a corpus with no rows."""
+    return _corpus_path(tmp_path_factory, "empty", [], labels=[])
+
+
+@pytest.mark.parametrize("placement", ["gathered", "scattered"])
+@pytest.mark.parametrize("op", [kmeans_codebook, sim.semantic_dedup, sim.cluster_label_purity], ids=lambda op: op.__name__)
+def test_empty_corpus_matches_twin(spark, scatter_gather, empty_corpus, op, placement):
+    """An empty corpus trains an empty codebook and returns the DuckDB
+    twin's answer, no rows, under both placements."""
+    from contextlib import nullcontext
+
+    emb = spark.read.parquet(empty_corpus)
+    with scatter_gather() if placement == "scattered" else nullcontext():
+        out = op(emb)
+        rows = out.collect()
+    assert rows == []
+    if op is not kmeans_codebook:
+        assert _twin(empty_corpus, op) == []
+    else:
+        assert out.columns == ["cid", "cv", "cnorm"]
+
+
+@pytest.mark.parametrize("placement", ["gathered", "scattered"])
+def test_empty_corpus_builds_an_empty_ivfpq_index(spark, scatter_gather, empty_corpus, tmp_path, placement):
+    """``write_ivfpq_index`` of an empty corpus writes an empty index,
+    and a search of it returns no rows, as the twin does."""
+    from contextlib import nullcontext
+
+    import duckdb
+
+    from bunsen_spark.localrel import values_df
+
+    emb = spark.read.parquet(empty_corpus)
+    queries = values_df(spark, [(0, [0.5] * 64), (1, [-0.25] * 64)], "vec_id long, embedding array<double>")
+    with scatter_gather() if placement == "scattered" else nullcontext():
+        sim.write_ivfpq_index(emb, str(tmp_path / "index"))
+        out = sim.ivfpq_index_topk(spark, str(tmp_path / "index"), queries)
+        assert out.collect() == []
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{empty_corpus}')")
+    assert con.execute(sim.ivfpq_topk_sql()).fetchall() == []
+
+
+@pytest.fixture(scope="module")
+def null_training_corpus(tmp_path_factory):
+    """Parquet path of 40 random 64-d vectors, vector 25 NULL."""
+    import random
+
+    rng = random.Random(11)
+    vecs = [None if i == 25 else [rng.uniform(-1, 1) for _ in range(64)] for i in range(40)]
+    return _corpus_path(tmp_path_factory, "null_training", vecs)
+
+
+@pytest.mark.parametrize("placement", ["gathered", "scattered"])
+@pytest.mark.parametrize(
+    "op",
+    [
+        kmeans_codebook,
+        sim.semantic_dedup,
+        sim.pq_codebooks,
+        lambda emb: sim.ivfpq_topk(emb, num_queries=8),
+    ],
+    ids=["kmeans_codebook", "semantic_dedup", "pq_codebooks", "ivfpq_topk"],
+)
+def test_null_training_vector_names_its_vec_id(spark, scatter_gather, null_training_corpus, op, placement):
+    """A NULL vector met while training is an error naming its vec_id,
+    not its row position in a batch — on the driver when the corpus is
+    gathered, from the driver or a task when it is scattered."""
+    from contextlib import nullcontext
+
+    from pyspark.errors import PythonException
+
+    emb = spark.read.parquet(null_training_corpus)
+    with scatter_gather() if placement == "scattered" else nullcontext():
+        with pytest.raises((ValueError, PythonException), match="vec_id 25: v has length NULL, expected 64"):
+            op(emb).collect()
